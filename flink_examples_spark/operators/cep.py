@@ -418,8 +418,14 @@ def match_recognize(
     consumer that needs match positions (e.g. rows-between counts)
     reads them from MEASURES instead of re-shuffling the input through
     a separate window + joins (guide §2.4 — the NFA already paid the
-    keyed exchange and sort this window would need).
+    keyed exchange and sort this window would need). A name that is
+    already an input column raises ValueError rather than overwrite it.
     """
+    if row_number_col is not None and row_number_col in df.columns:
+        raise ValueError(
+            f"row_number_col {row_number_col!r} is already an input "
+            "column; pick a fresh name"
+        )
     pattern = list(pattern)
     pcols = list(partition_by)
     ocols = list(order_by)

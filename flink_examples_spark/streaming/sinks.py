@@ -8,8 +8,9 @@ The reference's sink matrix collapses onto three Spark mechanisms:
                              console (K1), kafka (K5).
   foreachBatch             — transactional/idempotent batch writers: JDBC
                              upsert (K6, JDBCSink.java:57-76), Redis (K7),
-                             Elasticsearch (K8), and multi-way side-output
-                             fan-out (P7). The micro-batch IS the
+                             Elasticsearch (K8), and the staged-partial
+                             ingest faces (``batch=<id>`` subdirs folded
+                             on read). The micro-batch IS the
                              reference's buffered batch (batchSize/
                              flush-interval knobs ≈ trigger interval).
   checkpointLocation       — ST8: offsets + state per micro-batch; the
@@ -59,14 +60,6 @@ def rolling_file_sink(
     if compression is not None:
         writer = writer.option("compression", compression)
     return writer
-
-
-def console_sink(df: DataFrame, label: str | None = None) -> DataStreamWriter:
-    """Debug print sink (K1, ``.print("connected")``)."""
-    w = df.writeStream.format("console").option("truncate", "false")
-    if label is not None:
-        w = w.queryName(label)
-    return w
 
 
 def kafka_payload(
@@ -216,28 +209,6 @@ def jdbc_upsert_foreach_batch(
             .options(**(properties or {}))
             .save()
         )
-
-    return write
-
-
-def side_output_foreach_batch(
-    routes: dict[str, tuple[Callable[[DataFrame], DataFrame], str]],
-) -> Callable[[DataFrame, int], None]:
-    """Multi-way side-output fan-out in one pass (P7 streaming).
-
-    ``routes`` maps a route name to ``(filter_fn, target_dir)``. The
-    micro-batch is cached once and each route writes its slice — one
-    source read feeding N sinks, the OutputTag pattern
-    (SideOutput.java:26-27,89-103) without re-reading upstream.
-    """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for _, (filter_fn, target) in routes.items():
-                filter_fn(batch_df).write.mode("append").parquet(target)
-        finally:
-            batch_df.unpersist()
 
     return write
 
@@ -448,12 +419,7 @@ def cdc_merge_foreach_batch(
             # a new tombstone write could recreate the root and orphan
             # the retired copy holding the full history)
             _recover_swap(_tombstone_root(table_path))
-        if (
-            guard_seq
-            and compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
+        if guard_seq and _compact_due(compact_every_n_batches, batch_id):
             compact_tombstones(
                 spark, table_path, id_col, partition_col, seq_col, fmt
             )
@@ -623,36 +589,22 @@ def _staged_fp_ingest_foreach_batch(
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _recover_swap(index_path)  # heal any interrupted compaction swap
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
+        if _compact_due(compact_every_n_batches, batch_id):
             compact_paragraph_index(
                 spark, index_path, fmt=fmt, fp_col=fp_col
             )
-        prior = (
-            [
-                os.path.join(index_path, n)
-                for n in os.listdir(index_path)
-                if not n.startswith((".", "_"))
-                and n != f"batch={batch_id}"
-            ]
-            if os.path.isdir(index_path)
-            else []
+        sub = f"batch={batch_id}"
+        idx = _read_staged(
+            spark, index_path, fmt, lambda df: df.select(fp_col),
+            f"{fp_col} string", exclude=sub,
         )
-        if prior:
-            idx = spark.read.format(fmt).load(prior).select(fp_col)
-        else:
-            idx = spark.createDataFrame([], f"{fp_col} string")
         out = strip_fn(idx, batch_df).localCheckpoint()
         out.write.mode("overwrite").format(fmt).save(
-            os.path.join(out_path, f"batch={batch_id}")
+            os.path.join(out_path, sub)
         )
         fps = index_fn(out.filter(F.col("text").isNotNull()))
         fps.write.mode("overwrite").format(fmt).save(
-            os.path.join(index_path, f"batch={batch_id}")
+            os.path.join(index_path, sub)
         )
 
     return apply
@@ -681,50 +633,9 @@ def compact_paragraph_index(spark, index_path: str,
     directory renames (:func:`_swap_in_rewrite`); a complete index is
     on disk at every instant and an interrupted swap is healed by
     :func:`_recover_swap`, which the ingest wrapper runs each batch."""
-    _recover_swap(index_path)
-    if not os.path.isdir(index_path):
-        return 0
-    subs = [
-        n for n in os.listdir(index_path)
-        if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0  # only the compacted set (or nothing) — no-op
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(index_path, n) for n in fold])
-        .select(fp_col)
-        .distinct()
-    )
-    spared = (
-        spark.read.format(fmt)
-        .load(os.path.join(index_path, spare))
-        .select(fp_col)
-        if spare
-        else None
-    )
-
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared is not None:
-            spared.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
-
-    return _swap_in_rewrite(
-        index_path, write_to,
-        # count the just-written compacted set, not a second fold pass
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted")).count(),
+    return _compact_staged(
+        spark, index_path, fmt, lambda df: df.select(fp_col).distinct(),
+        spare_newest=True,
     )
 
 
@@ -827,6 +738,155 @@ def _swap_in_rewrite(root: str, write_to, count=None) -> int:
     return kept
 
 
+# ---------------------------------------------------------------------------
+# Staged partials: each ingest face overwrites its micro-batch's mergeable
+# partial into ``root/batch=<id>``, readers fold the subdirs, and compaction
+# folds them into ``root/batch=compacted`` through the staging swap. A face
+# is a binding of its partial, its fold and its empty schema.
+# ---------------------------------------------------------------------------
+
+
+def _batch_dirs(root: str, exclude: str | None = None) -> list[str]:
+    """Sorted names of the visible ``batch=*`` subdirs of ``root`` other
+    than ``exclude``; empty when ``root`` is missing. Hidden siblings
+    (``_centroids``, ``_tails``, ``_tombstones``, Spark's ``_SUCCESS``
+    and ``.crc`` files) never match."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        n for n in os.listdir(root) if n.startswith("batch=") and n != exclude
+    )
+
+
+def _batch_ids(names: list[str]) -> list[tuple[int, str]]:
+    """``(id, name)`` for the numbered ``batch=<id>`` names, ascending
+    by id (``batch=compacted`` carries no id)."""
+    return sorted(
+        (int(n.partition("=")[2]), n)
+        for n in names
+        if n.partition("=")[2].isdigit()
+    )
+
+
+def _compact_due(every_n: int | None, batch_id: int) -> bool:
+    """The compact-every-N hook: true at the top of every ``every_n``-th
+    batch (never batch 0) — the single-writer slot between batches."""
+    return bool(every_n) and batch_id > 0 and batch_id % every_n == 0
+
+
+def _keyed_fold(keys: list[str], **aggs) -> Callable[[DataFrame], DataFrame]:
+    """The fold of a keyed partial: group by ``keys`` and merge each
+    partial column with its aggregate, e.g. ``cnt=F.sum``."""
+    return lambda df: df.groupBy(*keys).agg(
+        *[agg(c).alias(c) for c, agg in aggs.items()]
+    )
+
+
+def _staged_ingest(
+    root: str,
+    fmt: str,
+    every_n: int | None,
+    compact: Callable[[object], int] | None,
+    partial: Callable[[DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The shared ``foreachBatch`` body of the staged faces: heal an
+    interrupted compaction swap, run ``compact(spark)`` at the top of
+    every ``every_n``-th batch, then overwrite ``partial(batch_df)``
+    into the batch's own ``root/batch=<id>`` — a replayed batch
+    REPLACES its partial rather than adding to it. The partial is built
+    before the hook, so a face that checks its inputs (the IVF
+    centroids) raises before anything is written."""
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_swap(root)
+        out = partial(batch_df)
+        if _compact_due(every_n, batch_id):
+            compact(batch_df.sparkSession)
+        out.write.mode("overwrite").format(fmt).save(
+            os.path.join(root, f"batch={batch_id}")
+        )
+
+    return apply
+
+
+def _read_staged(
+    spark,
+    root: str,
+    fmt: str,
+    fold: Callable[[DataFrame], DataFrame],
+    empty_schema: str,
+    exclude: str | None = None,
+) -> DataFrame:
+    """Fold the batch subdirs of ``root`` (all but ``exclude``) into the
+    current table. A missing or not-yet-committed root reads as an EMPTY
+    table of ``empty_schema`` rather than crashing — monitoring readers
+    race the stream's first micro-batch. An interrupted compaction swap
+    is healed first, so no read sees a half-done one."""
+    _recover_swap(root)
+    subs = _batch_dirs(root, exclude)
+    if not subs:
+        return spark.createDataFrame([], empty_schema)
+    return fold(
+        spark.read.format(fmt).load([os.path.join(root, n) for n in subs])
+    )
+
+
+def _compact_staged(
+    spark,
+    root: str,
+    fmt: str,
+    fold: Callable[[DataFrame], DataFrame],
+    spare_newest: bool,
+) -> int:
+    """Fold the batch subdirs of ``root`` into one ``batch=compacted``
+    table with the reader's own ``fold``. Returns rows in the compacted
+    table, 0 when there is nothing to fold.
+
+    ``spare_newest`` follows from the fold's algebra. Only the in-flight
+    batch can replay, and a replay overwrites its own subdir. Where
+    folding that batch in would change the fold on replay (additive sums
+    double-count, plain unions duplicate rows, a fingerprint probe stops
+    excluding the replay's own fingerprints), the newest numbered subdir
+    is carried over unfolded. Idempotent folds (MAX, ``bit_or``) fold
+    every subdir.
+
+    Crash safety: the rewrite stages to a sibling and swaps in via
+    :func:`_swap_in_rewrite`, which counts the staged table. Hidden
+    ``_``-prefixed subdirs (the IVF ``_centroids``) are copied into
+    staging unchanged, since the swap replaces the whole root. No pin:
+    the fold reads only ``root``, and ``root`` is renamed only after the
+    staged write and its count have finished."""
+    _recover_swap(root)
+    subs = _batch_dirs(root)
+    numbered = _batch_ids(subs)
+    spare = numbered[-1][1] if spare_newest and numbered else None
+    folds = [n for n in subs if n != spare]
+    if not any(n != "batch=compacted" for n in folds):
+        return 0  # only the compacted set (or nothing) — no-op
+    folded = fold(
+        spark.read.format(fmt).load([os.path.join(root, n) for n in folds])
+    )
+    carried = [
+        n for n in os.listdir(root)
+        if n.startswith("_") and os.path.isdir(os.path.join(root, n))
+    ] + ([spare] if spare else [])
+
+    def write_to(staging: str) -> None:
+        folded.write.mode("overwrite").format(fmt).save(
+            os.path.join(staging, "batch=compacted")
+        )
+        for n in carried:
+            shutil.copytree(os.path.join(root, n), os.path.join(staging, n))
+
+    return _swap_in_rewrite(
+        root,
+        write_to,
+        count=lambda staging: spark.read.format(fmt)
+        .load(os.path.join(staging, "batch=compacted"))
+        .count(),
+    )
+
+
 def _drop_stale_events(
     spark,
     latest: DataFrame,
@@ -911,6 +971,9 @@ def _drop_stale_events(
         spark.conf.set(infer_key, prev)
 
 
+_fold_countmin = _keyed_fold(["j", "bucket"], cnt=F.sum)
+
+
 def countmin_ingest_foreach_batch(
     sketch_path: str,
     key_col: str,
@@ -938,20 +1001,11 @@ def countmin_ingest_foreach_batch(
     """
     from flink_examples_spark.operators.sketches import countmin_table
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(sketch_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_countmin_sketch(spark, sketch_path, fmt=fmt)
-        countmin_table(batch_df, key_col, depth, width).write.mode(
-            "overwrite"
-        ).format(fmt).save(os.path.join(sketch_path, f"batch={batch_id}"))
-
-    return apply
+    return _staged_ingest(
+        sketch_path, fmt, compact_every_n_batches,
+        lambda spark: compact_countmin_sketch(spark, sketch_path, fmt=fmt),
+        lambda df: countmin_table(df, key_col, depth, width),
+    )
 
 
 def read_countmin_sketch(spark, sketch_path: str,
@@ -961,20 +1015,8 @@ def read_countmin_sketch(spark, sketch_path: str,
     the ingest has run. A missing or not-yet-committed sketch path
     reads as an EMPTY sketch (every estimate 0) rather than crashing —
     monitoring readers race the stream's first micro-batch."""
-    _recover_swap(sketch_path)
-    subs = [
-        os.path.join(sketch_path, n)
-        for n in os.listdir(sketch_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(sketch_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "j int, bucket long, cnt long"
-        )
-    return (
-        spark.read.format(fmt).load(subs)
-        .groupBy("j", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
+    return _read_staged(
+        spark, sketch_path, fmt, _fold_countmin, "j int, bucket long, cnt long"
     )
 
 
@@ -986,49 +1028,8 @@ def compact_countmin_sketch(spark, sketch_path: str,
     count-correctness here, not just replay hygiene). Crash-safe via
     the staging swap (:func:`_swap_in_rewrite`). Returns cells in the
     compacted table, 0 if nothing to fold."""
-    _recover_swap(sketch_path)
-    if not os.path.isdir(sketch_path):
-        return 0
-    subs = [
-        n for n in os.listdir(sketch_path) if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(sketch_path, n) for n in fold])
-        .groupBy("j", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-    spared_df = (
-        spark.read.format(fmt).load(os.path.join(sketch_path, spare))
-        .localCheckpoint()
-        if spare else None
-    )
-
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared_df is not None:
-            spared_df.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
-
-    return _swap_in_rewrite(
-        sketch_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
+    return _compact_staged(
+        spark, sketch_path, fmt, _fold_countmin, spare_newest=True
     )
 
 
@@ -1050,12 +1051,10 @@ def column_profile_ingest_foreach_batch(
         column_profile_partial,
     )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        column_profile_partial(batch_df, cols, k).write.mode(
-            "overwrite"
-        ).format(fmt).save(os.path.join(profile_path, f"batch={batch_id}"))
-
-    return apply
+    return _staged_ingest(
+        profile_path, fmt, None, None,
+        lambda df: column_profile_partial(df, cols, k),
+    )
 
 
 def read_column_profile(spark, profile_path: str, k: int = 64,
@@ -1066,17 +1065,11 @@ def read_column_profile(spark, profile_path: str, k: int = 64,
         column_profile_fold,
     )
 
-    subs = [
-        os.path.join(profile_path, n)
-        for n in os.listdir(profile_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(profile_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "col string, n_rows long, n_nulls long, "
-                "n_kept int, distinct_est double"
-        )
-    return column_profile_fold(spark.read.format(fmt).load(subs), k)
+    return _read_staged(
+        spark, profile_path, fmt, lambda df: column_profile_fold(df, k),
+        "col string, n_rows long, n_nulls long, n_kept int, "
+        "distinct_est double",
+    )
 
 
 def _last_events(
@@ -1100,18 +1093,8 @@ def _prev_tail_batch(tails_root: str, batch_id: int) -> int | None:
     """Largest staged tail batch id strictly below ``batch_id`` — the
     cumulative tail table a (re)played batch must read, so replays are
     deterministic regardless of later batches on disk."""
-    if not os.path.isdir(tails_root):
-        return None
-    ids = []
-    for n in os.listdir(tails_root):
-        if n.startswith("batch="):
-            try:
-                i = int(n.split("=", 1)[1])
-            except ValueError:
-                continue
-            if i < batch_id:
-                ids.append(i)
-    return max(ids) if ids else None
+    ids = [i for i, _ in _batch_ids(_batch_dirs(tails_root)) if i < batch_id]
+    return ids[-1] if ids else None
 
 
 def transition_edges_ingest_foreach_batch(
@@ -1183,18 +1166,14 @@ def read_transition_edges(spark, edges_path: str,
     """Fold staged per-batch edge tables into the current graph
     (``src, dst, w`` with weight-sum merge); missing path reads as an
     empty graph."""
-    subs = [
-        os.path.join(edges_path, n)
-        for n in os.listdir(edges_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(edges_path) else []
-    if not subs:
-        return spark.createDataFrame([], "src long, dst long, w long")
-    return (
-        spark.read.format(fmt).load(subs)
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
+    return _read_staged(
+        spark, edges_path, fmt, _keyed_fold(["src", "dst"], w=F.sum),
+        "src long, dst long, w long",
     )
+
+
+def _fold_hll(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    return _keyed_fold([*group_cols, "bucket"], reg=F.max)
 
 
 def hll_ingest_foreach_batch(
@@ -1219,21 +1198,13 @@ def hll_ingest_foreach_batch(
     (compacted ∪ recreated) equals the pre-replay fold exactly."""
     from flink_examples_spark.operators.sketches import hll_registers
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(sketch_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_hll_registers(spark, sketch_path, group_cols,
-                                  fmt=fmt)
-        hll_registers(batch_df, key_col, group_cols, p).write.mode(
-            "overwrite"
-        ).format(fmt).save(os.path.join(sketch_path, f"batch={batch_id}"))
-
-    return apply
+    return _staged_ingest(
+        sketch_path, fmt, compact_every_n_batches,
+        lambda spark: compact_hll_registers(
+            spark, sketch_path, group_cols, fmt=fmt
+        ),
+        lambda df: hll_registers(df, key_col, group_cols, p),
+    )
 
 
 def read_hll_registers(
@@ -1247,20 +1218,9 @@ def read_hll_registers(
     element-wise MAX — sketch-sized however long the ingest has run. A
     missing path reads as an empty sketch (``group_schema`` supplies
     the group column types for that case)."""
-    _recover_swap(sketch_path)
-    subs = [
-        os.path.join(sketch_path, n)
-        for n in os.listdir(sketch_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(sketch_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], f"{group_schema}, bucket long, reg int"
-        )
-    return (
-        spark.read.format(fmt).load(subs)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("reg").alias("reg"))
+    return _read_staged(
+        spark, sketch_path, fmt, _fold_hll(group_cols),
+        f"{group_schema}, bucket long, reg int",
     )
 
 
@@ -1275,34 +1235,13 @@ def compact_hll_registers(
     ``batch=compacted`` register table, crash-safe via the staging
     swap. Returns registers in the compacted table, 0 if nothing to
     fold."""
-    _recover_swap(sketch_path)
-    if not os.path.isdir(sketch_path):
-        return 0
-    subs = [
-        n for n in os.listdir(sketch_path) if not n.startswith((".", "_"))
-    ]
-    if not any(n != "batch=compacted" for n in subs):
-        return 0
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(sketch_path, n) for n in subs])
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("reg").alias("reg"))
-        .localCheckpoint()
+    return _compact_staged(
+        spark, sketch_path, fmt, _fold_hll(group_cols), spare_newest=False
     )
 
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
 
-    return _swap_in_rewrite(
-        sketch_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
-    )
+def _fold_bitmaps(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    return _keyed_fold([*group_cols, "word_idx"], word=F.bit_or)
 
 
 def bitmap_ingest_foreach_batch(
@@ -1330,21 +1269,13 @@ def bitmap_ingest_foreach_batch(
     """
     from flink_examples_spark.operators.bitmap import presence_bitmaps
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(bitmap_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_presence_bitmaps(spark, bitmap_path, group_cols,
-                                     fmt=fmt)
-        presence_bitmaps(batch_df, group_cols, key_col).write.mode(
-            "overwrite"
-        ).format(fmt).save(os.path.join(bitmap_path, f"batch={batch_id}"))
-
-    return apply
+    return _staged_ingest(
+        bitmap_path, fmt, compact_every_n_batches,
+        lambda spark: compact_presence_bitmaps(
+            spark, bitmap_path, group_cols, fmt=fmt
+        ),
+        lambda df: presence_bitmaps(df, group_cols, key_col),
+    )
 
 
 def read_presence_bitmaps(
@@ -1358,20 +1289,9 @@ def read_presence_bitmaps(
     ``bit_or`` — words-sized however long the ingest has run. A missing
     path reads as an empty bitmap table (``group_schema`` supplies the
     group column types for that case)."""
-    _recover_swap(bitmap_path)
-    subs = [
-        os.path.join(bitmap_path, n)
-        for n in os.listdir(bitmap_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(bitmap_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], f"{group_schema}, word_idx long, word long"
-        )
-    return (
-        spark.read.format(fmt).load(subs)
-        .groupBy(*group_cols, "word_idx")
-        .agg(F.bit_or("word").alias("word"))
+    return _read_staged(
+        spark, bitmap_path, fmt, _fold_bitmaps(group_cols),
+        f"{group_schema}, word_idx long, word long",
     )
 
 
@@ -1385,34 +1305,13 @@ def compact_presence_bitmaps(
     idempotent (see :func:`bitmap_ingest_foreach_batch`) — into one
     ``batch=compacted`` bitmap table, crash-safe via the staging swap.
     Returns words in the compacted table, 0 if nothing to fold."""
-    _recover_swap(bitmap_path)
-    if not os.path.isdir(bitmap_path):
-        return 0
-    subs = [
-        n for n in os.listdir(bitmap_path) if not n.startswith((".", "_"))
-    ]
-    if not any(n != "batch=compacted" for n in subs):
-        return 0
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(bitmap_path, n) for n in subs])
-        .groupBy(*group_cols, "word_idx")
-        .agg(F.bit_or("word").alias("word"))
-        .localCheckpoint()
+    return _compact_staged(
+        spark, bitmap_path, fmt, _fold_bitmaps(group_cols),
+        spare_newest=False,
     )
 
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
 
-    return _swap_in_rewrite(
-        bitmap_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
-    )
+_fold_token_counts = _keyed_fold(["source", "token"], c_st=F.sum)
 
 
 def token_counts_ingest_foreach_batch(
@@ -1439,20 +1338,11 @@ def token_counts_ingest_foreach_batch(
     """
     from flink_examples_spark.operators.drift import token_count_partials
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(counts_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_token_counts(spark, counts_path, fmt=fmt)
-        token_count_partials(batch_df, source_col, text_col).write.mode(
-            "overwrite"
-        ).format(fmt).save(os.path.join(counts_path, f"batch={batch_id}"))
-
-    return apply
+    return _staged_ingest(
+        counts_path, fmt, compact_every_n_batches,
+        lambda spark: compact_token_counts(spark, counts_path, fmt=fmt),
+        lambda df: token_count_partials(df, source_col, text_col),
+    )
 
 
 def read_token_counts(spark, counts_path: str,
@@ -1461,20 +1351,9 @@ def read_token_counts(spark, counts_path: str,
     c_st)`` count table by sum. A missing or not-yet-committed path
     reads as an EMPTY table rather than crashing — monitoring readers
     race the stream's first micro-batch (the read_countmin rule)."""
-    _recover_swap(counts_path)
-    subs = [
-        os.path.join(counts_path, n)
-        for n in os.listdir(counts_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(counts_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "source string, token string, c_st long"
-        )
-    return (
-        spark.read.format(fmt).load(subs)
-        .groupBy("source", "token")
-        .agg(F.sum("c_st").alias("c_st"))
+    return _read_staged(
+        spark, counts_path, fmt, _fold_token_counts,
+        "source string, token string, c_st long",
     )
 
 
@@ -1499,49 +1378,8 @@ def compact_token_counts(spark, counts_path: str,
     double-count on replay — the :func:`compact_countmin_sketch`
     rule). Crash-safe via the staging swap. Returns rows in the
     compacted table, 0 if nothing to fold."""
-    _recover_swap(counts_path)
-    if not os.path.isdir(counts_path):
-        return 0
-    subs = [
-        n for n in os.listdir(counts_path) if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(counts_path, n) for n in fold])
-        .groupBy("source", "token")
-        .agg(F.sum("c_st").alias("c_st"))
-        .localCheckpoint()
-    )
-    spared_df = (
-        spark.read.format(fmt).load(os.path.join(counts_path, spare))
-        .localCheckpoint()
-        if spare else None
-    )
-
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared_df is not None:
-            spared_df.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
-
-    return _swap_in_rewrite(
-        counts_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
+    return _compact_staged(
+        spark, counts_path, fmt, _fold_token_counts, spare_newest=True
     )
 
 
@@ -1574,30 +1412,21 @@ def url_partials_ingest_foreach_batch(
     """
     from flink_examples_spark.operators.crawl import url_partials
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(partials_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_url_partials(spark, partials_path, fmt=fmt)
-        url_partials(batch_df, id_col, source_col, chars_col).write.mode(
-            "overwrite"
-        ).format(fmt).save(os.path.join(partials_path, f"batch={batch_id}"))
-
-    return apply
-
-
-def _fold_url_partials(df: DataFrame) -> DataFrame:
-    """(sum, sum, min) fold of staged per-URL partials — the merge that
-    makes them equal one pass over the union."""
-    return df.groupBy("url_norm").agg(
-        F.sum("n_docs_u").alias("n_docs_u"),
-        F.sum("chars_u").alias("chars_u"),
-        F.min("min_doc_id").alias("min_doc_id"),
+    return _staged_ingest(
+        partials_path, fmt, compact_every_n_batches,
+        lambda spark: compact_url_partials(spark, partials_path, fmt=fmt),
+        lambda df: url_partials(df, id_col, source_col, chars_col),
     )
+
+
+# (sum, sum, min) fold of staged per-URL partials — the merge that makes
+# them equal one pass over the union
+_fold_url_partials = _keyed_fold(
+    ["url_norm"], n_docs_u=F.sum, chars_u=F.sum, min_doc_id=F.min
+)
+_URL_PARTIALS_SCHEMA = (
+    "url_norm string, n_docs_u long, chars_u long, min_doc_id long"
+)
 
 
 def read_url_partials(spark, partials_path: str,
@@ -1606,18 +1435,9 @@ def read_url_partials(spark, partials_path: str,
     missing or not-yet-committed path reads as an EMPTY table rather
     than crashing — monitoring readers race the stream's first
     micro-batch (the read_token_counts rule)."""
-    _recover_swap(partials_path)
-    subs = [
-        os.path.join(partials_path, n)
-        for n in os.listdir(partials_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(partials_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "url_norm string, n_docs_u long, chars_u long, "
-                "min_doc_id long"
-        )
-    return _fold_url_partials(spark.read.format(fmt).load(subs))
+    return _read_staged(
+        spark, partials_path, fmt, _fold_url_partials, _URL_PARTIALS_SCHEMA
+    )
 
 
 def read_host_boilerplate_census(spark, partials_path: str,
@@ -1659,46 +1479,8 @@ def compact_url_partials(spark, partials_path: str,
     rule; the min fold alone would be safe, the count/char sums are
     not). Crash-safe via the staging swap. Returns rows in the
     compacted table, 0 if nothing to fold."""
-    _recover_swap(partials_path)
-    if not os.path.isdir(partials_path):
-        return 0
-    subs = [
-        n for n in os.listdir(partials_path) if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0
-    folded = _fold_url_partials(
-        spark.read.format(fmt)
-        .load([os.path.join(partials_path, n) for n in fold])
-    ).localCheckpoint()
-    spared_df = (
-        spark.read.format(fmt).load(os.path.join(partials_path, spare))
-        .localCheckpoint()
-        if spare else None
-    )
-
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared_df is not None:
-            spared_df.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
-
-    return _swap_in_rewrite(
-        partials_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
+    return _compact_staged(
+        spark, partials_path, fmt, _fold_url_partials, spare_newest=True
     )
 
 
@@ -1728,41 +1510,41 @@ def host_line_partials_ingest_foreach_batch(
     (:func:`compact_host_line_partials`) spares the newest numbered
     subdir for the same reason.
     """
+    return _staged_ingest(
+        partials_path, fmt, compact_every_n_batches,
+        lambda spark: compact_host_line_partials(
+            spark, partials_path, fmt=fmt
+        ),
+        lambda df: _host_line_partial(df, id_col, host_col, text_col),
+    )
+
+
+def _host_line_partial(
+    docs: DataFrame, id_col: str, host_col: str, text_col: str
+) -> DataFrame:
+    """A batch's ``(host, lfp, n_occ, line_chars)`` host-line partial."""
     from flink_examples_spark.operators.dedup import _host_lines
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(partials_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_host_line_partials(spark, partials_path, fmt=fmt)
-        (
-            _host_lines(batch_df, id_col, host_col, text_col, ". ")
-            .groupBy("host", F.md5("line").alias("lfp"))
-            .agg(
-                F.count(F.lit(1)).alias("n_occ"),
-                # constant per (host, lfp): any representative works,
-                # and min() folds batch partials to the same constant
-                F.min(F.length("line").cast("long")).alias("line_chars"),
-            )
-            .write.mode("overwrite")
-            .format(fmt)
-            .save(os.path.join(partials_path, f"batch={batch_id}"))
+    return (
+        _host_lines(docs, id_col, host_col, text_col, ". ")
+        .groupBy("host", F.md5("line").alias("lfp"))
+        .agg(
+            F.count(F.lit(1)).alias("n_occ"),
+            # constant per (host, lfp): any representative works, and
+            # min() folds batch partials to the same constant
+            F.min(F.length("line").cast("long")).alias("line_chars"),
         )
-
-    return apply
-
-
-def _fold_host_line_partials(df: DataFrame) -> DataFrame:
-    """(sum, min) fold of staged host-line partials — counts add,
-    line length is constant per fingerprint."""
-    return df.groupBy("host", "lfp").agg(
-        F.sum("n_occ").alias("n_occ"),
-        F.min("line_chars").alias("line_chars"),
     )
+
+
+# (sum, min) fold of staged host-line partials — counts add, line length
+# is constant per fingerprint
+_fold_host_line_partials = _keyed_fold(
+    ["host", "lfp"], n_occ=F.sum, line_chars=F.min
+)
+_HOST_LINE_PARTIALS_SCHEMA = (
+    "host string, lfp string, n_occ long, line_chars long"
+)
 
 
 def read_host_line_partials(spark, partials_path: str,
@@ -1770,17 +1552,10 @@ def read_host_line_partials(spark, partials_path: str,
     """Fold every staged partial into the current ``(host, lfp,
     n_occ, line_chars)`` table; a missing path reads as EMPTY (the
     read_url_partials rule)."""
-    _recover_swap(partials_path)
-    subs = [
-        os.path.join(partials_path, n)
-        for n in os.listdir(partials_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(partials_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "host string, lfp string, n_occ long, line_chars long"
-        )
-    return _fold_host_line_partials(spark.read.format(fmt).load(subs))
+    return _read_staged(
+        spark, partials_path, fmt, _fold_host_line_partials,
+        _HOST_LINE_PARTIALS_SCHEMA,
+    )
 
 
 def read_host_line_fp_index(spark, partials_path: str,
@@ -1840,47 +1615,14 @@ def compact_host_line_partials(spark, partials_path: str,
     the newest numbered batch (counts are ADDITIVE — the
     :func:`compact_url_partials` rule). Crash-safe via the staging
     swap; returns rows in the compacted table, 0 if nothing to fold."""
-    _recover_swap(partials_path)
-    if not os.path.isdir(partials_path):
-        return 0
-    subs = [
-        n for n in os.listdir(partials_path) if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0
-    folded = _fold_host_line_partials(
-        spark.read.format(fmt)
-        .load([os.path.join(partials_path, n) for n in fold])
-    ).localCheckpoint()
-    spared_df = (
-        spark.read.format(fmt).load(os.path.join(partials_path, spare))
-        .localCheckpoint()
-        if spare else None
+    return _compact_staged(
+        spark, partials_path, fmt, _fold_host_line_partials,
+        spare_newest=True,
     )
 
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared_df is not None:
-            spared_df.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
 
-    return _swap_in_rewrite(
-        partials_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
-    )
+def _fold_embeddings(df: DataFrame) -> DataFrame:
+    return df.select("vec_id", "embedding")
 
 
 def embedding_index_ingest_foreach_batch(
@@ -1907,24 +1649,14 @@ def embedding_index_ingest_foreach_batch(
     :func:`url_partials_ingest_foreach_batch`: a replayed batch
     REPLACES its own rows rather than duplicating them.
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(index_path)
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_embedding_index(spark, index_path, fmt=fmt)
-        batch_df.select(
+    return _staged_ingest(
+        index_path, fmt, compact_every_n_batches,
+        lambda spark: compact_embedding_index(spark, index_path, fmt=fmt),
+        lambda df: df.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("embedding"),
-        ).write.mode("overwrite").format(fmt).save(
-            os.path.join(index_path, f"batch={batch_id}")
-        )
-
-    return apply
+        ),
+    )
 
 
 def read_embedding_index(spark, index_path: str,
@@ -1937,17 +1669,10 @@ def read_embedding_index(spark, index_path: str,
     Batches are disjoint by the ingest contract, so the union IS the
     corpus. A missing or not-yet-committed path reads as EMPTY (the
     read_url_partials rule)."""
-    _recover_swap(index_path)
-    subs = [
-        os.path.join(index_path, n)
-        for n in os.listdir(index_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(index_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "vec_id long, embedding array<double>"
-        )
-    return spark.read.format(fmt).load(subs).select("vec_id", "embedding")
+    return _read_staged(
+        spark, index_path, fmt, _fold_embeddings,
+        "vec_id long, embedding array<double>",
+    )
 
 
 def compact_embedding_index(spark, index_path: str,
@@ -1959,48 +1684,8 @@ def compact_embedding_index(spark, index_path: str,
     no aggregation in the read path, duplicates would surface as
     phantom self-pairs in the probe). Crash-safe via the staging swap;
     returns rows in the compacted table, 0 if nothing to fold."""
-    _recover_swap(index_path)
-    if not os.path.isdir(index_path):
-        return 0
-    subs = [
-        n for n in os.listdir(index_path) if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(index_path, n) for n in fold])
-        .select("vec_id", "embedding")
-        .localCheckpoint()
-    )
-    spared_df = (
-        spark.read.format(fmt).load(os.path.join(index_path, spare))
-        .localCheckpoint()
-        if spare else None
-    )
-
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared_df is not None:
-            spared_df.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
-
-    return _swap_in_rewrite(
-        index_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
+    return _compact_staged(
+        spark, index_path, fmt, _fold_embeddings, spare_newest=True
     )
 
 
@@ -2041,6 +1726,10 @@ def read_ivf_centroids(spark, index_path: str, fmt: str = "parquet"):
     return np.array([r["centroid"] for r in rows], dtype=np.float64)
 
 
+def _fold_ivf(df: DataFrame) -> DataFrame:
+    return df.select("vec_id", "cell", "embedding")
+
+
 def ivf_index_ingest_foreach_batch(
     index_path: str,
     id_col: str = "vec_id",
@@ -2065,32 +1754,26 @@ def ivf_index_ingest_foreach_batch(
     REPLACES its own subdir), spare-newest compaction below."""
     from flink_examples_spark.operators.similarity import ivf_assign_cells
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(index_path)
-        cent = read_ivf_centroids(spark, index_path, fmt=fmt)
+    def partial(batch_df: DataFrame) -> DataFrame:
+        cent = read_ivf_centroids(batch_df.sparkSession, index_path, fmt=fmt)
         if cent.size == 0:
             raise ValueError(
                 f"no centroids staged under {index_path!r}: run "
                 "stage_ivf_centroids before the first ingest batch"
             )
-        if (
-            compact_every_n_batches
-            and batch_id > 0
-            and batch_id % compact_every_n_batches == 0
-        ):
-            compact_ivf_index(spark, index_path, fmt=fmt)
-        ivf_assign_cells(
+        return ivf_assign_cells(
             batch_df, cent, id_col=id_col, vec_col=vec_col
         ).select(
             F.col(id_col).alias("vec_id"),
             "cell",
             F.col(vec_col).cast("array<double>").alias("embedding"),
-        ).write.mode("overwrite").format(fmt).save(
-            os.path.join(index_path, f"batch={batch_id}")
         )
 
-    return apply
+    return _staged_ingest(
+        index_path, fmt, compact_every_n_batches,
+        lambda spark: compact_ivf_index(spark, index_path, fmt=fmt),
+        partial,
+    )
 
 
 def read_ivf_index(spark, index_path: str,
@@ -2101,18 +1784,9 @@ def read_ivf_index(spark, index_path: str,
     fold-free so the corpus is never reshuffled at query time; the
     ``_centroids`` subdir is skipped by its underscore). Missing path
     reads as EMPTY."""
-    _recover_swap(index_path)
-    subs = [
-        os.path.join(index_path, n)
-        for n in os.listdir(index_path)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(index_path) else []
-    if not subs:
-        return spark.createDataFrame(
-            [], "vec_id long, cell int, embedding array<double>"
-        )
-    return spark.read.format(fmt).load(subs).select(
-        "vec_id", "cell", "embedding"
+    return _read_staged(
+        spark, index_path, fmt, _fold_ivf,
+        "vec_id long, cell int, embedding array<double>",
     )
 
 
@@ -2127,52 +1801,7 @@ def compact_ivf_index(spark, index_path: str,
     replaces the whole root, and an index without its quantizer is
     unusable. Crash-safe via the staging swap; returns rows in the
     compacted table, 0 if nothing to fold."""
-    _recover_swap(index_path)
-    if not os.path.isdir(index_path):
-        return 0
-    subs = [
-        n for n in os.listdir(index_path) if not n.startswith((".", "_"))
-    ]
-    numbered = sorted(
-        (int(n.split("=", 1)[1]), n)
-        for n in subs
-        if n.startswith("batch=") and n.split("=", 1)[1].isdigit()
-    )
-    spare = numbered[-1][1] if numbered else None
-    fold = [n for n in subs if n != spare]
-    if not any(n != "batch=compacted" for n in fold):
-        return 0
-    folded = (
-        spark.read.format(fmt)
-        .load([os.path.join(index_path, n) for n in fold])
-        .select("vec_id", "cell", "embedding")
-        .localCheckpoint()
-    )
-    spared_df = (
-        spark.read.format(fmt).load(os.path.join(index_path, spare))
-        .localCheckpoint()
-        if spare else None
-    )
-
-    def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
-            os.path.join(staging, "batch=compacted")
-        )
-        if spared_df is not None:
-            spared_df.write.mode("overwrite").format(fmt).save(
-                os.path.join(staging, spare)
-            )
-        cdir = os.path.join(index_path, "_centroids")
-        if os.path.isdir(cdir):
-            shutil.copytree(cdir, os.path.join(staging, "_centroids"))
-
-    return _swap_in_rewrite(
-        index_path,
-        write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
-    )
+    return _compact_staged(spark, index_path, fmt, _fold_ivf, spare_newest=True)
 
 
 def hygiene_delta_ingest_foreach_batch(
@@ -2229,47 +1858,21 @@ def hygiene_delta_ingest_foreach_batch(
         incremental_hygiene_pipeline,
         url_partials,
     )
-    from flink_examples_spark.operators.dedup import _host_lines
-
-    def _prior(root: str, sub: str) -> list[str]:
-        return (
-            [
-                os.path.join(root, n)
-                for n in os.listdir(root)
-                if not n.startswith((".", "_")) and n != sub
-            ]
-            if os.path.isdir(root)
-            else []
-        )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        for root in (url_root, line_root, fp_root):
-            _recover_swap(root)
         sub = f"batch={batch_id}"
-        up = _prior(url_root, sub)
-        uidx = (
-            _fold_url_partials(spark.read.format(fmt).load(up))
-            if up
-            else spark.createDataFrame(
-                [], "url_norm string, n_docs_u long, chars_u long, "
-                    "min_doc_id long"
-            )
+        uidx = _read_staged(
+            spark, url_root, fmt, _fold_url_partials, _URL_PARTIALS_SCHEMA,
+            exclude=sub,
         )
-        lp = _prior(line_root, sub)
-        lidx = (
-            _fold_host_line_partials(spark.read.format(fmt).load(lp))
-            if lp
-            else spark.createDataFrame(
-                [], "host string, lfp string, n_occ long, "
-                    "line_chars long"
-            )
+        lidx = _read_staged(
+            spark, line_root, fmt, _fold_host_line_partials,
+            _HOST_LINE_PARTIALS_SCHEMA, exclude=sub,
         )
-        fps = _prior(fp_root, sub)
-        cfps = (
-            spark.read.format(fmt).load(fps).select("fp").distinct()
-            if fps
-            else spark.createDataFrame([], "fp string")
+        cfps = _read_staged(
+            spark, fp_root, fmt, lambda df: df.select("fp").distinct(),
+            "fp string", exclude=sub,
         )
         delta = batch_df.select(
             F.col(id_col).alias("doc_id"),
@@ -2295,35 +1898,11 @@ def hygiene_delta_ingest_foreach_batch(
         shipped = out.select(
             "doc_id", "host", F.col("kept_text").alias("text")
         )
-        (
-            _host_lines(shipped, "doc_id", "host", "text", ". ")
-            .groupBy("host", F.md5("line").alias("lfp"))
-            .agg(
-                F.count(F.lit(1)).alias("n_occ"),
-                F.min(F.length("line").cast("long")).alias("line_chars"),
-            )
-            .write.mode("overwrite").format(fmt)
-            .save(os.path.join(line_root, sub))
-        )
+        _host_line_partial(shipped, "doc_id", "host", "text").write.mode(
+            "overwrite"
+        ).format(fmt).save(os.path.join(line_root, sub))
         shipped.select(F.md5("text").alias("fp")).distinct() \
             .write.mode("overwrite").format(fmt) \
             .save(os.path.join(fp_root, sub))
 
     return apply
-
-
-def read_hygiene_fp_index(spark, fp_root: str,
-                          fmt: str = "parquet") -> DataFrame:
-    """The accumulated shipped-text fingerprint set ``(fp)`` —
-    distinct across batch subdirs (a duplicate fp in the probe's hit
-    table would multiply delta rows through the broadcast rejoin).
-    Missing path reads as EMPTY (the read_url_partials rule)."""
-    _recover_swap(fp_root)
-    subs = [
-        os.path.join(fp_root, n)
-        for n in os.listdir(fp_root)
-        if not n.startswith((".", "_"))
-    ] if os.path.isdir(fp_root) else []
-    if not subs:
-        return spark.createDataFrame([], "fp string")
-    return spark.read.format(fmt).load(subs).select("fp").distinct()

@@ -289,6 +289,33 @@ def test_after_match_skip_to_first_var_and_error_cases(spark):
         run(list("abc"), "SKIP TO LAST Z")
 
 
+def test_row_number_col_clash_with_input_column_raises(spark):
+    """``row_number_col`` naming an input column must raise before any
+    job runs instead of silently overwriting that column; a fresh name
+    exposes the per-key 1-based position to MEASURES."""
+    import pytest as _pytest
+
+    from flink_examples_spark.operators.cep import match_recognize_sql
+
+    def run(rn_col):
+        return match_recognize_sql(
+            _kinds_df(spark, list("xabxab")),
+            partition_by=["pk"],
+            order_by=["ts"],
+            measures={"a_ts": "A.ts", "b_rn": f"B.{rn_col}"},
+            pattern="(A B)",
+            define={"A": "A.kind = 'a'", "B": "B.kind = 'b'"},
+            output_schema="pk string, a_ts long, b_rn long",
+            row_number_col=rn_col,
+        ).collect()
+
+    got = sorted((r.a_ts, r.b_rn) for r in run("rn"))
+    assert got == [(1, 3), (4, 6)]
+    for taken in ("ts", "kind"):
+        with _pytest.raises(ValueError, match="already an input column"):
+            run(taken)
+
+
 def test_match_recognize_sql_float_and_string_literals(spark):
     """Decimal literals must not be rewritten as VAR.field refs
     (10.5 -> _ref("10","5") silently falsified every predicate, ADVICE
