@@ -545,7 +545,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from flink_examples_spark.queries import registry
-    from flink_examples_spark.session import get_spark
+    from flink_examples_spark.session import get_spark, local_cpus
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -687,8 +687,9 @@ def main() -> None:
         # core count the session ran with (r14): the r13 driver's 8-cpu
         # scaling run bootstrapped a round-14 canonical from 8-cpu
         # minima — recording cpus lets fold_bench separate cross-core
-        # drafts instead of inferring from calibration probes
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
+        # drafts instead of inferring from calibration probes; the
+        # effective value, so an unset env records get_spark's default
+        "cpus": local_cpus(),
         "prev_queries_recovered": len(prev),
         "stalls": {
             "reps_over_5x_steady": stall_rep_count,

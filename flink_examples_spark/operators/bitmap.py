@@ -28,7 +28,7 @@ logs) with the standard OLAP-store technique.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -62,8 +62,3 @@ def presence_bitmaps(
         .groupBy(*group_cols, "word_idx")
         .agg(F.bit_or("_bit").alias("word"))
     )
-
-
-def bitmap_cardinality(word: Column | str) -> Column:
-    """Population count of one packed word."""
-    return F.bit_count(F.col(word) if isinstance(word, str) else word)

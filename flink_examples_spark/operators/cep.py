@@ -10,11 +10,11 @@ The reference exposes two pattern surfaces with identical semantics:
 
 Spark has no Catalyst stage for either, so this module supplies the
 missing operator: a small pattern AST compiled to a backtracking NFA,
-executed per key inside ``applyInPandas``. Each key's rows are sorted by
-the ORDER BY columns and scanned once per start candidate; state never
-leaves the executor, and keys are processed independently — the operator
-scales with the keyed shuffle, exactly like any groupBy. The streaming
-variant (NFA state in GroupState, event-time timeouts) lives in
+executed per key through ``util.grouped_map_in_pandas``. Each key's rows
+are sorted by the ORDER BY columns and scanned once per start candidate;
+state never leaves the executor, and keys are processed independently —
+the operator scales with the keyed shuffle, exactly like any groupBy. The
+streaming variant (NFA state in GroupState, event-time timeouts) lives in
 streaming/stateful.py.
 
 Predicates receive ``(row, ctx)`` where ``ctx`` gives MATCH_RECOGNIZE

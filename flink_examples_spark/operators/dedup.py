@@ -952,7 +952,18 @@ def host_line_dedup_strip(
     path already uses) instead of re-aggregating every (host, line):
     a plan that needs BOTH the index and the strip (the inline
     corpus-index builds of the hygiene-delta flagships) derives the
-    corpus-wide line aggregate ONCE (guide §2.4)."""
+    corpus-wide line aggregate ONCE (guide §2.4).
+
+    Key semantics differ between the two paths: the default path keys
+    the verdict on ``(host, line)``, the exact line text; the
+    ``line_index=`` path keys on ``(host, md5(line))``. If two distinct
+    lines of one host ever shared an md5, the index path would count
+    their occurrences together and strike BOTH once the combined count
+    reaches ``min_count`` — where the default path would judge each
+    line on its own count. Both paths agree whenever a host's lines
+    have distinct md5s (the collision-free case the parity tests pin);
+    a collision can only remove more lines, never keep a line the
+    default path would strike."""
     lines = _host_lines(df, id_col, host_col, text_col, sep)
     if line_index is not None:
         verdicts = (

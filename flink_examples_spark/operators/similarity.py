@@ -14,16 +14,204 @@ Two execution strategies for cosine top-k:
 And an LSH-bucketed variant (random-hyperplane signatures) that turns
 all-pairs search into per-bucket search — the 100 TB path where the
 candidate set, not the corpus, bounds the join.
+
+Every Python operator here is candidate generation followed by exact
+verification, and shares one private scoring core per result shape:
+
+  top-k  ``_query_matrix`` (driver-side query collect), ``_topk_scored``
+         (one mapInPandas body: score matrix, per-query mask,
+         ``_local_topk`` selection) and ``_rank_topk`` (the one
+         per-query rank); ``_pq_topk`` adds the ADC shortlist and the
+         exact re-rank on top.
+  pairs  ``_pairs_within`` / ``_pairs_across`` (the thresholded GEMM
+         kernels) — block pairs, the incremental probe, and the LSH and
+         SemDeDup in-group sweeps (``_in_group_pairs``).
+
+An operator only chooses its candidates, its score matrix and its mask.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from flink_examples_spark.operators.util import grouped_map_in_pandas
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, rank int"
+_PAIRS_SCHEMA = "vec_a long, vec_b long, cosine double"
+
+
+def _unit_rows(x):
+    """Scale each row of an (n, d) matrix to unit L2 norm."""
+    return x / np.linalg.norm(x, axis=1, keepdims=True)
+
+
+def _unit_vectors(rows):
+    """Unit-row float64 matrix of collected ``(id, vector)`` rows."""
+    return _unit_rows(np.array([r[1] for r in rows], dtype=np.float64))
+
+
+def _id_matrix(rows):
+    """``(int64 ids, unit-row matrix)`` of collected ``(id, vector)``
+    rows."""
+    return np.array([r[0] for r in rows], dtype=np.int64), _unit_vectors(rows)
+
+
+def _batch_matrix(pdf, id_col="vid", vec_col="v"):
+    """``(ids, unit-row matrix)`` of one Arrow batch or group."""
+    return pdf[id_col].to_numpy(), _unit_rows(np.stack(pdf[vec_col].to_numpy()))
+
+
+def _query_matrix(queries: DataFrame, id_col: str, vec_col: str):
+    """Collect the (small) query set to the driver — ONE eager job —
+    as ``(q_ids, q_norm)``, or ``None`` when there are no queries."""
+    rows = queries.select(
+        id_col, F.col(vec_col).cast("array<double>")
+    ).collect()
+    return _id_matrix(rows) if rows else None
+
+
+def _corpus(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("cv"),
+    )
+
+
+def _local_topk(q_ids, c_ids, scores, n, allowed=None):
+    """Per-batch local top-``n`` for every query: drop the query's own
+    id, keep only rows ``allowed[:, qi]`` admits (IVF probe cells) when
+    given, then ``argpartition`` on the UNROUNDED scores of the
+    (batch, n_queries) ``scores`` matrix. Returns flat
+    ``(query_ids, neighbor_ids, scores)`` arrays, or ``None`` when no
+    query has a candidate in the batch."""
+    qs, ns, vs = [], [], []
+    for qi, qid in enumerate(q_ids):
+        mask = c_ids != qid
+        if allowed is not None:
+            mask &= allowed[:, qi]
+        ids, vals = c_ids[mask], scores[mask, qi]
+        if len(ids) == 0:
+            continue
+        top = min(n, len(ids))
+        sel = np.argpartition(-vals, top - 1)[:top]
+        qs.append(np.full(top, qid))
+        ns.append(ids[sel])
+        vs.append(vals[sel])
+    if not qs:
+        return None
+    return np.concatenate(qs), np.concatenate(ns), np.concatenate(vs)
+
+
+def _topk_scored(
+    corp: DataFrame,
+    q_ids,
+    n: int,
+    score_of,
+    probe=None,
+    cell_of=None,
+    score_col: str = "cosine",
+) -> DataFrame:
+    """ONE mapInPandas scoring body for every Python top-k probe — GEMM,
+    IVF, staged IVF, and the PQ / IVF-PQ ADC shortlist — so parity
+    between them (IVF vs staged IVF is pinned EXACT) holds because the
+    body cannot drift between operators. Queries ride in the closure;
+    the corpus never shuffles.
+
+    ``score_of(c_norm)`` returns the (batch, n_queries) score matrix of
+    the unit-normalized corpus batch. With ``probe`` — the
+    (n_queries, n_cells) bool mask of each query's probe cells — a row
+    is a candidate for a query only if its cell (``cell_of(pdf,
+    c_norm)``) is probed. ``cosine`` output is rounded to 6 dp after
+    selection; ``pq_score`` stays unrounded for the shortlist rank."""
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            c_ids, c_norm = _batch_matrix(pdf, "neighbor_id", "cv")
+            allowed = (
+                None if probe is None else probe[:, cell_of(pdf, c_norm)].T
+            )
+            sel = _local_topk(q_ids, c_ids, score_of(c_norm), n, allowed)
+            if sel is None:
+                continue
+            q, nbr, vals = sel
+            if score_col == "cosine":
+                vals = np.round(vals, 6)
+            yield pd.DataFrame(
+                {"query_id": q, "neighbor_id": nbr, score_col: vals}
+            )
+
+    return corp.mapInPandas(
+        score, f"query_id long, neighbor_id long, {score_col} double"
+    )
+
+
+def _rank_topk(df: DataFrame, score_col: str, n: int) -> DataFrame:
+    """The one per-query top-``n`` rank: ``row_number`` over
+    (score desc, neighbor_id asc) — a total order, so ties break
+    deterministically — keeping rank <= ``n``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("neighbor_id")
+    )
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+        .select("query_id", "neighbor_id", score_col, "rank")
+    )
+
+
+def _probe_mask(q_norm, cent, n_probe: int):
+    """(n_queries, n_cells) bool mask of each query's ``n_probe``
+    nearest IVF cells."""
+    probe = np.argsort(-(q_norm @ cent.T), axis=1)[:, :n_probe]
+    mask = np.zeros((len(q_norm), len(cent)), dtype=bool)
+    mask[np.arange(len(q_norm))[:, None], probe] = True
+    return mask
+
+
+def _nearest_cell(cent):
+    """``cell_of`` for a corpus batch: argmax-cosine cell per row."""
+    return lambda pdf, c_norm: np.argmax(c_norm @ cent.T, axis=1)
+
+
+def _pairs_within(ids, m, threshold: float) -> pd.DataFrame:
+    """Thresholded GEMM kernel within ONE unit-row matrix: every pair
+    ``vec_a < vec_b`` whose cosine, rounded to 6 dp, is >= threshold."""
+    sims = np.round(m @ m.T, 6)
+    i, j = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
+    return pd.DataFrame({"vec_a": ids[i], "vec_b": ids[j], "cosine": sims[i, j]})
+
+
+def _pairs_across(ids_a, m_a, ids_b, m_b, threshold: float) -> pd.DataFrame:
+    """Thresholded GEMM kernel between two DISJOINT unit-row matrices,
+    each pair oriented ``vec_a < vec_b``, cosines rounded to 6 dp."""
+    sims = np.round(m_a @ m_b.T, 6)
+    i, j = np.nonzero(sims >= threshold)
+    a, b = ids_a[i], ids_b[j]
+    return pd.DataFrame(
+        {"vec_a": np.minimum(a, b), "vec_b": np.maximum(a, b), "cosine": sims[i, j]}
+    )
+
+
+def _in_group_pairs(e: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Exact in-group sweep over ``(vid, v, <key>)`` rows — one shuffle
+    on ``key``, ``_pairs_within`` per group. A true pair can share
+    several groups (LSH tables, SemDeDup probe clusters) and its cosine
+    is computed identically in each, so ``distinct()`` collapses it."""
+
+    def per_group(_key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return _pairs_within(*_batch_matrix(pdf), threshold)
+
+    return grouped_map_in_pandas(
+        e, [key], [], per_group, _PAIRS_SCHEMA
+    ).distinct()
 
 
 def _dot(a, b):
@@ -56,24 +244,16 @@ def cosine_topk(
     locally, and only ~|queries|·k·partitions rows reach the final rank
     shuffle.
     """
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
     scored = (
-        corp.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+        _corpus(embeddings, id_col, vec_col)
+        .join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def cosine_topk_gemm(
@@ -90,60 +270,15 @@ def cosine_topk_gemm(
     ``numpy`` matmul — ~100x fewer Python-boundary crossings than
     per-row UDFs. Per-batch local top-k keeps the shuffle tiny.
     """
-    import numpy as np
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None:
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    q_ids, q_norm = qm
+    scored = _topk_scored(
+        _corpus(embeddings, id_col, vec_col), q_ids, k,
+        lambda c_norm: c_norm @ q_norm.T,
     )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_mat = np.stack(pdf["cv"].to_numpy())
-            c_ids = pdf["neighbor_id"].to_numpy()
-            c_norm = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_norm @ q_norm.T  # (batch, n_queries)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                col = sims[:, qi]
-                mask = c_ids != qid
-                ids, vals = c_ids[mask], col[mask]
-                if len(ids) == 0:
-                    continue
-                top = min(k, len(ids))
-                sel = np.argpartition(-vals, top - 1)[:top]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[sel],
-                            "cosine": np.round(vals[sel], 6),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = corp.mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def embedding_neardup_pairs(
@@ -253,16 +388,14 @@ def embedding_neardup_blocked(
     join — the collect-free formulation of the GEMM strategy.
 
     Rows hash into ``n_blocks`` blocks; each unordered block pair (i<=j)
-    becomes one ``applyInPandas`` group that GEMMs block i against
-    block j. A pair of vectors lands in exactly one block pair, so the
-    output is exact with no dedup pass. Replication cost is exactly
+    becomes one ``grouped_map_in_pandas`` group that GEMMs block i
+    against block j. A pair of vectors lands in exactly one block pair,
+    so the output is exact with no dedup pass. Replication cost is exactly
     ``n_blocks`` copies of each row — a row in block b goes left to
     pairs (b, b..n-1) and right to (0..b-1, b) — the classic triangle
     join; choose ``n_blocks`` ~ sqrt(parallelism); executor memory is bounded
     by two blocks, never the corpus, and the driver holds nothing.
     """
-    import numpy as np
-
     e = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -281,44 +414,21 @@ def embedding_neardup_blocked(
         F.col("blk").alias("pb"),
     ).filter(F.col("pa") != F.col("pb"))  # diagonal handled from the left copy
 
-    empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-
-    def per_pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_pair(key, pdf: pd.DataFrame) -> pd.DataFrame | None:
         pa, pb = key
         lhs = pdf[pdf["is_left"] == 1]
         if lhs.empty:
-            return empty
-        l_ids = lhs["vid"].to_numpy()
-        l_m = np.stack(lhs["v"].to_numpy())
-        l_m = l_m / np.linalg.norm(l_m, axis=1, keepdims=True)
+            return None
+        l_ids, l_m = _batch_matrix(lhs)
         if pa == pb:
-            sims = np.round(l_m @ l_m.T, 6)
-            i, j = np.nonzero((sims >= threshold) & (l_ids[:, None] < l_ids[None, :]))
-            return pd.DataFrame(
-                {"vec_a": l_ids[i], "vec_b": l_ids[j], "cosine": sims[i, j]}
-            )
+            return _pairs_within(l_ids, l_m, threshold)
         rhs = pdf[pdf["is_left"] == 0]
         if rhs.empty:
-            return empty
-        r_ids = rhs["vid"].to_numpy()
-        r_m = np.stack(rhs["v"].to_numpy())
-        r_m = r_m / np.linalg.norm(r_m, axis=1, keepdims=True)
-        sims = np.round(l_m @ r_m.T, 6)
-        i, j = np.nonzero(sims >= threshold)
-        a, b = l_ids[i], r_ids[j]
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(a, b),
-                "vec_b": np.maximum(a, b),
-                "cosine": sims[i, j],
-            }
-        )
+            return None
+        return _pairs_across(l_ids, l_m, *_batch_matrix(rhs), threshold)
 
-    from flink_examples_spark.operators.util import keyed_python_partitions
-
-    grouped = keyed_python_partitions(left.unionByName(right), ["pa", "pb"])
-    return grouped.groupBy("pa", "pb").applyInPandas(
-        per_pair, "vec_a long, vec_b long, cosine double"
+    return grouped_map_in_pandas(
+        left.unionByName(right), ["pa", "pb"], [], per_pair, _PAIRS_SCHEMA
     )
 
 
@@ -388,8 +498,6 @@ def incremental_embedding_neardup(
     registered query's pinned fingerprint) and the one-pass corpus
     cost.
     """
-    import numpy as np
-
     c = corpus.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -399,40 +507,18 @@ def incremental_embedding_neardup(
         F.col(vec_col).cast("array<double>").alias("v"),
     )
     spark = corpus.sparkSession
-    schema = "vec_a long, vec_b long, cosine double"
-
-    def _collect_mat(rows):
-        ids = np.array([r["vid"] for r in rows], dtype=np.int64)
-        mat = np.array([r["v"] for r in rows], dtype=np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        return ids, mat
 
     def _prober(bc):
         def score(
             batches: Iterator[pd.DataFrame],
         ) -> Iterator[pd.DataFrame]:
-            import numpy as np  # noqa: F811 — executor-side import
-
             ids_d, m_d = bc.value
             for pdf in batches:
                 if pdf.empty:
                     continue
-                b_ids = pdf["vid"].to_numpy()
-                b_mat = np.stack(pdf["v"].to_numpy())
-                b_mat = b_mat / np.linalg.norm(
-                    b_mat, axis=1, keepdims=True
-                )
-                sims = np.round(b_mat @ m_d.T, 6)
-                i, j = np.nonzero(sims >= threshold)
-                if len(i):
-                    a, b = b_ids[i], ids_d[j]
-                    yield pd.DataFrame(
-                        {
-                            "vec_a": np.minimum(a, b),
-                            "vec_b": np.maximum(a, b),
-                            "cosine": sims[i, j],
-                        }
-                    )
+                pairs = _pairs_across(*_batch_matrix(pdf), ids_d, m_d, threshold)
+                if len(pairs):
+                    yield pairs
 
         return score
 
@@ -443,13 +529,10 @@ def incremental_embedding_neardup(
         # lineage (un-checkpointed sample, files changing between the
         # collect and the scan), could diverge from the broadcast
         # matrix the corpus side probes (round-scope review r11)
-        sims = np.round(mat @ mat.T, 6)
-        i, j = np.nonzero((sims >= threshold)
-                          & (ids[:, None] < ids[None, :]))
-        return [
-            (int(ids[a]), int(ids[b]), float(sims[a, b]))
-            for a, b in zip(i.tolist(), j.tolist())
-        ]
+        p = _pairs_within(ids, mat, threshold)
+        return list(zip(
+            p["vec_a"].tolist(), p["vec_b"].tolist(), p["cosine"].tolist()
+        ))
 
     if chunk_size is not None:
         if chunk_size <= 0:
@@ -459,7 +542,7 @@ def incremental_embedding_neardup(
         d2 = d.localCheckpoint(eager=False)
         n = d2.count()
         if n == 0:
-            return spark.createDataFrame([], schema)
+            return spark.createDataFrame([], _PAIRS_SCHEMA)
         k = -(-n // int(chunk_size))  # ceil
         parts: list[DataFrame] = []
         local_pairs: list[tuple] = []
@@ -473,11 +556,11 @@ def incremental_embedding_neardup(
             ).collect()
             if not rows:
                 continue
-            ids_i, mat_i = _collect_mat(rows)
+            ids_i, mat_i = _id_matrix(rows)
             del rows  # driver peak stays one chunk; the broadcast
             # below spills to disk rather than pinning mat_i in memory
             bc_i = spark.sparkContext.broadcast((ids_i, mat_i))
-            parts.append(c.mapInPandas(_prober(bc_i), schema))
+            parts.append(c.mapInPandas(_prober(bc_i), _PAIRS_SCHEMA))
             local_pairs.extend(_triangle_pairs(ids_i, mat_i))
             if i < k - 1:
                 # cross-chunk delta pairs: LATER chunks scan against
@@ -486,20 +569,20 @@ def incremental_embedding_neardup(
                 # co-resident on the driver
                 parts.append(
                     d2.filter(F.pmod(F.col("vid"), F.lit(k)) > i)
-                    .mapInPandas(_prober(bc_i), schema)
+                    .mapInPandas(_prober(bc_i), _PAIRS_SCHEMA)
                 )
-        out = spark.createDataFrame(local_pairs, schema)
+        out = spark.createDataFrame(local_pairs, _PAIRS_SCHEMA)
         for p in parts:
             out = out.unionByName(p)
         return out
 
     rows = d.collect()
     if not rows:
-        return spark.createDataFrame([], schema)
-    d_ids, d_mat = _collect_mat(rows)
+        return spark.createDataFrame([], _PAIRS_SCHEMA)
+    d_ids, d_mat = _id_matrix(rows)
     bc = spark.sparkContext.broadcast((d_ids, d_mat))
-    dd_pairs = spark.createDataFrame(_triangle_pairs(d_ids, d_mat), schema)
-    return c.mapInPandas(_prober(bc), schema).unionByName(dd_pairs)
+    dd_pairs = spark.createDataFrame(_triangle_pairs(d_ids, d_mat), _PAIRS_SCHEMA)
+    return c.mapInPandas(_prober(bc), _PAIRS_SCHEMA).unionByName(dd_pairs)
 
 
 def embedding_neardup_lsh(
@@ -542,8 +625,6 @@ def embedding_neardup_lsh(
             3        8          0.93            1.00
             4       16          0.96            1.00      <- default
     """
-    import numpy as np
-
     # ALL tables' bucket keys in ONE narrow pass — one corpus scan,
     # zero joins (a per-table buckets-then-join-back loop costs
     # n_tables+1 scans of the embedding store). Assignment is a single
@@ -584,32 +665,7 @@ def embedding_neardup_lsh(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
     ).mapInPandas(assign, "vid long, v array<double>, bucket string")
 
-    def per_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vid"].to_numpy()
-        m = np.stack(pdf["v"].to_numpy())
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(m @ m.T, 6)
-        i, j = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {"vec_a": ids[i], "vec_b": ids[j], "cosine": sims[i, j]}
-        )
-
-    from flink_examples_spark.operators.util import keyed_python_partitions
-
-    # NOT migrated to grouped_map_in_pandas (r13): the per-group Arrow
-    # overhead is amortized here (n_tables * 2^n_planes groups of ~n/2^b
-    # vectors each, with the 64-d vector payload that the migration's
-    # sortWithinPartitions would have to move) — the interleaved A/B
-    # measured old 1.115 s vs new 1.105 s at sf0.1, i.e. neutral, so
-    # the simpler per-group form stays
-    return (
-        keyed_python_partitions(e, ["bucket"])
-        .groupBy("bucket")
-        .applyInPandas(per_bucket, "vec_a long, vec_b long, cosine double")
-        # the same true pair collides in several tables; cosine is
-        # computed identically everywhere so distinct() collapses them
-        .distinct()
-    )
+    return _in_group_pairs(e, "bucket", threshold)
 
 
 def _hyperplane_bits(
@@ -618,8 +674,6 @@ def _hyperplane_bits(
     """Sign-pattern bit string for one seeded hyperplane table, as a
     pure column expression over an array<double> column — embeddable
     (several tables per select) and shuffle-free."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
     plane_arrays = F.array(
@@ -674,8 +728,6 @@ def train_ivf_centroids(
     size. Returns an (n_clusters, dim) numpy array of L2-normalized
     centroids.
     """
-    import numpy as np
-
     rows = (
         embeddings.select(id_col, F.col(vec_col).cast("array<double>"))
         .orderBy(id_col)
@@ -684,8 +736,7 @@ def train_ivf_centroids(
     )
     if not rows:
         return np.zeros((0, 0))
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
+    x = _unit_vectors(rows)
     rng = np.random.default_rng(seed)
     cent = x[rng.choice(len(x), size=min(n_clusters, len(x)), replace=False)]
     for _ in range(n_iter):
@@ -696,46 +747,6 @@ def train_ivf_centroids(
                 m = members.mean(axis=0)
                 cent[c] = m / np.linalg.norm(m)
     return cent
-
-
-def _ivf_score_fn(q_ids, q_norm, probe_sets, k, cell_of):
-    """ONE scoring body for both IVF probes ([[cosine_topk_ivf]]
-    re-assigns cells per batch; [[cosine_topk_ivf_staged]] reads the
-    stored column) — their pinned EXACT parity holds because this body
-    cannot drift between them (round-scope review r12; the
-    incremental_hygiene_stages one-body rule). ``cell_of(pdf, c_norm)``
-    returns the per-row cell ids."""
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: F811 — executor-side import
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_mat = np.stack(pdf["cv"].to_numpy())
-            c_ids = pdf["neighbor_id"].to_numpy()
-            c_norm = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            c_cell = cell_of(pdf, c_norm)
-            sims = c_norm @ q_norm.T
-            out = []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(c_cell, list(probe_sets[qi])) & (
-                    c_ids != qid
-                )
-                ids, vals = c_ids[mask], sims[mask, qi]
-                if len(ids) == 0:
-                    continue
-                top = min(k, len(ids))
-                sel = np.argpartition(-vals, top - 1)[:top]
-                out.append(pd.DataFrame({
-                    "query_id": qid,
-                    "neighbor_id": ids[sel],
-                    "cosine": np.round(vals[sel], 6),
-                }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return score
 
 
 def cosine_topk_ivf(
@@ -773,43 +784,20 @@ def cosine_topk_ivf(
            8         0.82           0.81      <- default
           16         1.00           1.00      (exact by construction)
     """
-    import numpy as np
-
     cent = train_ivf_centroids(
         embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
     )
-    q_rows = queries.select(id_col, F.col(vec_col).cast("array<double>")).collect()
-    if not q_rows or cent.size == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    # per-query probe cells: n_probe nearest centroids
-    probe = np.argsort(-(q_norm @ cent.T), axis=1)[:, :n_probe]  # (nq, n_probe)
-    probe_sets = [frozenset(int(c) for c in row) for row in probe]
-
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None or cent.size == 0:
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    q_ids, q_norm = qm
+    scored = _topk_scored(
+        _corpus(embeddings, id_col, vec_col), q_ids, k,
+        lambda c_norm: c_norm @ q_norm.T,
+        probe=_probe_mask(q_norm, cent, n_probe),
+        cell_of=_nearest_cell(cent),
     )
-
-    def _assign_cells(pdf, c_norm):
-        import numpy as np  # noqa: F811 — executor-side import
-
-        return np.argmax(c_norm @ cent.T, axis=1)
-
-    scored = corp.mapInPandas(
-        _ivf_score_fn(q_ids, q_norm, probe_sets, k, _assign_cells),
-        "query_id long, neighbor_id long, cosine double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def ivf_assign_cells(
@@ -830,8 +818,6 @@ def ivf_assign_cells(
     corpus never shuffles. Output ``(<id_col>, cell, <vec_col>)`` —
     the vector rides along because the probe's exact scoring needs it.
     """
-    import numpy as np
-
     cent = np.asarray(centroids, dtype=np.float64)
     if cent.size == 0:
         # fail at the driver with the cause, not with an opaque numpy
@@ -843,16 +829,13 @@ def ivf_assign_cells(
         )
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: F811 — executor-side import
-
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf["_v"].to_numpy())
-            xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+            ids, xn = _batch_matrix(pdf, "_id", "_v")
             yield pd.DataFrame(
                 {
-                    "_id": pdf["_id"].to_numpy(),
+                    "_id": ids,
                     "cell": np.argmax(xn @ cent.T, axis=1).astype("int32"),
                     "_v": pdf["_v"],
                 }
@@ -897,44 +880,26 @@ def cosine_topk_ivf_staged(
     shuffle until the final top-k rank; the per-query cell masks and
     the exact scoring run in one mapInPandas pass with queries in the
     closure (the [[cosine_topk_ivf]] contract)."""
-    import numpy as np
-
     cent = np.asarray(centroids, dtype=np.float64)
-    q_rows = queries.select(
-        id_col, F.col(vec_col).cast("array<double>")
-    ).collect()
-    if not q_rows or cent.size == 0:
-        return index.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    probe = np.argsort(-(q_norm @ cent.T), axis=1)[:, :n_probe]
-    probe_sets = [frozenset(int(c) for c in row) for row in probe]
-    all_cells = sorted({c for s in probe_sets for c in s})
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None or cent.size == 0:
+        return index.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    q_ids, q_norm = qm
+    probe = _probe_mask(q_norm, cent, n_probe)
+    all_cells = np.flatnonzero(probe.any(axis=0)).tolist()
 
     corp = index.select(
         F.col(id_col).alias("neighbor_id"),
         "cell",
         F.col(vec_col).cast("array<double>").alias("cv"),
     ).filter(F.col("cell").isin(all_cells))
-
-    scored = corp.mapInPandas(
-        _ivf_score_fn(
-            q_ids, q_norm, probe_sets, k,
-            lambda pdf, c_norm: pdf["cell"].to_numpy(),
-        ),
-        "query_id long, neighbor_id long, cosine double",
+    scored = _topk_scored(
+        corp, q_ids, k,
+        lambda c_norm: c_norm @ q_norm.T,
+        probe=probe,
+        cell_of=lambda pdf, c_norm: pdf["cell"].to_numpy(),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def train_pq_codebooks(
@@ -955,8 +920,6 @@ def train_pq_codebooks(
     IVF trainer, training cost is independent of corpus size. Returns
     an (m, n_codes, dim/m) float64 array.
     """
-    import numpy as np
-
     rows = (
         embeddings.select(id_col, F.col(vec_col).cast("array<double>"))
         .orderBy(id_col)
@@ -965,8 +928,7 @@ def train_pq_codebooks(
     )
     if not rows:
         return np.zeros((0, 0, 0))
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
+    x = _unit_vectors(rows)
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -1014,8 +976,6 @@ def train_pq_codebooks(
 def _pq_encode_mat(x, books):
     """Encode an (n, dim) matrix against (m, n_codes, d_sub) codebooks →
     (n, m) uint8 code matrix. Pure numpy; shared by encode and ADC."""
-    import numpy as np
-
     m, _, d_sub = books.shape
     codes = np.empty((x.shape[0], m), dtype=np.int64)
     for s in range(m):
@@ -1047,20 +1007,14 @@ def pq_encode(
 
     Output: ``<id_col>, codes (array<int>)``.
     """
-    import numpy as np
-
     books = codebooks
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf["_v"].to_numpy())
-            x = x / np.linalg.norm(x, axis=1, keepdims=True)
-            codes = _pq_encode_mat(x, books)
-            yield pd.DataFrame(
-                {"_id": pdf["_id"].to_numpy(), "codes": list(codes)}
-            )
+            ids, x = _batch_matrix(pdf, "_id", "_v")
+            yield pd.DataFrame({"_id": ids, "codes": list(_pq_encode_mat(x, books))})
 
     out = embeddings.select(
         F.col(id_col).alias("_id"),
@@ -1113,71 +1067,62 @@ def cosine_topk_pq(
 
     tests/test_similarity.py holds the default to a >=0.85 floor.
     """
-    import numpy as np
-
-    q_rows = queries.select(id_col, F.col(vec_col).cast("array<double>")).collect()
-    empty = embeddings.sparkSession.createDataFrame(
-        [], "query_id long, neighbor_id long, cosine double, rank int"
-    )
-    if not q_rows:
-        return empty
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None:
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     books = train_pq_codebooks(
         embeddings, id_col, vec_col, m=m, n_codes=n_codes, seed=seed
     )
     if books.size == 0:
-        return empty
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    d_sub = books.shape[2]
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    return _pq_topk(
+        embeddings, queries, id_col, vec_col, k, shortlist_mult * k, qm, books
+    )
+
+
+def _pq_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    shortlist: int,
+    qm,
+    books,
+    probe=None,
+    cell_of=None,
+) -> DataFrame:
+    """ONE ADC-scan -> shortlist -> exact re-rank body for
+    [[cosine_topk_pq]] (every row a candidate) and [[cosine_topk_ivfpq]]
+    (``probe``/``cell_of``: probed IVF cells only).
+
+    Per query, a lookup table ``lut[s, c] = q_sub[s] . codebook[s, c]``
+    turns the dot product into ``sum_s lut[s, code_s]``; the top
+    ``shortlist`` rows by that UNROUNDED approximate score survive one
+    small rank shuffle; the shortlist is broadcast back against the
+    corpus (the corpus never shuffles) for the exact cosine and the
+    final top-``k``."""
+    q_ids, q_norm = qm
+    m, _, d_sub = books.shape
     # per-query ADC lookup tables: (nq, m, n_codes)
     lut = np.einsum(
         "qsd,scd->qsc", q_norm.reshape(len(q_norm), m, d_sub), books
     )
-    L = shortlist_mult * k
 
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf["cv"].to_numpy())
-            x = x / np.linalg.norm(x, axis=1, keepdims=True)
-            c_ids = pdf["neighbor_id"].to_numpy()
-            codes = _pq_encode_mat(x, books)  # staged table at scale
-            # ADC: approx_sim[n, q] = sum_s lut[q, s, codes[n, s]]
-            g = np.take_along_axis(lut, codes.T[None, :, :], axis=2)
-            approx = g.sum(axis=1).T  # (n_rows, n_queries)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                mask = c_ids != qid
-                ids, vals = c_ids[mask], approx[mask, qi]
-                if len(ids) == 0:
-                    continue
-                top = min(L, len(ids))
-                sel = np.argpartition(-vals, top - 1)[:top]
-                out.append(pd.DataFrame({
-                    "query_id": qid,
-                    "neighbor_id": ids[sel],
-                    "pq_score": vals[sel],
-                }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def adc(c_norm):
+        codes = _pq_encode_mat(c_norm, books)  # staged table at scale
+        # approx_sim[n, q] = sum_s lut[q, s, codes[n, s]]
+        g = np.take_along_axis(lut, codes.T[None, :, :], axis=2)
+        return g.sum(axis=1).T  # (n_rows, n_queries)
 
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    corp = _corpus(embeddings, id_col, vec_col)
+    scored = _topk_scored(
+        corp, q_ids, shortlist, adc, probe, cell_of, score_col="pq_score"
     )
-    scored = corp.mapInPandas(adc, "query_id long, neighbor_id long, pq_score double")
-    wl = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_score"), F.asc("neighbor_id")
+    short = _rank_topk(scored, "pq_score", shortlist).select(
+        "query_id", "neighbor_id"
     )
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= L)
-        .select("query_id", "neighbor_id")
-    )
-    # exact re-rank: broadcast the shortlist; the corpus side stays a scan
-    fetched = corp.join(F.broadcast(shortlist), "neighbor_id")
+    fetched = corp.join(F.broadcast(short), "neighbor_id")
     qdf = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -1185,12 +1130,7 @@ def cosine_topk_pq(
     exact = fetched.join(F.broadcast(qdf), "query_id").withColumn(
         "cosine", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(exact, "cosine", k)
 
 
 def quantize_embeddings_int8(
@@ -1252,8 +1192,6 @@ def kmeans_assign(
     closure, the corpus never shuffles. Output:
     ``<id_col>, cluster (int), cos_to_centroid (double)``.
     """
-    import numpy as np
-
     cent = train_ivf_centroids(
         embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
     )
@@ -1266,13 +1204,12 @@ def kmeans_assign(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf["_v"].to_numpy())
-            x = x / np.linalg.norm(x, axis=1, keepdims=True)
+            ids, x = _batch_matrix(pdf, "_id", "_v")
             sims = x @ cent.T
             c = np.argmax(sims, axis=1)
             yield pd.DataFrame(
                 {
-                    "_id": pdf["_id"].to_numpy(),
+                    "_id": ids,
                     "cluster": c.astype("int32"),
                     "cos_to_centroid": np.round(
                         sims[np.arange(len(c)), c], 6
@@ -1321,27 +1258,22 @@ def semdedup_pairs(
            16          3          0.88           0.86
            16          4          0.96           1.00
     """
-    import numpy as np
-
     cent = train_ivf_centroids(
         embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
     )
     if cent.size == 0:  # empty corpus: no pairs, same schema
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
-        )
+        return embeddings.sparkSession.createDataFrame([], _PAIRS_SCHEMA)
     P = min(n_probe, n_clusters)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf["v"].to_numpy())
-            xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+            ids, xn = _batch_matrix(pdf)
             topP = np.argsort(-(xn @ cent.T), axis=1)[:, :P]
             yield pd.DataFrame(
                 {
-                    "vid": np.repeat(pdf["vid"].to_numpy(), P),
+                    "vid": np.repeat(ids, P),
                     "v": pdf["v"].to_numpy().repeat(P),
                     "cluster": topP.reshape(-1).astype("int32"),
                 }
@@ -1352,26 +1284,7 @@ def semdedup_pairs(
         F.col(vec_col).cast("array<double>").alias("v"),
     ).mapInPandas(assign, "vid long, v array<double>, cluster int")
 
-    def per_cluster(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vid"].to_numpy()
-        m = np.stack(pdf["v"].to_numpy())
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(m @ m.T, 6)
-        i, j = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {"vec_a": ids[i], "vec_b": ids[j], "cosine": sims[i, j]}
-        )
-
-    from flink_examples_spark.operators.util import keyed_python_partitions
-
-    return (
-        keyed_python_partitions(e, ["cluster"])
-        .groupBy("cluster")
-        .applyInPandas(per_cluster, "vec_a long, vec_b long, cosine double")
-        # a pair whose probe sets overlap in >1 cluster is emitted per
-        # shared cluster with identical cosine; distinct() collapses it
-        .distinct()
-    )
+    return _in_group_pairs(e, "cluster", threshold)
 
 
 def cluster_balanced_sample(
@@ -1458,16 +1371,9 @@ def cosine_topk_ivfpq(
     filter → ADC score), one small rank shuffle over ~|q| * L shortlist
     rows, broadcast exact re-rank. Zero corpus shuffles.
     """
-    import numpy as np
-
-    empty = embeddings.sparkSession.createDataFrame(
-        [], "query_id long, neighbor_id long, cosine double, rank int"
-    )
-    q_rows = queries.select(
-        id_col, F.col(vec_col).cast("array<double>")
-    ).collect()
-    if not q_rows:
-        return empty
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None:
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     cent = train_ivf_centroids(
         embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
     )
@@ -1475,78 +1381,10 @@ def cosine_topk_ivfpq(
         embeddings, id_col, vec_col, m=m, n_codes=n_codes, seed=seed
     )
     if cent.size == 0 or books.size == 0:
-        return empty
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    probe = np.argsort(-(q_norm @ cent.T), axis=1)[:, :n_probe]
-    probe_sets = [frozenset(int(c) for c in row) for row in probe]
-    d_sub = books.shape[2]
-    lut = np.einsum(
-        "qsd,scd->qsc", q_norm.reshape(len(q_norm), m, d_sub), books
-    )
-    L = shortlist_mult * k
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf["cv"].to_numpy())
-            x = x / np.linalg.norm(x, axis=1, keepdims=True)
-            c_ids = pdf["neighbor_id"].to_numpy()
-            c_cell = np.argmax(x @ cent.T, axis=1)
-            codes = _pq_encode_mat(x, books)  # staged table at scale
-            g = np.take_along_axis(lut, codes.T[None, :, :], axis=2)
-            approx = g.sum(axis=1).T  # (n_rows, n_queries)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(c_cell, list(probe_sets[qi])) & (
-                    c_ids != qid
-                )
-                ids, vals = c_ids[mask], approx[mask, qi]
-                if len(ids) == 0:
-                    continue
-                top = min(L, len(ids))
-                sel = np.argpartition(-vals, top - 1)[:top]
-                out.append(pd.DataFrame({
-                    "query_id": qid,
-                    "neighbor_id": ids[sel],
-                    "pq_score": vals[sel],
-                }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    scored = corp.mapInPandas(
-        adc, "query_id long, neighbor_id long, pq_score double"
-    )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_score"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= L)
-        .select("query_id", "neighbor_id")
-    )
-    fetched = corp.join(F.broadcast(shortlist), "neighbor_id")
-    qdf = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    exact = fetched.join(F.broadcast(qdf), "query_id").withColumn(
-        "cosine",
-        F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    return _pq_topk(
+        embeddings, queries, id_col, vec_col, k, shortlist_mult * k, qm, books,
+        probe=_probe_mask(qm[1], cent, n_probe), cell_of=_nearest_cell(cent),
     )
 
 
@@ -1574,8 +1412,6 @@ def pca_fit(
     Returns ``(mean[d], components[k,d], eigvals[k])`` with components
     in DESCENDING eigenvalue order.
     """
-    import numpy as np
-
     def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -1632,8 +1468,6 @@ def pca_project(
     recon_err = ‖(x−μ)‖² − ‖proj‖² (the variance the kept components
     miss, ≥ 0 up to float rounding).
     """
-    import numpy as np
-
     mean, comps, _ = pca_fit(df, vec_col, k)
     b_mean, b_comps = mean, comps   # captured in closure, Arrow-shipped
 

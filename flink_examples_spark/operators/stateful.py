@@ -3,8 +3,8 @@
 Each mirrors a keyed ProcessFunction from the reference; the streaming
 variants with real GroupState/timeouts live in ``streaming/stateful.py``.
 Batch semantics are expressed either as window functions (pure JVM,
-preferred) or as ``applyInPandas`` scans where the logic is genuinely
-iterative (DFA, custom triggers).
+preferred) or as per-key pandas scans (``util.grouped_map_in_pandas``)
+where the logic is genuinely iterative (DFA, custom triggers).
 
   fraud_pairs    — TimerService.java:68-139: flag small amount, alert if
                    the NEXT event is large and within the timeout.
@@ -88,8 +88,8 @@ def dfa_alerts(
     StateMachineExample.java:143-165).
 
     Output: ``key, n_events, n_alerts``. Executed as a per-key
-    ``applyInPandas`` scan — one shuffle on the key; state stays in the
-    executor.
+    ``grouped_map_in_pandas`` scan — one shuffle on the key; state stays
+    in the executor.
     """
     trans = {k: frozenset(v) for k, v in transitions.items()}
     ocols = list(order_cols)

@@ -2,7 +2,8 @@
 
 Reference coverage (SURVEY.md §2.5):
   W2 tumbling event-time window  — WindowWordCount.java:47-51, WindowJoin.java:43
-  W3 sliding event-time window   — HotItems.java:75 (1 h size, 5 min slide)
+  W3 sliding event-time window   — HotItems.java:75 (1 h size, 5 min slide);
+                                   built in place by operators/topn.hot_items
   W4 session window (gap)        — SessionWindow.java:52-56
   W1 count window (size, slide)  — WindowWordCount.java:57 countWindow(10,5)
   A4 window metadata in output   — HotItems.java:149-159 (window.getEnd())
@@ -48,26 +49,6 @@ def tumbling_window_agg(
     HotItems.java:149-159; in Spark it's just a struct column).
     """
     out = df.groupBy(F.window(F.col(ts_col), duration).alias("w"), *keys).agg(*aggs)
-    return _unpack_window(out, "window_start", "window_end")
-
-
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """Sliding event-time window aggregation (W3, HotItems.java:75).
-
-    Each row lands in ``duration/slide`` windows; Spark expands this
-    before the aggregation (a generate + hash-agg plan), which keeps it
-    a single shuffle — no per-window state replay.
-    """
-    out = df.groupBy(
-        F.window(F.col(ts_col), duration, slide).alias("w"), *keys
-    ).agg(*aggs)
     return _unpack_window(out, "window_start", "window_end")
 
 

@@ -3062,9 +3062,10 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The winnow expression is ~n_grams * window md5 evaluations per
     # row — CPU-heavy on tiny input bytes, so the file scan's natural
-    # 1-2 partitions serialize it (same failure mode
-    # keyed_python_partitions fixes for Python stages; here the stage
-    # is JVM codegen but equally CPU-bound). Fan out explicitly.
+    # 1-2 partitions serialize it (same failure mode the explicit
+    # partition count in operators/util.py grouped_map_in_pandas fixes
+    # for Python stages; here the stage is JVM codegen but equally
+    # CPU-bound). Fan out explicitly.
     docs = load_table(spark, "documents", sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )

@@ -17,6 +17,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> str:
+    """Local core count: ``SPARK_GRAFT_CPUS``, ``"32"`` when unset.
+    ``get_spark`` sizes ``local[N]`` from it and ``bench.py`` records
+    it, so an artifact always names the core count its session ran on."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
 def get_spark(
     app_name: str = "flink-examples-spark",
     master: str | None = None,
@@ -31,13 +38,14 @@ def get_spark(
     ``GlobalJobParameters`` equivalent; closure captures and broadcast
     variables cover per-operator constants.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local core count. All settings are
-    chosen to survive a 100 TB / 1000-executor scale-up: AQE handles
-    skew + partition sizing at runtime, broadcast threshold lets small
-    dimension tables avoid shuffles, and RocksDB-ready streaming state
-    config is applied when streaming ops are used.
+    Honors ``SPARK_GRAFT_CPUS`` for local core count (``local_cpus``).
+    All settings are chosen to survive a 100 TB / 1000-executor
+    scale-up: AQE handles skew + partition sizing at runtime, and the
+    broadcast threshold lets small dimension tables avoid shuffles.
+    Streaming state uses Spark's default state store provider; no
+    state-backend config is set here.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(local_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -67,23 +75,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def streaming_conf(rocksdb: bool = True) -> dict[str, str]:
-    """Config fragment for stateful streaming queries.
-
-    Mirrors the reference's state-backend selection
-    (StateMachineExample.java:95-104 memory/fs/rocksdb): RocksDB state
-    store provider is the scale path — state spills to local disk rather
-    than executor heap, matching the reference's RocksDB incremental
-    checkpointing intent.
-    """
-    conf = {
-        "spark.sql.streaming.stateStore.stateSchemaCheck": "true",
-    }
-    if rocksdb:
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )
-        conf["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] = "true"
-    return conf

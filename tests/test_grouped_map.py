@@ -124,3 +124,34 @@ def test_float_upcast_key_above_2p53_raises(spark):
     )
     with pytest.raises(Exception, match="2\\^53|float64"):
         out.collect()
+
+
+def test_double_key_above_2p53_groups_like_apply_in_pandas(spark):
+    # a genuinely-float key compares as the same doubles the JVM groups
+    # on, so the 2^53 guard (integral keys only) must let it through:
+    # distinct doubles at 2^60 are 256 apart and must stay distinct
+    big = 2.0**60
+    df = spark.createDataFrame(
+        [(big, 0, 1), (big + 256, 1, 2), (big, 2, 3), (big + 512, 3, 4),
+         (None, 4, 5)],
+        "k double, o long, v long",
+    )
+    schema = "k double, n long, s long"
+
+    def fn(key, pdf):
+        return pd.DataFrame(
+            {"k": [key[0]], "n": [len(pdf)], "s": [int(pdf["v"].sum())]}
+        )
+
+    got = grouped_map_in_pandas(
+        df, ["k"], ["o"], fn, schema, num_partitions=1
+    ).collect()
+    ref = (
+        df.groupBy("k")
+        .applyInPandas(lambda pdf: fn((pdf["k"].iloc[0],), pdf), schema)
+        .collect()
+    )
+    assert len(got) == 4
+    assert sorted(repr(tuple(r)) for r in got) == sorted(
+        repr(tuple(r)) for r in ref
+    )

@@ -826,3 +826,63 @@ def test_ivf_assign_cells_empty_centroids_raises(spark):
     )
     with pytest.raises(ValueError, match="empty centroids"):
         ivf_assign_cells(df, np.zeros((0, 0)))
+
+
+def _exact_topk_rows(df):
+    return sorted(
+        (r.query_id, r.neighbor_id, r.cosine, r.rank) for r in df.collect()
+    )
+
+
+def test_pq_full_shortlist_equals_exact_topk(spark, sf_dir):
+    """Exact limit of the shared PQ core: a shortlist of at least the
+    whole corpus leaves ADC nothing to prune, so the exact re-rank must
+    reproduce the expression-fold top-k row for row."""
+    from flink_examples_spark.operators.similarity import cosine_topk_pq
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    q = emb.filter(F.col("vec_id") < 5)
+    k = 5
+    mult = -(-emb.count() // k)  # shortlist_mult * k >= corpus size
+    exact = _exact_topk_rows(cosine_topk(emb, q, k=k))
+    assert len(exact) == 5 * k
+    assert _exact_topk_rows(cosine_topk_pq(emb, q, k=k, shortlist_mult=mult)) == exact
+
+
+def test_ivfpq_full_probe_full_shortlist_equals_exact_topk(spark, sf_dir):
+    """Exact limit of the shared PQ core with the IVF probe mask:
+    probing every cell with a full shortlist prunes nothing."""
+    from flink_examples_spark.operators.similarity import cosine_topk_ivfpq
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    q = emb.filter(F.col("vec_id") < 5)
+    k = 5
+    mult = -(-emb.count() // k)
+    exact = _exact_topk_rows(cosine_topk(emb, q, k=k))
+    got = cosine_topk_ivfpq(
+        emb, q, k=k, n_clusters=8, n_probe=8, shortlist_mult=mult
+    )
+    assert _exact_topk_rows(got) == exact
+
+
+def test_semdedup_full_probe_equals_expr_pairs(spark, sf_dir):
+    """Exact limit of the shared in-group pair sweep: with every vector
+    in every cluster, SemDeDup compares all pairs, so its pair set is
+    the expression path's, each pair reported once, cosines equal up
+    to GEMM-vs-fold rounding."""
+    from flink_examples_spark.operators.similarity import (
+        embedding_neardup_pairs,
+        semdedup_pairs,
+    )
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    expr = {
+        (r.vec_a, r.vec_b): r.cosine
+        for r in embedding_neardup_pairs(emb, strategy="expr").collect()
+    }
+    rows = semdedup_pairs(emb, n_clusters=8, n_probe=8).collect()
+    got = {(r.vec_a, r.vec_b): r.cosine for r in rows}
+    assert expr  # non-vacuous
+    assert len(rows) == len(got)
+    assert got.keys() == expr.keys()
+    assert all(abs(got[p] - expr[p]) <= 2e-6 for p in expr)
