@@ -1,12 +1,23 @@
 """Deduplication operators for large-scale corpus pipelines.
 
-Four dedup families, all shuffle-conscious:
+Four pair/signature dedup families, all shuffle-conscious:
 
   exact        — hash-groupBy on a normalized fingerprint (one shuffle)
   ngram-jaccard — shingle → inverted-index self-join → exact Jaccard
   MinHash+LSH  — shingle → k minhashes → banded buckets → bucket join
                  (candidate generation never goes quadratic)
   SimHash      — per-token bit votes → compact integer signature
+
+and the corpus-strip family, which rewrites documents instead of
+pairing them: four units (token chunk, host line, paragraph, sentence
+span), each as a batch strip, a staged-index builder and an incremental
+strip against that index. Every strip is split → mark → reassemble
+through one private core — ``_split_units`` (the literal-separator
+explode), ``_keep_first_drop`` + ``_index_hits`` (the keep-first verdict
+and the broadcast index probe), ``_reassemble`` (the ordered fold back
+to text) and ``_with_spine`` (one row per input doc) — so a strip
+operator states only its unit explode, its verdict rule and its output
+column names. Host lines keep their own kill-all threshold verdicts.
 
 Hashes are md5-derived (functions.text.hash60) so results are
 deterministic and reproducible in any SQL engine — at 100 TB you want
@@ -18,6 +29,8 @@ create quadratic join blowup on boilerplate text.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, LongType, ShortType
@@ -417,9 +430,15 @@ def minhash_lsh_pairs(
     where marginal-j pairs matter, raise k (more bands at the same
     band_size shifts the S-curve left).
     """
-    bands = minhash_band_keys(
+    return _band_pairs(minhash_band_keys(
         df, id_col, text_col, num_hashes, band_size, n, shingles_df
-    )
+    ))
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)``, doc_a < doc_b, of docs that agree on
+    a full band: the LSH self-join inside band-key buckets only. The
+    batch pairs and the incremental within-delta pairs."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -490,18 +509,7 @@ def incremental_lsh_pairs(
         .distinct()
         .withColumn("against", F.lit("corpus"))
     )
-    within = (
-        delta_bands.alias("a")
-        .join(
-            delta_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .withColumn("against", F.lit("delta"))
-    )
+    within = _band_pairs(delta_bands).withColumn("against", F.lit("delta"))
     return cross.unionByName(within)
 
 
@@ -806,31 +814,17 @@ def substring_dedup_strip(
     chunk-frequency table is the stageable artifact (write it once,
     reuse across strip runs).
     """
-    chunks = _doc_chunks(df, id_col, text_col, k).withColumn(
-        "cfp", F.md5("chunk")
-    )
-    # canonical occurrence = struct-ordered min of (doc_id, idx) — a
-    # struct min, not an arithmetic doc_id*K+idx key, so arbitrary id
+    chunks = _doc_chunks(df, id_col, text_col, k)
+    # canonical occurrence = struct-ordered min of (doc_id, pos) — a
+    # struct min, not an arithmetic doc_id*K+pos key, so arbitrary id
     # magnitudes and chunk counts can't overflow or mis-order (the SQL
     # oracle's doc_id*100000+idx twin is equivalent under its
     # documented 4096-token cap)
-    ckey = F.struct(F.col("doc_id"), F.col("idx"))
-    marked = (
-        chunks.withColumn("ckey", ckey)
-        .join(_keep_first_verdicts(chunks, "cfp", ckey), "cfp", "left")
-        .select(
-            "doc_id",
-            "idx",
-            "chunk",
-            (
-                F.col("_ckey_min").isNotNull()
-                & (F.col("ckey") != F.col("_ckey_min"))
-            ).alias("drop"),
-        )
+    marked = _keep_first_drop(
+        chunks, "cfp", F.struct(F.col("doc_id"), F.col("pos"))
     )
-    return _reassemble_chunks(marked).select(
-        F.col("doc_id").alias(id_col), "n_chunks", "n_dropped", "kept_text"
-    )
+    return _reassemble(marked, " ", ["doc_id"], "chunk", "n_chunks",
+                       "n_dropped", "kept_text", out_keys=[id_col])
 
 
 def _keep_first_verdicts(parts: DataFrame, key_col: str, ckey) -> DataFrame:
@@ -864,12 +858,155 @@ def _keep_first_verdicts(parts: DataFrame, key_col: str, ckey) -> DataFrame:
     )
 
 
+def _keep_first_drop(
+    parts: DataFrame, fp_col: str, ckey, hits: DataFrame | None = None
+) -> DataFrame:
+    """``parts`` plus a boolean ``drop``: the unit is a non-canonical
+    occurrence of a duplicated ``fp_col`` (keep-first on the struct
+    minimum ``ckey``, the [[_keep_first_verdicts]] de-skew rule) or,
+    given the ``_hit`` table of [[_index_hits]], its fingerprint is
+    already in a staged corpus index. Corpus occurrences win
+    unconditionally: shipped docs are immutable, so an indexed unit
+    drops even where a full re-strip's tiebreak would keep it. The one
+    verdict of the substring, paragraph and span strips, batch and
+    incremental."""
+    marked = parts
+    drop = F.col("_ckey_min").isNotNull() & (
+        F.col("ckey") != F.col("_ckey_min")
+    )
+    if hits is not None:
+        marked = marked.join(F.broadcast(hits), fp_col, "left")
+        drop = F.col("_hit").isNotNull() | drop
+    return (
+        marked.withColumn("ckey", ckey)
+        .join(_keep_first_verdicts(parts, fp_col, ckey), fp_col, "left")
+        .withColumn("drop", drop)
+    )
+
+
+def _index_hits(
+    index: DataFrame, parts: DataFrame, on: str, fp_col: str
+) -> DataFrame:
+    """``(fp_col, _hit)``: the fingerprints of ``parts`` present in a
+    staged corpus ``index``, probed on its ``on`` column. The index is
+    probed with the BROADCAST delta key set and the hit list (≤ |delta
+    units|) is broadcast back by [[_keep_first_drop]], so the 100 TB
+    index is never reshuffled; every other exchange of an incremental
+    strip is delta-sized. ``distinct`` after the probe: an index
+    accumulated over many ingest batches can hold the same key in
+    several subdirs, and a duplicated hit row would multiply delta rows
+    through the rejoin — inflating counts and doubling units in the
+    rebuilt text."""
+    # fingerprint-only indexes probe on fp_col itself (on == fp_col)
+    probe = parts.select(*dict.fromkeys([on, fp_col])).distinct()
+    return (
+        index.join(F.broadcast(probe), on)
+        .select(fp_col)
+        .distinct()
+        .withColumn("_hit", F.lit(1))
+    )
+
+
+def _split_units(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    sep: str,
+    unit: str = "part",
+    host_col: str | None = None,
+) -> DataFrame:
+    """``(doc_id, [host,] pos, <unit>)``: each doc split on the LITERAL
+    ``sep``, one row per unit in order, codegen inside the scan.
+    ``re.escape`` quotes ``sep`` for the Java regex split (a
+    ``\\Q...\\E`` quote breaks on a ``sep`` holding ``\\E``). NULL text
+    yields no rows; empty text one empty unit. The one explode of the
+    host-line, paragraph and span strips, their index builders and
+    ``streaming.sinks``' host-line partials; ``host_col`` carries the
+    host through for the host-line form (``unit="line"``)."""
+    carried = [] if host_col is None else [F.col(host_col).alias("host")]
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        *carried,
+        F.posexplode(F.split(F.col(text_col), re.escape(sep))).alias(
+            "pos", unit
+        ),
+    )
+
+
+def _reassemble(
+    marked: DataFrame,
+    sep: str,
+    keys: list,
+    unit: str,
+    n_col: str,
+    dropped_col: str,
+    text_col: str,
+    removed_chars: bool = False,
+    out_keys: list | None = None,
+) -> DataFrame:
+    """Fold ``(..keys, pos, <unit>, drop)`` to one row per ``keys``
+    (renamed to ``out_keys`` when given): ``n_col`` units,
+    ``dropped_col`` of them dropped, (host lines) the struck
+    ``removed_chars``, and the survivors rejoined by ``sep`` in ``pos``
+    order as ``text_col``. The one ordered keep-and-reassemble fold of
+    every strip: a single exchange on the doc key, nothing
+    content-keyed."""
+    drop = F.col("drop")
+    aggs = [
+        F.count(F.lit(1)).alias(n_col),
+        F.sum(drop.cast("long")).alias(dropped_col),
+    ]
+    if removed_chars:
+        aggs.append(F.sum(
+            F.when(drop, F.length(unit).cast("long"))
+            .otherwise(F.lit(0).cast("long"))
+        ).alias("removed_chars"))
+    kept = F.array_sort(
+        F.collect_list(F.when(~drop, F.struct(F.col("pos"), F.col(unit))))
+    )
+    aggs.append(
+        F.concat_ws(sep, F.transform(kept, lambda s: s[unit])).alias(text_col)
+    )
+    folded = marked.groupBy(*keys).agg(*aggs)
+    if out_keys is None:
+        return folded
+    return folded.select(
+        *(F.col(k).alias(o) for k, o in zip(keys, out_keys)),
+        *folded.columns[len(keys):],
+    )
+
+
+def _with_spine(
+    df: DataFrame, rebuilt: DataFrame, id_col: str, text_col: str, n_col: str
+) -> DataFrame:
+    """One row per INPUT doc of ``(doc_id, n_col, n_removed, text)``
+    folded by [[_reassemble]]: NULL text passes through as NULL with
+    NULL counts (repo convention: no silent drops); any other doc
+    without a folded row (a NULL ``doc_id`` never joins back) gets an
+    empty text and zero counts."""
+    spine = df.select(F.col(id_col).alias("doc_id"),
+                      F.col(text_col).isNull().alias("_null_text"))
+
+    def unless_null(c: str, empty):
+        return F.when(F.col("_null_text"), F.lit(None)).otherwise(
+            F.coalesce(F.col(c), F.lit(empty))
+        ).alias(c)
+
+    return spine.join(rebuilt, "doc_id", "left").select(
+        F.col("doc_id").alias(id_col),
+        unless_null("text", ""),
+        unless_null(n_col, 0),
+        unless_null("n_removed", 0),
+    )
+
+
 def _doc_chunks(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """(doc_id, idx, chunk): non-overlapping ``k``-token chunks per doc
-    (last chunk may be short), codegen inside the scan. Shared by the
-    batch and incremental substring-strip paths."""
+    """(doc_id, pos, chunk, cfp): non-overlapping ``k``-token chunks per
+    doc (last chunk may be short) and their md5, codegen inside the
+    scan. The substring strips' unit explode, batch, index and
+    incremental."""
     toks = tokens(text_col)
     # guard the empty-token case explicitly: sequence(0, -1) would run
     # DESCENDING rather than producing an empty array
@@ -881,31 +1018,9 @@ def _doc_chunks(
     return (
         df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
         .select(
-            "doc_id", F.posexplode(F.expr(chunk_expr)).alias("idx", "chunk")
+            "doc_id", F.posexplode(F.expr(chunk_expr)).alias("pos", "chunk")
         )
-    )
-
-
-def _reassemble_chunks(marked: DataFrame) -> DataFrame:
-    """Fold (doc_id, idx, chunk, drop) back into per-doc accounting +
-    the surviving text in chunk order."""
-    return marked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum(F.col("drop").cast("long")).alias("n_dropped"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~F.col("drop"),
-                            F.struct(F.col("idx"), F.col("chunk")),
-                        )
-                    )
-                ),
-                lambda s: s["chunk"],
-            ),
-        ).alias("kept_text"),
+        .withColumn("cfp", F.md5("chunk"))
     )
 
 
@@ -964,56 +1079,32 @@ def host_line_dedup_strip(
     have distinct md5s (the collision-free case the parity tests pin);
     a collision can only remove more lines, never keep a line the
     default path would strike."""
-    lines = _host_lines(df, id_col, host_col, text_col, sep)
+    lines = _split_units(df, id_col, text_col, sep, "line", host_col)
     if line_index is not None:
-        verdicts = (
-            line_index.filter(F.col("n_occ") >= int(min_count))
+        lines = lines.withColumn("lfp", F.md5("line"))
+        boiler = line_index.filter(F.col("n_occ") >= int(min_count)) \
             .select("host", "lfp")
-            .withColumn("_boiler", F.lit(1))
-        )
-        marked = (
-            lines.withColumn("lfp", F.md5("line"))
-            .join(verdicts, ["host", "lfp"], "left")
-        )
     else:
-        verdicts = (
+        boiler = (
             lines.groupBy("host", "line")
             .agg(F.count(F.lit(1)).alias("_n_occ"))
             .filter(F.col("_n_occ") >= int(min_count))
-            .drop("_n_occ")
-            .withColumn("_boiler", F.lit(1))
+            .select("host", "line")
         )
-        marked = lines.join(verdicts, ["host", "line"], "left")
-    marked = marked.select(
-        "doc_id",
-        "host",
-        "pos",
-        "line",
-        F.col("_boiler").isNotNull().alias("drop"),
-    )
-    return _reassemble_host_lines(marked, sep).select(
-        F.col("doc_id").alias(id_col),
-        F.col("host").alias(host_col),
-        "n_lines",
-        "n_removed",
-        "removed_chars",
-        "kept_text",
-    )
+    return _strip_host_lines(lines, boiler, id_col, host_col, sep)
 
 
-def _host_lines(
-    df: DataFrame, id_col: str, host_col: str, text_col: str, sep: str
+def _strip_host_lines(
+    lines: DataFrame, boiler: DataFrame, id_col: str, host_col: str, sep: str
 ) -> DataFrame:
-    """(doc_id, host, pos, line): per-doc line explode with order.
-    Shared by the batch and incremental host-line-strip paths."""
-    import re as _re
-
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(host_col).alias("host"),
-        F.posexplode(
-            F.split(F.col(text_col), _re.escape(sep))
-        ).alias("pos", "line"),
+    """Kill-all strip: every line whose key (``boiler``'s columns) is in
+    the ``boiler`` verdict table drops, at every occurrence."""
+    marked = lines.join(
+        boiler.withColumn("_boiler", F.lit(1)), boiler.columns, "left"
+    ).withColumn("drop", F.col("_boiler").isNotNull())
+    return _reassemble(
+        marked, sep, ["doc_id", "host"], "line", "n_lines", "n_removed",
+        "kept_text", removed_chars=True, out_keys=[id_col, host_col],
     )
 
 
@@ -1033,7 +1124,7 @@ def host_line_fp_index(
     ``min_count``, so the index must carry how many the corpus already
     holds."""
     return (
-        _host_lines(df, id_col, host_col, text_col, sep)
+        _split_units(df, id_col, text_col, sep, "line", host_col)
         .groupBy("host", F.md5("line").alias("lfp"))
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
@@ -1065,7 +1156,7 @@ def incremental_host_line_strip(
     doc_id reassembly. Output shape matches the batch op:
     ``<id_col>, <host_col>, n_lines, n_removed, removed_chars,
     kept_text``."""
-    d_lines = _host_lines(delta, id_col, host_col, text_col, sep) \
+    d_lines = _split_units(delta, id_col, text_col, sep, "line", host_col) \
         .withColumn("lfp", F.md5("line"))
     d_counts = d_lines.groupBy("host", "lfp").agg(
         F.count(F.lit(1)).alias("_n_d")
@@ -1084,52 +1175,9 @@ def incremental_host_line_strip(
             >= int(min_count)
         )
         .select("host", "lfp")
-        .withColumn("_boiler", F.lit(1))
     )
-    marked = d_lines.join(
-        F.broadcast(boiler), ["host", "lfp"], "left"
-    ).select(
-        "doc_id",
-        "host",
-        "pos",
-        "line",
-        F.col("_boiler").isNotNull().alias("drop"),
-    )
-    return _reassemble_host_lines(marked, sep).select(
-        F.col("doc_id").alias(id_col),
-        F.col("host").alias(host_col),
-        "n_lines",
-        "n_removed",
-        "removed_chars",
-        "kept_text",
-    )
-
-
-def _reassemble_host_lines(marked: DataFrame, sep: str) -> DataFrame:
-    """Fold (doc_id, host, pos, line, drop) back into per-doc strip
-    accounting + the surviving text in line order. Shared by the batch
-    and incremental host-line-strip paths."""
-    return marked.groupBy("doc_id", "host").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.col("drop").cast("long")).alias("n_removed"),
-        F.sum(
-            F.when(F.col("drop"), F.length("line").cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        ).alias("removed_chars"),
-        F.concat_ws(
-            sep,
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~F.col("drop"),
-                            F.struct(F.col("pos"), F.col("line")),
-                        )
-                    )
-                ),
-                lambda s: s["line"],
-            ),
-        ).alias("kept_text"),
+    return _strip_host_lines(
+        d_lines, F.broadcast(boiler), id_col, host_col, sep
     )
 
 
@@ -1167,78 +1215,14 @@ def paragraph_dedup(
     extends SURVEY.md §2's dedup family per the training-pipeline
     mandate.
     """
-    parts = _doc_paragraphs(df, id_col, text_col, sep).withColumn(
-        "pfp", F.md5("part")
-    )
-    ckey = F.struct(F.col("doc_id"), F.col("pos"))
-    marked = (
-        parts.withColumn("ckey", ckey)
-        .join(_keep_first_verdicts(parts, "pfp", ckey), "pfp", "left")
-        .withColumn(
-            "drop",
-            F.col("_ckey_min").isNotNull()
-            & (F.col("ckey") != F.col("_ckey_min"))
-            & (F.length("part") >= min_chars),
-        )
-    )
-    return _rebuild_paragraphs(df, marked, id_col, text_col, sep)
-
-
-def _doc_paragraphs(
-    df: DataFrame, id_col: str, text_col: str, sep: str
-) -> DataFrame:
-    """(doc_id, pos, part): literal-separator paragraph explode, codegen
-    inside the scan (\\Q...\\E quotes the separator for Java regex
-    split). Shared by the batch and incremental paragraph-dedup paths."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.split(F.col(text_col), "\\Q" + sep + "\\E")
-        ).alias("pos", "part"),
-    )
-
-
-def _rebuild_paragraphs(
-    df: DataFrame, marked: DataFrame, id_col: str, text_col: str, sep: str
-) -> DataFrame:
-    """Fold (doc_id, pos, part, drop) back to one row per INPUT doc:
-    survivors rejoined in order, per-doc accounting, empty text for
-    fully-stripped docs, NULL passthrough for NULL text."""
-    rebuilt = marked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_paragraphs"),
-        F.sum(F.col("drop").cast("long")).alias("n_removed"),
-        F.concat_ws(
-            sep,
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~F.col("drop"),
-                            F.struct(F.col("pos"), F.col("part")),
-                        )
-                    )
-                ),
-                lambda s: s["part"],
-            ),
-        ).alias("text"),
-    )
-    spine = df.select(F.col(id_col).alias("doc_id"),
-                      F.col(text_col).isNull().alias("_null_text"))
-    return (
-        spine.join(rebuilt, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias(id_col),
-            F.when(F.col("_null_text"), F.lit(None)).otherwise(
-                F.coalesce(F.col("text"), F.lit(""))
-            ).alias("text"),
-            F.when(F.col("_null_text"), F.lit(None)).otherwise(
-                F.coalesce(F.col("n_paragraphs"), F.lit(0))
-            ).alias("n_paragraphs"),
-            F.when(F.col("_null_text"), F.lit(None)).otherwise(
-                F.coalesce(F.col("n_removed"), F.lit(0))
-            ).alias("n_removed"),
-        )
-    )
+    parts = _split_units(df, id_col, text_col, sep) \
+        .withColumn("pfp", F.md5("part"))
+    marked = _keep_first_drop(
+        parts, "pfp", F.struct(F.col("doc_id"), F.col("pos"))
+    ).withColumn("drop", F.col("drop") & (F.length("part") >= min_chars))
+    rebuilt = _reassemble(marked, sep, ["doc_id"], "part", "n_paragraphs",
+                          "n_removed", "text")
+    return _with_spine(df, rebuilt, id_col, text_col, "n_paragraphs")
 
 
 def span_dedup_strip(
@@ -1269,28 +1253,24 @@ def span_dedup_strip(
     de-skewed dup-only aggregate+rejoin of [[_keep_first_verdicts]]
     (a boilerplate span repeated 10⁸× combines map-side; no
     content-keyed window), coverage fan-out is ``width`` rows per
-    dropped occurrence, and the sentence mask is a left-anti join on
-    (doc_id, pos) — every exchange is keyed by doc or fingerprint,
-    nothing quadratic. Oracle parity uses the documented
+    dropped occurrence, and the sentence mask is a left join of the
+    covered (doc_id, pos) set — every exchange is keyed by doc or
+    fingerprint, nothing quadratic. Oracle parity uses the documented
     ``doc_id*100000+pos`` canonical-key twin under the 4096-unit cap.
     """
-    parts = _doc_paragraphs(df, id_col, text_col, sep)
-    spans = _doc_spans(parts, width)
-    ckey = F.struct(F.col("doc_id"), F.col("spos"))
-    dropped = (
-        spans.withColumn("ckey", ckey)
-        .join(_keep_first_verdicts(spans, "sfp", ckey), "sfp")
-        .filter(F.col("ckey") != F.col("_ckey_min"))
+    parts = _split_units(df, id_col, text_col, sep)
+    spans = _keep_first_drop(
+        _doc_spans(parts, width), "sfp",
+        F.struct(F.col("doc_id"), F.col("spos")),
     )
-    return _mask_and_rebuild(df, parts, dropped, id_col, text_col,
-                             sep, width)
+    return _mask_spans(df, parts, spans, id_col, text_col, sep, width)
 
 
 def _doc_spans(parts: DataFrame, width: int) -> DataFrame:
     """(doc_id, spos, span, sfp): sliding ``width``-sentence spans from
     the exploded sentence set, built from each doc's in-memory sentence
-    array (one exchange on doc_id, span construction in codegen).
-    Shared by the batch and incremental span-dedup paths."""
+    array (one exchange on doc_id, span construction in codegen). The
+    span strips' unit explode, batch, index and incremental."""
     arr = parts.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct("pos", "part"))
@@ -1308,63 +1288,34 @@ def _doc_spans(parts: DataFrame, width: int) -> DataFrame:
     )
 
 
-def _mask_and_rebuild(
+def _mask_spans(
     df: DataFrame,
     parts: DataFrame,
-    dropped: DataFrame,
+    spans: DataFrame,
     id_col: str,
     text_col: str,
     sep: str,
     width: int,
 ) -> DataFrame:
     """Fan each dropped span occurrence (doc_id, spos) out to its
-    ``width`` covered sentence positions, left-anti mask the sentence
-    set, and rebuild one output row per INPUT doc (empty text when
-    everything masked, NULL passthrough for NULL text)."""
+    ``width`` covered sentence positions, drop exactly the covered
+    sentences, and rebuild one output row per INPUT doc."""
     cover = (
-        dropped.select(
+        spans.filter(F.col("drop"))
+        .select(
             "doc_id",
             F.explode(
                 F.sequence(F.col("spos"), F.col("spos") + (width - 1))
             ).alias("pos"),
         )
         .distinct()
+        .withColumn("_covered", F.lit(True))
     )
-    kept = parts.join(cover, ["doc_id", "pos"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.concat_ws(
-            sep,
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "part"))),
-                lambda s: s["part"],
-            ),
-        ).alias("text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    totals = parts.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sentences")
-    )
-    spine = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).isNull().alias("_null_text"),
-    )
-    return (
-        spine.join(rebuilt, "doc_id", "left")
-        .join(totals, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias(id_col),
-            F.when(F.col("_null_text"), F.lit(None)).otherwise(
-                F.coalesce(F.col("text"), F.lit(""))
-            ).alias("text"),
-            F.when(F.col("_null_text"), F.lit(None)).otherwise(
-                F.coalesce(F.col("n_sentences"), F.lit(0))
-            ).alias("n_sentences"),
-            F.when(F.col("_null_text"), F.lit(None)).otherwise(
-                F.coalesce(F.col("n_sentences"), F.lit(0))
-                - F.coalesce(F.col("n_kept"), F.lit(0))
-            ).alias("n_removed"),
-        )
-    )
+    marked = parts.join(cover, ["doc_id", "pos"], "left") \
+        .withColumn("drop", F.col("_covered").isNotNull())
+    rebuilt = _reassemble(marked, sep, ["doc_id"], "part", "n_sentences",
+                          "n_removed", "text")
+    return _with_spine(df, rebuilt, id_col, text_col, "n_sentences")
 
 
 def span_fp_index(
@@ -1379,7 +1330,7 @@ def span_fp_index(
     distinct ``width``-sentence span; write once per snapshot, reuse
     across daily strip runs)."""
     return (
-        _doc_spans(_doc_paragraphs(df, id_col, text_col, sep), width)
+        _doc_spans(_split_units(df, id_col, text_col, sep), width)
         .select("sfp")
         .distinct()
     )
@@ -1407,35 +1358,13 @@ def incremental_span_dedup(
     other exchange is delta-sized. Output shape matches the batch op:
     ``<id_col>, text, n_sentences, n_removed``.
     """
-    parts = _doc_paragraphs(delta, id_col, text_col, sep)
+    parts = _split_units(delta, id_col, text_col, sep)
     spans = _doc_spans(parts, width)
-    # distinct: the accumulated ingest index can hold the same span
-    # fingerprint in several batch subdirs (post-masking adjacencies
-    # recreate indexed spans); one hit row per sfp keeps the probe
-    # join from fanning delta spans out k-fold
-    hits = (
-        fp_index.join(
-            F.broadcast(spans.select("sfp").distinct()), "sfp"
-        )
-        .select("sfp")
-        .distinct()
-        .withColumn("_hit", F.lit(1))
+    spans = _keep_first_drop(
+        spans, "sfp", F.struct(F.col("doc_id"), F.col("spos")),
+        _index_hits(fp_index, spans, "sfp", "sfp"),
     )
-    ckey = F.struct(F.col("doc_id"), F.col("spos"))
-    dropped = (
-        spans.join(F.broadcast(hits), "sfp", "left")
-        .withColumn("ckey", ckey)
-        .join(_keep_first_verdicts(spans, "sfp", ckey), "sfp", "left")
-        .filter(
-            F.col("_hit").isNotNull()
-            | (
-                F.col("_ckey_min").isNotNull()
-                & (F.col("ckey") != F.col("_ckey_min"))
-            )
-        )
-    )
-    return _mask_and_rebuild(delta, parts, dropped, id_col, text_col,
-                             sep, width)
+    return _mask_spans(delta, parts, spans, id_col, text_col, sep, width)
 
 
 def paragraph_fp_index(
@@ -1446,7 +1375,7 @@ def paragraph_fp_index(
     it once per snapshot, 16 bytes per distinct paragraph; at 100 TB
     it's what makes daily paragraph-dedup runs corpus-scan-free)."""
     return (
-        _doc_paragraphs(df, id_col, text_col, sep)
+        _split_units(df, id_col, text_col, sep)
         .select(F.md5("part").alias("pfp"))
         .distinct()
     )
@@ -1479,43 +1408,15 @@ def incremental_paragraph_dedup(
     Output shape matches the batch op: ``<id_col>, text, n_paragraphs,
     n_removed``.
     """
-    parts = _doc_paragraphs(delta, id_col, text_col, sep).withColumn(
-        "pfp", F.md5("part")
-    )
-    # distinct AFTER the probe: a staged index accumulated over many
-    # ingest batches can hold the same fingerprint in several subdirs
-    # (min_chars-exempt short paragraphs survive every batch), and a
-    # duplicated hit row would DUPLICATE the matching parts rows
-    # through the left join — inflating counts and doubling paragraphs
-    # in the rebuilt text
-    hits = (
-        fp_index.join(
-            F.broadcast(parts.select("pfp").distinct()), "pfp"
-        )
-        .select("pfp")
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    ckey = F.struct(F.col("doc_id"), F.col("pos"))
-    marked = (
-        parts.join(F.broadcast(hits), "pfp", "left")
-        .withColumn("ckey", ckey)
-        .join(_keep_first_verdicts(parts, "pfp", ckey), "pfp", "left")
-        .select(
-            "doc_id", "pos", "part",
-            (
-                (F.length("part") >= min_chars)
-                & (
-                    F.col("_hit").isNotNull()
-                    | (
-                        F.col("_ckey_min").isNotNull()
-                        & (F.col("ckey") != F.col("_ckey_min"))
-                    )
-                )
-            ).alias("drop"),
-        )
-    )
-    return _rebuild_paragraphs(delta, marked, id_col, text_col, sep)
+    parts = _split_units(delta, id_col, text_col, sep) \
+        .withColumn("pfp", F.md5("part"))
+    marked = _keep_first_drop(
+        parts, "pfp", F.struct(F.col("doc_id"), F.col("pos")),
+        _index_hits(fp_index, parts, "pfp", "pfp"),
+    ).withColumn("drop", F.col("drop") & (F.length("part") >= min_chars))
+    rebuilt = _reassemble(marked, sep, ["doc_id"], "part", "n_paragraphs",
+                          "n_removed", "text")
+    return _with_spine(delta, rebuilt, id_col, text_col, "n_paragraphs")
 
 
 def substring_chunk_index(
@@ -1558,47 +1459,13 @@ def incremental_substring_strip(
     Output: ``<id_col>, n_chunks, n_dropped, kept_text`` (same shape
     as the batch strip).
     """
-    d_chunks = _doc_chunks(delta, id_col, text_col, k).withColumn(
-        "cfp", F.md5("chunk")
+    chunks = _doc_chunks(delta, id_col, text_col, k)
+    marked = _keep_first_drop(
+        chunks, "cfp", F.struct(F.col("doc_id"), F.col("pos")),
+        _index_hits(chunk_index, chunks, "chunk", "cfp"),
     )
-    # distinct: one hit row per fingerprint no matter how many index
-    # rows matched (multi-snapshot indexes), so the probe join can
-    # never multiply delta rows
-    hits = (
-        chunk_index.join(
-            F.broadcast(
-                d_chunks.select("chunk", "cfp").distinct()
-            ),
-            "chunk",
-        )
-        .select("cfp")
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    # struct-ordered canonical key — see substring_dedup_strip; the
-    # within-delta keep-first verdict is the de-skewed aggregate+rejoin
-    # ([[_keep_first_verdicts]]), not a content-keyed Window
-    ckey = F.struct(F.col("doc_id"), F.col("idx"))
-    marked = (
-        d_chunks.join(F.broadcast(hits), "cfp", "left")
-        .withColumn("ckey", ckey)
-        .join(_keep_first_verdicts(d_chunks, "cfp", ckey), "cfp", "left")
-        .select(
-            "doc_id",
-            "idx",
-            "chunk",
-            (
-                F.col("_hit").isNotNull()
-                | (
-                    F.col("_ckey_min").isNotNull()
-                    & (F.col("ckey") != F.col("_ckey_min"))
-                )
-            ).alias("drop"),
-        )
-    )
-    return _reassemble_chunks(marked).select(
-        F.col("doc_id").alias(id_col), "n_chunks", "n_dropped", "kept_text"
-    )
+    return _reassemble(marked, " ", ["doc_id"], "chunk", "n_chunks",
+                       "n_dropped", "kept_text", out_keys=[id_col])
 
 
 def verify_levenshtein_on_candidates(

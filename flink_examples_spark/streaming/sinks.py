@@ -1523,10 +1523,10 @@ def _host_line_partial(
     docs: DataFrame, id_col: str, host_col: str, text_col: str
 ) -> DataFrame:
     """A batch's ``(host, lfp, n_occ, line_chars)`` host-line partial."""
-    from flink_examples_spark.operators.dedup import _host_lines
+    from flink_examples_spark.operators.dedup import _split_units
 
     return (
-        _host_lines(docs, id_col, host_col, text_col, ". ")
+        _split_units(docs, id_col, text_col, ". ", "line", host_col)
         .groupBy("host", F.md5("line").alias("lfp"))
         .agg(
             F.count(F.lit(1)).alias("n_occ"),

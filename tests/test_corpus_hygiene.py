@@ -6,6 +6,7 @@ boundaries)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_examples_spark.functions.pii import pii_counts, pii_scrub
@@ -936,10 +937,11 @@ def test_incremental_dedup_duplicated_index_fps_do_not_multiply(spark):
     can hold the same fingerprint in several subdirs; a duplicated hit
     row must NOT duplicate delta rows through the probe join (which
     would inflate n_paragraphs and double paragraphs in the rebuilt
-    text). Same guard for the span path."""
+    text). Same guard for the span and substring paths."""
     from flink_examples_spark.operators.dedup import (
         incremental_paragraph_dedup,
         incremental_span_dedup,
+        incremental_substring_strip,
     )
 
     # 'dup' appears TWICE in the index (two batch subdirs' worth)
@@ -963,6 +965,101 @@ def test_incremental_dedup_duplicated_index_fps_do_not_multiply(spark):
     sout = incremental_span_dedup(sidx, sdelta, "doc_id", "text").collect()
     assert len(sout) == 1
     assert (sout[0].text, sout[0].n_removed) == ("tail", 3)
+
+    # a (chunk, n_occ) index holding the same chunk twice
+    cidx = spark.createDataFrame(
+        [("a b", 1), ("a b", 1)], "chunk string, n_occ long"
+    )
+    cdelta = _docs(spark, [(1, "a b keep me")])
+    cout = incremental_substring_strip(
+        cidx, cdelta, "doc_id", "text", k=2
+    ).collect()
+    assert len(cout) == 1
+    assert (cout[0].kept_text, cout[0].n_chunks, cout[0].n_dropped) == (
+        "keep me", 2, 1
+    )
+
+
+# one fixture for every strip unit, units ". "-separated (k=1: a chunk
+# is one token): doc 2 repeats units of doc 1, doc 3 repeats a unit
+# within itself, doc 4 holds only units of doc 1 (it strips to empty
+# text), 5 is NULL, 6 is empty and 7 is doc 1 on another host
+_STRIP_DOCS = [
+    (1, "h1", "a. b. c"), (2, "h1", "x. a. b"), (3, "h1", "r. q. r. q"),
+    (4, "h1", "b. c"), (5, "h1", None), (6, "h1", ""), (7, "h2", "a. b. c"),
+]
+
+
+@pytest.mark.parametrize(
+    "batch, index, incremental, kw, text_col",
+    [
+        ("substring_dedup_strip", "substring_chunk_index",
+         "incremental_substring_strip", {"k": 1}, "kept_text"),
+        ("host_line_dedup_strip", "host_line_fp_index",
+         "incremental_host_line_strip", {"min_count": 2}, "kept_text"),
+        ("paragraph_dedup", "paragraph_fp_index",
+         "incremental_paragraph_dedup", {"sep": ". "}, "text"),
+        ("span_dedup_strip", "span_fp_index",
+         "incremental_span_dedup", {"width": 2}, "text"),
+    ],
+    ids=["chunk", "host_line", "paragraph", "span"],
+)
+def test_incremental_strip_on_empty_index_equals_batch(
+    spark, batch, index, incremental, kw, text_col
+):
+    """With nothing staged, an incremental strip IS the batch strip:
+    against an index built from an empty corpus, every unit's
+    incremental strip equals its batch strip row for row, through
+    cross-doc duplicates, a within-doc repeat, NULL text, empty text
+    and a fully stripped doc. The host-line strip also equals itself
+    with ``line_index=`` its own line index."""
+    from flink_examples_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        _STRIP_DOCS, "doc_id long, host string, text string"
+    )
+    host = batch.startswith("host")
+    cols = ("doc_id", "host", "text") if host else ("doc_id", "text")
+    index_kw = {} if host else kw  # the line index takes no threshold
+    want_df = getattr(D, batch)(docs, *cols, **kw)
+    empty_index = getattr(D, index)(docs.limit(0), *cols, **index_kw)
+    got_df = getattr(D, incremental)(empty_index, docs, *cols, **kw)
+    assert got_df.columns == want_df.columns
+    want = {r[0]: r for r in want_df.collect()}
+    assert {r[0]: r for r in got_df.collect()} == want
+    assert want[4][text_col] == ""
+    # only the host-scoped unit keeps another host's copy of doc 1
+    assert want[7][text_col] == ("a. b. c" if host else "")
+    if host:
+        via_index = D.host_line_dedup_strip(
+            docs, *cols, line_index=D.host_line_fp_index(docs, *cols), **kw
+        )
+        assert via_index.columns == want_df.columns
+        assert {r[0]: r for r in via_index.collect()} == want
+
+
+def test_strip_separator_holding_backslash_e_splits_literally(spark):
+    """The separator is literal even when it holds ``\\E``, which ends
+    a ``\\Q...\\E`` regex quote early and fails the split."""
+    from flink_examples_spark.operators.dedup import (
+        paragraph_dedup,
+        span_dedup_strip,
+    )
+
+    sep = "x\\Ey"
+    docs = _docs(spark, [(1, sep.join("aba")), (2, sep.join("abc"))])
+    para = {
+        r.doc_id: (r.text, r.n_paragraphs, r.n_removed)
+        for r in paragraph_dedup(docs, "doc_id", "text", sep=sep).collect()
+    }
+    assert para == {1: (sep.join("ab"), 3, 1), 2: ("c", 3, 2)}
+    span = {
+        r.doc_id: (r.text, r.n_sentences, r.n_removed)
+        for r in span_dedup_strip(
+            docs, "doc_id", "text", sep=sep, width=2
+        ).collect()
+    }
+    assert span == {1: (sep.join("aba"), 3, 0), 2: ("c", 3, 2)}
 
 
 def test_events_log_as_of_tie_rule_and_partition_moves(spark):
