@@ -4,32 +4,47 @@
 These are the reference's keyed ProcessFunctions with real cross-batch
 state and timeouts:
 
-  streaming_fraud_detector     — TimerService.java:68-139 (ValueState +
-                                 timer; ST1/ST4)
-  streaming_count_window       — WindowWordCount.java:57 countWindow(10,5)
-                                 (W1; per-key ring buffer)
-  streaming_double_stream_match— DoubleStreamMatch.java:131-231 (J4;
-                                 first-arrival state + event-time timeout
-                                 → matched pairs / unmatched side output)
-  streaming_asof_enrich        — latest-right-row ValueState per key: the
-                                 unbounded-lookback as-of join as a stream
-                                 (twin of operators.joins.asof_join)
-  streaming_funnel_first_times — ordered-funnel state machine: one
-                                 epoch-us slot per step per user, emits a
-                                 row the moment a step first completes
-                                 (twin of journey.funnel_first_times)
-  streaming_dedup_ttl          — keyed first-occurrence dedup with state
-                                 TTL (ST6, StateTtl.java:15-22)
-  streaming_dfa_alerts         — StateMachineExample.java:133-166 (ST7)
-  streaming_capped_sessions    — gap sessions split by a max-duration
-                                 cap (W4+; state = ONE open sub-window
-                                 per key, bounded regardless of key
-                                 lifetime; twin of the registered
-                                 capped_session_windows query; with
-                                 watermark= set, quiet keys flush via
-                                 event-time timeout at the gap deadline
-                                 — no sentinel needed on unbounded
-                                 streams)
+  streaming_fraud_detector      — TimerService.java:68-139 (ValueState +
+                                  timer; ST1/ST4)
+  streaming_count_window        — WindowWordCount.java:57 countWindow(10,5)
+                                  (W1; per-key ring buffer)
+  streaming_double_stream_match — DoubleStreamMatch.java:131-231 (J4;
+                                  first-arrival state + event-time timeout
+                                  → matched pairs / unmatched side output)
+  streaming_asof_enrich         — latest-right-row ValueState per key: the
+                                  unbounded-lookback as-of join as a stream
+                                  (twin of operators.joins.asof_join)
+  streaming_funnel_first_times  — ordered-funnel state machine: one
+                                  epoch-us slot per step per user, emits a
+                                  row the moment a step first completes
+                                  (twin of journey.funnel_first_times)
+  streaming_dedup_ttl           — keyed first-occurrence dedup with state
+                                  TTL (ST6, StateTtl.java:15-22)
+  streaming_dfa_alerts          — StateMachineExample.java:133-166 (ST7)
+  streaming_cep                 — the batch NFA (operators/cep.py) with its
+                                  pending buffer in GroupState (C1-C5)
+  streaming_sequence_pack       — token-prefix packing (packing twin)
+  streaming_series_pattern_scan — subsequence scan over an (m-1)-row
+                                  tail (windows.series_pattern_scan twin)
+  streaming_capped_sessions     — gap sessions split by a max-duration
+                                  cap (W4+; state = ONE open sub-window
+                                  per key; twin of the registered
+                                  capped_session_windows query)
+  streaming_budget_admission    — token-prefix admission (sampling twin)
+  streaming_hot_items_counts    — HotItems.java:55-81 window counts, no
+                                  GroupState (declarative)
+
+Every GroupState face runs through one core, ``_keyed_state``: a face is
+its order columns, its per-trigger step and its schemas. Key and id
+columns carry their INPUT types into the output schema (``_ddl``).
+
+Ordering rule, the same for every face: all Arrow chunks of one key's
+trigger are concatenated and sorted ONCE, stably, by the face's order
+columns before the step sees a row — so output never depends on
+``arrow.maxRecordsPerBatch`` or on the (arbitrary) chunk delivery
+order. Across triggers the order is the source's replay order: feed
+sorted files (or Kafka partitions with per-key ordering) for exact
+parity with the batch formulations, which tests assert.
 
 State values are kept as flat tuples (SURVEY.md §7.4.9): GroupState is
 Arrow-serialized every trigger, so compact state is what survives a
@@ -39,36 +54,118 @@ State addressing (ST11, uid/AssignUid.java:18-49): Flink names stateful
 operators with ``.uid()`` so savepoints survive DAG edits; Spark keys
 state by the operator's position in the query plan — do NOT reorder or
 insert stateful operators over an existing checkpoint directory (start a
-fresh checkpoint instead), the positional equivalent of changing a uid. Rows are processed in (ts, id) order within each
-trigger; cross-trigger order is the source's replay order — feed sorted
-files (or Kafka partitions with per-key ordering) for exact parity with
-the batch formulations, which tests assert.
+fresh checkpoint instead), the positional equivalent of changing a uid.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Mapping, Sequence
+import json
+import time
+from collections.abc import Callable, Iterator, Mapping, Sequence
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import IntegralType
 
+from flink_examples_spark.operators.cep import (
+    _find_matches,
+    _live_partials,
+    _match_could_extend,
+)
 from flink_examples_spark.operators.util import schema_col_names
+from flink_examples_spark.streaming.finalize import FINALIZE_TS_MS, drop_finalize
+
+
+def _half_up(x: float, quantum: str) -> Decimal:
+    """``x`` rounded HALF_UP to ``quantum`` over the double's SHORTEST
+    decimal representation — Java's ``BigDecimal.valueOf`` parses
+    ``Double.toString`` (== Python ``repr``), which is how Spark both
+    rounds a double and casts it to decimal."""
+    return Decimal(repr(float(x))).quantize(
+        Decimal(quantum), rounding=ROUND_HALF_UP
+    )
 
 
 def _spark_round6(x: float) -> float:
-    """Replicate Spark's ``round(double, 6)`` bit-for-bit: Java's
-    ``BigDecimal.valueOf(x)`` parses the double's SHORTEST decimal
-    representation (``Double.toString`` == Python ``repr``) and rounds
-    HALF_UP. Python's built-in ``round`` instead rounds the raw binary
-    value half-to-even, which differs on exact 6-dp halfway reprs —
-    the boundary cases the ``max_dist`` threshold compares against."""
-    from decimal import ROUND_HALF_UP, Decimal
+    """Replicate Spark's ``round(double, 6)`` bit-for-bit. Python's
+    built-in ``round`` instead rounds the raw binary value
+    half-to-even, which differs on exact 6-dp halfway reprs — the
+    boundary cases the ``max_dist`` threshold compares against."""
+    return float(_half_up(x, "0.000001"))
 
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+
+def _ddl(df: DataFrame, cols: Sequence[str]) -> str:
+    """``"c1 t1, c2 t2"`` with each column's type from ``df``'s schema —
+    the one input-type lookup, so emitted key and id columns round-trip
+    whatever type the caller streams (a hard-coded type kills the query
+    at the first emitted row's Arrow conversion)."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return ", ".join(f"{c} {types[c]}" for c in cols)
+
+
+def _check_json_state(
+    df: DataFrame, who: str, cols: Sequence[str], ts_col: str
+) -> None:
+    """Fail at build time if a column of ``cols`` other than ``ts_col``
+    (which the operator converts to epoch ms) cannot round-trip a JSON
+    state buffer — a second timestamp, binary, decimal or date would
+    otherwise die mid-stream, once a buffered row first spans a
+    trigger boundary."""
+    for f in df.schema.fields:
+        t = f.dataType.simpleString()
+        if f.name in cols and f.name != ts_col and any(
+            b in t for b in ("timestamp", "binary", "decimal", "date")
+        ):
+            raise TypeError(
+                f"{who}: column {f.name!r} ({t}) cannot round-trip the "
+                "JSON state buffer — cast it (e.g. to epoch ms / hex) "
+                "before the operator, or drop it from the input"
+            )
+
+
+def _concat_trigger_chunks(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
+    """ALL Arrow chunks of one key's trigger as one frame: a key whose
+    micro-batch exceeds arrow.maxRecordsPerBatch arrives as several
+    chunks in arbitrary order, and per-chunk processing would advance
+    running state for a late row in an early chunk before earlier rows
+    in a later one. A timeout trigger gives an empty frame."""
+    chunks = [pdf for pdf in pdfs if not pdf.empty]
+    if len(chunks) > 1:
+        return pd.concat(chunks, ignore_index=True)
+    return chunks[0] if chunks else pd.DataFrame()
+
+
+def _keyed_state(
+    df: DataFrame,
+    keys: Sequence[str],
+    order: Sequence[str],
+    step: Callable[[tuple, pd.DataFrame, GroupState], list[tuple]],
+    out_schema: str,
+    state_schema: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` runner. Per key and trigger it
+    assembles the rows once (``_concat_trigger_chunks``, then one stable
+    sort by ``order``; none when ``order`` is empty), calls
+    ``step(key_t, rows, state)`` — which reads and writes the state and
+    returns output tuples — and emits them with ``out_schema``'s
+    columns."""
+    cols = schema_col_names(out_schema)
+
+    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        rows = _concat_trigger_chunks(pdfs)
+        if order and len(rows):
+            rows = rows.sort_values(order, kind="mergesort")
+        out = step(key_t, rows, state)
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", timeout
     )
 
 
@@ -91,36 +188,30 @@ def streaming_fraud_detector(
     Output matches operators.stateful.fraud_pairs on the same data.
     """
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            prev_id, prev_amount, prev_ts = state.get
-        else:
-            prev_id, prev_amount, prev_ts = None, None, None
+    def step(key_t, rows, state):
+        prev_id, prev_amount, prev_ts = (
+            state.get if state.exists else (None, None, None)
+        )
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                ts_ms = int(getattr(row, ts_col).value // 1_000_000)
-                amount = float(getattr(row, amount_col))
-                rid = int(getattr(row, id_col))
-                if (
-                    prev_amount is not None
-                    and prev_amount < small
-                    and amount > large
-                    and ts_ms - prev_ts <= within_ms
-                ):
-                    out.append((key_t[0], prev_id, rid))
-                prev_id, prev_amount, prev_ts = rid, amount, ts_ms
+        for row in rows.itertuples(index=False):
+            ts_ms = int(getattr(row, ts_col).value // 1_000_000)
+            amount = float(getattr(row, amount_col))
+            rid = int(getattr(row, id_col))
+            if (
+                prev_amount is not None
+                and prev_amount < small
+                and amount > large
+                and ts_ms - prev_ts <= within_ms
+            ):
+                out.append((key_t[0], prev_id, rid))
+            prev_id, prev_amount, prev_ts = rid, amount, ts_ms
         state.update((prev_id, prev_amount, prev_ts))
-        if out:
-            yield pd.DataFrame(out, columns=[key, "small_id", "large_id"])
+        return out
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        f"{key} long, small_id long, large_id long",
+    return _keyed_state(
+        events, [key], [ts_col, id_col], step,
+        f"{_ddl(events, [key])}, small_id long, large_id long",
         "prev_id long, prev_amount double, prev_ts long",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -141,34 +232,25 @@ def streaming_count_window(
     operators.windows.count_window_agg row-for-row on ordered replay.
     """
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            rn, buf = state.get
-            buf = list(buf)
-        else:
-            rn, buf = 0, []
+    def step(key_t, rows, state):
+        rn, buf = state.get if state.exists else (0, [])
+        buf = list(buf)
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                buf.append(float(getattr(row, value_col)))
-                if len(buf) > size:
-                    buf.pop(0)
-                rn += 1
-                if rn % slide == 0:
-                    out.append((key_t[0], rn, len(buf), round(sum(buf), 2)))
+        for row in rows.itertuples(index=False):
+            buf.append(float(getattr(row, value_col)))
+            if len(buf) > size:
+                buf.pop(0)
+            rn += 1
+            if rn % slide == 0:
+                out.append((key_t[0], rn, len(buf), round(sum(buf), 2)))
         state.update((rn, buf))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[key, "fire_at_row", "window_count", "window_sum"]
-            )
+        return out
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        f"{key} long, fire_at_row long, window_count long, window_sum double",
+    return _keyed_state(
+        events, [key], [ts_col, id_col], step,
+        f"{_ddl(events, [key])}, fire_at_row long, window_count long, "
+        "window_sum double",
         "rn long, buf array<double>",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -191,47 +273,38 @@ def streaming_double_stream_match(
     exception orders (DoubleStreamMatch.java:214-231).
     """
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        out = []
+    def step(key_t, rows, state):
         if state.hasTimedOut:
-            side, ts_ms = state.get
-            out.append((key_t[0], f"unmatched_{side}"))
+            side, _ = state.get
             state.remove()
-        else:
-            pending = state.get if state.exists else None
-            for pdf in pdfs:
-                pdf = pdf.sort_values(ts_col, kind="mergesort")
-                for row in pdf.itertuples(index=False):
-                    side = getattr(row, side_col)
-                    ts_ms = int(getattr(row, ts_col).value // 1_000_000)
-                    if pending is None:
-                        pending = (side, ts_ms)
-                    elif pending[0] != side:
-                        out.append((key_t[0], "matched"))
-                        pending = None
-                    # same side twice: keep the first (reference stores one)
-            if pending is not None:
-                state.update(pending)
-                # clamp to just past the current watermark: Spark
-                # REJECTS (IllegalArgumentException, query dies) a
-                # timeout at-or-behind the watermark, which a late
-                # first-arrival with ts + timeout <= wm would produce;
-                # clamped, the timer fires at the next trigger and the
-                # row times out immediately — the correct semantics for
-                # an arrival whose deadline already passed
-                deadline = pending[1] + timeout_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(deadline, wm + 1))
-            elif state.exists:
-                state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=[key, "status"])
+            return [(key_t[0], f"unmatched_{side}")]
+        pending = state.get if state.exists else None
+        out = []
+        for row in rows.itertuples(index=False):
+            side = getattr(row, side_col)
+            if pending is None:
+                pending = (side, int(getattr(row, ts_col).value // 1_000_000))
+            elif pending[0] != side:
+                out.append((key_t[0], "matched"))
+                pending = None
+            # same side twice: keep the first (reference stores one)
+        if pending is not None:
+            state.update(pending)
+            # clamp past the current watermark: Spark REJECTS (query
+            # dies) a timeout at-or-behind it, which a late arrival with
+            # ts + timeout <= wm would set; clamped, the row times out
+            # at the next trigger — its deadline already passed
+            state.setTimeoutTimestamp(
+                max(pending[1] + timeout_ms, state.getCurrentWatermarkMs() + 1)
+            )
+        elif state.exists:
+            state.remove()
+        return out
 
-    return tagged.groupBy(key).applyInPandasWithState(
-        fn,
-        f"{key} string, status string",
+    return _keyed_state(
+        tagged, [key], [ts_col], step,
+        f"{_ddl(tagged, [key])}, status string",
         "side string, ts_ms long",
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )
 
@@ -253,13 +326,11 @@ def streaming_asof_enrich(
     Input: the two streams union'd with ``side`` (0 = right/reference,
     1 = left/probe), a shared ``ts``, the left's id, the right's
     payload and a right tiebreak ``ord`` (max wins at equal ts, same
-    as the batch operator). Rows are processed in (ts, side, ord)
-    order within a trigger; across triggers the state carries the
-    best-so-far (ts, ord, payload), so a right row arriving in a later
-    batch than a left row it precedes in event time does NOT rewrite
-    history — exactly the co-process semantics the reference's keyed
-    two-stream jobs have, and the tests feed per-key ordered input for
-    exact batch parity (the file-source contract documented above).
+    as the batch operator); the order columns are (ts, side, ord).
+    Across triggers the state carries the best-so-far (ts, ord,
+    payload), so a right row arriving in a later batch than a left row
+    it precedes in event time does NOT rewrite history — exactly the
+    co-process semantics the reference's keyed two-stream jobs have.
 
     State is one flat (ts_us, ord, payload) tuple per key — constant
     bytes per key at any scale. Timestamps are kept at FULL epoch-
@@ -276,38 +347,28 @@ def streaming_asof_enrich(
     checkpoint on upgrade (the module's ST11 positional-state rule).
     """
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key_t, rows, state):
         best = state.get if state.exists else None  # (ts_us, ord, payload)
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(
-                [ts_col, side_col, order_col], kind="mergesort",
-                na_position="last",
-            )
-            for row in pdf.itertuples(index=False):
-                if getattr(row, side_col) == 0:
-                    ts_us = int(getattr(row, ts_col).value // 1_000)
-                    o = int(getattr(row, order_col))
-                    if best is None or (ts_us, o) >= (best[0], best[1]):
-                        best = (ts_us, o, int(getattr(row, payload_col)))
-                else:
-                    out.append(
-                        (
-                            int(getattr(row, left_id_col)),
-                            best[2] if best is not None else None,
-                        )
-                    )
+        for row in rows.itertuples(index=False):
+            if getattr(row, side_col) == 0:
+                ts_us = int(getattr(row, ts_col).value // 1_000)
+                o = int(getattr(row, order_col))
+                if best is None or (ts_us, o) >= (best[0], best[1]):
+                    best = (ts_us, o, int(getattr(row, payload_col)))
+            else:
+                out.append((
+                    int(getattr(row, left_id_col)),
+                    best[2] if best is not None else None,
+                ))
         if best is not None:
             state.update(best)
-        if out:
-            yield pd.DataFrame(out, columns=[left_id_col, payload_col])
+        return out
 
-    return tagged.groupBy(key).applyInPandasWithState(
-        fn,
+    return _keyed_state(
+        tagged, [key], [ts_col, side_col, order_col], step,
         f"{left_id_col} long, {payload_col} long",
         "ts_us long, ord long, payload long",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -342,20 +403,16 @@ def streaming_dedup_ttl(
     """
     keys = list(key_cols)
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import time as _time
-
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        now_ms = int(_time.time() * 1000)
+    def step(key_t, rows, state):
+        n = len(rows)
+        now_ms = int(time.time() * 1000)
         if state.hasTimedOut:
             # TTL expired. No data this trigger: drop the state and do
             # NOT re-arm (re-creating here would leak state + churn the
             # timer forever and suppress the key's re-emission, D8).
             state.remove()
             if n == 0:
-                return
+                return []
             first = True  # expired key re-occurring: brand new
             dropped = n - 1
         elif state.exists:
@@ -375,21 +432,12 @@ def streaming_dedup_ttl(
             state.update((dropped, now_ms))
             if ttl_ms is not None:
                 state.setTimeoutDuration(ttl_ms)
-        if first and n:
-            yield pd.DataFrame([tuple(key_t)], columns=keys)
+        return [tuple(key_t)] if first and n else []
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    # carry the INPUT key types through (long/int/string keys all
-    # round-trip); hardcoding string would crash Arrow conversion on
-    # the first emitted row of any non-string key
-    fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema = ", ".join(f"{k} {fields[k]}" for k in keys)
-    return df.groupBy(*keys).applyInPandasWithState(
-        fn, schema, "dropped long, last_ms long", "append", timeout
+    return _keyed_state(
+        df, keys, [], step, _ddl(df, keys), "dropped long, last_ms long",
+        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None
+        else GroupStateTimeout.NoTimeout,
     )
 
 
@@ -405,28 +453,22 @@ def streaming_dfa_alerts(
     invalid transition as it happens (the reference's Alert stream)."""
     trans = {k: frozenset(v) for k, v in transitions.items()}
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key_t, rows, state):
         cur = state.get[0] if state.exists else None
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                sym = getattr(row, symbol_col)
-                if cur is not None and sym not in trans.get(cur, frozenset()):
-                    out.append((key_t[0], int(getattr(row, id_col)), cur, sym))
-                cur = sym
+        for row in rows.itertuples(index=False):
+            sym = getattr(row, symbol_col)
+            if cur is not None and sym not in trans.get(cur, frozenset()):
+                out.append((key_t[0], int(getattr(row, id_col)), cur, sym))
+            cur = sym
         state.update((cur,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[key, "alert_event_id", "from_state", "to_state"]
-            )
+        return out
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        f"{key} long, alert_event_id long, from_state string, to_state string",
+    return _keyed_state(
+        events, [key], [ts_col, id_col], step,
+        f"{_ddl(events, [key])}, alert_event_id long, from_state string, "
+        "to_state string",
         "cur string",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -489,60 +531,37 @@ def streaming_cep(
     state stays pending until the key sees data — now only the
     genuinely-unbounded residual of D1.
     """
-    import json
-
-    from flink_examples_spark.operators.cep import (
-        _find_matches,
-        _live_partials,
-        _match_could_extend,
-    )
-    from flink_examples_spark.streaming.finalize import FINALIZE_TS_MS
-
-    # The pending buffer is JSON-encoded in GroupState; only ts_col is
-    # converted (timestamp -> epoch ms). Any OTHER non-JSON-able column
-    # (a second timestamp, binary, decimal) would crash json.dumps only
-    # when a partial first spans a trigger boundary — fail loudly at
-    # build time instead of dying mid-stream.
-    _json_bad = ("timestamp", "binary", "decimal", "date")
-    for f_ in events.schema.fields:
-        if f_.name != ts_col and any(
-            b in f_.dataType.simpleString() for b in _json_bad
-        ):
-            raise TypeError(
-                f"streaming_cep: column {f_.name!r} "
-                f"({f_.dataType.simpleString()}) cannot round-trip the "
-                f"JSON state buffer — cast it (e.g. to epoch ms / hex) "
-                "before the operator, or drop it from the input"
-            )
-
+    _check_json_state(events, "streaming_cep", events.columns, ts_col)
     ocols = list(order_cols or [ts_col])
     out_cols = schema_col_names(output_schema)
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key_t, rows, state):
         if state.exists:
             buf_json, max_ts = state.get
             records = [json.loads(s) for s in buf_json]
         else:
             records, max_ts = [], 0
-        new_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ocols, kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                d = dict(zip(pdf.columns, row))
-                d[ts_col] = int(d[ts_col].value // 1_000_000)  # epoch ms
-                if d[ts_col] >= FINALIZE_TS_MS:
-                    # finalize sentinel: advance the horizon, never
-                    # enter the buffer (the final MAX watermark, D1)
-                    max_ts = max(max_ts, d[ts_col])
-                    continue
-                new_rows.append(d)
-        records.extend(new_rows)
+        for row in rows.itertuples(index=False):
+            d = dict(zip(rows.columns, row))
+            d[ts_col] = int(d[ts_col].value // 1_000_000)  # epoch ms
+            if d[ts_col] >= FINALIZE_TS_MS:
+                # finalize sentinel: advance the horizon, never enter
+                # the buffer (the final MAX watermark, D1)
+                max_ts = max(max_ts, d[ts_col])
+                continue
+            records.append(d)
         records.sort(key=lambda d: tuple(d[c] for c in ocols))
         if records:
             max_ts = max(max_ts, max(d[ts_col] for d in records))
 
         def within_check(first_idx: int, idx: int) -> bool:
             return records[idx][ts_col] - records[first_idx][ts_col] <= within_ms
+
+        def vars_of(match) -> dict[str, pd.DataFrame]:
+            vars_map: dict[str, list[dict]] = {}
+            for var, idx in match:
+                vars_map.setdefault(var, []).append(records[idx])
+            return {v: pd.DataFrame(r) for v, r in vars_map.items()}
 
         results = []
         start = 0
@@ -567,11 +586,7 @@ def streaming_cep(
                     and _match_could_extend(pattern, m)
                 ):
                     break  # keep buffered; re-scan next trigger
-                vars_map: dict[str, list[dict]] = {}
-                for var, idx in m:
-                    vars_map.setdefault(var, []).append(records[idx])
-                vars_pdf = {v: pd.DataFrame(rows) for v, rows in vars_map.items()}
-                results.append(measures(vars_pdf, None))
+                results.append(measures(vars_of(m), None))
                 start = m[0][1] + 1
             elif records[start][ts_col] + within_ms < max_ts:
                 # Horizon passed for the row at ``start``: nothing can
@@ -596,31 +611,23 @@ def streaming_cep(
                         < max_ts
                     ):
                         for partial in partials:
-                            pvars: dict[str, list[dict]] = {}
-                            for var, idx in partial:
-                                pvars.setdefault(var, []).append(records[idx])
-                            results.append(timeout_measures(
-                                {v: pd.DataFrame(r) for v, r in pvars.items()},
-                                None,
-                            ))
+                            results.append(
+                                timeout_measures(vars_of(partial), None)
+                            )
                         start = partials[0][0][1] + 1
                         continue
                 start += 1
             else:
                 break  # still completable with future rows — keep buffered
-        keep = records[start:]
-        state.update(([json.dumps(d) for d in keep], max_ts))
-        if results:
-            out = pd.DataFrame(results)
-            out[key] = key_t[0]
-            yield out[out_cols]
+        state.update(([json.dumps(d) for d in records[start:]], max_ts))
+        return [
+            tuple(key_t[0] if c == key else r.get(c) for c in out_cols)
+            for r in results
+        ]
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        output_schema,
+    return _keyed_state(
+        events, [key], ocols, step, output_schema,
         "buf array<string>, max_ts long",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -641,11 +648,10 @@ def streaming_funnel_first_times(
 
     Emits one append-mode row ``(user, step_idx, step, first_ts_us)``
     the moment a step first completes, so downstream sees funnel
-    progress live instead of at job end. Rows are processed in (ts,
-    type) order within a trigger; across triggers the slots make the
-    machine insensitive to re-delivery of later events (a slot never
-    regresses), the same monotone-state property the count/dedup twins
-    rely on.
+    progress live instead of at job end. The order columns are (ts,
+    type); across triggers the slots make the machine insensitive to
+    re-delivery of later events (a slot never regresses), the same
+    monotone-state property the count/dedup twins rely on.
 
     State is ``len(steps)`` longs per user — constant bytes per key.
     """
@@ -653,57 +659,28 @@ def streaming_funnel_first_times(
     if not steps:
         raise ValueError("funnel needs at least one step")
     idx = {s: i for i, s in enumerate(steps)}
-    state_ddl = ", ".join(f"t{i} long" for i in range(len(steps)))
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key_t, rows, state):
         slots = list(state.get) if state.exists else [None] * len(steps)
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, type_col], kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                tp = getattr(row, type_col)
-                i = idx.get(tp)
-                if i is None or slots[i] is not None:
-                    continue
-                ts_us = int(getattr(row, ts_col).value // 1_000)
-                if i > 0 and (slots[i - 1] is None or ts_us <= slots[i - 1]):
-                    continue
-                slots[i] = ts_us
-                out.append((key_t[0], i + 1, steps[i], ts_us))
+        for row in rows.itertuples(index=False):
+            i = idx.get(getattr(row, type_col))
+            if i is None or slots[i] is not None:
+                continue
+            ts_us = int(getattr(row, ts_col).value // 1_000)
+            if i > 0 and (slots[i - 1] is None or ts_us <= slots[i - 1]):
+                continue
+            slots[i] = ts_us
+            out.append((key_t[0], i + 1, steps[i], ts_us))
         state.update(tuple(slots))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_key", "step_idx", "step", "first_ts_us"],
-            )
+        return out
 
-    typed = events.select(
-        F.col(user_col).alias("user_key"),
-        F.col(ts_col).alias(ts_col),
-        F.col(type_col).alias(type_col),
-    )
-    return typed.groupBy("user_key").applyInPandasWithState(
-        fn,
-        "user_key long, step_idx int, step string, first_ts_us long",
-        state_ddl,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def _concat_trigger_chunks(pdfs: Iterator[pd.DataFrame]):
-    """Concatenate ALL Arrow chunks of one trigger before any sort: a
-    key whose micro-batch exceeds arrow.maxRecordsPerBatch arrives as
-    several chunks in arbitrary order, and per-chunk processing would
-    advance running state for a high-id row in an early chunk before
-    low-id rows in a later one — diverging from the batch window's
-    global ORDER BY. Returns None for an empty trigger."""
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if not chunks:
-        return None
-    return (
-        pd.concat(chunks, ignore_index=True)
-        if len(chunks) > 1 else chunks[0]
+    typed = events.select(F.col(user_col).alias("user_key"), ts_col, type_col)
+    return _keyed_state(
+        typed, ["user_key"], [ts_col, type_col], step,
+        f"{_ddl(typed, ['user_key'])}, step_idx int, step string, "
+        "first_ts_us long",
+        ", ".join(f"t{i} long" for i in range(len(steps))),
     )
 
 
@@ -732,8 +709,8 @@ def streaming_sequence_pack(
 
     Contract (same as the batch window's ORDER BY): rows must arrive in
     non-decreasing ``id_col`` order per key across batches — the shape
-    of an append-only ingest replay. Within a batch rows are sorted by
-    id; across batches the state carries the exclusive token prefix, so
+    of an append-only ingest replay. The order column is the id; across
+    batches the state carries the exclusive token prefix, so
     ``pack_id = prefix // target`` is identical to the batch
     formulation row-for-row (asserted by
     tests/test_streaming.py::test_streaming_sequence_pack_matches_batch).
@@ -749,32 +726,21 @@ def streaming_sequence_pack(
     """
     parts = [partition_col] if isinstance(partition_col, str) \
         else list(partition_col)
-    types = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
-    key_ddl = ", ".join(f"{c} {types[c]}" for c in parts)
 
-    def fn(
-        key_t, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key_t, rows, state):
         (prefix,) = state.get if state.exists else (0,)
         out = []
-        whole = _concat_trigger_chunks(pdfs)
-        if whole is not None:
-            for _, row in whole.sort_values(id_col).iterrows():
-                n = _token_len(row[text_col])
-                out.append((*key_t, row[id_col], n, prefix // target))
-                prefix += n or 0
+        for row in rows.itertuples(index=False):
+            n = _token_len(getattr(row, text_col))
+            out.append((*key_t, getattr(row, id_col), n, prefix // target))
+            prefix += n or 0
         state.update((prefix,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*parts, id_col, "n_tokens", "pack_id"]
-            )
+        return out
 
-    return docs.groupBy(*parts).applyInPandasWithState(
-        fn,
-        f"{key_ddl}, {id_col} {types[id_col]}, n_tokens int, pack_id long",
+    return _keyed_state(
+        docs, parts, [id_col], step,
+        f"{_ddl(docs, [*parts, id_col])}, n_tokens int, pack_id long",
         "prefix long",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -809,8 +775,6 @@ def streaming_hot_items_counts(
     window end, and are dropped by ``drop_finalize`` BEFORE the window
     aggregation — the final no-data micro-batch then emits the tail
     windows, so availableNow output equals the batch query exactly."""
-    from flink_examples_spark.streaming.finalize import drop_finalize
-
     return (
         drop_finalize(
             events.filter(filter_expr).withWatermark(ts_col, watermark),
@@ -860,31 +824,25 @@ def streaming_series_pattern_scan(
     Output: ``(key, *order_cols as epoch-ms/long, dist)`` — the
     timestamp order column is carried as epoch millis in state and
     output (the JSON state buffer round-trip; compare against the
-    batch twin by casting its timestamp to epoch ms).
+    batch twin by casting its timestamp to epoch ms). The buffered
+    order and value columns must be JSON-able (the ``streaming_cep``
+    build-time check).
     """
-    import json
-
     m = len(pattern)
     if m < 1:
         raise ValueError("streaming_series_pattern_scan: empty pattern")
     ocols = list(order_cols or [ts_col])
+    _check_json_state(
+        events, "streaming_series_pattern_scan", [*ocols, value_col], ts_col
+    )
     pat = [float(q) for q in pattern]
 
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        tail = (
-            [json.loads(s) for s in state.get[0]] if state.exists else []
-        )
-        new_rows: list[dict] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ocols, kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                d = dict(zip(pdf.columns, row))
-                d[ts_col] = int(d[ts_col].value // 1_000_000)
-                new_rows.append(
-                    {c: d[c] for c in ocols} | {"v": d[value_col]}
-                )
-        new_rows.sort(key=lambda d: tuple(d[c] for c in ocols))
-        seq = tail + new_rows
+    def step(key_t, rows, state):
+        seq = [json.loads(s) for s in state.get[0]] if state.exists else []
+        for row in rows.itertuples(index=False):
+            d = dict(zip(rows.columns, row))
+            d[ts_col] = int(d[ts_col].value // 1_000_000)
+            seq.append({c: d[c] for c in ocols} | {"v": d[value_col]})
         out = []
         for s in range(len(seq) - m + 1):
             vals = [seq[s + j]["v"] for j in range(m)]
@@ -896,29 +854,19 @@ def streaming_series_pattern_scan(
                 dist = term if dist is None else dist + term
             dist = _spark_round6(dist)
             if dist <= max_dist:
-                out.append(
-                    (key_t[0], *[seq[s][c] for c in ocols], dist)
-                )
+                out.append((key_t[0], *[seq[s][c] for c in ocols], dist))
         state.update(([json.dumps(r) for r in seq[max(0, len(seq) - (m - 1)):]],))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[key_col, *ocols, "dist"]
-            )
+        return out
 
-    types = {f.name: f.dataType.simpleString() for f in events.schema.fields}
     out_schema = ", ".join(
-        [f"{key_col} {types[key_col]}"]
+        [_ddl(events, [key_col])]
         # the ts order column rides as epoch ms; other order cols keep
         # their input type
-        + [f"{c} {'long' if c == ts_col else types[c]}" for c in ocols]
+        + [f"{c} long" if c == ts_col else _ddl(events, [c]) for c in ocols]
         + ["dist double"]
     )
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        out_schema,
-        "tail array<string>",
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, [key_col], ocols, step, out_schema, "tail array<string>"
     )
 
 
@@ -974,112 +922,54 @@ def streaming_capped_sessions(
     with the batch DECIMAL(18,2) sum: values fold as exact integer
     cents via the shortest-repr decimal of each double (Spark's own
     double->decimal cast semantics), emitted as cents/100 double.
-
-    Replay contract: rows are processed in (ts, id) order within each
-    trigger; feed ts-ordered chunks for exact batch parity (module
-    header note). Cross-chunk disorder inside one trigger is a
-    contract violation and raises ValueError instead of silently
-    producing wrong sessions (ADVICE r8: the per-chunk sort must not
-    mask out-of-order input).
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from flink_examples_spark.streaming.finalize import FINALIZE_TS_MS
-
     fin_us = FINALIZE_TS_MS * 1000
     use_timer = watermark is not None
 
-    def _cents(v: float) -> int:
-        return int(
-            Decimal(repr(float(v))).quantize(
-                Decimal("0.01"), rounding=ROUND_HALF_UP
-            ).scaleb(2)
-        )
-
-    def fn(key_t, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (sess_id, sess_start, last_ts, sub_idx,
-             wmin, wmax, n, cents) = state.get
-        else:
-            sess_id = 0
-            sess_start = last_ts = sub_idx = wmin = wmax = n = cents = 0
+    def step(key_t, rows, state):
+        (sess_id, sess_start, last_ts, sub_idx,
+         wmin, wmax, n, cents) = state.get if state.exists else (0,) * 8
         out = []
 
-        def emit():
-            out.append((key_t[0], sess_id, sub_idx,
-                        pd.Timestamp(wmin * 1000),
-                        pd.Timestamp(wmax * 1000),
-                        n, cents / 100.0))
+        def flush():  # emit the open sub-window, if any
+            nonlocal n
+            if n > 0:
+                out.append((key_t[0], sess_id, sub_idx,
+                            pd.Timestamp(wmin * 1000),
+                            pd.Timestamp(wmax * 1000), n, cents / 100.0))
+            n = 0
 
+        for row in rows.itertuples(index=False):
+            ts_us = int(getattr(row, ts_col).value // 1000)
+            if ts_us >= fin_us:
+                flush()  # finalize sentinel: never opens a session
+                continue
+            c = int(_half_up(getattr(row, value_col), "0.01").scaleb(2))
+            gap = n == 0 or ts_us - last_ts > gap_us
+            new_sub = (ts_us - sess_start) // cap_us
+            if gap or new_sub != sub_idx:
+                flush()
+                if gap:
+                    sess_id += 1
+                    sess_start = ts_us
+                    new_sub = 0
+                sub_idx = new_sub
+                wmin = wmax = ts_us
+                n, cents = 1, c
+            else:
+                wmax = max(wmax, ts_us)
+                n += 1
+                cents += c
+            last_ts = ts_us
         if state.hasTimedOut:
             # watermark passed last_ts + gap: the session is
             # definitively closed — flush the open sub-window and keep
             # the (bounded) scalars so sess_id keeps counting, unless
             # the caller opted into clear-on-fire (key-churn bound)
-            if n > 0:
-                emit()
-                n = 0
+            flush()
             if clear_state_on_timeout:
                 state.remove()
-            else:
-                state.update((sess_id, sess_start, last_ts, sub_idx,
-                              wmin, wmax, n, cents))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[key_col, "session_id", "sub_idx",
-                             "window_start", "window_end",
-                             "n_events", "sum_value"],
-                )
-            return
-
-        prev_chunk_max = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-            if len(pdf):
-                first_us = int(pdf[ts_col].iloc[0].value // 1000)
-                if prev_chunk_max is not None and first_us < prev_chunk_max:
-                    raise ValueError(
-                        "streaming_capped_sessions: ts-ordered-chunk "
-                        f"replay contract violated for key {key_t[0]!r}: "
-                        f"chunk starts at {first_us} us, before the "
-                        f"previous chunk's max {prev_chunk_max} us"
-                    )
-                prev_chunk_max = int(pdf[ts_col].iloc[-1].value // 1000)
-            for row in pdf.itertuples(index=False):
-                ts_us = int(getattr(row, ts_col).value // 1000)
-                if ts_us >= fin_us:
-                    # finalize sentinel: flush, never open a session
-                    if n > 0:
-                        emit()
-                        n = 0
-                    continue
-                c = _cents(getattr(row, value_col))
-                if n == 0:
-                    sess_id += 1
-                    sess_start = ts_us
-                    sub_idx = 0
-                    wmin = wmax = ts_us
-                    n, cents = 1, c
-                elif ts_us - last_ts > gap_us:
-                    emit()
-                    sess_id += 1
-                    sess_start = ts_us
-                    sub_idx = 0
-                    wmin = wmax = ts_us
-                    n, cents = 1, c
-                else:
-                    new_sub = (ts_us - sess_start) // cap_us
-                    if new_sub != sub_idx:
-                        emit()
-                        sub_idx = new_sub
-                        wmin = wmax = ts_us
-                        n, cents = 1, c
-                    else:
-                        wmax = max(wmax, ts_us)
-                        n += 1
-                        cents += c
-                last_ts = ts_us
+                return out
         state.update((sess_id, sess_start, last_ts, sub_idx,
                       wmin, wmax, n, cents))
         if use_timer and n > 0:
@@ -1092,26 +982,17 @@ def streaming_capped_sessions(
             state.setTimeoutTimestamp(
                 max(deadline_ms, state.getCurrentWatermarkMs() + 1)
             )
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[key_col, "session_id", "sub_idx", "window_start",
-                         "window_end", "n_events", "sum_value"],
-            )
+        return out
 
-    key_type = {
-        f.name: f.dataType.simpleString() for f in events.schema.fields
-    }[key_col]
     if use_timer:
         events = events.withWatermark(ts_col, watermark)
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        f"{key_col} {key_type}, session_id long, sub_idx long, "
+    return _keyed_state(
+        events, [key_col], [ts_col, id_col], step,
+        f"{_ddl(events, [key_col])}, session_id long, sub_idx long, "
         "window_start timestamp, window_end timestamp, "
         "n_events long, sum_value double",
         "sess_id long, sess_start long, last_ts long, sub_idx long, "
         "wmin long, wmax long, n long, cents long",
-        "append",
         GroupStateTimeout.EventTimeTimeout if use_timer
         else GroupStateTimeout.NoTimeout,
     )
@@ -1135,13 +1016,11 @@ def streaming_budget_admission(
 
     Replay contract and its enforcement: rows must arrive in
     increasing ``id_col`` order per key ACROSS triggers (the shape of
-    an append-only ingest). Within one trigger all Arrow chunks are
-    concatenated before a single sort (the sequence_pack rule — chunk
-    order inside a trigger is arbitrary and legal); ACROSS triggers the
-    state carries the last id seen and a trigger whose minimum id does
-    not exceed it raises ValueError (the capped-sessions loud-failure
-    rule, ADVICE r8 — a masked disorder would silently diverge from
-    the batch window's ORDER BY).
+    an append-only ingest; the order column is the id). The state
+    carries the last id seen and a trigger whose minimum id does not
+    exceed it raises ValueError, as does an id repeated within one
+    trigger — a masked disorder would silently diverge from the batch
+    window's ORDER BY.
 
     NULL text mirrors the batch side: NULL n_tokens, prefix unchanged,
     the admission predicate still evaluated. Cited against the
@@ -1149,8 +1028,6 @@ def streaming_budget_admission(
     """
     parts = [partition_col] if isinstance(partition_col, str) \
         else list(partition_col)
-    types = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
-    key_ddl = ", ".join(f"{c} {types[c]}" for c in parts)
     cap = int(cap)
     if cap < 0:
         # same fail-fast as the batch twin (sampling.budget_admission_
@@ -1158,68 +1035,54 @@ def streaming_budget_admission(
         raise ValueError(
             f"streaming_budget_admission: cap must be >= 0, got {cap}"
         )
-    if id_col not in types:
-        # a typo'd id column must say so, not misdirect toward casting
-        # a column that doesn't exist (r10 review)
+    if id_col not in docs.columns:
+        # a typo'd id column must say so, not misdirect toward a cast
         raise TypeError(
             f"streaming_budget_admission: id column {id_col!r} not found "
-            f"in the input schema (columns: {sorted(types)})"
+            f"in the input schema (columns: {sorted(docs.columns)})"
         )
-    if types.get(id_col) not in ("tinyint", "smallint", "int", "bigint"):
-        # the replay contract carries last_id as LONG state and the
-        # int(...) casts below assume integral ids; a string id would
-        # otherwise die mid-stream with an unrelated ValueError instead
-        # of the contract message (ADVICE r9). The batch twin accepts
+    if not isinstance(docs.schema[id_col].dataType, IntegralType):
+        # last_id is LONG state: a string id would otherwise die
+        # mid-stream with an unrelated ValueError. The batch twin takes
         # any orderable id — map or cast ids upstream to use this one.
         raise TypeError(
             f"streaming_budget_admission: id column {id_col!r} must be "
             f"an integral type (last_id replay state is a long); got "
-            f"{types.get(id_col)}"
+            f"{_ddl(docs, [id_col])}"
         )
 
-    def fn(
-        key_t, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key_t, rows, state):
         prefix, last_id = state.get if state.exists else (0, None)
-        whole = _concat_trigger_chunks(pdfs)
         out = []
-        if whole is not None:
-            whole = whole.sort_values(id_col)
-            first = int(whole[id_col].iloc[0])
-            if last_id is not None and first <= last_id:
+        if len(rows):
+            ids = rows[id_col]
+            if last_id is not None and int(ids.iloc[0]) <= last_id:
                 raise ValueError(
                     "streaming_budget_admission: id-ordered replay "
                     f"contract violated for key {key_t!r}: trigger "
-                    f"starts at id {first}, not after the previous "
-                    f"trigger's max id {last_id}"
+                    f"starts at id {int(ids.iloc[0])}, not after the "
+                    f"previous trigger's max id {last_id}"
                 )
-            if whole[id_col].duplicated().any():
+            if ids.duplicated().any():
                 # a duplicate id WITHIN the trigger would inflate the
                 # prefix and silently diverge from the batch window —
                 # the same loud-failure rule as the cross-trigger check
-                dup = int(whole[id_col][whole[id_col].duplicated()].iloc[0])
                 raise ValueError(
                     "streaming_budget_admission: id-ordered replay "
-                    f"contract violated for key {key_t!r}: id {dup} "
-                    "appears more than once in one trigger"
+                    f"contract violated for key {key_t!r}: id "
+                    f"{int(ids[ids.duplicated()].iloc[0])} appears more "
+                    "than once in one trigger"
                 )
-            for row in whole.itertuples(index=False):
-                rid = getattr(row, id_col)
-                kept = prefix < cap
+            for row in rows.itertuples(index=False):
                 n = _token_len(getattr(row, text_col))
-                out.append((*key_t, rid, n, kept))
+                out.append((*key_t, getattr(row, id_col), n, prefix < cap))
                 prefix += n or 0
-            last_id = int(whole[id_col].iloc[-1])
+            last_id = int(ids.iloc[-1])
         state.update((prefix, last_id))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*parts, id_col, "n_tokens", "kept"]
-            )
+        return out
 
-    return docs.groupBy(*parts).applyInPandasWithState(
-        fn,
-        f"{key_ddl}, {id_col} {types[id_col]}, n_tokens int, kept boolean",
+    return _keyed_state(
+        docs, parts, [id_col], step,
+        f"{_ddl(docs, [*parts, id_col])}, n_tokens int, kept boolean",
         "prefix long, last_id long",
-        "append",
-        GroupStateTimeout.NoTimeout,
     )

@@ -3381,42 +3381,6 @@ def test_capped_sessions_watermark_mode_sentinel_batch_parity(
     assert stream_rows == batch_rows
 
 
-def test_capped_sessions_out_of_order_chunk_raises(spark, tmp_path):
-    """ADVICE r8: cross-chunk ts disorder inside one trigger is a
-    replay-contract violation and must fail LOUDLY (ValueError in the
-    state function -> StreamingQueryException), not be masked by the
-    per-chunk sort."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from flink_examples_spark.streaming.stateful import (
-        streaming_capped_sessions,
-    )
-
-    pdf = pd.DataFrame({
-        "event_id": [1, 2],
-        "user_id": [7, 7],
-        # ts DESCENDING within one file: with a 1-row Arrow batch the
-        # key's trigger delivers two chunks out of order
-        "ts": pd.to_datetime(["2024-03-01 00:10:00", "2024-03-01 00:00:00"]),
-        "value": [1.0, 2.0],
-    })
-    d = str(tmp_path / "in")
-    os.makedirs(d)
-    pdf.to_parquet(os.path.join(d, "000.parquet"), index=False)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        src = file_stream(spark, d, os.path.join(d, "000.parquet"))
-        with pytest.raises(StreamingQueryException) as exc:
-            run_to_memory(
-                streaming_capped_sessions(src), spark, "capped_ooo",
-                "append", str(tmp_path / "ck"),
-            )
-        assert "replay contract violated" in str(exc.value)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
 def test_capped_sessions_sentinel_only_key_emits_nothing(spark, tmp_path):
     """A finalize sentinel fanned out to a key that never produced data
     (the keys= superset case — e.g. a roster wider than the tape) must
@@ -3786,3 +3750,149 @@ def test_capped_sessions_timeout_state_retention_both_modes(
     assert run(False, "capped_keep_state") == [(1, 0, 2), (2, 0, 1)]
     # clear-on-fire: the returning key restarts at session_id 1
     assert run(True, "capped_clear_state") == [(1, 0, 1), (1, 0, 2)]
+
+
+def _face_tape() -> pd.DataFrame:
+    """One key's four events in (ts, event_id) order: each face's output
+    follows that order; the 43-min gap closes one capped session."""
+    base = pd.Timestamp("2024-03-01 00:00:00")
+    return pd.DataFrame({
+        "user_id": [7, 7, 7, 7],
+        "order_id": ["7"] * 4,
+        "event_id": [1, 2, 3, 4],
+        "ts": [base + pd.Timedelta(minutes=m) for m in (0, 1, 2, 45)],
+        "value": [5.0, 500.0, 3.0, 450.0],
+        "event_type": ["view", "click", "purchase", "view"],
+        "leg": ["small", "small", "big", "big"],
+    })
+
+
+def _cep_face(S, src):
+    from flink_examples_spark.operators.cep import Pat
+
+    def rises(row, ctx):
+        prev = ctx.last(1)
+        return prev is not None and row["value"] > prev["value"]
+
+    return S.streaming_cep(
+        src, key="user_id", ts_col="ts",
+        pattern=[Pat("A"), Pat("B", where=rises, contiguity="strict")],
+        measures=lambda vm, _: {
+            "a_id": int(vm["A"].iloc[0]["event_id"]),
+            "b_id": int(vm["B"].iloc[0]["event_id"]),
+        },
+        output_schema="user_id long, a_id long, b_id long",
+        within_ms=3_600_000, order_cols=["ts", "event_id"],
+    )
+
+
+# the 11 row-ordered GroupState faces (every one but dedup TTL), each
+# built over a file stream of _face_tape's columns
+_ORDERED_FACES = {
+    "fraud": lambda S, src: S.streaming_fraud_detector(src),
+    "count_window": lambda S, src: S.streaming_count_window(src, size=2, slide=1),
+    "double_stream": lambda S, src: S.streaming_double_stream_match(
+        src.withWatermark("ts", "0 seconds"), side_col="leg"
+    ),
+    "asof": lambda S, src: S.streaming_asof_enrich(src.selectExpr(
+        "user_id", "ts", "if(event_type = 'view', 0, 1) AS side",
+        "event_id AS left_id", "event_id AS payload", "event_id AS ord",
+    ), "user_id"),
+    "dfa": lambda S, src: S.streaming_dfa_alerts(
+        src, {"view": {"click"}, "click": {"purchase"}}),
+    "cep": _cep_face,
+    "funnel": lambda S, src: S.streaming_funnel_first_times(
+        src, "user_id", "ts", "event_type", ["view", "click", "purchase"]
+    ),
+    "sequence_pack": lambda S, src: S.streaming_sequence_pack(
+        src, "event_id", "event_type", 1, "user_id"
+    ),
+    "series_scan": lambda S, src: S.streaming_series_pattern_scan(
+        src, "user_id", "ts", "value", [5.0, 500.0], 1e9,
+        order_cols=["ts", "event_id"],
+    ),
+    "capped_sessions": lambda S, src: S.streaming_capped_sessions(src),
+    "budget_admission": lambda S, src: S.streaming_budget_admission(
+        src, "event_id", "event_type", 2, "user_id"
+    ),
+}
+
+
+def _run_face(spark, tmp_path, name, face, key_expr=None):
+    """Replay _face_tape, written as one file in REVERSE (ts, id) order,
+    through a face, the key column first replaced by ``key_expr``
+    (``(column, SQL expression)``); rows sorted by repr, the key as a
+    string so key types compare."""
+    import flink_examples_spark.streaming.stateful as S
+
+    d = str(tmp_path / name)
+    os.makedirs(d)
+    _face_tape().iloc[::-1].to_parquet(
+        os.path.join(d, "000.parquet"), index=False
+    )
+    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
+    if key_expr is not None:
+        src = src.withColumn(key_expr[0], F.expr(key_expr[1]))
+    out = run_to_memory(
+        _ORDERED_FACES[face](S, src), spark, name, "append",
+        str(tmp_path / f"{name}_ck"),
+    )
+    return sorted(((str(r[0]), *r[1:]) for r in out.collect()), key=repr)
+
+
+@pytest.mark.parametrize("face", sorted(_ORDERED_FACES))
+def test_stateful_face_output_invariant_to_arrow_batch_size(
+    spark, tmp_path, face
+):
+    """One key, one file, one trigger, rows in reverse order: at
+    arrow.maxRecordsPerBatch=1 the key's trigger arrives as one chunk
+    per row, and the face must still emit exactly the rows it emits at
+    the default batch size — every face sorts the whole trigger once,
+    never chunk by chunk."""
+    want = _run_face(spark, tmp_path, f"bs_{face}_0", face)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        got = _run_face(spark, tmp_path, f"bs_{face}_1", face)
+    finally:
+        spark.conf.set(conf, prev)
+    assert got == want and want, (got, want)
+
+
+# face -> (key column, SQL expression retyping it, the retyped key)
+_KEY_VARIANTS = {
+    "fraud": ("user_id", "concat('u', user_id)", "u7"),
+    "dfa": ("user_id", "concat('u', user_id)", "u7"),
+    "funnel": ("user_id", "concat('u', user_id)", "u7"),
+    "double_stream": ("order_id", "cast(order_id AS long)", "7"),
+}
+
+
+@pytest.mark.parametrize("face", sorted(_KEY_VARIANTS))
+def test_stateful_face_accepts_non_default_key_type(spark, tmp_path, face):
+    """Keyed faces take the output key type from the input schema: a
+    string user_id (fraud, DFA, funnel) or a long order_id (double
+    stream) emits the same rows as the default key type instead of
+    dying at the first emitted row's Arrow conversion."""
+    col, expr, key = _KEY_VARIANTS[face]
+    want = _run_face(spark, tmp_path, f"kt_{face}_0", face)
+    got = _run_face(spark, tmp_path, f"kt_{face}_1", face, (col, expr))
+    assert got == [(key, *r[1:]) for r in want] and want, (got, want)
+
+
+def test_streaming_series_pattern_scan_decimal_value_raises(spark):
+    """The series scan buffers its rows as JSON in GroupState, so a
+    decimal value column must fail at construction with the
+    streaming_cep message, not mid-stream."""
+    from flink_examples_spark.streaming.stateful import (
+        streaming_series_pattern_scan,
+    )
+
+    df = spark.createDataFrame(
+        [], "user_id long, ts timestamp, value decimal(18,2)"
+    )
+    with pytest.raises(TypeError, match="cannot round-trip the JSON state"):
+        streaming_series_pattern_scan(
+            df, "user_id", "ts", "value", [1.0, 2.0], 1.0
+        )
