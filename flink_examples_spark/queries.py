@@ -3762,9 +3762,13 @@ def _corpus_pipeline(
         # against the staged parquet — the hygiene lineage is gone, so
         # a dedup-phase failure restarts from disk, not from the raw
         # corpus. Partitioned by source: the pack stage's window keys
-        # align with directories.
+        # align with directories. The re-read takes the schema of the
+        # frame just written, so it fires no schema-inference job.
         write_partitioned_table(clean, stage_dir, ["source"])
-        clean = spark.read.parquet(stage_dir).select(*docs.columns)
+        clean = (
+            spark.read.schema(clean.schema).parquet(stage_dir)
+            .select(*docs.columns)
+        )
     else:
         # fused plan: `clean` feeds the shingle index build (inside the
         # connected-components job) AND the final keep/pack plan —

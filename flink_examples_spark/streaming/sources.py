@@ -1,8 +1,9 @@
 """Streaming sources (SURVEY.md §2.1 S1-S11).
 
   file_stream    — S1/S5: directory-watching file source; the streaming
-                   twin of the batch catalog readers. Handles the
-                   testdata's nanosecond timestamps like catalog.load_table.
+                   twin of the batch catalog readers: the same
+                   footer-built schema and timestamp normalisation as
+                   catalog.load_table.
   rate_events    — S6: programmatic generator sources. The reference
                    writes SourceFunction emit loops (SessionWindow.java:
                    31-50, EventsGeneratorSource.java:9-46); here the
@@ -16,10 +17,10 @@
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from flink_examples_spark.catalog import _normalise_ts, parquet_schema
 
 
 def file_stream(
@@ -31,55 +32,23 @@ def file_stream(
 ) -> DataFrame:
     """Stream a directory of files in deterministic per-file batches.
 
-    ``schema_file`` is an existing file used as the schema authority
-    (streaming reads require an explicit schema). Nanosecond timestamp
-    columns are read as longs and truncated to micros, mirroring
-    catalog.load_table so streaming and batch agree on event time.
+    ``schema_file`` is an existing parquet file used as the schema
+    authority (streaming reads require an explicit schema). Its schema
+    comes from ``catalog.parquet_schema`` and its timestamps go through
+    ``catalog._normalise_ts`` — the helpers ``catalog.load_table`` uses —
+    so streaming and batch agree on types and event time by
+    construction. A footer type with no Spark equivalent raises here.
     """
-    arrow_schema = pq.read_schema(schema_file)
-    nanos = [f.name for f in arrow_schema if str(f.type).startswith("timestamp[ns")]
-    if nanos:
+    schema, nanos_cols = parquet_schema(schema_file)
+    if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    fields = []
-    for f in arrow_schema:
-        if f.name in nanos:
-            fields.append(T.StructField(f.name, T.LongType()))
-        else:
-            fields.append(
-                T.StructField(
-                    f.name,
-                    T._parse_datatype_string(_arrow_to_ddl(str(f.type))),
-                )
-            )
     df = (
-        spark.readStream.schema(T.StructType(fields))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .format(fmt)
         .load(directory)
     )
-    for c in nanos:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
-
-
-def _arrow_to_ddl(arrow_type: str) -> str:
-    mapping = {
-        "int64": "bigint",
-        "int32": "int",
-        "double": "double",
-        "float": "float",
-        "string": "string",
-        "large_string": "string",
-        "bool": "boolean",
-        "binary": "binary",
-        "timestamp[us]": "timestamp",
-        "timestamp[ms]": "timestamp",
-    }
-    if arrow_type.startswith("list<item: float>"):
-        return "array<float>"
-    if arrow_type.startswith("list<item: double>"):
-        return "array<double>"
-    return mapping.get(arrow_type, "string")
+    return _normalise_ts(df, nanos_cols)
 
 
 def rate_events(

@@ -153,3 +153,92 @@ def test_decode_int_pair_binary_roundtrip(spark):
         for r in decode_int_pair_binary(df).collect()
     ]
     assert got == cases
+
+
+def test_file_stream_reads_list_footer_as_array(spark, sf_dir, tmp_path):
+    """file_stream takes its schema from the catalog's footer reader: the
+    embeddings footer's ``list<element: float>`` streams as
+    ``array<float>`` (not ``string``), and the stream's rows equal the
+    batch table's."""
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from flink_examples_spark.catalog import load_table
+    from flink_examples_spark.streaming.sources import file_stream
+
+    d = tmp_path / "tape"
+    d.mkdir()
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), d / "000.parquet")
+    src = file_stream(spark, str(d), str(d / "000.parquet"))
+    batch = load_table(spark, "embeddings", sf_dir)
+    assert src.schema["embedding"].dataType == T.ArrayType(T.FloatType(), True)
+    assert src.schema == batch.schema
+    q = (
+        src.writeStream.format("memory").queryName("embeddings_tape")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.awaitTermination(180)
+    try:
+        got = spark.table("embeddings_tape").collect()
+    finally:
+        spark.catalog.dropTempView("embeddings_tape")
+    assert sorted(got, key=repr) == sorted(batch.collect(), key=repr)
+
+
+def test_file_stream_schema_equals_batch_for_every_mapped_type(spark, tmp_path):
+    """int16, date32, decimal and zoned, unzoned and nanosecond
+    timestamps get the same Spark types from file_stream as from
+    load_table."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_examples_spark.catalog import load_table
+    from flink_examples_spark.streaming.sources import file_stream
+
+    d = tmp_path / "tape"
+    d.mkdir()
+    pq.write_table(
+        pa.table({
+            "i16": pa.array([1], pa.int16()),
+            "day": pa.array([dt.date(2020, 1, 2)], pa.date32()),
+            "amount": pa.array([Decimal("1.50")], pa.decimal128(10, 2)),
+            "zoned": pa.array([1], pa.timestamp("us", tz="UTC")),
+            "naive": pa.array([1], pa.timestamp("us")),
+            "nanos": pa.array([1], pa.timestamp("ns")),
+        }),
+        str(d / "events.parquet"),
+    )
+    src = file_stream(spark, str(d), str(d / "events.parquet"))
+    assert src.schema.simpleString() == (
+        "struct<i16:smallint,day:date,amount:decimal(10,2),"
+        "zoned:timestamp,naive:timestamp,nanos:timestamp>"
+    )
+    assert src.schema == load_table(spark, "events", str(d)).schema
+
+
+def test_file_stream_rejects_unmappable_footer_type(spark, tmp_path):
+    """A footer type with no Spark equivalent raises when the stream is
+    built, instead of streaming as ``string``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from flink_examples_spark.streaming.sources import file_stream
+
+    d = tmp_path / "tape"
+    d.mkdir()
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1], pa.int64()),
+            "half": pa.array(np.array([1.5], dtype=np.float16)),
+        }),
+        str(d / "000.parquet"),
+    )
+    with pytest.raises(TypeError, match="halffloat"):
+        file_stream(spark, str(d), str(d / "000.parquet"))
