@@ -10,24 +10,35 @@ REAL pure-numpy container codecs (BMP / PPM / PGM images, RIFF PCM WAV
 audio — :func:`parse_bmp`, :func:`parse_pnm`, :func:`parse_wav`) so
 real media bytes flow end-to-end with no external library. Compressed
 formats (JPEG/PNG/FLAC) dispatch to pillow/soundfile only when those
-are importable; otherwise the row degrades to a null-stats row.
+are importable.
 
 Scale notes (100 TB design):
 - Media rows are wide: bound Arrow batch size with
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set by
   engine_session) so a batch of payloads fits executor memory.
-- All transforms below are ``mapInPandas`` — narrow, no shuffle; media
-  bytes never leave their input partition. Only the final small feature
-  aggregations shuffle.
+- Every encoder and decoder is one narrow ``mapInPandas`` (see
+  ``_map_rows``), no shuffle; media bytes never leave their input
+  partition, and a decoder ships only the id and payload columns to
+  Python. Only the final small feature aggregations shuffle.
 - Payload bytes stay in Arrow buffers end-to-end (no per-row Python
   object churn beyond the numpy view).
 
-Fake codec layouts (little-endian int32 fields):
-  FIMG: magic 'FIMG' | width | height | channels | pixel bytes
-        (row-major, width*height*channels bytes)
-  FAUD: magic 'FAUD' | sample_rate | n_samples | uint8 samples
-  FVID: magic 'FVID' | width | height | n_frames | frames, each
-        width*height bytes
+Fake codec layouts (little-endian int32 header fields, then uint8 body):
+  FIMG: 'FIMG' | width | height | channels | width*height*channels
+        pixel bytes (row-major, channels interleaved)
+  FAUD: 'FAUD' | sample_rate | n_samples | n_samples sample bytes
+  FVID: 'FVID' | width | height | n_frames | n_frames frames of
+        width*height bytes each
+A fake payload decodes only when its magic matches, the whole header is
+present, every header field is positive and the body holds at least the
+bytes the header declares (bytes past that are ignored).
+
+Null-row rule: a decoder emits exactly one row for each payload it
+cannot decode (NULL, another format, cut-short header, non-positive
+header field, short body, or a real container its parser rejects): the
+id, with every other column NULL. Bad input never fails the Arrow batch
+and never drops the id. ``media_metadata`` reads headers only; a
+payload whose header it cannot read is kind ``'unknown'``.
 """
 
 from __future__ import annotations
@@ -52,12 +63,120 @@ MEDIA_META_DDL = (
 )
 
 
+# ---------------------------------------------------------------------------
+# The one runner: encoders and decoders are a per-row function over it
+# ---------------------------------------------------------------------------
+
+def _map_rows(src: DataFrame, per_row, ddl: str) -> DataFrame:
+    """Run ``per_row`` over every row of ``src`` in one ``mapInPandas``.
+
+    ``src``'s first column is the long row id. ``per_row(*row)`` returns
+    the output rows for that input row as tuples without the id, or None
+    for the null row. ``ddl`` types the output columns after the id.
+    Integer columns are built as nullable ``Int64``: a NULL elsewhere in
+    the batch must not route a 64-bit hash through float64."""
+    fields = [f.split() for f in ddl.split(",")]
+    names = [src.columns[0]] + [name for name, _ in fields]
+    ints = [True] + [t in ("int", "long") for _, t in fields]
+    null_row = [(None,) * len(fields)]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for row in pdf.itertuples(index=False, name=None):
+                out = per_row(*row)
+                rows += [(row[0],) + r for r in (null_row if out is None else out)]
+            if rows:
+                yield pd.DataFrame({
+                    name: pd.array(col, dtype="Int64") if is_int else list(col)
+                    for name, is_int, col in zip(names, ints, zip(*rows))
+                })
+
+    return src.mapInPandas(run, f"{names[0]} long, {ddl}")
+
+
 def _payload_bytes(raw) -> bytes:
-    """NULL-safe payload coercion: a NULL binary cell becomes b'' —
-    which fails every magic check and falls into the op's null-row
-    branch — instead of ``bytes(None)`` raising TypeError and killing
-    the whole mapInPandas Arrow batch (r5 review finding)."""
+    """A NULL binary cell becomes b'', which no parser accepts, so it
+    takes the null row instead of ``bytes(None)`` failing the batch."""
     return b"" if raw is None else bytes(raw)
+
+
+def _map_payloads(df: DataFrame, per_row, ddl: str, id_col: str,
+                  payload_col: str) -> DataFrame:
+    """A decoder: ``per_row(payload bytes)`` returns 0..n output rows, or
+    None when the payload is undecodable. Output: ``<id_col>`` + ``ddl``."""
+    src = df.select(F.col(id_col).alias("_id"),
+                    F.col(payload_col).alias("_p"))
+    return _map_rows(
+        src, lambda _id, raw: per_row(_payload_bytes(raw)), ddl
+    ).withColumnRenamed("_id", id_col)
+
+
+def _encode(df: DataFrame, id_col: str, exprs: list[str], make) -> DataFrame:
+    """An encoder: ``make(media_id, *values)`` builds one payload from the
+    SQL ``exprs`` over the input row. Output: ``media_id, payload``."""
+    src = df.selectExpr(
+        f"{id_col} as media_id", *(f"{e} as _{i}" for i, e in enumerate(exprs))
+    )
+    return _map_rows(src, lambda *row: [(make(*row),)], "payload binary")
+
+
+def _int(expr: str) -> str:
+    return f"cast(({expr}) as int)"
+
+
+# ---------------------------------------------------------------------------
+# Fake codecs (layouts in the module docstring)
+# ---------------------------------------------------------------------------
+
+def _pack(magic: bytes, fields, body: bytes) -> bytes:
+    return magic + struct.pack(f"<{len(fields)}i", *fields) + body
+
+
+def _header(raw: bytes, magic: bytes):
+    """The int32 header fields after ``magic`` (two for FAUD, three for
+    FIMG/FVID), or None on another magic or a cut-short header."""
+    n = 2 if magic == AUDIO_MAGIC else 3
+    if raw[:4] != magic or len(raw) < 4 + 4 * n:
+        return None
+    return struct.unpack(f"<{n}i", raw[4:4 + 4 * n])
+
+
+def _fake_body(raw: bytes, magic: bytes):
+    """(header fields, uint8 body of the declared size), or None unless
+    the payload passes the fake-codec check."""
+    hdr = _header(raw, magic)
+    if hdr is None or min(hdr) <= 0:
+        return None
+    size = hdr[1] if magic == AUDIO_MAGIC else hdr[0] * hdr[1] * hdr[2]
+    off = 4 + 4 * len(hdr)
+    if len(raw) < off + size:
+        return None
+    return hdr, np.frombuffer(raw, np.uint8, offset=off, count=size)
+
+
+def _parse_fimg(raw: bytes):
+    """FIMG → (h, w, c) uint8 pixels, or None."""
+    got = _fake_body(raw, IMAGE_MAGIC)
+    if got is None:
+        return None
+    (w, h, c), px = got
+    return px.reshape(h, w, c)
+
+
+def _parse_fvid(raw: bytes):
+    """FVID → (n_frames, w*h) uint8 frames, or None."""
+    got = _fake_body(raw, VIDEO_MAGIC)
+    if got is None:
+        return None
+    (w, h, nf), px = got
+    return px.reshape(nf, w * h)
+
+
+def _parse_faud(raw: bytes):
+    """FAUD → (sample_rate, uint8 samples), or None."""
+    got = _fake_body(raw, AUDIO_MAGIC)
+    return None if got is None else (got[0][0], got[1])
 
 
 def _cycle_bytes(data: bytes, n: int) -> bytes:
@@ -67,6 +186,16 @@ def _cycle_bytes(data: bytes, n: int) -> bytes:
         return b"\x00" * n
     reps = -(-n // len(data))
     return (data * reps)[:n]
+
+
+def _seed_bytes(seed, n: int) -> bytes:
+    return _cycle_bytes(str(seed).encode("utf-8"), n)
+
+
+def _image_stats(px) -> tuple:
+    """(width, height, mean_px, min_px, max_px) of (h, w, c) pixels."""
+    return (int(px.shape[1]), int(px.shape[0]), round(float(px.mean()), 6),
+            int(px.min()), int(px.max()))
 
 
 # ---------------------------------------------------------------------------
@@ -84,24 +213,12 @@ def encode_fake_images(
     """Synthesize an ``FIMG`` binary column: header + pixels cycled from
     the seed text's utf-8 bytes. ``width_expr``/``height_expr`` are SQL
     expressions over the input row (deterministic, oracle-checkable)."""
-    src = df.selectExpr(
-        f"{id_col} as media_id",
-        f"{seed_text_col} as _seed",
-        f"cast(({width_expr}) as int) as _w",
-        f"cast(({height_expr}) as int) as _h",
+    return _encode(
+        df, id_col, [seed_text_col, _int(width_expr), _int(height_expr)],
+        lambda _mid, seed, w, h: _pack(
+            IMAGE_MAGIC, (w, h, channels), _seed_bytes(seed, w * h * channels)
+        ),
     )
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for seed, w, h in zip(pdf["_seed"], pdf["_w"], pdf["_h"]):
-                header = IMAGE_MAGIC + struct.pack("<iii", w, h, channels)
-                payloads.append(
-                    header + _cycle_bytes(str(seed).encode("utf-8"), w * h * channels)
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "payload": payloads})
-
-    return src.mapInPandas(enc, "media_id long, payload binary")
 
 
 def encode_fake_videos(
@@ -115,27 +232,21 @@ def encode_fake_videos(
     """Synthesize an ``FVID`` binary column: header + n_frames fake
     frames; frame f's bytes are the seed bytes cycled, offset by f so
     frames differ deterministically."""
-    src = df.selectExpr(
-        f"{id_col} as media_id",
-        f"{seed_text_col} as _seed",
-        f"cast(({width_expr}) as int) as _w",
-        f"cast(({height_expr}) as int) as _h",
-        f"cast(({n_frames_expr}) as int) as _nf",
+
+    def make(_mid, seed, w, h, nf):
+        base = str(seed).encode("utf-8")
+        frames = b"".join(
+            _cycle_bytes(base[f % max(len(base), 1):] + base, w * h)
+            for f in range(nf)
+        )
+        return _pack(VIDEO_MAGIC, (w, h, nf), frames)
+
+    return _encode(
+        df, id_col,
+        [seed_text_col, _int(width_expr), _int(height_expr),
+         _int(n_frames_expr)],
+        make,
     )
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for seed, w, h, nf in zip(pdf["_seed"], pdf["_w"], pdf["_h"], pdf["_nf"]):
-                base = str(seed).encode("utf-8")
-                frames = b"".join(
-                    _cycle_bytes(base[f % max(len(base), 1):] + base, w * h)
-                    for f in range(nf)
-                )
-                payloads.append(VIDEO_MAGIC + struct.pack("<iii", w, h, nf) + frames)
-            yield pd.DataFrame({"media_id": pdf["media_id"], "payload": payloads})
-
-    return src.mapInPandas(enc, "media_id long, payload binary")
 
 
 def encode_fake_audio(
@@ -145,32 +256,16 @@ def encode_fake_audio(
     sample_rate_expr: str,
     n_samples_expr: str,
 ) -> DataFrame:
-    """Synthesize an ``FAUD`` binary column: magic | sample_rate |
-    n_samples | uint8 samples cycled from the seed text's utf-8 bytes
-    (deterministic, oracle-checkable)."""
-    src = df.selectExpr(
-        f"{id_col} as media_id",
-        f"{seed_text_col} as _seed",
-        f"cast(({sample_rate_expr}) as int) as _sr",
-        f"cast(({n_samples_expr}) as int) as _n",
+    """Synthesize an ``FAUD`` binary column: uint8 samples cycled from
+    the seed text's utf-8 bytes (deterministic, oracle-checkable)."""
+    return _encode(
+        df, id_col,
+        [seed_text_col, _int(sample_rate_expr), _int(n_samples_expr)],
+        lambda _mid, seed, sr, n: _pack(
+            AUDIO_MAGIC, (sr, n), _seed_bytes(seed, n)
+        ),
     )
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for seed, sr, n in zip(pdf["_seed"], pdf["_sr"], pdf["_n"]):
-                header = AUDIO_MAGIC + struct.pack("<ii", sr, n)
-                payloads.append(
-                    header + _cycle_bytes(str(seed).encode("utf-8"), n)
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "payload": payloads})
-
-    return src.mapInPandas(enc, "media_id long, payload binary")
-
-
-# ---------------------------------------------------------------------------
-# Decode / metadata extraction
-# ---------------------------------------------------------------------------
 
 def encode_const_frame_videos(
     df: DataFrame,
@@ -185,31 +280,20 @@ def encode_const_frame_videos(
     byte exactly, so per-frame statistics (and scene-cut verdicts) are
     closed-form computable by a SQL oracle. The fixture encoder for
     :func:`video_scene_cuts`."""
-    src = df.selectExpr(
-        f"{id_col} as media_id",
-        f"cast(({width_expr}) as int) as _w",
-        f"cast(({height_expr}) as int) as _h",
-        f"cast(({n_frames_expr}) as int) as _nf",
+    return _encode(
+        df, id_col,
+        [_int(width_expr), _int(height_expr), _int(n_frames_expr)],
+        lambda mid, w, h, nf: _pack(
+            VIDEO_MAGIC, (w, h, nf),
+            b"".join(bytes([fill(int(mid), f) % 256]) * (w * h)
+                     for f in range(nf)),
+        ),
     )
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for mid, w, h, nf in zip(pdf["media_id"], pdf["_w"],
-                                     pdf["_h"], pdf["_nf"]):
-                frames = b"".join(
-                    bytes([fill(int(mid), f) % 256]) * (w * h)
-                    for f in range(nf)
-                )
-                payloads.append(
-                    VIDEO_MAGIC + struct.pack("<iii", w, h, nf) + frames
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
 
-    return src.mapInPandas(enc, "media_id long, payload binary")
-
+# ---------------------------------------------------------------------------
+# Fake-codec decoders
+# ---------------------------------------------------------------------------
 
 def video_scene_cuts(
     df: DataFrame,
@@ -223,87 +307,44 @@ def video_scene_cuts(
     ``threshold`` — the classic intensity-difference cut detector
     (real pipelines swap the mean for a histogram or embedding delta;
     the Spark-side plumbing — binary payload in, per-cut fan-out,
-    Arrow batches, no shuffle — is identical). Undecodable payloads
-    emit one null row (seen-but-undecodable, no silent drops); videos
-    with no cuts emit nothing.
+    Arrow batches, no shuffle — is identical). Videos with no cuts
+    emit nothing.
 
     Output: ``<id_col>, cut_frame, delta`` (delta rounded 6 dp)."""
 
-    def cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    # bytes() inside the try: a NULL payload must emit
-                    # the null row, not TypeError the whole Arrow batch
-                    raw = _payload_bytes(raw)
-                    if raw[:4] != VIDEO_MAGIC or len(raw) < 16:
-                        rows.append((mid, None, None))
-                        continue
-                    w, h, nf = struct.unpack("<iii", raw[4:16])
-                    fsz = w * h
-                    if w <= 0 or h <= 0 or nf < 0 \
-                            or len(raw) < 16 + nf * fsz:
-                        rows.append((mid, None, None))
-                        continue
-                    means = [
-                        float(np.frombuffer(
-                            raw, np.uint8, offset=16 + f * fsz, count=fsz
-                        ).mean())
-                        for f in range(nf)
-                    ]
-                except Exception:
-                    rows.append((mid, None, None))
-                    continue
-                for f in range(1, nf):
-                    d = abs(means[f] - means[f - 1])
-                    if d > threshold:
-                        rows.append((mid, f, round(d, 6)))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "cut_frame", "delta"]
-            )
+    def cuts(raw):
+        frames = _parse_fvid(raw)
+        if frames is None:
+            return None
+        deltas = np.abs(np.diff(frames.mean(axis=1)))
+        return [(f + 1, round(float(d), 6))
+                for f, d in enumerate(deltas) if d > threshold]
 
-    return df.mapInPandas(
-        cuts, f"{id_col} long, cut_frame int, delta double"
-    )
+    return _map_payloads(df, cuts, "cut_frame int, delta double",
+                         id_col, payload_col)
 
 
 def media_metadata(df: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload") -> DataFrame:
     """Parse the typed metadata struct off each payload's header —
-    no full decode, reads a fixed 16-byte prefix per row."""
+    no full decode, reads only the header per row."""
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                raw = _payload_bytes(raw)
-                magic = raw[:4]
-                # per-magic header width: FAUD's header is 12 bytes, so
-                # unpacking a fixed 16-byte prefix would crash on clips
-                # with fewer than 4 samples
-                if magic == IMAGE_MAGIC and len(raw) >= 16:
-                    a, b, c = struct.unpack("<iii", raw[4:16])
-                    m = ("image", a, b, c, None, None, len(raw))
-                elif magic == AUDIO_MAGIC and len(raw) >= 12:
-                    a, _n = struct.unpack("<ii", raw[4:12])
-                    m = ("audio", None, None, None, a, None, len(raw))
-                elif magic == VIDEO_MAGIC and len(raw) >= 16:
-                    a, b, c = struct.unpack("<iii", raw[4:16])
-                    m = ("video", a, b, None, None, c, len(raw))
-                else:
-                    m = ("unknown", None, None, None, None, None, len(raw))
-                rows.append((mid,) + m)
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "kind", "width", "height", "channels",
-                         "sample_rate", "n_frames", "n_bytes"],
-            )
+    def meta(raw):
+        if hdr := _header(raw, IMAGE_MAGIC):
+            m = ("image", *hdr, None, None)
+        elif hdr := _header(raw, AUDIO_MAGIC):
+            m = ("audio", None, None, None, hdr[0], None)
+        elif hdr := _header(raw, VIDEO_MAGIC):
+            m = ("video", hdr[0], hdr[1], None, None, hdr[2])
+        else:
+            m = ("unknown", None, None, None, None, None)
+        return [m + (len(raw),)]
 
-    return df.mapInPandas(
-        meta,
-        f"{id_col} long, kind string, width int, height int, channels int, "
+    return _map_payloads(
+        df, meta,
+        "kind string, width int, height int, channels int, "
         "sample_rate int, n_frames int, n_bytes int",
+        id_col, payload_col,
     )
 
 
@@ -313,34 +354,14 @@ def image_features(df: DataFrame, id_col: str = "media_id",
     (mean/min/max byte value) — the feature-extraction batch shape:
     numpy view over Arrow binary, no per-pixel Python."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                raw = _payload_bytes(raw)
-                # non-image / truncated-header / header-only payloads:
-                # null-stats row (no silent drops, no task-killing
-                # struct.error / zero-size-reduction ValueError)
-                if raw[:4] != IMAGE_MAGIC or len(raw) < 16:
-                    rows.append((mid, None, None, None, None, None))
-                    continue
-                w, h, c = struct.unpack("<iii", raw[4:16])
-                px = np.frombuffer(raw, dtype=np.uint8, offset=16)
-                if px.size == 0:
-                    rows.append((mid, w, h, None, None, None))
-                    continue
-                rows.append((mid, w, h,
-                             round(float(px.mean()), 6),
-                             int(px.min()), int(px.max())))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "mean_px", "min_px", "max_px"],
-            )
+    def feats(raw):
+        px = _parse_fimg(raw)
+        return None if px is None else [_image_stats(px)]
 
-    return df.mapInPandas(
-        feats,
-        f"{id_col} long, width int, height int, mean_px double, "
-        "min_px int, max_px int",
+    return _map_payloads(
+        df, feats,
+        "width int, height int, mean_px double, min_px int, max_px int",
+        id_col, payload_col,
     )
 
 
@@ -350,38 +371,19 @@ def audio_features(df: DataFrame, id_col: str = "media_id",
     mean/max amplitude) — numpy view over Arrow binary, the audio
     feature-extraction batch shape."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                raw = _payload_bytes(raw)
-                if raw[:4] != AUDIO_MAGIC:
-                    # non-audio payload in a mixed-media input: emit a
-                    # null-stats row (mirrors media_metadata's 'unknown'
-                    # row) — the repo convention is no silent drops
-                    rows.append((mid, None, None, None, None, None))
-                    continue
-                sr, n = struct.unpack("<ii", raw[4:12])
-                samples = np.frombuffer(raw, dtype=np.uint8, offset=12)
-                # degenerate clips (0 samples / 0 rate): nulls, not a
-                # task-killing ValueError/ZeroDivisionError — one bad
-                # row must not fail the whole Arrow batch
-                rows.append((
-                    mid, sr, n,
-                    round(float(n) / sr, 6) if sr else None,
-                    round(float(samples.mean()), 6) if samples.size else None,
-                    int(samples.max()) if samples.size else None,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_rate", "n_samples",
-                         "duration_s", "mean_amp", "max_amp"],
-            )
+    def feats(raw):
+        got = _parse_faud(raw)
+        if got is None:
+            return None
+        sr, s = got
+        return [(sr, s.size, round(float(s.size) / sr, 6),
+                 round(float(s.mean()), 6), int(s.max()))]
 
-    return df.mapInPandas(
-        feats,
-        f"{id_col} long, sample_rate int, n_samples int, "
-        "duration_s double, mean_amp double, max_amp int",
+    return _map_payloads(
+        df, feats,
+        "sample_rate int, n_samples int, duration_s double, "
+        "mean_amp double, max_amp int",
+        id_col, payload_col,
     )
 
 
@@ -392,68 +394,37 @@ def image_resize(df: DataFrame, out_w: int, out_h: int,
     returns new FIMG binaries. Real pixel work in numpy (gather by
     index grid), the canonical media-transform batch shape."""
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                raw = _payload_bytes(raw)
-                # non-image / degenerate payloads: null-payload row so
-                # mixed-media inputs are visible downstream, not dropped
-                if raw[:4] != IMAGE_MAGIC or len(raw) < 16:
-                    ids.append(mid)
-                    payloads.append(None)
-                    continue
-                w, h, c = struct.unpack("<iii", raw[4:16])
-                if w <= 0 or h <= 0 or c <= 0 or len(raw) < 16 + w * h * c:
-                    ids.append(mid)
-                    payloads.append(None)
-                    continue
-                # reshape to (h, w, c) so the x index gathers whole
-                # PIXELS: indexing the interleaved (h, w*c) layout
-                # linearly would mix channel bytes of different pixels
-                px = np.frombuffer(
-                    raw, dtype=np.uint8, offset=16, count=w * h * c
-                ).reshape(h, w, c)
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                out = px[yi][:, xi, :]
-                ids.append(mid)
-                payloads.append(
-                    IMAGE_MAGIC + struct.pack("<iii", out_w, out_h, c)
-                    + out.tobytes()
-                )
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def rs(raw):
+        px = _parse_fimg(raw)
+        if px is None:
+            return None
+        # px is (h, w, c), so the x index gathers whole PIXELS: indexing
+        # the interleaved (h, w*c) layout linearly would mix channel
+        # bytes of different pixels
+        h, w, c = px.shape
+        out = px[(np.arange(out_h) * h) // out_h][
+            :, (np.arange(out_w) * w) // out_w, :]
+        return [(_pack(IMAGE_MAGIC, (out_w, out_h, c), out.tobytes()),)]
 
-    return df.mapInPandas(rs, f"{id_col} long, payload binary")
+    return _map_payloads(df, rs, "payload binary", id_col, payload_col)
 
 
 def video_frame_sample(df: DataFrame, every: int = 2,
                        id_col: str = "media_id",
                        payload_col: str = "payload") -> DataFrame:
     """Sample every ``every``-th frame from FVID payloads; one output row
-    per kept frame with the frame's bytes and per-frame mean byte value
-    (frame-level fan-out, the video batch shape)."""
+    per kept frame with its index and mean byte value (frame-level
+    fan-out, the video batch shape)."""
 
-    def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                raw = _payload_bytes(raw)
-                # non-video / truncated payloads: one null-frame row
-                # marks the id as seen-but-undecodable (no silent drops)
-                if raw[:4] != VIDEO_MAGIC or len(raw) < 16:
-                    rows.append((mid, None, None))
-                    continue
-                w, h, nf = struct.unpack("<iii", raw[4:16])
-                fsz = w * h
-                for f in range(0, nf, every):
-                    frame = np.frombuffer(
-                        raw, dtype=np.uint8, offset=16 + f * fsz, count=fsz
-                    )
-                    rows.append((mid, f, round(float(frame.mean()), 6)))
-            yield pd.DataFrame(rows, columns=[id_col, "frame_idx", "mean_px"])
+    def sample(raw):
+        frames = _parse_fvid(raw)
+        if frames is None:
+            return None
+        return [(f, round(float(frames[f].mean()), 6))
+                for f in range(0, len(frames), every)]
 
-    return df.mapInPandas(fs, f"{id_col} long, frame_idx int, mean_px double")
+    return _map_payloads(df, sample, "frame_idx int, mean_px double",
+                         id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -463,8 +434,8 @@ def video_frame_sample(df: DataFrame, every: int = 2,
 # (RIFF PCM u8/i16/i32 + IEEE float32) parse with struct + numpy alone,
 # so real bytes flow end-to-end in this container. Compressed formats
 # (JPEG/PNG/FLAC/MP3) still gate on pillow/soundfile — the dispatch
-# falls through to them per payload when importable, else emits the
-# null-stats row (repo convention: no silent drops, no task kills).
+# falls through to them per payload when importable, else the payload
+# takes the null row.
 # ---------------------------------------------------------------------------
 
 def parse_bmp(raw: bytes):
@@ -570,14 +541,9 @@ def decode_image_bytes(raw: bytes):
         if raw[:2] in (b"P5", b"P6"):
             px = parse_pnm(raw)
             return ("pnm", px) if px is not None else None
-        if raw[:4] == IMAGE_MAGIC and len(raw) >= 16:
-            w, h, c = struct.unpack("<iii", raw[4:16])
-            if w > 0 and h > 0 and c > 0 and len(raw) >= 16 + w * h * c:
-                px = np.frombuffer(
-                    raw, np.uint8, offset=16, count=w * h * c
-                ).reshape(h, w, c)
-                return ("fimg", px)
-            return None
+        if raw[:4] == IMAGE_MAGIC:
+            px = _parse_fimg(raw)
+            return ("fimg", px) if px is not None else None
     except Exception:
         return None
     try:  # compressed formats: only when a real library is present
@@ -691,31 +657,19 @@ def encode_real_images(
     like :func:`encode_fake_images`, but the payload is a genuine
     container format that :func:`decode_image_real` parses with the
     pure-numpy codecs."""
-    src = df.selectExpr(
-        f"{id_col} as media_id",
-        f"{seed_text_col} as _seed",
-        f"cast(({width_expr}) as int) as _w",
-        f"cast(({height_expr}) as int) as _h",
-        f"cast(({fmt_expr}) as string) as _fmt",
+
+    def make(_mid, seed, w, h, fmt):
+        px = np.frombuffer(_seed_bytes(seed, w * h * 3), np.uint8)
+        return (encode_bmp if fmt == "bmp" else encode_ppm)(
+            px.reshape(h, w, 3)
+        )
+
+    return _encode(
+        df, id_col,
+        [seed_text_col, _int(width_expr), _int(height_expr),
+         f"cast(({fmt_expr}) as string)"],
+        make,
     )
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for seed, w, h, fmt in zip(pdf["_seed"], pdf["_w"],
-                                       pdf["_h"], pdf["_fmt"]):
-                px = np.frombuffer(
-                    _cycle_bytes(str(seed).encode("utf-8"), w * h * 3),
-                    np.uint8,
-                ).reshape(h, w, 3)
-                payloads.append(
-                    encode_bmp(px) if fmt == "bmp" else encode_ppm(px)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return src.mapInPandas(enc, "media_id long, payload binary")
 
 
 def encode_real_audio(
@@ -729,27 +683,16 @@ def encode_real_audio(
     seed text's utf-8 bytes cycled — the u8 codec round-trips those
     bytes exactly, so byte-level oracles stay closed-form while a
     genuine WAV container flows through :func:`decode_audio_real`."""
-    src = df.selectExpr(
-        f"{id_col} as media_id",
-        f"{seed_text_col} as _seed",
-        f"cast(({sample_rate_expr}) as int) as _sr",
-        f"cast(({n_samples_expr}) as int) as _n",
+
+    def make(_mid, seed, sr, n):
+        b = np.frombuffer(_seed_bytes(seed, n), np.uint8)
+        return encode_wav((b.astype(np.float64) - 128.0) / 128.0, sr, bits=8)
+
+    return _encode(
+        df, id_col,
+        [seed_text_col, _int(sample_rate_expr), _int(n_samples_expr)],
+        make,
     )
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for seed, sr, n in zip(pdf["_seed"], pdf["_sr"], pdf["_n"]):
-                b = np.frombuffer(
-                    _cycle_bytes(str(seed).encode("utf-8"), n), np.uint8
-                )
-                x = (b.astype(np.float64) - 128.0) / 128.0
-                payloads.append(encode_wav(x, sr, bits=8))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return src.mapInPandas(enc, "media_id long, payload binary")
 
 
 def decode_image_real(df: DataFrame, id_col: str = "media_id",
@@ -757,33 +700,17 @@ def decode_image_real(df: DataFrame, id_col: str = "media_id",
     """Decode REAL image bytes (BMP / PPM / PGM — pure numpy; plus
     anything pillow can open when installed) to the same per-image
     pixel statistics :func:`image_features` emits for FIMG, with the
-    detected format alongside. One mapInPandas, narrow, Arrow-batched;
-    undecodable payloads emit a null-stats row."""
+    detected format alongside."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                got = decode_image_bytes(_payload_bytes(raw))
-                if got is None:
-                    rows.append((mid, None, None, None, None, None, None))
-                    continue
-                fmt, px = got
-                rows.append((
-                    mid, fmt, int(px.shape[1]), int(px.shape[0]),
-                    round(float(px.mean()), 6), int(px.min()),
-                    int(px.max()),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "fmt", "width", "height", "mean_px",
-                         "min_px", "max_px"],
-            )
+    def feats(raw):
+        got = decode_image_bytes(raw)
+        return None if got is None else [(got[0], *_image_stats(got[1]))]
 
-    return df.mapInPandas(
-        feats,
-        f"{id_col} long, fmt string, width int, height int, "
-        "mean_px double, min_px int, max_px int",
+    return _map_payloads(
+        df, feats,
+        "fmt string, width int, height int, mean_px double, min_px int, "
+        "max_px int",
+        id_col, payload_col,
     )
 
 
@@ -795,50 +722,36 @@ def decode_audio_real(df: DataFrame, id_col: str = "media_id",
     the NORMALIZED [-1, 1] signal (the fake path reports raw uint8
     amplitudes; affine map (a-128)/128 relates the two — pinned by the
     round-trip test). Multi-channel clips downmix to mono by mean, so
-    n_samples counts frames."""
+    n_samples counts frames. An empty clip is undecodable."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:  # corrupt/NULL payloads degrade to a null row,
-                    raw = bytes(raw)  # never a task kill (ADVICE r4
-                    got = parse_wav(raw)  # parity with image dispatch)
-                except Exception:
-                    raw, got = b"", None
-                fmt = "wav"
-                if got is None:
-                    try:  # compressed formats need a real library
-                        import io
+    def feats(raw):
+        try:  # a corrupt payload must never kill the batch
+            got, fmt = parse_wav(raw), "wav"
+        except Exception:
+            return None
+        if got is None:
+            try:  # compressed formats need a real library
+                import io
 
-                        import soundfile
+                import soundfile
 
-                        x, sr = soundfile.read(io.BytesIO(raw),
-                                               dtype="float32")
-                        if x.ndim > 1:
-                            x = x.mean(axis=1)
-                        got, fmt = (sr, x), "soundfile"
-                    except Exception:
-                        got = None
-                if got is None or got[1].size == 0:
-                    rows.append((mid, None, None, None, None, None, None))
-                    continue
-                sr, x = got
-                rows.append((
-                    mid, fmt, int(sr), int(x.size),
-                    round(float(x.size) / sr, 6),
-                    round(float(x.mean()), 6), round(float(x.max()), 6),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "fmt", "sample_rate", "n_samples",
-                         "duration_s", "mean_amp", "max_amp"],
-            )
+                x, sr = soundfile.read(io.BytesIO(raw), dtype="float32")
+                if x.ndim > 1:
+                    x = x.mean(axis=1)
+                got, fmt = (sr, x), "soundfile"
+            except Exception:
+                return None
+        sr, x = got
+        if x.size == 0:
+            return None
+        return [(fmt, int(sr), int(x.size), round(float(x.size) / sr, 6),
+                 round(float(x.mean()), 6), round(float(x.max()), 6))]
 
-    return df.mapInPandas(
-        feats,
-        f"{id_col} long, fmt string, sample_rate int, n_samples int, "
-        "duration_s double, mean_amp double, max_amp double",
+    return _map_payloads(
+        df, feats,
+        "fmt string, sample_rate int, n_samples int, duration_s double, "
+        "mean_amp double, max_amp double",
+        id_col, payload_col,
     )
 
 
@@ -856,13 +769,12 @@ def image_phash(df: DataFrame, id_col: str = "media_id",
     duplicate images (re-encodes, small edits) land within a few bits.
     One narrow mapInPandas pass; the hash (8 bytes) is the staged
     artifact — downstream search never touches pixels. Output:
-    ``<id_col>, phash (long)``.
+    ``<id_col>, phash (long)``; an undecodable payload's NULL hash is
+    excluded by :func:`hamming_neardup_pairs`.
 
     Swap the FIMG parse for a real decoder (decode_image_real) and
     nothing else changes — the hash/banding pipeline is codec-agnostic.
     """
-    import numpy as np
-
     n, k = 32, 8
     dct = np.cos(
         np.pi / n * (np.arange(n)[:, None] + 0.5) * np.arange(n)[None, :]
@@ -887,43 +799,20 @@ def image_phash(df: DataFrame, id_col: str = "media_id",
             _ops[(h, w)] = (dct @ pool(h), pool(w).T @ dct.T)
         return _ops[(h, w)]
 
-    def one(payload: bytes):
-        # harden like every sibling decoder: truncated headers,
-        # non-positive dims, or a body/dim mismatch yield a NULL hash
-        # row (hamming_neardup_pairs excludes NULLs), never a
-        # task-killing struct.error/reshape ValueError
-        if len(payload) < 16:
+    def one(raw):
+        px = _parse_fimg(raw)
+        if px is None:
             return None
-        w, h, c = struct.unpack("<iii", payload[4:16])
-        if w <= 0 or h <= 0 or c <= 0 or len(payload) < 16 + w * h * c:
-            return None
-        px = np.frombuffer(payload, dtype=np.uint8, offset=16,
-                           count=w * h * c)
-        img = px.reshape(h, w, c).mean(axis=2)
-        left, right = ops(h, w)
+        img = px.mean(axis=2)
+        left, right = ops(*img.shape)
         coef = left @ img @ right
         block = coef[:k, :k].flatten()[1:]  # drop DC
         bits = block > np.median(block)
         out = int(bits @ bit_w)
         # two's-complement into int64 range
-        return out - (1 << 63) if out >= (1 << 63) else out
+        return [(out - (1 << 63) if out >= (1 << 63) else out,)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame({
-                "_id": pdf["_id"].to_numpy(),
-                "phash": [
-                    one(p) if p is not None and p[:4] == IMAGE_MAGIC else None
-                    for p in pdf["_p"]
-                ],
-            })
-
-    out = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_p")
-    ).mapInPandas(run, "_id long, phash long")
-    return out.withColumnRenamed("_id", id_col)
+    return _map_payloads(df, one, "phash long", id_col, payload_col)
 
 
 def image_neardup_pairs(df: DataFrame, id_col: str = "media_id",
@@ -1020,16 +909,11 @@ def audio_fingerprint(df: DataFrame, id_col: str = "media_id",
     Output: ``<id_col>, afp (long)`` (bit 63 is always 0 — 63 deltas).
     """
 
-    def one(payload: bytes):
-        if len(payload) < 12:
-            # truncated header (magic ok, length short): null fingerprint,
-            # not a batch-killing struct.error — media_metadata guards
-            # the identical case
+    def one(raw):
+        got = _parse_faud(raw)
+        if got is None:
             return None
-        n_samp = struct.unpack("<i", payload[8:12])[0]
-        s = np.frombuffer(payload, dtype=np.uint8, offset=12)
-        if len(s) == 0 or n_samp <= 0:
-            return None
+        s = got[1]
         e = (np.arange(n_frames + 1) * len(s)) // n_frames
         e_hi = np.maximum(e[1:], e[:-1] + 1)
         energy = np.array([
@@ -1040,26 +924,9 @@ def audio_fingerprint(df: DataFrame, id_col: str = "media_id",
         out = 0
         for b in bits:
             out = (out << 1) | int(b)
-        return out  # 63 bits: always within int64 range
+        return [(out,)]  # 63 bits: always within int64 range
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame({
-                "_id": pdf["_id"].to_numpy(),
-                "afp": pd.array([
-                    one(bytes(p))
-                    if p is not None and bytes(p)[:4] == AUDIO_MAGIC
-                    else None
-                    for p in pdf["_p"]
-                ], dtype="Int64"),
-            })
-
-    out = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_p")
-    ).mapInPandas(run, "_id long, afp long")
-    return out.withColumnRenamed("_id", id_col)
+    return _map_payloads(df, one, "afp long", id_col, payload_col)
 
 
 def audio_neardup_pairs(df: DataFrame, id_col: str = "media_id",

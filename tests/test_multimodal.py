@@ -240,9 +240,16 @@ def test_decode_image_real_matches_fake_codec_contract(spark):
     rng = np.random.default_rng(11)
     px = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
     fimg = IMAGE_MAGIC + struct.pack("<iii", 5, 6, 3) + px.tobytes()
+    # malformed FIMG: short body, non-positive dims, cut-short header
+    bad = {
+        5: IMAGE_MAGIC + struct.pack("<iii", 100, 100, 3) + b"xx",
+        6: IMAGE_MAGIC + struct.pack("<iii", 0, 4, 1) + b"x" * 16,
+        7: IMAGE_MAGIC + b"\x01",
+    }
     df = spark.createDataFrame(
         [(1, bytearray(encode_bmp(px))), (2, bytearray(encode_ppm(px))),
-         (3, bytearray(fimg)), (4, bytearray(b"JFIF not really"))],
+         (3, bytearray(fimg)), (4, bytearray(b"JFIF not really"))]
+        + [(i, bytearray(b)) for i, b in bad.items()],
         "media_id long, payload binary",
     )
     got = {r.media_id: r.asDict() for r in decode_image_real(df).collect()}
@@ -254,6 +261,11 @@ def test_decode_image_real_matches_fake_codec_contract(spark):
     assert got[3]["mean_px"] == fake.mean_px
     assert (got[3]["min_px"], got[3]["max_px"]) == (fake.min_px, fake.max_px)
     assert got[4]["fmt"] is None and got[4]["width"] is None
+    # both faces agree on malformed FIMG: the null row, not header dims
+    fakes = {r.media_id: r.asDict() for r in image_features(df).collect()}
+    for i in bad:
+        assert [v for k, v in got[i].items() if k != "media_id"] == [None] * 6
+        assert [v for k, v in fakes[i].items() if k != "media_id"] == [None] * 5
 
 
 def test_decode_audio_real_matches_fake_codec_contract(spark):
@@ -543,7 +555,7 @@ def test_media_ops_emit_null_rows_for_undecodable_payloads(spark):
     visible null rows (or null fingerprints), never silent drops or
     batch-killing struct errors."""
     from flink_examples_spark.operators.multimodal import (
-        AUDIO_MAGIC,
+        audio_features,
         audio_fingerprint,
         image_features,
         image_resize,
@@ -559,6 +571,10 @@ def test_media_ops_emit_null_rows_for_undecodable_payloads(spark):
     feats = {r["media_id"]: r for r in image_features(df).collect()}
     assert set(feats) == {1, 2, 3}
     assert all(feats[i]["mean_px"] is None for i in feats)
+    af = {r["media_id"]: r for r in audio_features(df).collect()}
+    assert set(af) == {1, 2, 3}
+    assert all(af[i]["sample_rate"] is None and af[i]["mean_amp"] is None
+               for i in af)
     rs = {r["media_id"]: r["payload"] for r in image_resize(df, 2, 2).collect()}
     assert set(rs) == {1, 2, 3} and all(v is None for v in rs.values())
     vf = video_frame_sample(df)
@@ -669,6 +685,139 @@ def test_null_payloads_emit_null_rows_everywhere(spark):
     assert video_scene_cuts(df).collect()[0].cut_frame is None
     assert decode_image_real(df).collect()[0].fmt is None
     assert decode_audio_real(df).collect()[0].fmt is None
+
+
+def _fake(magic: bytes, fields, body: bytes = b"") -> bytes:
+    return magic + struct.pack(f"<{len(fields)}i", *fields) + body
+
+
+def _codec_payloads() -> dict:
+    """Per codec: one healthy payload and one payload per malformed case."""
+    import numpy as np
+
+    from flink_examples_spark.operators.multimodal import (
+        AUDIO_MAGIC,
+        encode_wav,
+    )
+
+    wav = encode_wav(np.sin(np.linspace(0, 6.28, 8)) * 0.5, 8000)
+    return {
+        "fimg": {
+            "good": _fake(IMAGE_MAGIC, (8, 8, 1), bytes(range(64))),
+            "wrong_magic": b"JUNKJUNKJUNKJUNKJUNK",
+            "truncated_header": IMAGE_MAGIC + b"\x01",
+            "nonpositive_dims": _fake(IMAGE_MAGIC, (-4, 4, 1), b"x" * 64),
+            "short_body": _fake(IMAGE_MAGIC, (100, 100, 3), b"xx"),
+        },
+        "fvid": {
+            "good": _fake(VIDEO_MAGIC, (2, 2, 2), b"\x0a" * 4 + b"\xc8" * 4),
+            "wrong_magic": b"JUNKJUNKJUNKJUNKJUNK",
+            "truncated_header": VIDEO_MAGIC + b"\x01\x02",
+            "nonpositive_dims": _fake(VIDEO_MAGIC, (0, 2, 3), b"x" * 12),
+            "short_body": _fake(VIDEO_MAGIC, (2, 2, 3), b"xx"),
+        },
+        "faud": {
+            "good": _fake(AUDIO_MAGIC, (8000, 64), bytes(range(10, 74))),
+            "wrong_magic": b"JUNKJUNKJUNKJUNKJUNK",
+            "truncated_header": AUDIO_MAGIC + b"\x01\x02",
+            "nonpositive_dims": _fake(AUDIO_MAGIC, (0, 2), b"ab"),
+            "short_body": _fake(AUDIO_MAGIC, (8000, 64), b"ab"),
+        },
+        "wav": {
+            "good": wav,
+            "wrong_magic": b"JUNKJUNKJUNKJUNKJUNK",
+            "truncated_header": wav[:20],
+            "nonpositive_dims": encode_wav(np.zeros(8), 0),  # 0 Hz
+            "short_body": wav[:44],  # data chunk declares 16 bytes, has 0
+        },
+    }
+
+
+_DECODERS = {
+    # face: (codec it decodes, how to call it)
+    "video_scene_cuts": ("fvid", lambda m, d: m.video_scene_cuts(d)),
+    "video_frame_sample": ("fvid", lambda m, d: m.video_frame_sample(d)),
+    "media_metadata": ("fimg", lambda m, d: m.media_metadata(d)),
+    "image_features": ("fimg", lambda m, d: m.image_features(d)),
+    "image_resize": ("fimg", lambda m, d: m.image_resize(d, 2, 2)),
+    "decode_image_real": ("fimg", lambda m, d: m.decode_image_real(d)),
+    "image_phash": ("fimg", lambda m, d: m.image_phash(d)),
+    "audio_features": ("faud", lambda m, d: m.audio_features(d)),
+    "audio_fingerprint": ("faud", lambda m, d: m.audio_fingerprint(d)),
+    "decode_audio_real": ("wav", lambda m, d: m.decode_audio_real(d)),
+}
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null", "wrong_magic", "truncated_header", "nonpositive_dims",
+     "short_body"],
+)
+@pytest.mark.parametrize("face", sorted(_DECODERS))
+def test_undecodable_payload_takes_the_null_row(spark, face, case):
+    """Every decoder gives an undecodable payload exactly one row: its
+    id with every other column NULL. The healthy payload in the same
+    Arrow batch still decodes, and the job does not fail.
+    media_metadata reads headers only: a readable header is reported
+    as declared, anything else is kind 'unknown'."""
+    from flink_examples_spark.operators import multimodal
+
+    codec, run = _DECODERS[face]
+    payloads = _codec_payloads()[codec]
+    bad = payloads.get(case)
+    df = spark.createDataFrame(
+        [(1, bytearray(payloads["good"])),
+         (2, None if bad is None else bytearray(bad))],
+        "media_id long, payload binary",
+    ).coalesce(1)  # one partition: the bad row shares the good row's batch
+    by_id = {}
+    for r in run(multimodal, df).collect():
+        d = r.asDict()
+        by_id.setdefault(d.pop("media_id"), []).append(d)
+    assert set(by_id) == {1, 2}
+    (row,) = by_id[2]
+    assert any(v is not None for d in by_id[1] for v in d.values())
+    if face != "media_metadata":
+        assert all(v is None for v in row.values()), row
+    elif case in ("nonpositive_dims", "short_body"):
+        w, h, c = struct.unpack("<iii", bad[4:16])
+        assert row == {"kind": "image", "width": w, "height": h,
+                       "channels": c, "sample_rate": None,
+                       "n_frames": None, "n_bytes": len(bad)}
+    else:
+        assert row == {"kind": "unknown", "width": None, "height": None,
+                       "channels": None, "sample_rate": None,
+                       "n_frames": None, "n_bytes": len(bad or b"")}
+
+
+def test_media_hashes_stay_exact_beside_a_null_row(spark):
+    """The 64-bit hashes are too wide for float64. A NULL hash in the
+    same Arrow batch must not round the others (pandas turns an int
+    column holding None into float64 unless it is built nullable)."""
+    import numpy as np
+
+    from flink_examples_spark.operators.multimodal import (
+        AUDIO_MAGIC,
+        audio_fingerprint,
+        image_phash,
+    )
+
+    rng = np.random.default_rng(3)
+    cases = [
+        (image_phash, "phash", _fake(IMAGE_MAGIC, (16, 16, 1), rng.integers(
+            0, 256, 256, dtype=np.uint8).tobytes())),
+        (audio_fingerprint, "afp", _fake(AUDIO_MAGIC, (8000, 256), rng.integers(
+            0, 256, 256, dtype=np.uint8).tobytes())),
+    ]
+    schema = "media_id long, payload binary"
+    for op, col, payload in cases:
+        alone = op(spark.createDataFrame(
+            [(1, bytearray(payload))], schema)).collect()[0][col]
+        assert float(alone) != alone  # float64 would change this value
+        mixed = op(spark.createDataFrame(
+            [(1, bytearray(payload)), (2, None)], schema).coalesce(1))
+        assert {r.media_id: r[col] for r in mixed.collect()} == \
+            {1: alone, 2: None}, col
 
 
 def test_sharded_pack_manifest_per_shard_invariants(spark, sf_dir):
