@@ -3,10 +3,20 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is timed end-to-end (plan + execute + materialize counts via a
-cheap action). A warm-up pass on sf-independent metadata (session boot,
-JIT) is excluded from per-query timings by timing only after the session
-is live.
+Each query is timed end-to-end: a rep's timer covers exactly
+`spark_fn` + `collect()` (`run_query`, the one place a registry query
+is timed and counted). A warm-up pass on sf-independent metadata
+(session boot, JIT) is excluded from per-query timings by timing only
+after the session is live.
+
+Counts: every rep of a query, stall retries included, runs under one
+job group. After the timed reps, `counts` gets per query `jobs`,
+`stages` and `tasks` per rep (stages that ran and completed tasks, the
+rule of perfbench's `Engine.group_counts`), plus the executed plan's
+shuffle `exchanges` and `python_nodes` (`flink_examples_spark.plans`).
+None of it is read inside a timer. `SPARK_GRAFT_BENCH_ONLY=a,b` runs a
+named subset and writes no artifact; `plans.formatted_plan(df)` gives
+a query's plan text on demand.
 
 Depth: every query runs $SPARK_GRAFT_BENCH_REPS times (default 3);
 `queries` reports the per-query MIN (the stable "how fast can this plan
@@ -540,6 +550,114 @@ def _persist_full_result(
     return session_path
 
 
+def _group_counts(sc, group: str) -> dict[str, int]:
+    """Jobs, stages that ran and completed tasks of every job submitted
+    under ``group`` — the rule perfbench's ``Engine.group_counts`` uses,
+    so these figures mean what its ``pass_tasks`` means."""
+    tracker = sc.statusTracker()
+    out = {"jobs": 0, "stages": 0, "tasks": 0}
+    for jid in tracker.getJobIdsForGroup(group):
+        out["jobs"] += 1
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info else []:
+            si = tracker.getStageInfo(sid)
+            if si is None or si.numCompletedTasks + si.numFailedTasks == 0:
+                continue
+            out["stages"] += 1
+            out["tasks"] += si.numCompletedTasks
+    return out
+
+
+def run_query(
+    spark,
+    name: str,
+    q,
+    sf_dir: str,
+    reps: int,
+    prev_steady: float | None = None,
+    max_stall_retries: int = 0,
+) -> dict:
+    """Time registry query ``q`` and count what it ran.
+
+    Each rep's timer covers exactly ``q.spark_fn`` + ``collect()``.
+    Every rep, stall retries included, runs under the one job group
+    ``bench:<name>``; after the reps the record gains jobs, stages and
+    tasks per rep (from that group), the plan's shuffle exchanges and
+    Python nodes (``plans.inspect``, read off the last rep's executed
+    plan) and the analyzed-plan fingerprint. Returns
+    ``{"runs", "stall_retries", "plan", "counts"}``."""
+    from flink_examples_spark.plans import exchange_count, python_eval_nodes
+
+    sc = spark.sparkContext
+    group = f"bench:{name}"
+    ts: list[float] = []
+    retries = 0
+    df = None
+
+    def one_rep() -> None:
+        nonlocal df
+        t0 = time.perf_counter()
+        df = q.spark_fn(spark, sf_dir)
+        # force full materialization (not just count pushdown)
+        n = df.collect()
+        ts.append(time.perf_counter() - t0)
+        del n
+
+    sc.setJobGroup(group, name)
+    try:
+        # reps are CONSECUTIVE per query, not interleaved across the
+        # registry: interleaving put ~160 other queries between a
+        # query's reps, evicting its generated code from the JVM code
+        # cache so every rep re-paid whole-stage compilation — min-of-3
+        # then measured compile time, not the plan (docs/PERF_NOTES_r5.md).
+        for _ in range(reps):
+            one_rep()
+        # stall self-heal (VERDICT r6 #3): this box produces rare
+        # multi-second one-off stalls (×14.9 observed between idle
+        # sessions) that can swallow EVERY rep of one query. When the
+        # steady min lands >=5x the previous round's committed steady
+        # — far outside the ±20% noise band and the 1.5x mover bar —
+        # re-measure up to ``max_stall_retries`` extra reps and let
+        # min-of-all paper over the stall; the artifact records how
+        # often this fired so stalls stay visible, not hidden.
+        while (
+            prev_steady
+            and len(ts) > 1
+            and min(ts[1:]) > 5 * prev_steady
+            and retries < max_stall_retries
+        ):
+            retries += 1
+            one_rep()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    counts = {
+        k: round(v / len(ts), 1) for k, v in _group_counts(sc, group).items()
+    }
+    counts["exchanges"] = exchange_count(df)
+    counts["python_nodes"] = python_eval_nodes(df)
+    rec = {
+        "runs": ts,
+        "stall_retries": retries,
+        # ANALYZED-plan fingerprint (see _plan_fingerprint for why
+        # analyzed, NOT optimized): fold_bench excludes minima measured
+        # on plans that no longer exist
+        "plan": _plan_fingerprint(df),
+        "counts": counts,
+    }
+    # drop RDD blocks the query pinned (localCheckpoint in the
+    # iterative/range-partitioned operators): left in place they
+    # accumulate across the ~180-query session and push LATER queries'
+    # reps into memory pressure — measured 3x on dedup_levenshtein_verify
+    # in-session vs solo (r6). Outside the timer: eviction cost is
+    # session hygiene, not the plan.
+    try:
+        for jrdd in sc._jsc.getPersistentRDDs().values():
+            jrdd.unpersist()
+    except Exception:
+        pass  # py4j surface moved: stale blocks only skew, not break
+    return rec
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -587,75 +705,21 @@ def main() -> None:
         names = [n for n in names if n in wanted]
     reg = registry()
     prev = _previous_round_timings(sf)
-    runs: dict[str, list[float]] = {}
-    stall_retries: dict[str, int] = {}
     max_stall_retries = int(os.environ.get("SPARK_GRAFT_STALL_RETRIES", "2"))
-    # reps are CONSECUTIVE per query (inner loop), not interleaved
-    # across the registry: interleaving put ~160 other queries between
-    # a query's reps, evicting its generated code from the JVM code
-    # cache so every rep re-paid whole-stage compilation — min-of-3
-    # then measured compile time, not the plan, with a bias that GREW
-    # as the registry grew (r4→r5 'movers' on codegen-heavy queries
-    # were exactly this; docs/PERF_NOTES_r5.md). Consecutive reps
-    # measure the docstring's claim: how fast the plan goes.
-    plan_fps: dict[str, str] = {}
-    for name in names:
-        q = reg[name]
-        ts: list[float] = []
-        last_df = None
-
-        def one_rep() -> None:
-            nonlocal last_df
-            t0 = time.perf_counter()
-            df = q.spark_fn(spark, sf_dir)
-            # force full materialization (not just count pushdown)
-            n = df.collect()
-            ts.append(time.perf_counter() - t0)
-            last_df = df
-            del n
-
-        for _ in range(reps):
-            one_rep()
-        # stall self-heal (VERDICT r6 #3): this box produces rare
-        # multi-second one-off stalls (×14.9 observed between idle
-        # sessions) that can swallow EVERY rep of one query. When the
-        # steady min lands >=5x the previous round's committed steady
-        # — far outside the ±20% noise band and the 1.5x mover bar —
-        # re-measure up to $SPARK_GRAFT_STALL_RETRIES extra reps and
-        # let min-of-all paper over the stall; the artifact records
-        # how often this fired so stalls stay visible, not hidden.
-        prev_t = prev.get(name)
-        while (
-            prev_t
-            and len(ts) > 1
-            and min(ts[1:]) > 5 * prev_t
-            and stall_retries.get(name, 0) < max_stall_retries
-        ):
-            stall_retries[name] = stall_retries.get(name, 0) + 1
-            one_rep()
-        runs[name] = ts
-        # ANALYZED-plan fingerprint from the last rep's DataFrame (see
-        # _plan_fingerprint for why analyzed, NOT optimized) —
-        # fold_bench uses these to exclude minima measured on plans
-        # that no longer exist (outside the timers; the analyzed plan
-        # is cached in QueryExecution, so this is a toString + sha1,
-        # no planning work)
-        fp = _plan_fingerprint(last_df)
-        if fp:
-            plan_fps[name] = fp
-        # drop RDD blocks the query pinned (localCheckpoint in the
-        # iterative/range-partitioned operators): left in place they
-        # accumulate across the ~180-query session and push LATER
-        # queries' reps into memory pressure — measured 3x on
-        # dedup_levenshtein_verify in-session vs solo (r6). Outside
-        # the timer: eviction cost is session hygiene, not the plan.
-        try:
-            for jrdd in (
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                jrdd.unpersist()
-        except Exception:
-            pass  # py4j surface moved: stale blocks only skew, not break
+    records = {
+        name: run_query(spark, name, reg[name], sf_dir, reps,
+                        prev.get(name), max_stall_retries)
+        for name in names
+    }
+    runs = {name: rec["runs"] for name, rec in records.items()}
+    stall_retries = {
+        name: rec["stall_retries"] for name, rec in records.items()
+        if rec["stall_retries"]
+    }
+    plan_fps = {
+        name: rec["plan"] for name, rec in records.items() if rec["plan"]
+    }
+    counts = {name: rec["counts"] for name, rec in records.items()}
 
     timings = {name: round(min(ts), 3) for name, ts in runs.items()}
     # rep0 = plan analysis + whole-stage codegen compile + execute in a
@@ -708,6 +772,7 @@ def main() -> None:
         # hex fingerprints can never be misread as timings by the tail
         # recovery parser
         "plans": plan_fps,
+        "counts": counts,
         "compile": compile_cost,
         "steady": steady,
         # queries LAST: a front-truncated tail still ends with timings

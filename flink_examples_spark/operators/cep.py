@@ -347,19 +347,6 @@ def _match_could_extend(
     return i + 1 < len(pattern)
 
 
-def _greedy_partial(
-    records: list[dict],
-    pattern: Sequence[Pat],
-    start: int,
-    within_check: Callable[[int, int], bool] | None,
-) -> list[tuple[str, int]]:
-    """The longest greedy live partial from ``start`` — the first
-    branch of :func:`_live_partials` (kept for callers that only need
-    the representative partial)."""
-    live = _live_partials(records, pattern, start, within_check, cap=1)
-    return live[0] if live else []
-
-
 def match_recognize(
     df: DataFrame,
     partition_by: Sequence[str],

@@ -1552,7 +1552,7 @@ def jaccard_prefix_filter_pairs(
     union``), so no float boundary can misclassify a pair.
 
     Plan shape (r14 — the r13-start shape re-measured and rebuilt;
-    before/after in plans/r14/):
+    before/after dumps in plans/r14/ at commit 3b013b4):
 
     - The per-doc shingle ARRAY table ``(doc_id, arr, n_sh)`` is built
       once and pinned with a lazy ``localCheckpoint`` — it feeds the

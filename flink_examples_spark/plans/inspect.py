@@ -51,11 +51,25 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
+_EXCHANGE_NODE = re.compile(r"^[\s:+\-*]*Exchange \(\d+\)")
+
+
 def exchange_count(df: DataFrame) -> int:
     """Shuffle exchanges in the plan (excluding broadcast exchanges) —
-    the number every operator fights to minimize."""
-    plan = formatted_plan(df)
-    return len(re.findall(r"\(\d+\) Exchange\b", plan))
+    the number every operator fights to minimize.
+
+    Counted on the plan tree, once per node. Once AQE has executed the
+    plan, the tree prints its final plan and, below an
+    ``== Initial Plan ==`` marker, the plan it replaced; only the final
+    one ran, so the marker's indented branch is skipped."""
+    n, skip_below = 0, None
+    for line in formatted_plan(df).splitlines():
+        indent = len(line) - len(line.lstrip(" :|"))
+        if skip_below is not None and line.strip() and indent > skip_below:
+            continue
+        skip_below = indent if "== Initial Plan ==" in line else None
+        n += bool(_EXCHANGE_NODE.match(line))
+    return n
 
 
 def python_eval_nodes(df: DataFrame) -> list[str]:

@@ -351,7 +351,7 @@ def test_all_matches_plus_no_duplicate_and_partial_keeps_repetition():
     from flink_examples_spark.operators.cep import (
         Pat,
         _find_matches,
-        _greedy_partial,
+        _live_partials,
     )
 
     records = [{"t": "A"}, {"t": "B"}, {"t": "B"}, {"t": "C"}]
@@ -363,7 +363,7 @@ def test_all_matches_plus_no_duplicate_and_partial_keeps_repetition():
     out: list = []
     _find_matches(records, pat, 0, None, True, out)
     assert out == [[("A", 0), ("B", 1), ("B", 2), ("C", 3)]]
-    assert _greedy_partial(records[:3], pat, 0, None) == [
+    assert _live_partials(records[:3], pat, 0, None, cap=1)[0] == [
         ("A", 0), ("B", 1), ("B", 2),
     ]
 

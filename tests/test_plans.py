@@ -66,6 +66,18 @@ def test_aggregation_is_partial_then_final(spark, sf_dir):
     assert exchange_count(agg) == 1
 
 
+def test_exchange_count_reads_the_same_after_execution(spark):
+    """An executed AQE plan prints its final plan and the initial plan
+    it replaced; only the plan that ran counts, once."""
+    left = spark.range(1000).selectExpr("id % 10 AS k", "id AS v")
+    right = spark.range(100).selectExpr("id % 10 AS k", "id AS w")
+    df = left.join(right.hint("merge"), "k")
+    assert exchange_count(df) == 2
+    df.collect()
+    assert "== Initial Plan ==" in formatted_plan(df)
+    assert exchange_count(df) == 2
+
+
 def test_relational_core_is_jvm_only_and_vectorized(spark, sf_dir):
     """The pricing-summary pipeline (scan→filter→project→agg) must stay
     JVM-side: columnar-batched scan, zero Python eval nodes. (AQE hides
