@@ -73,51 +73,6 @@ def _latest_round(pattern: str) -> tuple[int, str | None]:
     return best_n, best
 
 
-def _timings_from_tail(tail: str) -> dict[str, float]:
-    """Recover per-query seconds from a FRONT-truncated stdout tail.
-
-    Three recoverable shapes:
-    - the `"queries": {...}` anchor survived the cut → parse pairs after
-      it (values are timings by construction);
-    - new format (compact last line carries `"shape": "compact"`, full
-      line puts `queries` LAST) → a tail cut mid-dict is mid-QUERIES, so
-      anchor-free simple pairs on the first line are timings;
-    - any format → the `movers` dict's `"now"` values are timings for
-      the handful of flagged queries.
-
-    Old-format tails cut mid-`spread` (ratios, not seconds) yield only
-    the movers subset — never misread spread ratios as timings.
-    """
-    out: dict[str, float] = {}
-    # movers "now" values are always safe to take
-    for m in re.finditer(
-        r'"([A-Za-z0-9_]+)"\s*:\s*\{\s*"prev"\s*:\s*[0-9.]+\s*,'
-        r'\s*"now"\s*:\s*([0-9.]+)', tail
-    ):
-        out[m.group(1)] = float(m.group(2))
-    anchor = tail.find('"queries"')
-    if anchor >= 0:
-        seg = tail[anchor:]
-        seg = seg[: seg.find("}") + 1 if "}" in seg else len(seg)]
-        for m in re.finditer(r'"([A-Za-z0-9_]+)"\s*:\s*([0-9.]+)', seg):
-            if m.group(1) != "queries":
-                out[m.group(1)] = float(m.group(2))
-    elif '"shape": "compact"' in tail:
-        # new format: first line's surviving fragment is mid-queries
-        first = tail.split("\n", 1)[0]
-        stop = first.find('"spread"')
-        if stop < 0:
-            stop = first.find('"movers"')
-        seg = first[: stop if stop >= 0 else len(first)]
-        # drop a leading half-cut pair (its name may be truncated)
-        comma = seg.find(",")
-        if comma >= 0 and not seg.lstrip().startswith('"'):
-            seg = seg[comma + 1:]
-        for m in re.finditer(r'"([A-Za-z0-9_]+)"\s*:\s*([0-9.]+)(?=\s*[,}])', seg):
-            out[m.group(1)] = float(m.group(2))
-    return out
-
-
 def _same_sf(doc: dict, sf: str | None) -> bool:
     """True when the artifact's scale factor matches this run's (or no
     sf to compare) — cross-sf movers are meaningless."""
@@ -135,10 +90,9 @@ def _previous_round_timings(
     """Per-query seconds from the previous round's committed artifacts.
 
     Prefers this script's own full BENCH_local_r{N}.json (complete, never
-    truncated); falls back to the driver file — its `parsed` dict when
-    non-null, else whatever the truncated `tail` yields. Artifacts from a
-    different scale factor are skipped (movers must compare like with
-    like).
+    truncated); falls back to the driver file's `parsed` dict. Artifacts
+    from a different scale factor are skipped (movers must compare like
+    with like).
 
     ``baseline_round`` pins WHICH round counts as previous — fold_bench
     passes the folded round minus one. The default infers it from the
@@ -185,7 +139,7 @@ def _previous_round_timings(
         return {k: float(v) for k, v in parsed["queries"].items()}
     if isinstance(doc.get("queries"), dict):  # bare self-shaped artifact
         return {k: float(v) for k, v in doc["queries"].items()}
-    return _timings_from_tail(doc.get("tail", "") or "")
+    return {}
 
 
 def _compute_movers(

@@ -35,7 +35,6 @@ def ngram_decontaminate(
     id_col: str,
     text_col: str,
     n: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-train-document contamination report against an eval corpus.
 
@@ -49,11 +48,8 @@ def ngram_decontaminate(
     and the registry use smaller ``n`` so the synthetic small-vocab
     corpus produces non-trivial hits.
 
-    ``broadcast_eval=True`` is the scale path: eval benchmarks are
-    small by construction, so the join is a broadcast-hash semi-join
-    and the 100 TB train side is never shuffled. Set False only if the
-    "eval" side is itself corpus-sized (then it's a shingle-keyed
-    shuffle join, same shape as dedup's inverted index).
+    Eval benchmarks are small by construction, so the eval shingle set
+    is broadcast and the 100 TB train side is never shuffled by shingle.
     """
     # No repartition here: the operator honors its zero-train-shuffle
     # contract and leaves parallelism to the caller's scan. Small
@@ -61,10 +57,9 @@ def ngram_decontaminate(
     # CPU-bound shingling) should be fanned out AT THE CALL SITE
     # (queries._fan_out precedent) where the input size is known.
     sh_train = shingles(train, id_col, text_col, n)
-    sh_eval = shingles(eval_df, id_col, text_col, n) \
-        .select("shingle").distinct()
-    if broadcast_eval:
-        sh_eval = F.broadcast(sh_eval)
+    sh_eval = F.broadcast(
+        shingles(eval_df, id_col, text_col, n).select("shingle").distinct()
+    )
     # One pass: a left broadcast join marks each train shingle as a hit
     # or not, and a single doc_id aggregation counts both totals — the
     # train side is scanned once and shuffled once (by doc_id), never

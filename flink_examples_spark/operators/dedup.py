@@ -127,7 +127,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.1,
     max_shingle_freq: int | None = None,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs above ``threshold``.
 
@@ -139,11 +138,10 @@ def ngram_jaccard_pairs(
     The shingle subtree feeds four consumers (hot filter, sizes, both
     self-join sides) uncached: measured at sf0.1 recompute beats cache
     (3.3 s vs 4.1 s warm — cache write + pipeline break costs more than
-    the re-scan saves, and ReuseExchange dedupes the self-join sides);
-    at corpus scale stage the index yourself and pass ``shingles_df``.
+    the re-scan saves, and ReuseExchange dedupes the self-join sides).
     """
     sizes, inter = _capped_shingle_intersections(
-        df, id_col, text_col, n, max_shingle_freq, shingles_df
+        df, id_col, text_col, n, max_shingle_freq
     )
     return _jaccard_above(inter, sizes, threshold)
 
@@ -154,7 +152,6 @@ def _capped_shingle_intersections(
     text_col: str,
     n: int,
     max_shingle_freq: int | None,
-    shingles_df: DataFrame | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared head of the exact inverted-index near-dup family: the
     (optionally frequency-capped) shingle index reduced to per-doc
@@ -175,8 +172,7 @@ def _capped_shingle_intersections(
     plan change is not kept: it would lock the committed fold to the
     new plan's shallower minima and fabricate movers. The r13
     recompute-beats-cache note stands for this head."""
-    sh = shingles_df if shingles_df is not None \
-        else shingles(df, id_col, text_col, n)
+    sh = shingles(df, id_col, text_col, n)
     if max_shingle_freq is not None:
         hot = (
             sh.groupBy("shingle")
@@ -237,7 +233,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.6,
     max_shingle_freq: int | None = None,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup: ordered pairs where doc_a's n-gram set is
     mostly contained in doc_b's — containment C(a,b) = |S(a)∩S(b)| /
@@ -260,7 +255,7 @@ def ngram_containment_pairs(
     ``doc_b`` (container), ``n_common, n_a, containment``. Exact
     integer arithmetic, bit-identical to the SQL oracle."""
     sizes, inter = _capped_shingle_intersections(
-        df, id_col, text_col, n, max_shingle_freq, shingles_df
+        df, id_col, text_col, n, max_shingle_freq
     )
     both = inter.unionByName(
         inter.select(
@@ -282,35 +277,6 @@ def ngram_containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 8,
-    n: int = 3,
-    shingles_df: DataFrame | None = None,
-) -> DataFrame:
-    """Per-doc MinHash signature: ``(doc_id, i, minhash)`` for i in [0,k).
-
-    hash_i(shingle) = hash60(shingle || '#i') — salted md5, deterministic
-    across engines. One explode (k per shingle) + one groupBy(doc, i):
-    linear in corpus size, map-side combinable. ``shingles_df``: pass a
-    precomputed (ideally persisted) shingle index when a pipeline uses
-    it more than once — tokenizing 100 TB twice is the avoidable cost.
-    """
-    sh = shingles_df if shingles_df is not None \
-        else shingles(df, id_col, text_col, n)
-    idx = F.explode(F.array(*[F.lit(i) for i in range(num_hashes)])).alias("i")
-    return (
-        sh.select("doc_id", "shingle", idx)
-        .withColumn(
-            "h", hash60(F.concat(F.col("shingle"), F.lit("#"), F.col("i")))
-        )
-        .groupBy("doc_id", "i")
-        .agg(F.min("h").alias("minhash"))
-    )
-
-
 def minhash_band_keys(
     df: DataFrame,
     id_col: str,
@@ -318,7 +284,6 @@ def minhash_band_keys(
     num_hashes: int = 8,
     band_size: int = 2,
     n: int = 3,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc LSH band keys: ``(doc_id, band, band_key)``.
 
@@ -332,75 +297,51 @@ def minhash_band_keys(
     incremental delta-vs-corpus path (``incremental_lsh_pairs``) build
     on it.
 
-    Two formulations with bit-identical output:
-
-    - default (``shingles_df=None``): each doc's k minhashes are
-      ``array_min(transform(sh, s -> hash60(s#i)))`` over the per-row
-      shingle ARRAY — pure codegen, ZERO shuffle (the old
-      explode+groupBy formulation shuffled |shingles|·k rows per
-      corpus pass), and streaming-safe (no aggregation state), which
-      is what lets the incremental delta path run as a stream;
-    - ``shingles_df`` given: the exploded+staged shingle index is
-      reused via the aggregate path, for pipelines that already pay
-      for (and persist) that index across several consumers.
+    Each doc's k minhashes are ``array_min(transform(sh, s ->
+    hash60(s#i)))`` over the per-row shingle ARRAY
+    (``shingle_arrays``): pure codegen, ZERO shuffle, and
+    streaming-safe (no aggregation state), which is what lets the
+    incremental delta path run as a stream. hash_i(shingle) =
+    hash60(shingle || '#i') — salted md5, deterministic across engines.
     """
     if num_hashes % band_size:
         raise ValueError(
             f"num_hashes={num_hashes} must divide into whole bands of "
-            f"band_size={band_size} — a partial band would hash "
-            f"differently per formulation"
+            f"band_size={band_size}"
         )
-    if shingles_df is None:
-        arr = shingle_arrays(df, id_col, text_col, n)
+    arr = shingle_arrays(df, id_col, text_col, n)
 
-        def _minhash(i: int):
-            # one-arg lambda only: F.transform treats a two-parameter
-            # callable as (element, index) and would pass the array
-            # index into the second slot
-            return F.array_min(
-                F.transform(
-                    F.col("sh"), lambda s: hash60(F.concat(s, F.lit(f"#{i}")))
+    def _minhash(i: int):
+        # one-arg lambda only: F.transform treats a two-parameter
+        # callable as (element, index) and would pass the array
+        # index into the second slot
+        return F.array_min(
+            F.transform(
+                F.col("sh"), lambda s: hash60(F.concat(s, F.lit(f"#{i}")))
+            )
+        )
+
+    mh = [_minhash(i).alias(f"m{i}") for i in range(num_hashes)]
+    sig_row = arr.select("doc_id", *mh)
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(
+                    "_",
+                    *[
+                        F.col(f"m{b * band_size + j}").cast("string")
+                        for j in range(band_size)
+                    ],
                 )
-            )
-
-        mh = [_minhash(i).alias(f"m{i}") for i in range(num_hashes)]
-        sig_row = arr.select("doc_id", *mh)
-        bands = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"m{b * band_size + j}").cast("string")
-                            for j in range(band_size)
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(num_hashes // band_size)
-        ])
-        return sig_row.select(
-            "doc_id", F.explode(bands).alias("bk")
-        ).select("doc_id", F.col("bk.band").alias("band"),
-                 F.col("bk.band_key").alias("band_key"))
-
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, n, shingles_df)
-    sig = sig.withColumn("band", (F.col("i") / band_size).cast("int"))
-    # Per (doc, band): fold the band's minhashes (in i-order) into one key.
-    band_cols = [
-        F.min(F.when(F.col("i") % band_size == j, F.col("minhash"))).alias(f"v{j}")
-        for j in range(band_size)
-    ]
-    return (
-        sig.groupBy("doc_id", "band")
-        .agg(*band_cols)
-        .withColumn(
-            "band_key",
-            F.md5(F.concat_ws("_", *[F.col(f"v{j}").cast("string") for j in range(band_size)])),
+            ).alias("band_key"),
         )
-        .select("doc_id", "band", "band_key")
-    )
+        for b in range(num_hashes // band_size)
+    ])
+    return sig_row.select(
+        "doc_id", F.explode(bands).alias("bk")
+    ).select("doc_id", F.col("bk.band").alias("band"),
+             F.col("bk.band_key").alias("band_key"))
 
 
 def minhash_lsh_pairs(
@@ -410,7 +351,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     band_size: int = 2,
     n: int = 3,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH candidate near-dup pairs (the 100 TB dedup path).
 
@@ -431,7 +371,7 @@ def minhash_lsh_pairs(
     band_size shifts the S-curve left).
     """
     return _band_pairs(minhash_band_keys(
-        df, id_col, text_col, num_hashes, band_size, n, shingles_df
+        df, id_col, text_col, num_hashes, band_size, n
     ))
 
 
@@ -461,7 +401,6 @@ def incremental_lsh_pairs(
     num_hashes: int = 8,
     band_size: int = 2,
     n: int = 3,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Daily-increment dedup: candidate pairs for a NEW batch of
     documents against an existing corpus, without recomputing or
@@ -484,18 +423,16 @@ def incremental_lsh_pairs(
     delta_bands = minhash_band_keys(
         delta, id_col, text_col, num_hashes, band_size, n
     )
-    if broadcast_delta:
-        # the delta-is-small contract also means its band index is
-        # cheap to MATERIALIZE once: both consumers (the broadcast
-        # cross join and the within self-join's two sides) would
-        # otherwise re-run the shingle -> minhash pipeline per use —
-        # three delta scans instead of one
-        delta_bands = delta_bands.localCheckpoint(eager=True)
-    db = F.broadcast(delta_bands) if broadcast_delta else delta_bands
+    # the delta-is-small contract also means its band index is cheap
+    # to MATERIALIZE once: both consumers (the broadcast cross join and
+    # the within self-join's two sides) would otherwise re-run the
+    # shingle -> minhash pipeline per use — three delta scans instead
+    # of one
+    delta_bands = delta_bands.localCheckpoint(eager=True)
     cross = (
         corpus_bands.alias("c")
         .join(
-            db.alias("d"),
+            F.broadcast(delta_bands).alias("d"),
             (F.col("c.band") == F.col("d.band"))
             & (F.col("c.band_key") == F.col("d.band_key"))
             # a doc id present on BOTH sides (re-ingestion, overlapping

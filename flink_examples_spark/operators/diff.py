@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
 from flink_examples_spark.functions.text import fingerprint_md5
+from flink_examples_spark.sources.readers import literal_partitions
 
 
 def is_unable_to_infer_schema(e: Exception) -> bool:
@@ -99,7 +100,6 @@ def merge_apply(
     new: DataFrame,
     diff: DataFrame,
     id_col: str,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Apply a :func:`snapshot_diff` verdict to corpus ``old``,
     producing the merged corpus (algebraically ``new`` restricted to
@@ -111,10 +111,8 @@ def merge_apply(
 
     100 TB shape: the corpus side streams through a broadcast anti-join
     — the unchanged bodies (the overwhelming majority of a daily merge)
-    are NEVER shuffled; only the delta-sized id sets move. With
-    ``broadcast_delta=False`` both joins fall back to shuffled
-    hash joins for the rare full-rewrite delta that outgrows the
-    broadcast threshold. Composed with a partitioned layout
+    are NEVER shuffled; only the delta-sized id sets move. Composed
+    with a partitioned layout
     (sources.write_partitioned_table), only partitions containing a
     delta id need rewriting — the Delta-Lake/Iceberg MERGE shape,
     expressed as plain declarative joins.
@@ -128,11 +126,11 @@ def merge_apply(
     # the final AQE plan): each snapshot is scanned and shuffled ONCE
     # for both legs — the dominant cost at corpus scale — and only the
     # delta-sized merge-join + broadcast build runs per leg.
-    delta = diff.filter(F.col("verdict") != "unchanged").select(
-        F.col(id_col).alias("_m_id"), F.col("verdict").alias("_m_verdict")
+    delta = F.broadcast(
+        diff.filter(F.col("verdict") != "unchanged").select(
+            F.col(id_col).alias("_m_id"), F.col("verdict").alias("_m_verdict")
+        )
     )
-    if broadcast_delta:
-        delta = F.broadcast(delta)
     kept = old.join(
         delta,
         (F.col(id_col) == F.col("_m_id"))
@@ -155,7 +153,6 @@ def merge_apply_partitioned(
     delta: DataFrame,
     id_col: str,
     partition_col: str,
-    fmt: str = "parquet",
 ) -> list:
     """Partition-scoped MERGE into a hive-partitioned corpus table:
     apply ``delta`` (columns ``<id_col>, <partition_col>, verdict`` —
@@ -183,10 +180,9 @@ def merge_apply_partitioned(
     read-prune + broadcast-merge head is identical.
 
     Contracts enforced loudly, never merged wrong: the partition column
-    must be STRING-typed in ``new``/``delta`` (the hive read runs with
-    partitionColumnTypeInference off — the compact_partitioned_table
-    identity pattern — so stored values round-trip as the literal
-    directory strings; shard=01 stays '01', never re-types to int 1 and
+    must be STRING-typed in ``new``/``delta`` (the hive read runs inside
+    ``sources.readers.literal_partitions``, so stored values round-trip
+    as the literal directory strings; shard=01 stays '01', never re-types to int 1 and
     silently forks a shard=1 directory), and partition values must be
     non-NULL (``isin`` would silently match nothing for NULL — reject
     it; assign a sentinel upstream, the operators/sampling.py
@@ -219,17 +215,10 @@ def merge_apply_partitioned(
         )
     if not affected:
         return []
-    # Partition values must round-trip as literal directory strings
-    # (see docstring); scope the conf change and restore it.
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(infer_key)
-    spark.conf.set(infer_key, "false")
-    try:
+    with literal_partitions(spark):
         try:
-            old = (
-                spark.read.format(fmt)
-                .load(table_path)
-                .filter(F.col(partition_col).isin(affected))
+            old = spark.read.parquet(table_path).filter(
+                F.col(partition_col).isin(affected)
             )
         except AnalysisException as e:  # empty table: all partitions removed
             if not is_unable_to_infer_schema(e):
@@ -243,13 +232,10 @@ def merge_apply_partitioned(
         ).localCheckpoint()
         (
             merged.write.mode("overwrite")
-            .format(fmt)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
-            .save(table_path)
+            .parquet(table_path)
         )
-    finally:
-        spark.conf.set(infer_key, prev)
     # Dynamic overwrite replaces only partitions it writes rows into —
     # a partition whose documents were ALL removed writes nothing and
     # its stale directory would survive. Drop those explicitly (local

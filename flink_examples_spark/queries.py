@@ -2676,13 +2676,12 @@ def dedup_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles(_fan_out(spark, docs), "doc_id", "text", n=3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # Band keys take the zero-shuffle ARRAY formulation (shingles_df
-    # omitted) rather than reading the shared index: the aggregate
-    # path explodes k=8 hash rows per shingle through a shuffle, and
-    # re-tokenizing in codegen beat that shuffle x1.27 at sf0.1 (r13
-    # A/B 2.86s -> 2.24s; the two formulations are bit-identical by
-    # the minhash_band_keys contract). The persisted index still
-    # serves both verify-side consumers.
+    # Band keys re-tokenize in codegen (minhash_band_keys' zero-shuffle
+    # array path) rather than reading the shared index: an aggregate
+    # over the index explodes k=8 hash rows per shingle through a
+    # shuffle, and the array path beat it x1.27 at sf0.1 (r13 A/B
+    # 2.86s -> 2.24s). The persisted index serves both verify-side
+    # consumers.
     cand = minhash_lsh_pairs(
         _fan_out(spark, docs), "doc_id", "text", num_hashes=8, band_size=2
     )

@@ -8,7 +8,8 @@ and prunes columns into the file source (check ``PushedFilters`` /
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -81,7 +82,6 @@ def write_bucketed_table(
     bucket_cols: Sequence[str],
     n_buckets: int,
     sort_cols: Sequence[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
     """Persist a table bucketed (and optionally sorted) by the join key —
     the co-located-join strategy for repeated big-big joins at scale.
@@ -95,7 +95,7 @@ def write_bucketed_table(
     """
     writer = (
         df.write.mode("overwrite")
-        .format(fmt)
+        .format("parquet")
         .option("path", path)
         .bucketBy(n_buckets, *bucket_cols)
     )
@@ -109,7 +109,6 @@ def write_partitioned_table(
     path: str,
     partition_cols: Sequence[str],
     sort_cols: Sequence[str] | None = None,
-    fmt: str = "parquet",
     mode: str = "overwrite",
     options: dict[str, str] | None = None,
 ) -> None:
@@ -139,12 +138,33 @@ def write_partitioned_table(
         # required ordering and survives into the files
         df = df.repartition(*[F.col(c) for c in partition_cols]) \
                .sortWithinPartitions(*partition_cols, *sort_cols)
-    w = df.write.mode(mode).format(fmt)
+    w = df.write.mode(mode)
     if options:
         # writer-level format options (e.g. parquet.block.size to size
         # row groups); conf-level Hadoop keys don't reach the writer
         w = w.options(**options)
-    w.partitionBy(*partition_cols).save(path)
+    w.partitionBy(*partition_cols).parquet(path)
+
+
+@contextmanager
+def literal_partitions(spark) -> Iterator[None]:
+    """Read hive partition values as the literal directory strings for
+    the body of the ``with`` block, then restore the session's setting,
+    also when the body raises.
+
+    With partition column type inference on, a string partition like
+    ``shard=01`` re-reads as int 1, and a rewrite renames its directory
+    to ``shard=1``: leading zeros are lost and the schema re-types.
+    Every read that rewrites or merges partitions in place runs inside
+    this block, so it keeps :func:`compact_partitioned_table`'s
+    identity contract."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def compact_partitioned_table(
@@ -153,7 +173,6 @@ def compact_partitioned_table(
     out_path: str,
     partition_cols: Sequence[str],
     max_records_per_file: int,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Small-file compaction for a hive-partitioned table — the
     maintenance job every long-lived 100 TB table needs: streaming
@@ -169,7 +188,8 @@ def compact_partitioned_table(
     files. Data, schema, and partition layout are byte-identical to the
     input (a content-hash check belongs in the caller's validation);
     directory-pruning behavior is preserved because the partition
-    scheme is unchanged.
+    scheme is unchanged, and partition values round-trip as the literal
+    directory strings (:func:`literal_partitions`).
 
     Writes to ``out_path`` (never in place — an in-place rewrite that
     dies mid-job loses the table); production callers swap the
@@ -182,27 +202,16 @@ def compact_partitioned_table(
     partition-compacted — same guidance as write_partitioned_table's
     cardinality note.
     """
-    # partition VALUES must round-trip as the literal directory strings:
-    # with type inference on, string partitions like shard=01 re-read as
-    # int 1 and the rewrite renames directories (shard=01 -> shard=1),
-    # silently destroying leading zeros and retyping the schema — the
-    # opposite of a maintenance rewrite's identity contract
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(infer_key)
-    spark.conf.set(infer_key, "false")
-    try:
-        df = spark.read.format(fmt).load(in_path)
+    with literal_partitions(spark):
         (
-            df.repartition(*[F.col(c) for c in partition_cols])
+            spark.read.parquet(in_path)
+            .repartition(*[F.col(c) for c in partition_cols])
             .write.mode("overwrite")
-            .format(fmt)
             .option("maxRecordsPerFile", max_records_per_file)
             .partitionBy(*partition_cols)
-            .save(out_path)
+            .parquet(out_path)
         )
-    finally:
-        spark.conf.set(infer_key, prev)
-    return spark.read.format(fmt).load(out_path)
+    return spark.read.parquet(out_path)
 
 
 def zorder_key(cols: Sequence[str], bits: int = 16):

@@ -10,7 +10,9 @@ The reference's sink matrix collapses onto three Spark mechanisms:
                              upsert (K6, JDBCSink.java:57-76), Redis (K7),
                              Elasticsearch (K8), and the staged-partial
                              ingest faces (``batch=<id>`` subdirs folded
-                             on read). The micro-batch IS the
+                             on read; the staged store is parquet, and
+                             only the rolling file sink chooses a
+                             format). The micro-batch IS the
                              reference's buffered batch (batchSize/
                              flush-interval knobs ≈ trigger interval).
   checkpointLocation       — ST8: offsets + state per micro-batch; the
@@ -23,11 +25,13 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+
+from flink_examples_spark.sources.readers import literal_partitions
 
 
 def rolling_file_sink(
@@ -230,24 +234,14 @@ def kv_hset_foreach_batch(
     entries per call; per-key set semantics make replayed micro-batches
     idempotent (exactly-once observable).
     """
+    per_partition = _pipelined(
+        client_factory,
+        lambda row: (row[key_col], row[value_col]),
+        lambda client, buf: client.hset_many(hash_name, buf),
+        pipeline_size,
+    )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        def per_partition(rows) -> None:
-            client = client_factory()
-            try:
-                buf: list[tuple] = []
-                for row in rows:
-                    buf.append((row[key_col], row[value_col]))
-                    if len(buf) >= pipeline_size:
-                        client.hset_many(hash_name, buf)
-                        buf = []
-                if buf:
-                    client.hset_many(hash_name, buf)
-            finally:
-                close = getattr(client, "close", None)
-                if close is not None:
-                    close()
-
         batch_df.select(key_col, value_col).foreachPartition(per_partition)
 
     return write
@@ -270,27 +264,47 @@ def bulk_index_foreach_batch(
     replay + idempotent put).
     """
     cols = list(doc_cols)
+    per_partition = _pipelined(
+        client_factory,
+        lambda row: (row[id_col], {c: row[c] for c in cols}),
+        lambda client, buf: client.bulk_index(index, buf),
+        bulk_actions,
+    )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        def per_partition(rows) -> None:
-            client = client_factory()
-            try:
-                buf: list[tuple] = []
-                for row in rows:
-                    buf.append((row[id_col], {c: row[c] for c in cols}))
-                    if len(buf) >= bulk_actions:
-                        client.bulk_index(index, buf)
-                        buf = []
-                if buf:
-                    client.bulk_index(index, buf)
-            finally:
-                close = getattr(client, "close", None)
-                if close is not None:
-                    close()
-
         batch_df.select(id_col, *cols).foreachPartition(per_partition)
 
     return write
+
+
+def _pipelined(
+    client_factory: Callable[[], object],
+    entry: Callable[[object], tuple],
+    send: Callable[[object, list[tuple]], None],
+    size: int,
+) -> Callable[[Iterable], None]:
+    """The per-partition body of the injected-client sinks: open one
+    client, ``send`` the rows' ``entry`` tuples ``size`` at a time plus
+    the tail, and ``close()`` the client (when it has one) even if a
+    send raises."""
+
+    def per_partition(rows: Iterable) -> None:
+        client = client_factory()
+        try:
+            buf: list[tuple] = []
+            for row in rows:
+                buf.append(entry(row))
+                if len(buf) >= size:
+                    send(client, buf)
+                    buf = []
+            if buf:
+                send(client, buf)
+        finally:
+            close = getattr(client, "close", None)
+            if close is not None:
+                close()
+
+    return per_partition
 
 
 def transactional_foreach_batch(
@@ -332,7 +346,6 @@ def cdc_merge_foreach_batch(
     partition_col: str,
     seq_col: str,
     op_col: str = "op",
-    fmt: str = "parquet",
     guard_seq: bool = False,
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
@@ -421,7 +434,7 @@ def cdc_merge_foreach_batch(
             _recover_swap(_tombstone_root(table_path))
         if guard_seq and _compact_due(compact_every_n_batches, batch_id):
             compact_tombstones(
-                spark, table_path, id_col, partition_col, seq_col, fmt
+                spark, table_path, id_col, partition_col, seq_col
             )
         w = Window.partitionBy(id_col, partition_col).orderBy(
             F.col(seq_col).desc(),
@@ -438,7 +451,7 @@ def cdc_merge_foreach_batch(
         if guard_seq:
             latest = _drop_stale_events(
                 spark, latest, table_path, id_col, partition_col,
-                seq_col, op_col, fmt,
+                seq_col, op_col,
             ).localCheckpoint()
         delta = latest.select(
             id_col,
@@ -450,7 +463,7 @@ def cdc_merge_foreach_batch(
         dropped = (op_col,) if guard_seq else (op_col, seq_col)
         new = latest.filter(F.col(op_col) != "delete").drop(*dropped)
         merge_apply_partitioned(
-            spark, table_path, new, delta, id_col, partition_col, fmt
+            spark, table_path, new, delta, id_col, partition_col
         )
         if guard_seq:
             # retain applied deletes so later lower-seq upserts can't
@@ -463,10 +476,9 @@ def cdc_merge_foreach_batch(
             if not tombs.isEmpty():
                 (
                     tombs.write.mode("overwrite")
-                    .format(fmt)
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy(partition_col, "batch")
-                    .save(_tombstone_root(table_path))
+                    .parquet(_tombstone_root(table_path))
                 )
 
     return apply
@@ -485,7 +497,6 @@ def paragraph_dedup_ingest_foreach_batch(
     text_col: str,
     sep: str = "\n\n",
     min_chars: int = 1,
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` ingest face of corpus paragraph dedup: each
@@ -523,7 +534,7 @@ def paragraph_dedup_ingest_foreach_batch(
     )
 
     return _staged_fp_ingest_foreach_batch(
-        index_path, out_path, fmt, compact_every_n_batches,
+        index_path, out_path, compact_every_n_batches,
         fp_col="pfp",
         strip_fn=lambda idx, batch_df: incremental_paragraph_dedup(
             idx, batch_df, id_col, text_col, sep=sep, min_chars=min_chars
@@ -541,7 +552,6 @@ def span_dedup_ingest_foreach_batch(
     text_col: str,
     sep: str = ". ",
     width: int = 3,
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` ingest face of C4-style SPAN dedup — the span
@@ -558,7 +568,7 @@ def span_dedup_ingest_foreach_batch(
     )
 
     return _staged_fp_ingest_foreach_batch(
-        index_path, out_path, fmt, compact_every_n_batches,
+        index_path, out_path, compact_every_n_batches,
         fp_col="sfp",
         strip_fn=lambda idx, batch_df: incremental_span_dedup(
             idx, batch_df, id_col, text_col, sep=sep, width=width
@@ -572,7 +582,6 @@ def span_dedup_ingest_foreach_batch(
 def _staged_fp_ingest_foreach_batch(
     index_path: str,
     out_path: str,
-    fmt: str,
     compact_every_n_batches: int | None,
     fp_col: str,
     strip_fn: Callable[[DataFrame, DataFrame], DataFrame],
@@ -590,28 +599,21 @@ def _staged_fp_ingest_foreach_batch(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if _compact_due(compact_every_n_batches, batch_id):
-            compact_paragraph_index(
-                spark, index_path, fmt=fmt, fp_col=fp_col
-            )
+            compact_paragraph_index(spark, index_path, fp_col=fp_col)
         sub = f"batch={batch_id}"
         idx = _read_staged(
-            spark, index_path, fmt, lambda df: df.select(fp_col),
+            spark, index_path, lambda df: df.select(fp_col),
             f"{fp_col} string", exclude=sub,
         )
         out = strip_fn(idx, batch_df).localCheckpoint()
-        out.write.mode("overwrite").format(fmt).save(
-            os.path.join(out_path, sub)
-        )
+        out.write.mode("overwrite").parquet(os.path.join(out_path, sub))
         fps = index_fn(out.filter(F.col("text").isNotNull()))
-        fps.write.mode("overwrite").format(fmt).save(
-            os.path.join(index_path, sub)
-        )
+        fps.write.mode("overwrite").parquet(os.path.join(index_path, sub))
 
     return apply
 
 
 def compact_paragraph_index(spark, index_path: str,
-                            fmt: str = "parquet",
                             fp_col: str = "pfp") -> int:
     """Fold a staged fingerprint index's ``batch=*`` subdirs into
     one distinct set under ``batch=compacted`` (VERDICT r4 'What's
@@ -634,7 +636,7 @@ def compact_paragraph_index(spark, index_path: str,
     on disk at every instant and an interrupted swap is healed by
     :func:`_recover_swap`, which the ingest wrapper runs each batch."""
     return _compact_staged(
-        spark, index_path, fmt, lambda df: df.select(fp_col).distinct(),
+        spark, index_path, lambda df: df.select(fp_col).distinct(),
         spare_newest=True,
     )
 
@@ -645,7 +647,6 @@ def compact_tombstones(
     id_col: str,
     partition_col: str,
     seq_col: str,
-    fmt: str = "parquet",
 ) -> int:
     """Periodic maintenance for the CDC tombstone log: rewrite it to
     one max-seq row per (id, partition), batch-tagged ``compacted``.
@@ -667,32 +668,23 @@ def compact_tombstones(
     _recover_swap(root)
     if not os.path.isdir(root):
         return 0
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(infer_key)
-    spark.conf.set(infer_key, "false")
-    try:
+    with literal_partitions(spark):
         folded = (
-            spark.read.format(fmt)
-            .load(root)
+            spark.read.parquet(root)
             .groupBy(id_col, partition_col)
             .agg(F.max(seq_col).alias(seq_col))
             .select(id_col, partition_col, seq_col,
                     F.lit("compacted").alias("batch"))
         )
-        kept = _swap_in_rewrite(
+        return _swap_in_rewrite(
             root,
             lambda staging: folded.write.mode("overwrite")
-            .format(fmt)
             .partitionBy(partition_col, "batch")
-            .save(staging),
+            .parquet(staging),
             # count the just-written staging files: one source pass
             # total, instead of recomputing the fold a second time
-            count=lambda staging: spark.read.format(fmt)
-            .load(staging).count(),
+            count=lambda staging: spark.read.parquet(staging).count(),
         )
-        return kept
-    finally:
-        spark.conf.set(infer_key, prev)
 
 
 def _staging_of(root: str) -> str:
@@ -784,7 +776,6 @@ def _keyed_fold(keys: list[str], **aggs) -> Callable[[DataFrame], DataFrame]:
 
 def _staged_ingest(
     root: str,
-    fmt: str,
     every_n: int | None,
     compact: Callable[[object], int] | None,
     partial: Callable[[DataFrame], DataFrame],
@@ -802,7 +793,7 @@ def _staged_ingest(
         out = partial(batch_df)
         if _compact_due(every_n, batch_id):
             compact(batch_df.sparkSession)
-        out.write.mode("overwrite").format(fmt).save(
+        out.write.mode("overwrite").parquet(
             os.path.join(root, f"batch={batch_id}")
         )
 
@@ -812,7 +803,6 @@ def _staged_ingest(
 def _read_staged(
     spark,
     root: str,
-    fmt: str,
     fold: Callable[[DataFrame], DataFrame],
     empty_schema: str,
     exclude: str | None = None,
@@ -826,15 +816,12 @@ def _read_staged(
     subs = _batch_dirs(root, exclude)
     if not subs:
         return spark.createDataFrame([], empty_schema)
-    return fold(
-        spark.read.format(fmt).load([os.path.join(root, n) for n in subs])
-    )
+    return fold(spark.read.parquet(*[os.path.join(root, n) for n in subs]))
 
 
 def _compact_staged(
     spark,
     root: str,
-    fmt: str,
     fold: Callable[[DataFrame], DataFrame],
     spare_newest: bool,
 ) -> int:
@@ -863,16 +850,14 @@ def _compact_staged(
     folds = [n for n in subs if n != spare]
     if not any(n != "batch=compacted" for n in folds):
         return 0  # only the compacted set (or nothing) — no-op
-    folded = fold(
-        spark.read.format(fmt).load([os.path.join(root, n) for n in folds])
-    )
+    folded = fold(spark.read.parquet(*[os.path.join(root, n) for n in folds]))
     carried = [
         n for n in os.listdir(root)
         if n.startswith("_") and os.path.isdir(os.path.join(root, n))
     ] + ([spare] if spare else [])
 
     def write_to(staging: str) -> None:
-        folded.write.mode("overwrite").format(fmt).save(
+        folded.write.mode("overwrite").parquet(
             os.path.join(staging, "batch=compacted")
         )
         for n in carried:
@@ -881,9 +866,9 @@ def _compact_staged(
     return _swap_in_rewrite(
         root,
         write_to,
-        count=lambda staging: spark.read.format(fmt)
-        .load(os.path.join(staging, "batch=compacted"))
-        .count(),
+        count=lambda staging: spark.read.parquet(
+            os.path.join(staging, "batch=compacted")
+        ).count(),
     )
 
 
@@ -895,7 +880,6 @@ def _drop_stale_events(
     partition_col: str,
     seq_col: str,
     op_col: str,
-    fmt: str,
 ) -> DataFrame:
     """Filter a deduplicated CDC event set down to events at least as
     new as the stored row (``event.seq >= stored.seq``; absent rows
@@ -914,14 +898,10 @@ def _drop_stale_events(
         r[0] for r in latest.select(partition_col).distinct().collect()
     ]
     keys = latest.select(id_col, partition_col)
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(infer_key)
-    spark.conf.set(infer_key, "false")
-    try:
+    with literal_partitions(spark):
         try:
             stored = (
-                spark.read.format(fmt)
-                .load(table_path)
+                spark.read.parquet(table_path)
                 .filter(F.col(partition_col).isin(parts))
                 .select(
                     id_col, partition_col,
@@ -948,8 +928,7 @@ def _drop_stale_events(
         _recover_swap(tomb_root)  # never read through a half-done swap
         if os.path.isdir(tomb_root):
             tombs = (
-                spark.read.format(fmt)
-                .load(tomb_root)
+                spark.read.parquet(tomb_root)
                 .filter(F.col(partition_col).isin(parts))
                 .join(F.broadcast(keys), [id_col, partition_col],
                       "left_semi")
@@ -966,9 +945,7 @@ def _drop_stale_events(
                 )
                 .drop("_tomb_seq")
             )
-        return latest
-    finally:
-        spark.conf.set(infer_key, prev)
+    return latest
 
 
 _fold_countmin = _keyed_fold(["j", "bucket"], cnt=F.sum)
@@ -979,7 +956,6 @@ def countmin_ingest_foreach_batch(
     key_col: str,
     depth: int = 4,
     width: int = 64,
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming face of the Count-Min sketch
@@ -1002,26 +978,24 @@ def countmin_ingest_foreach_batch(
     from flink_examples_spark.operators.sketches import countmin_table
 
     return _staged_ingest(
-        sketch_path, fmt, compact_every_n_batches,
-        lambda spark: compact_countmin_sketch(spark, sketch_path, fmt=fmt),
+        sketch_path, compact_every_n_batches,
+        lambda spark: compact_countmin_sketch(spark, sketch_path),
         lambda df: countmin_table(df, key_col, depth, width),
     )
 
 
-def read_countmin_sketch(spark, sketch_path: str,
-                         fmt: str = "parquet") -> DataFrame:
+def read_countmin_sketch(spark, sketch_path: str) -> DataFrame:
     """Fold every staged subdir into the current sketch:
     ``(j, bucket, cnt)`` via cell-wise sum. Sketch-sized however long
     the ingest has run. A missing or not-yet-committed sketch path
     reads as an EMPTY sketch (every estimate 0) rather than crashing —
     monitoring readers race the stream's first micro-batch."""
     return _read_staged(
-        spark, sketch_path, fmt, _fold_countmin, "j int, bucket long, cnt long"
+        spark, sketch_path, _fold_countmin, "j int, bucket long, cnt long"
     )
 
 
-def compact_countmin_sketch(spark, sketch_path: str,
-                            fmt: str = "parquet") -> int:
+def compact_countmin_sketch(spark, sketch_path: str) -> int:
     """Fold all committed batch subdirs into one ``batch=compacted``
     cell-sum table, sparing the newest numbered batch (see
     :func:`countmin_ingest_foreach_batch` for why sparing is
@@ -1029,7 +1003,7 @@ def compact_countmin_sketch(spark, sketch_path: str,
     the staging swap (:func:`_swap_in_rewrite`). Returns cells in the
     compacted table, 0 if nothing to fold."""
     return _compact_staged(
-        spark, sketch_path, fmt, _fold_countmin, spare_newest=True
+        spark, sketch_path, _fold_countmin, spare_newest=True
     )
 
 
@@ -1037,7 +1011,6 @@ def column_profile_ingest_foreach_batch(
     profile_path: str,
     cols: list[str],
     k: int = 64,
-    fmt: str = "parquet",
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest profiling: each micro-batch writes its
     MERGEABLE column-profile partial (operators/integrity.py
@@ -1052,13 +1025,12 @@ def column_profile_ingest_foreach_batch(
     )
 
     return _staged_ingest(
-        profile_path, fmt, None, None,
+        profile_path, None, None,
         lambda df: column_profile_partial(df, cols, k),
     )
 
 
-def read_column_profile(spark, profile_path: str, k: int = 64,
-                        fmt: str = "parquet") -> DataFrame:
+def read_column_profile(spark, profile_path: str, k: int = 64) -> DataFrame:
     """Fold every staged profile partial into the current profile;
     missing/empty path reads as an empty profile."""
     from flink_examples_spark.operators.integrity import (
@@ -1066,7 +1038,7 @@ def read_column_profile(spark, profile_path: str, k: int = 64,
     )
 
     return _read_staged(
-        spark, profile_path, fmt, lambda df: column_profile_fold(df, k),
+        spark, profile_path, lambda df: column_profile_fold(df, k),
         "col string, n_rows long, n_nulls long, n_kept int, "
         "distinct_est double",
     )
@@ -1102,7 +1074,6 @@ def transition_edges_ingest_foreach_batch(
     part_col: str,
     order_cols: list[str],
     node_col: str,
-    fmt: str = "parquet",
     carry_tails: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming graph construction: each micro-batch writes ITS OWN
@@ -1140,7 +1111,7 @@ def transition_edges_ingest_foreach_batch(
         if carry_tails:
             prev_id = _prev_tail_batch(tails_root, batch_id)
             if prev_id is not None:
-                prev = batch_df.sparkSession.read.format(fmt).load(
+                prev = batch_df.sparkSession.read.parquet(
                     os.path.join(tails_root, f"batch={prev_id}")
                 ).select(*sel)
                 combined = prev.unionByName(combined)
@@ -1148,26 +1119,25 @@ def transition_edges_ingest_foreach_batch(
             combined = combined.localCheckpoint(eager=True)
         transition_edges(
             combined, part_col, order_cols, node_col
-        ).write.mode("overwrite").format(fmt).save(
+        ).write.mode("overwrite").parquet(
             os.path.join(edges_path, f"batch={batch_id}")
         )
         if carry_tails:
             _last_events(
                 combined, part_col, order_cols, node_col
-            ).write.mode("overwrite").format(fmt).save(
+            ).write.mode("overwrite").parquet(
                 os.path.join(tails_root, f"batch={batch_id}")
             )
 
     return apply
 
 
-def read_transition_edges(spark, edges_path: str,
-                          fmt: str = "parquet") -> DataFrame:
+def read_transition_edges(spark, edges_path: str) -> DataFrame:
     """Fold staged per-batch edge tables into the current graph
     (``src, dst, w`` with weight-sum merge); missing path reads as an
     empty graph."""
     return _read_staged(
-        spark, edges_path, fmt, _keyed_fold(["src", "dst"], w=F.sum),
+        spark, edges_path, _keyed_fold(["src", "dst"], w=F.sum),
         "src long, dst long, w long",
     )
 
@@ -1181,7 +1151,6 @@ def hll_ingest_foreach_batch(
     key_col: str,
     group_cols: list[str],
     p: int = 6,
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming face of the HyperLogLog register table
@@ -1199,10 +1168,8 @@ def hll_ingest_foreach_batch(
     from flink_examples_spark.operators.sketches import hll_registers
 
     return _staged_ingest(
-        sketch_path, fmt, compact_every_n_batches,
-        lambda spark: compact_hll_registers(
-            spark, sketch_path, group_cols, fmt=fmt
-        ),
+        sketch_path, compact_every_n_batches,
+        lambda spark: compact_hll_registers(spark, sketch_path, group_cols),
         lambda df: hll_registers(df, key_col, group_cols, p),
     )
 
@@ -1211,7 +1178,6 @@ def read_hll_registers(
     spark,
     sketch_path: str,
     group_cols: list[str],
-    fmt: str = "parquet",
     group_schema: str = "event_type string",
 ) -> DataFrame:
     """Fold every staged subdir into the current register table via
@@ -1219,7 +1185,7 @@ def read_hll_registers(
     missing path reads as an empty sketch (``group_schema`` supplies
     the group column types for that case)."""
     return _read_staged(
-        spark, sketch_path, fmt, _fold_hll(group_cols),
+        spark, sketch_path, _fold_hll(group_cols),
         f"{group_schema}, bucket long, reg int",
     )
 
@@ -1228,7 +1194,6 @@ def compact_hll_registers(
     spark,
     sketch_path: str,
     group_cols: list[str],
-    fmt: str = "parquet",
 ) -> int:
     """Fold ALL batch subdirs — newest included, max is idempotent
     (see :func:`hll_ingest_foreach_batch`) — into one
@@ -1236,7 +1201,7 @@ def compact_hll_registers(
     swap. Returns registers in the compacted table, 0 if nothing to
     fold."""
     return _compact_staged(
-        spark, sketch_path, fmt, _fold_hll(group_cols), spare_newest=False
+        spark, sketch_path, _fold_hll(group_cols), spare_newest=False
     )
 
 
@@ -1248,7 +1213,6 @@ def bitmap_ingest_foreach_batch(
     bitmap_path: str,
     key_col: str,
     group_cols: list[str],
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming face of the exact presence bitmaps
@@ -1270,10 +1234,8 @@ def bitmap_ingest_foreach_batch(
     from flink_examples_spark.operators.bitmap import presence_bitmaps
 
     return _staged_ingest(
-        bitmap_path, fmt, compact_every_n_batches,
-        lambda spark: compact_presence_bitmaps(
-            spark, bitmap_path, group_cols, fmt=fmt
-        ),
+        bitmap_path, compact_every_n_batches,
+        lambda spark: compact_presence_bitmaps(spark, bitmap_path, group_cols),
         lambda df: presence_bitmaps(df, group_cols, key_col),
     )
 
@@ -1282,7 +1244,6 @@ def read_presence_bitmaps(
     spark,
     bitmap_path: str,
     group_cols: list[str],
-    fmt: str = "parquet",
     group_schema: str = "day date",
 ) -> DataFrame:
     """Fold every staged subdir into the current bitmap table via
@@ -1290,7 +1251,7 @@ def read_presence_bitmaps(
     path reads as an empty bitmap table (``group_schema`` supplies the
     group column types for that case)."""
     return _read_staged(
-        spark, bitmap_path, fmt, _fold_bitmaps(group_cols),
+        spark, bitmap_path, _fold_bitmaps(group_cols),
         f"{group_schema}, word_idx long, word long",
     )
 
@@ -1299,14 +1260,13 @@ def compact_presence_bitmaps(
     spark,
     bitmap_path: str,
     group_cols: list[str],
-    fmt: str = "parquet",
 ) -> int:
     """Fold ALL batch subdirs — newest included, ``bit_or`` is
     idempotent (see :func:`bitmap_ingest_foreach_batch`) — into one
     ``batch=compacted`` bitmap table, crash-safe via the staging swap.
     Returns words in the compacted table, 0 if nothing to fold."""
     return _compact_staged(
-        spark, bitmap_path, fmt, _fold_bitmaps(group_cols),
+        spark, bitmap_path, _fold_bitmaps(group_cols),
         spare_newest=False,
     )
 
@@ -1318,7 +1278,6 @@ def token_counts_ingest_foreach_batch(
     counts_path: str,
     source_col: str = "source",
     text_col: str = "text",
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the token-drift monitor (VERDICT r8 #3):
@@ -1339,26 +1298,24 @@ def token_counts_ingest_foreach_batch(
     from flink_examples_spark.operators.drift import token_count_partials
 
     return _staged_ingest(
-        counts_path, fmt, compact_every_n_batches,
-        lambda spark: compact_token_counts(spark, counts_path, fmt=fmt),
+        counts_path, compact_every_n_batches,
+        lambda spark: compact_token_counts(spark, counts_path),
         lambda df: token_count_partials(df, source_col, text_col),
     )
 
 
-def read_token_counts(spark, counts_path: str,
-                      fmt: str = "parquet") -> DataFrame:
+def read_token_counts(spark, counts_path: str) -> DataFrame:
     """Fold every staged partial into the current ``(source, token,
     c_st)`` count table by sum. A missing or not-yet-committed path
     reads as an EMPTY table rather than crashing — monitoring readers
     race the stream's first micro-batch (the read_countmin rule)."""
     return _read_staged(
-        spark, counts_path, fmt, _fold_token_counts,
+        spark, counts_path, _fold_token_counts,
         "source string, token string, c_st long",
     )
 
 
-def read_token_tv_drift(spark, counts_path: str,
-                        fmt: str = "parquet") -> DataFrame:
+def read_token_tv_drift(spark, counts_path: str) -> DataFrame:
     """Assemble the EXACT integer total-variation drift of the
     registered ``source_token_tv_drift`` query from staged partials:
     same algebra (``operators.drift.tv_drift_from_counts``), same
@@ -1367,11 +1324,10 @@ def read_token_tv_drift(spark, counts_path: str,
     documents, at partial-fold cost."""
     from flink_examples_spark.operators.drift import tv_drift_from_counts
 
-    return tv_drift_from_counts(read_token_counts(spark, counts_path, fmt))
+    return tv_drift_from_counts(read_token_counts(spark, counts_path))
 
 
-def compact_token_counts(spark, counts_path: str,
-                         fmt: str = "parquet") -> int:
+def compact_token_counts(spark, counts_path: str) -> int:
     """Fold all committed batch subdirs into one ``batch=compacted``
     sum table, sparing the newest numbered batch (counts are ADDITIVE:
     only the in-flight batch can replay, and folding it would
@@ -1379,7 +1335,7 @@ def compact_token_counts(spark, counts_path: str,
     rule). Crash-safe via the staging swap. Returns rows in the
     compacted table, 0 if nothing to fold."""
     return _compact_staged(
-        spark, counts_path, fmt, _fold_token_counts, spare_newest=True
+        spark, counts_path, _fold_token_counts, spare_newest=True
     )
 
 
@@ -1388,7 +1344,6 @@ def url_partials_ingest_foreach_batch(
     id_col: str = "doc_id",
     source_col: str = "source",
     chars_col: str = "n_chars",
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the crawl pre-text stage (VERDICT r9 #4):
@@ -1413,8 +1368,8 @@ def url_partials_ingest_foreach_batch(
     from flink_examples_spark.operators.crawl import url_partials
 
     return _staged_ingest(
-        partials_path, fmt, compact_every_n_batches,
-        lambda spark: compact_url_partials(spark, partials_path, fmt=fmt),
+        partials_path, compact_every_n_batches,
+        lambda spark: compact_url_partials(spark, partials_path),
         lambda df: url_partials(df, id_col, source_col, chars_col),
     )
 
@@ -1429,19 +1384,17 @@ _URL_PARTIALS_SCHEMA = (
 )
 
 
-def read_url_partials(spark, partials_path: str,
-                      fmt: str = "parquet") -> DataFrame:
+def read_url_partials(spark, partials_path: str) -> DataFrame:
     """Fold every staged partial into the current per-URL table. A
     missing or not-yet-committed path reads as an EMPTY table rather
     than crashing — monitoring readers race the stream's first
     micro-batch (the read_token_counts rule)."""
     return _read_staged(
-        spark, partials_path, fmt, _fold_url_partials, _URL_PARTIALS_SCHEMA
+        spark, partials_path, _fold_url_partials, _URL_PARTIALS_SCHEMA
     )
 
 
-def read_host_boilerplate_census(spark, partials_path: str,
-                                 fmt: str = "parquet") -> DataFrame:
+def read_host_boilerplate_census(spark, partials_path: str) -> DataFrame:
     """Assemble the EXACT host census of the registered
     ``host_boilerplate_census`` query from staged per-URL partials:
     same assembly body (``operators.crawl.host_census_from_url_
@@ -1453,25 +1406,21 @@ def read_host_boilerplate_census(spark, partials_path: str,
     )
 
     return host_census_from_url_partials(
-        read_url_partials(spark, partials_path, fmt)
+        read_url_partials(spark, partials_path)
     )
 
 
-def read_url_dedup_canonical(spark, partials_path: str,
-                             fmt: str = "parquet") -> DataFrame:
+def read_url_dedup_canonical(spark, partials_path: str) -> DataFrame:
     """Assemble the EXACT duplicate-group ledger of the registered
     ``url_dedup_canonical`` query from the same staged partials:
     ``(url_norm, n_docs, keep_doc_id)`` groups of >= 2 with the
     min-doc_id survivor (``operators.crawl.url_dedup_from_partials``)."""
     from flink_examples_spark.operators.crawl import url_dedup_from_partials
 
-    return url_dedup_from_partials(
-        read_url_partials(spark, partials_path, fmt)
-    )
+    return url_dedup_from_partials(read_url_partials(spark, partials_path))
 
 
-def compact_url_partials(spark, partials_path: str,
-                         fmt: str = "parquet") -> int:
+def compact_url_partials(spark, partials_path: str) -> int:
     """Fold all committed batch subdirs into one ``batch=compacted``
     per-URL table, sparing the newest numbered batch (sums are
     ADDITIVE: only the in-flight batch can replay, and folding it
@@ -1480,7 +1429,7 @@ def compact_url_partials(spark, partials_path: str,
     not). Crash-safe via the staging swap. Returns rows in the
     compacted table, 0 if nothing to fold."""
     return _compact_staged(
-        spark, partials_path, fmt, _fold_url_partials, spare_newest=True
+        spark, partials_path, _fold_url_partials, spare_newest=True
     )
 
 
@@ -1489,7 +1438,6 @@ def host_line_partials_ingest_foreach_batch(
     id_col: str = "doc_id",
     host_col: str = "host",
     text_col: str = "text",
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the host-scoped LINE stage: each
@@ -1511,10 +1459,8 @@ def host_line_partials_ingest_foreach_batch(
     subdir for the same reason.
     """
     return _staged_ingest(
-        partials_path, fmt, compact_every_n_batches,
-        lambda spark: compact_host_line_partials(
-            spark, partials_path, fmt=fmt
-        ),
+        partials_path, compact_every_n_batches,
+        lambda spark: compact_host_line_partials(spark, partials_path),
         lambda df: _host_line_partial(df, id_col, host_col, text_col),
     )
 
@@ -1547,30 +1493,27 @@ _HOST_LINE_PARTIALS_SCHEMA = (
 )
 
 
-def read_host_line_partials(spark, partials_path: str,
-                            fmt: str = "parquet") -> DataFrame:
+def read_host_line_partials(spark, partials_path: str) -> DataFrame:
     """Fold every staged partial into the current ``(host, lfp,
     n_occ, line_chars)`` table; a missing path reads as EMPTY (the
     read_url_partials rule)."""
     return _read_staged(
-        spark, partials_path, fmt, _fold_host_line_partials,
+        spark, partials_path, _fold_host_line_partials,
         _HOST_LINE_PARTIALS_SCHEMA,
     )
 
 
-def read_host_line_fp_index(spark, partials_path: str,
-                            fmt: str = "parquet") -> DataFrame:
+def read_host_line_fp_index(spark, partials_path: str) -> DataFrame:
     """The staged ``(host, lfp, n_occ)`` index
     ``operators.dedup.incremental_host_line_strip`` probes — folded
     from the same partials the census reader consumes, so the daily
     strip and the monitor share one staged artifact."""
-    return read_host_line_partials(spark, partials_path, fmt).select(
+    return read_host_line_partials(spark, partials_path).select(
         "host", "lfp", "n_occ"
     )
 
 
 def read_host_line_dedup_census(spark, partials_path: str,
-                                fmt: str = "parquet",
                                 min_count: int = 3) -> DataFrame:
     """Assemble the EXACT per-host census of the registered
     ``host_line_dedup_census`` query from staged partials: same output
@@ -1578,7 +1521,7 @@ def read_host_line_dedup_census(spark, partials_path: str,
     total_chars, removed_chars, removed_ppm)``, hash-identical to the
     batch query over the same documents, at partial-fold cost — the
     corpus is never re-exploded for a monitoring check."""
-    per_line = read_host_line_partials(spark, partials_path, fmt)
+    per_line = read_host_line_partials(spark, partials_path)
     boiler = F.col("n_occ") >= int(min_count)
     chars = F.col("line_chars") * F.col("n_occ")
     return (
@@ -1609,14 +1552,13 @@ def read_host_line_dedup_census(spark, partials_path: str,
     )
 
 
-def compact_host_line_partials(spark, partials_path: str,
-                               fmt: str = "parquet") -> int:
+def compact_host_line_partials(spark, partials_path: str) -> int:
     """Fold committed batch subdirs into ``batch=compacted``, sparing
     the newest numbered batch (counts are ADDITIVE — the
     :func:`compact_url_partials` rule). Crash-safe via the staging
     swap; returns rows in the compacted table, 0 if nothing to fold."""
     return _compact_staged(
-        spark, partials_path, fmt, _fold_host_line_partials,
+        spark, partials_path, _fold_host_line_partials,
         spare_newest=True,
     )
 
@@ -1629,7 +1571,6 @@ def embedding_index_ingest_foreach_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the embedding-dedup stage (VERDICT r10
@@ -1650,8 +1591,8 @@ def embedding_index_ingest_foreach_batch(
     REPLACES its own rows rather than duplicating them.
     """
     return _staged_ingest(
-        index_path, fmt, compact_every_n_batches,
-        lambda spark: compact_embedding_index(spark, index_path, fmt=fmt),
+        index_path, compact_every_n_batches,
+        lambda spark: compact_embedding_index(spark, index_path),
         lambda df: df.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("embedding"),
@@ -1659,8 +1600,7 @@ def embedding_index_ingest_foreach_batch(
     )
 
 
-def read_embedding_index(spark, index_path: str,
-                         fmt: str = "parquet") -> DataFrame:
+def read_embedding_index(spark, index_path: str) -> DataFrame:
     """Assemble the staged corpus-vector index ``(vec_id, embedding)``
     — a plain union of the batch subdirs, deliberately with NO keyed
     fold: the whole point of the staged index is that the probing
@@ -1670,13 +1610,12 @@ def read_embedding_index(spark, index_path: str,
     corpus. A missing or not-yet-committed path reads as EMPTY (the
     read_url_partials rule)."""
     return _read_staged(
-        spark, index_path, fmt, _fold_embeddings,
+        spark, index_path, _fold_embeddings,
         "vec_id long, embedding array<double>",
     )
 
 
-def compact_embedding_index(spark, index_path: str,
-                            fmt: str = "parquet") -> int:
+def compact_embedding_index(spark, index_path: str) -> int:
     """Concatenate committed batch subdirs into ``batch=compacted``,
     sparing the newest numbered batch — it is the only one that can
     replay, and its rows folded into the compacted table would
@@ -1685,12 +1624,11 @@ def compact_embedding_index(spark, index_path: str,
     phantom self-pairs in the probe). Crash-safe via the staging swap;
     returns rows in the compacted table, 0 if nothing to fold."""
     return _compact_staged(
-        spark, index_path, fmt, _fold_embeddings, spare_newest=True
+        spark, index_path, _fold_embeddings, spare_newest=True
     )
 
 
-def stage_ivf_centroids(spark, index_path: str, centroids,
-                        fmt: str = "parquet") -> int:
+def stage_ivf_centroids(spark, index_path: str, centroids) -> int:
     """Write the trained IVF coarse quantizer under
     ``index_path/_centroids`` — ONCE per index lifetime (VERDICT r11
     next-round #5): every later ingest batch is assigned against these
@@ -1705,13 +1643,13 @@ def stage_ivf_centroids(spark, index_path: str, centroids,
     rows = [(int(i), [float(v) for v in cent[i]]) for i in range(len(cent))]
     spark.createDataFrame(
         rows, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").format(fmt).save(
+    ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(index_path, "_centroids")
     )
     return len(rows)
 
 
-def read_ivf_centroids(spark, index_path: str, fmt: str = "parquet"):
+def read_ivf_centroids(spark, index_path: str):
     """The staged coarse quantizer as an (n_clusters, dim) numpy array
     ordered by cell — the closure-sized artifact every probe and every
     ingest assignment loads (kilobytes; never a distributed read
@@ -1721,7 +1659,7 @@ def read_ivf_centroids(spark, index_path: str, fmt: str = "parquet"):
     path = os.path.join(index_path, "_centroids")
     if not os.path.isdir(path):
         return np.zeros((0, 0))
-    rows = spark.read.format(fmt).load(path).collect()
+    rows = spark.read.parquet(path).collect()
     rows.sort(key=lambda r: r["cell"])
     return np.array([r["centroid"] for r in rows], dtype=np.float64)
 
@@ -1734,7 +1672,6 @@ def ivf_index_ingest_foreach_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fmt: str = "parquet",
     compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the STAGED IVF index (VERDICT r11
@@ -1755,7 +1692,7 @@ def ivf_index_ingest_foreach_batch(
     from flink_examples_spark.operators.similarity import ivf_assign_cells
 
     def partial(batch_df: DataFrame) -> DataFrame:
-        cent = read_ivf_centroids(batch_df.sparkSession, index_path, fmt=fmt)
+        cent = read_ivf_centroids(batch_df.sparkSession, index_path)
         if cent.size == 0:
             raise ValueError(
                 f"no centroids staged under {index_path!r}: run "
@@ -1770,14 +1707,13 @@ def ivf_index_ingest_foreach_batch(
         )
 
     return _staged_ingest(
-        index_path, fmt, compact_every_n_batches,
-        lambda spark: compact_ivf_index(spark, index_path, fmt=fmt),
+        index_path, compact_every_n_batches,
+        lambda spark: compact_ivf_index(spark, index_path),
         partial,
     )
 
 
-def read_ivf_index(spark, index_path: str,
-                   fmt: str = "parquet") -> DataFrame:
+def read_ivf_index(spark, index_path: str) -> DataFrame:
     """Assemble the staged IVF index ``(vec_id, cell, embedding)`` — a
     plain union of the batch subdirs with NO keyed fold (the
     :func:`read_embedding_index` rule: the probe plan must stay
@@ -1785,13 +1721,12 @@ def read_ivf_index(spark, index_path: str,
     ``_centroids`` subdir is skipped by its underscore). Missing path
     reads as EMPTY."""
     return _read_staged(
-        spark, index_path, fmt, _fold_ivf,
+        spark, index_path, _fold_ivf,
         "vec_id long, cell int, embedding array<double>",
     )
 
 
-def compact_ivf_index(spark, index_path: str,
-                      fmt: str = "parquet") -> int:
+def compact_ivf_index(spark, index_path: str) -> int:
     """Concatenate committed batch subdirs into ``batch=compacted``,
     sparing the newest numbered batch (the
     :func:`compact_embedding_index` rule — only the in-flight batch
@@ -1801,7 +1736,7 @@ def compact_ivf_index(spark, index_path: str,
     replaces the whole root, and an index without its quantizer is
     unusable. Crash-safe via the staging swap; returns rows in the
     compacted table, 0 if nothing to fold."""
-    return _compact_staged(spark, index_path, fmt, _fold_ivf, spare_newest=True)
+    return _compact_staged(spark, index_path, _fold_ivf, spare_newest=True)
 
 
 def hygiene_delta_ingest_foreach_batch(
@@ -1815,7 +1750,6 @@ def hygiene_delta_ingest_foreach_batch(
     text_col: str = "text",
     raw_col=None,
     min_count: int = 3,
-    fmt: str = "parquet",
 ) -> Callable[[DataFrame, int], None]:
     """The daily hygiene job's ingest face — the DAY-2 LOOP: each
     micro-batch is one delta dump; it is (1) run through the composed
@@ -1863,15 +1797,15 @@ def hygiene_delta_ingest_foreach_batch(
         spark = batch_df.sparkSession
         sub = f"batch={batch_id}"
         uidx = _read_staged(
-            spark, url_root, fmt, _fold_url_partials, _URL_PARTIALS_SCHEMA,
+            spark, url_root, _fold_url_partials, _URL_PARTIALS_SCHEMA,
             exclude=sub,
         )
         lidx = _read_staged(
-            spark, line_root, fmt, _fold_host_line_partials,
+            spark, line_root, _fold_host_line_partials,
             _HOST_LINE_PARTIALS_SCHEMA, exclude=sub,
         )
         cfps = _read_staged(
-            spark, fp_root, fmt, lambda df: df.select("fp").distinct(),
+            spark, fp_root, lambda df: df.select("fp").distinct(),
             "fp string", exclude=sub,
         )
         delta = batch_df.select(
@@ -1886,23 +1820,18 @@ def hygiene_delta_ingest_foreach_batch(
         ).localCheckpoint()
         # ship FIRST: a crash before the index writes replays the
         # batch; the reverse order would index never-shipped content
-        out.write.mode("overwrite").format(fmt).save(
-            os.path.join(out_path, sub)
-        )
+        out.write.mode("overwrite").parquet(os.path.join(out_path, sub))
         url_partials(
             delta.withColumn("n_chars", F.length("text")),
             "doc_id", "doc_id", "n_chars", url=F.col("url_norm"),
-        ).write.mode("overwrite").format(fmt).save(
-            os.path.join(url_root, sub)
-        )
+        ).write.mode("overwrite").parquet(os.path.join(url_root, sub))
         shipped = out.select(
             "doc_id", "host", F.col("kept_text").alias("text")
         )
         _host_line_partial(shipped, "doc_id", "host", "text").write.mode(
             "overwrite"
-        ).format(fmt).save(os.path.join(line_root, sub))
+        ).parquet(os.path.join(line_root, sub))
         shipped.select(F.md5("text").alias("fp")).distinct() \
-            .write.mode("overwrite").format(fmt) \
-            .save(os.path.join(fp_root, sub))
+            .write.mode("overwrite").parquet(os.path.join(fp_root, sub))
 
     return apply

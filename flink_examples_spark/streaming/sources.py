@@ -27,10 +27,10 @@ def file_stream(
     spark: SparkSession,
     directory: str,
     schema_file: str,
-    fmt: str = "parquet",
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Stream a directory of files in deterministic per-file batches.
+    """Stream a directory of parquet files in deterministic per-file
+    batches.
 
     ``schema_file`` is an existing parquet file used as the schema
     authority (streaming reads require an explicit schema). Its schema
@@ -45,8 +45,7 @@ def file_stream(
     df = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(fmt)
-        .load(directory)
+        .parquet(directory)
     )
     return _normalise_ts(df, nanos_cols)
 

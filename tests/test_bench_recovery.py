@@ -4,9 +4,9 @@ The round driver captures only the LAST ~2000 chars of bench stdout; in
 round 3 the single giant JSON line outgrew that window, the front (with
 the headline value and the `queries` dict) was cut, and the committed
 artifact became unrecoverable (`parsed: null`). These tests pin the
-fixed behavior: a compact final line always survives, and
-`_timings_from_tail` recovers what a front-cut tail still holds without
-ever misreading `spread` ratios as timings.
+fixed behavior: a compact final line always survives the tail window,
+so the driver artifact's `parsed` dict carries the timings the next
+round's movers read.
 """
 
 from __future__ import annotations
@@ -14,52 +14,6 @@ from __future__ import annotations
 import json
 
 import bench
-
-
-def test_old_format_front_cut_recovers_movers_only():
-    # round-3 shape: tail starts mid-SPREAD dict (ratios!), then movers.
-    tail = (
-        ' 0.161, "fib_iterate": 0.143, "wordcount_side_output": 0.195}, '
-        '"movers": {"async_enrich_nation": {"prev": 0.5904, "now": 0.779, '
-        '"ratio": 1.319}, "count_windows": {"prev": 0.3807, "now": 0.5576, '
-        '"ratio": 1.465}}, "sf": "0.1", "reps": 3}'
-    )
-    got = bench._timings_from_tail(tail)
-    # movers' "now" values recovered...
-    assert got["async_enrich_nation"] == 0.779
-    assert got["count_windows"] == 0.5576
-    # ...and the spread ratios NOT misread as timings
-    assert "fib_iterate" not in got
-    assert "wordcount_side_output" not in got
-
-
-def test_new_format_front_cut_mid_queries():
-    # new shape: full line puts queries LAST, compact line follows.
-    full = {
-        "metric": "total_query_seconds", "value": 10.0, "unit": "sec",
-        "sf": "0.1", "reps": 3, "spread": {"a": 0.1},
-        "movers": {},
-        "queries": {"alpha": 0.5, "beta": 1.25, "gamma": 2.0},
-    }
-    compact = {"metric": "total_query_seconds", "value": 10.0,
-               "unit": "sec", "sf": "0.1", "reps": 3, "n_queries": 3,
-               "movers": {}, "shape": "compact"}
-    compact_line = json.dumps(compact)
-    stdout = json.dumps(full) + "\n" + compact_line
-    # cut mid-queries-dict: keep the compact line + a line-1 fragment
-    # that starts inside the queries dict (no `"queries"` anchor left)
-    tail = stdout[-(len(compact_line) + 25):]
-    assert '"queries"' not in tail
-    got = bench._timings_from_tail(tail)
-    assert got.get("gamma") == 2.0  # the surviving complete pair
-    # no spread/mover ratios leak in
-    assert "a" not in got
-
-
-def test_anchored_queries_dict_recovered_fully():
-    tail = '"queries": {"alpha": 0.5, "beta": 1.25}}'
-    got = bench._timings_from_tail(tail)
-    assert got == {"alpha": 0.5, "beta": 1.25}
 
 
 def test_compact_line_fits_driver_tail():

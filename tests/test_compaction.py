@@ -9,11 +9,15 @@ over the bound.
 import os
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_examples_spark.catalog import load_table
 from flink_examples_spark.plans.inspect import formatted_plan
-from flink_examples_spark.sources.readers import compact_partitioned_table
+from flink_examples_spark.sources.readers import (
+    compact_partitioned_table,
+    literal_partitions,
+)
 
 
 def _files_by_partition(root):
@@ -239,6 +243,31 @@ def test_compaction_preserves_string_partition_values(spark, tmp_path):
             if d.startswith("shard=")}
     assert dirs == {"shard=00", "shard=01", "shard=02"}
     assert out.count() == 30
+
+
+def test_literal_partitions_reads_strings_and_restores_after_raise(
+    spark, tmp_path
+):
+    """Inside the block a shard=01 directory reads as the string '01';
+    after it the session's own setting is back, also when the body
+    raised."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "01")], "id long, shard string") \
+        .write.partitionBy("shard").parquet(path)
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        with literal_partitions(spark):
+            assert spark.conf.get(key) == "false"
+            assert [r.shard for r in spark.read.parquet(path).collect()] \
+                == ["01"]
+        assert spark.conf.get(key) == "true"
+        with pytest.raises(RuntimeError), literal_partitions(spark):
+            raise RuntimeError("body failed")
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_merge_apply_partitioned_rewrites_only_affected_partitions(

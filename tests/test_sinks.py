@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
+from collections import Counter
 
 import pytest
 
@@ -33,7 +35,7 @@ def _make_client_factory(out_dir: str):
 
         def __init__(self):
             self.path = os.path.join(
-                out_dir, f"client-{os.getpid()}-{id(self)}.jsonl"
+                out_dir, f"client-{uuid.uuid4().hex}.jsonl"
             )
             self.calls = 0
 
@@ -66,6 +68,18 @@ def _read_all(out_dir):
     return recs
 
 
+def _assert_batched_and_closed(out_dir, size):
+    """Every client call carried at most ``size`` entries, and every
+    client was closed exactly once, after its last call."""
+    for fn in os.listdir(out_dir):
+        with open(os.path.join(out_dir, fn)) as f:
+            recs = [json.loads(line) for line in f]
+        assert [i for i, r in enumerate(recs) if r.get("closed")] \
+            == [len(recs) - 1], fn
+        per_call = Counter(r["call"] for r in recs[:-1])
+        assert all(n <= size for n in per_call.values()), per_call
+
+
 def test_kv_hset_sink_delivers_all_and_pipelines(spark, tmp_path):
     out_dir = str(tmp_path / "redis")
     os.makedirs(out_dir)
@@ -82,6 +96,7 @@ def test_kv_hset_sink_delivers_all_and_pipelines(spark, tmp_path):
     assert all(r["h"] == "FLINK_REDIS_TEST" for r in recs)
     closes = [r for r in _read_all(out_dir) if r.get("closed")]
     assert len(closes) >= 1  # client closed per partition
+    _assert_batched_and_closed(out_dir, 10)
 
 
 def test_bulk_index_sink_documents(spark, tmp_path):
@@ -99,10 +114,12 @@ def test_bulk_index_sink_documents(spark, tmp_path):
     recs = [r for r in _read_all(out_dir) if "id" in r]
     assert {r["id"] for r in recs} == set(range(7))
     assert all(r["doc"]["behavior"] == "pv" for r in recs)
+    _assert_batched_and_closed(out_dir, 3)
     # idempotent replay: same batch again -> same doc ids (upsert by id)
     write(df, batch_id=0)
     recs2 = [r for r in _read_all(out_dir) if "id" in r]
     assert {r["id"] for r in recs2} == set(range(7))
+    _assert_batched_and_closed(out_dir, 3)
 
 
 def test_transactional_foreach_batch_skips_replayed_epochs(spark, tmp_path):
@@ -150,7 +167,7 @@ def _fp_index_reader(fp_col):
     from flink_examples_spark.streaming.sinks import _read_staged
 
     return lambda spark, root: _read_staged(
-        spark, root, "parquet", lambda df: df.select(fp_col).distinct(),
+        spark, root, lambda df: df.select(fp_col).distinct(),
         f"{fp_col} string",
     )
 
