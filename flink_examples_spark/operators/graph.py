@@ -21,9 +21,9 @@ as CTEs) hash-matches exactly, the same contract as the rest of the
 registry.
 
 Scale shape: each iteration is one join of the mass vector against the
-edge list (both keyed by src — co-partitioned after the first shuffle)
-plus two map-side-combinable groupBys. Nothing is ever all-pairs; the
-mass vector is |V| rows, the join is |E| rows. For billion-edge graphs
+edge list plus one self row per node (both keyed by src) and one
+map-side-combinable groupBy. Nothing is ever all-pairs; the mass
+vector is |V| rows, the join is |E| + |V| rows. For billion-edge graphs
 the edge list with its precomputed out-weight is the stageable
 artifact. Iteration-in-driver-loop precedent: operators/iteration.py
 (fib_iterate, D6) and the pointer-doubling connected components
@@ -38,7 +38,7 @@ curation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -52,7 +52,9 @@ def walk_mass(
     """Run ``iterations`` rounds of integer damped-walk mass over
     ``edges`` (columns ``src, dst, w``; ``w`` a positive integer
     weight). Returns ``(node, mass)`` with
-    Σ mass = |V| * init_mass exactly.
+    Σ mass = |V| * init_mass exactly, as one lazy plan whose depth
+    grows linearly with ``iterations`` (one join and one groupBy per
+    round); building it submits no job.
 
     Overflow headroom: the per-edge numerator is
     ``mass * damp_num * w`` ≤ |V|·init_mass·damp_num·w — with the
@@ -60,55 +62,46 @@ def walk_mass(
     ``init_mass`` modest for huge weighted graphs (the ranking only
     depends on the ratio mass/init_mass).
     """
-    ew = edges.groupBy("src").agg(F.sum("w").alias("w_out"))
-    e = edges.join(ew, "src").select("src", "dst", "w", "w_out")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # mass is referenced twice per round (contrib + kept), so without
-    # truncation the plan doubles each iteration and analysis time
-    # blows up past ~5 rounds — the hazard fib_steps_driver_loop
-    # (operators/iteration.py) and the pointer-doubling CC guard
-    # against. The edge table is pinned ONCE first so the per-round
-    # checkpoint jobs never re-run the (possibly expensive) upstream
-    # edge derivation — it is the stageable artifact anyway; measured
-    # at sf0.1 this pair is FASTER than the untruncated single-job
-    # plan (3.7 s vs 5.8 s: eight-way duplicated mass lineage costs
-    # more in compile + redundant stages than the checkpoints cost in
-    # jobs). Truncating on a >1 cadence instead trips an AQE
-    # stage-reuse bug in Spark 4.1 ("Can't zip RDDs with unequal
-    # numbers of partitions" when reused exchanges meet checkpointed
-    # scans at differing plan depths) — do not "optimize" this back
-    # to partial truncation.
-    if iterations > 1:
-        e = e.localCheckpoint(eager=True)
+    # the edge rows plus one self row per node, keyed by source, each
+    # with its source's out-weight (self rows weigh 0): each round reads
+    # the mass vector ONCE, in one join against this table, so the plan
+    # grows by one join per round and needs no pins. A round that reads
+    # mass twice (kept mass beside the sends) doubles the plan every
+    # round.
+    e = (
+        edges.select(
+            F.col("src").alias("node"), "dst", "w", F.lit(False).alias("keep")
+        )
+        .unionByName(nodes.select(
+            "node", F.col("node").alias("dst"), F.lit(0).alias("w"),
+            F.lit(True).alias("keep"),
+        ))
+        .withColumn("w_out", F.sum("w").over(Window.partitionBy("node")))
+    )
     mass = nodes.withColumn("mass", F.lit(init_mass).cast("long"))
-    div = f"(mass * {damp_num} * w) div ({damp_den} * w_out)"
-    for it in range(iterations):
-        if it:
-            mass = mass.localCheckpoint(eager=True)
-        contrib = (
-            mass.join(e, mass["node"] == e["src"])
-            .select("src", "dst", F.expr(div).alias("c"))
+    # c: all of the mass on a self row, the floored send on an edge row
+    keep = F.col("keep")
+    c = F.when(keep, F.col("mass")).otherwise(
+        F.expr(f"(mass * {damp_num} * w) div ({damp_den} * w_out)")
+    )
+    for _ in range(iterations):
+        # new mass = old mass - Σ sent + Σ received: every joined row
+        # emits -c at its source (0 on a self row) and +c at its
+        # destination, and one map-side-combinable groupBy sums them
+        mass = (
+            mass.join(e, "node")
+            .select(F.inline(F.array(
+                F.struct("node", F.when(keep, 0).otherwise(-c).alias("mass")),
+                F.struct(F.col("dst").alias("node"), c.alias("mass")),
+            )))
+            .groupBy("node")
+            .agg(F.sum("mass").alias("mass"))
         )
-        # mass-delta union: new mass = old mass - Σ sent + Σ received,
-        # folded in ONE map-side-combinable groupBy over (old mass rows
-        # ∪ per-edge -c at src ∪ per-edge +c at dst). The previous
-        # formulation materialized Σ sent as its own aggregate, LEFT
-        # JOINed it back onto mass, and union-aggregated the receive
-        # side — two extra exchanges per iteration for the identical
-        # integer sum (r13 A/B x1.08 at sf0.1; at scale the saving is
-        # two |V|-row shuffles per round).
-        delta = mass.unionByName(
-            contrib.select(
-                F.col("src").alias("node"), (-F.col("c")).alias("mass")
-            )
-        ).unionByName(
-            contrib.select(F.col("dst").alias("node"), F.col("c").alias("mass"))
-        )
-        mass = delta.groupBy("node").agg(F.sum("mass").alias("mass"))
     return mass
 
 
@@ -123,8 +116,6 @@ def transition_edges(
     tiebreak), every consecutive ``node_col`` pair becomes an edge;
     weight = transition count. One window pass + one count — the
     standard session-graph construction."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(part_col).orderBy(*order_cols)
     return (
         df.select(

@@ -4,6 +4,7 @@ from flink_examples_spark.plans.inspect import (  # noqa: F401
     exchange_count,
     formatted_plan,
     has_broadcast_join,
+    join_count,
     pushed_filters,
     python_eval_nodes,
     read_schema_columns,

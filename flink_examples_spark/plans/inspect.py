@@ -52,24 +52,32 @@ def has_broadcast_join(df: DataFrame) -> bool:
 
 
 _EXCHANGE_NODE = re.compile(r"^[\s:+\-*]*Exchange \(\d+\)")
+_JOIN_NODE = re.compile(r"^[\s:+\-*]*\w+Join ")
 
 
-def exchange_count(df: DataFrame) -> int:
-    """Shuffle exchanges in the plan (excluding broadcast exchanges) —
-    the number every operator fights to minimize.
-
-    Counted on the plan tree, once per node. Once AQE has executed the
-    plan, the tree prints its final plan and, below an
+def _ran_plan_tree(df: DataFrame):
+    """The formatted plan's lines; on the tree, one per node. Once AQE
+    has executed the plan, the tree prints its final plan and, below an
     ``== Initial Plan ==`` marker, the plan it replaced; only the final
     one ran, so the marker's indented branch is skipped."""
-    n, skip_below = 0, None
+    skip_below = None
     for line in formatted_plan(df).splitlines():
         indent = len(line) - len(line.lstrip(" :|"))
         if skip_below is not None and line.strip() and indent > skip_below:
             continue
         skip_below = indent if "== Initial Plan ==" in line else None
-        n += bool(_EXCHANGE_NODE.match(line))
-    return n
+        yield line
+
+
+def exchange_count(df: DataFrame) -> int:
+    """Shuffle exchanges in the plan that runs (excluding broadcast
+    exchanges) — the number every operator fights to minimize."""
+    return sum(bool(_EXCHANGE_NODE.match(ln)) for ln in _ran_plan_tree(df))
+
+
+def join_count(df: DataFrame) -> int:
+    """Join operators of every kind in the plan that runs."""
+    return sum(bool(_JOIN_NODE.match(ln)) for ln in _ran_plan_tree(df))
 
 
 def python_eval_nodes(df: DataFrame) -> list[str]:

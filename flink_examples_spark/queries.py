@@ -7046,7 +7046,8 @@ def _walk_mass_sql(iters: int = 3) -> str:
         "kept, total mass conserved to the unit — so the iterative "
         "fixpoint hash-matches the unrolled SQL recurrence exactly, "
         "which float PageRank never can. Each iteration is one "
-        "mass-x-edges join plus two map-side-combinable groupBys.",
+        "mass-x-edges join (each node's self row carries its kept "
+        "mass) plus one map-side-combinable groupBy.",
 )
 def event_graph_walk_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_examples_spark.functions.scalar import json_field

@@ -956,7 +956,6 @@ def countmin_ingest_foreach_batch(
     key_col: str,
     depth: int = 4,
     width: int = 64,
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming face of the Count-Min sketch
     (operators/sketches.py): each micro-batch writes ITS OWN sketch
@@ -978,8 +977,7 @@ def countmin_ingest_foreach_batch(
     from flink_examples_spark.operators.sketches import countmin_table
 
     return _staged_ingest(
-        sketch_path, compact_every_n_batches,
-        lambda spark: compact_countmin_sketch(spark, sketch_path),
+        sketch_path, None, None,
         lambda df: countmin_table(df, key_col, depth, width),
     )
 
@@ -1151,7 +1149,6 @@ def hll_ingest_foreach_batch(
     key_col: str,
     group_cols: list[str],
     p: int = 6,
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming face of the HyperLogLog register table
     (operators/sketches.py ``hll_registers``): each micro-batch writes
@@ -1168,8 +1165,7 @@ def hll_ingest_foreach_batch(
     from flink_examples_spark.operators.sketches import hll_registers
 
     return _staged_ingest(
-        sketch_path, compact_every_n_batches,
-        lambda spark: compact_hll_registers(spark, sketch_path, group_cols),
+        sketch_path, None, None,
         lambda df: hll_registers(df, key_col, group_cols, p),
     )
 
@@ -1278,7 +1274,6 @@ def token_counts_ingest_foreach_batch(
     counts_path: str,
     source_col: str = "source",
     text_col: str = "text",
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the token-drift monitor (VERDICT r8 #3):
     each micro-batch of documents folds to its own ``(source, token,
@@ -1298,8 +1293,7 @@ def token_counts_ingest_foreach_batch(
     from flink_examples_spark.operators.drift import token_count_partials
 
     return _staged_ingest(
-        counts_path, compact_every_n_batches,
-        lambda spark: compact_token_counts(spark, counts_path),
+        counts_path, None, None,
         lambda df: token_count_partials(df, source_col, text_col),
     )
 
@@ -1344,7 +1338,6 @@ def url_partials_ingest_foreach_batch(
     id_col: str = "doc_id",
     source_col: str = "source",
     chars_col: str = "n_chars",
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the crawl pre-text stage (VERDICT r9 #4):
     each micro-batch of documents folds to its own per-URL partial
@@ -1368,8 +1361,7 @@ def url_partials_ingest_foreach_batch(
     from flink_examples_spark.operators.crawl import url_partials
 
     return _staged_ingest(
-        partials_path, compact_every_n_batches,
-        lambda spark: compact_url_partials(spark, partials_path),
+        partials_path, None, None,
         lambda df: url_partials(df, id_col, source_col, chars_col),
     )
 
@@ -1438,7 +1430,6 @@ def host_line_partials_ingest_foreach_batch(
     id_col: str = "doc_id",
     host_col: str = "host",
     text_col: str = "text",
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the host-scoped LINE stage: each
     micro-batch of (already host-tagged) documents folds to its own
@@ -1459,8 +1450,7 @@ def host_line_partials_ingest_foreach_batch(
     subdir for the same reason.
     """
     return _staged_ingest(
-        partials_path, compact_every_n_batches,
-        lambda spark: compact_host_line_partials(spark, partials_path),
+        partials_path, None, None,
         lambda df: _host_line_partial(df, id_col, host_col, text_col),
     )
 
@@ -1571,7 +1561,6 @@ def embedding_index_ingest_foreach_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the embedding-dedup stage (VERDICT r10
     next-round #2): each micro-batch of (vec_id, embedding) rows lands
@@ -1591,8 +1580,7 @@ def embedding_index_ingest_foreach_batch(
     REPLACES its own rows rather than duplicating them.
     """
     return _staged_ingest(
-        index_path, compact_every_n_batches,
-        lambda spark: compact_embedding_index(spark, index_path),
+        index_path, None, None,
         lambda df: df.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("embedding"),
@@ -1672,7 +1660,6 @@ def ivf_index_ingest_foreach_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    compact_every_n_batches: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming ingest for the STAGED IVF index (VERDICT r11
     next-round #5 — the ANN family's answer to the embedding-index
@@ -1707,8 +1694,7 @@ def ivf_index_ingest_foreach_batch(
         )
 
     return _staged_ingest(
-        index_path, compact_every_n_batches,
-        lambda spark: compact_ivf_index(spark, index_path),
+        index_path, None, None,
         partial,
     )
 

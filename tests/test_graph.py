@@ -49,11 +49,12 @@ def test_mass_conserved_on_random_graph(spark):
 
 
 def test_deep_iteration_wall_time_is_linear(spark):
-    """12 iterations must not blow up plan analysis: the per-round
-    ``localCheckpoint`` truncates lineage, so wall time grows ~linearly
-    with iteration count instead of exponentially (pre-fix, iterations
-    beyond ~5 were dominated by doubling plan-compile time). Bound is
-    generous — exponential growth fails it by orders of magnitude."""
+    """12 iterations must not blow up plan analysis: each round reads
+    the mass vector once, so the plan — and wall time — grows ~linearly
+    with iteration count instead of exponentially (a round that reads
+    mass twice or more doubles the plan per round: iterations beyond ~5
+    were dominated by plan-compile time). Bound is generous —
+    exponential growth fails it by orders of magnitude."""
     import time
 
     pairs = [(a, (a * 3 + 1) % 6, a % 3 + 1) for a in range(6)]
@@ -70,6 +71,35 @@ def test_deep_iteration_wall_time_is_linear(spark):
     # linear would be 4x; allow 10x slack for scheduler noise. The
     # un-truncated plan took minutes (2^12 self-references) here.
     assert t12 < max(10 * t3, t3 + 30.0)
+
+
+def test_walk_mass_query_builds_lazily(spark, sf_dir):
+    """Building the walk-mass query submits no job and pins nothing:
+    the rounds are one lazy plan, not a loop of eager pins."""
+    from flink_examples_spark.queries import registry
+
+    sc = spark.sparkContext
+    pinned = set(sc._jsc.getPersistentRDDs().keys())
+    before = sc._jsc.sc().dagScheduler().nextJobId()
+    registry()["event_graph_walk_mass"].spark_fn(spark, sf_dir)
+    assert sc._jsc.sc().dagScheduler().nextJobId() == before
+    assert set(sc._jsc.getPersistentRDDs().keys()) == pinned
+
+
+def test_walk_mass_plan_adds_one_join_per_round(spark):
+    """Each round reads mass once, so three more rounds add exactly
+    three joins to the plan that ran; a round that read mass twice
+    would double the plan every round instead."""
+    from flink_examples_spark.plans import join_count
+
+    pairs = [(a, (a * 3 + 1) % 6, a % 3 + 1) for a in range(6)]
+    edges = spark.createDataFrame(pairs, "src long, dst long, w long")
+    joins = {}
+    for k in (3, 6):
+        df = walk_mass(edges, iterations=k)
+        df.collect()
+        joins[k] = join_count(df)
+    assert joins[6] - joins[3] == 3
 
 
 def test_transition_edges_golden(spark):

@@ -7,7 +7,8 @@ chosen, and ``ts_display``'s ``fmt`` is a date pattern. The minhash and
 inverted-index operators tokenize their own input (only the Jaccard
 verify stage reads a shared shingle index), and the delta / eval sides
 of the incremental LSH, merge and decontamination joins are always
-broadcast.
+broadcast. Compact-every-N hooks ride only the staged faces a caller
+schedules compaction on.
 """
 
 from __future__ import annotations
@@ -23,6 +24,13 @@ ALLOWED = {
     "shingles_df": {"verify_jaccard_on_candidates"},
     "broadcast_delta": set(),
     "broadcast_eval": set(),
+    "compact_every_n_batches": {
+        "cdc_merge_foreach_batch",
+        "paragraph_dedup_ingest_foreach_batch",
+        "span_dedup_ingest_foreach_batch",
+        "bitmap_ingest_foreach_batch",
+        "_staged_fp_ingest_foreach_batch",
+    },
 }
 
 

@@ -569,7 +569,7 @@ def test_containment_matches_bruteforce(spark, docs):
                   st.integers(1, 9)),
         min_size=1, max_size=20,
     ),
-    iters=st.integers(1, 3),
+    iters=st.integers(0, 5),
 )
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
