@@ -20,12 +20,13 @@ table is integer — so the DuckDB oracle (the same recurrence unrolled
 as CTEs) hash-matches exactly, the same contract as the rest of the
 registry.
 
-Scale shape: each iteration is one join of the mass vector against the
-edge list plus one self row per node (both keyed by src) and one
-map-side-combinable groupBy. Nothing is ever all-pairs; the mass
-vector is |V| rows, the join is |E| + |V| rows. For billion-edge graphs
-the edge list with its precomputed out-weight is the stageable
-artifact. Iteration-in-driver-loop precedent: operators/iteration.py
+Scale shape: one exchange by node builds the edge table (edge rows and
+one self row per node, each with its node's out-weight); round 1 reads
+the initial mass off it, each later round joins the mass vector to its
+one broadcast, and every round ends in one map-side-combinable groupBy.
+Nothing is ever all-pairs: the mass vector is |V| rows, a round |E| +
+|V|. For billion-edge graphs the edge table is the stageable artifact.
+Iteration-in-driver-loop precedent: operators/iteration.py
 (fib_iterate, D6) and the pointer-doubling connected components
 (operators/dedup.py).
 
@@ -51,51 +52,52 @@ def walk_mass(
 ) -> DataFrame:
     """Run ``iterations`` rounds of integer damped-walk mass over
     ``edges`` (columns ``src, dst, w``; ``w`` a positive integer
-    weight). Returns ``(node, mass)`` with
-    Σ mass = |V| * init_mass exactly, as one lazy plan whose depth
-    grows linearly with ``iterations`` (one join and one groupBy per
-    round); building it submits no job.
+    weight; parallel ``(src, dst)`` rows collapse into one edge of
+    their summed weight). Returns ``(node, mass)`` with Σ mass =
+    |V| * init_mass exactly, as one lazy plan whose depth grows
+    linearly with ``iterations``; building it submits no job. A null
+    endpoint or weight, or a weight ≤ 0, fails the job that runs it.
 
-    Overflow headroom: the per-edge numerator is
-    ``mass * damp_num * w`` ≤ |V|·init_mass·damp_num·w — with the
-    defaults and a 10⁹-node graph that is ~10¹⁷·w, so keep
-    ``init_mass`` modest for huge weighted graphs (the ranking only
-    depends on the ratio mass/init_mass).
+    Overflow headroom: the per-edge numerator ``mass * damp_num * w``
+    reaches |V|·init_mass·damp_num·w, ~10¹⁷·w with the defaults on a
+    10⁹-node graph; keep ``init_mass`` modest for huge weighted graphs
+    (the ranking depends only on the ratio mass/init_mass).
     """
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # the edge rows plus one self row per node, keyed by source, each
-    # with its source's out-weight (self rows weigh 0): each round reads
-    # the mass vector ONCE, in one join against this table, so the plan
-    # grows by one join per round and needs no pins. A round that reads
-    # mass twice (kept mass beside the sends) doubles the plan every
-    # round.
+    if iterations < 0:
+        raise ValueError(f"iterations must be >= 0, got {iterations}")
+    src, dst, w = F.col("src"), F.col("dst"), F.col("w")
+    w = F.when(src.isNotNull() & dst.isNotNull() & (w > 0), w).otherwise(
+        F.raise_error(F.lit("walk_mass: null src/dst or weight <= 0")))
+    # e: each edge row and one self row (node, node, w=0) per node, all
+    # with the node's out-weight, from one exchange by node; keep marks
+    # self rows (every edge has w > 0). The explicit not-null filter is
+    # the rounds' inferred one, so all rounds share one broadcast of e.
     e = (
-        edges.select(
-            F.col("src").alias("node"), "dst", "w", F.lit(False).alias("keep")
-        )
-        .unionByName(nodes.select(
-            "node", F.col("node").alias("dst"), F.lit(0).alias("w"),
-            F.lit(True).alias("keep"),
-        ))
+        edges.select(F.inline(F.array(
+            F.struct(src.alias("node"), dst.alias("dst"), w.alias("w")),
+            F.struct(src.alias("node"), src.alias("dst"), F.lit(0).alias("w")),
+            F.struct(dst.alias("node"), dst.alias("dst"), F.lit(0).alias("w")),
+        )))
+        .filter(F.col("node").isNotNull())
         .withColumn("w_out", F.sum("w").over(Window.partitionBy("node")))
+        .groupBy("node", "dst", (F.col("w") == 0).alias("keep"), "w_out")
+        .agg(F.sum("w").alias("w"))
     )
-    mass = nodes.withColumn("mass", F.lit(init_mass).cast("long"))
+    init = F.lit(init_mass).cast("long").alias("mass")
+    mass = e.filter("keep").select("node", init)
     # c: all of the mass on a self row, the floored send on an edge row
     keep = F.col("keep")
     c = F.when(keep, F.col("mass")).otherwise(
         F.expr(f"(mass * {damp_num} * w) div ({damp_den} * w_out)")
     )
-    for _ in range(iterations):
-        # new mass = old mass - Σ sent + Σ received: every joined row
-        # emits -c at its source (0 on a self row) and +c at its
-        # destination, and one map-side-combinable groupBy sums them
+    # new mass = old mass - Σ sent + Σ received, reading mass once per
+    # round (twice would double the plan each round): each row emits -c
+    # at its source (0 on a self row) and +c at its destination, summed
+    # by one map-side-combinable groupBy. Round 1 needs no join.
+    for i in range(iterations):
+        rows = mass.join(e, "node") if i else e.select("*", init)
         mass = (
-            mass.join(e, "node")
-            .select(F.inline(F.array(
+            rows.select(F.inline(F.array(
                 F.struct("node", F.when(keep, 0).otherwise(-c).alias("mass")),
                 F.struct(F.col("dst").alias("node"), c.alias("mass")),
             )))
@@ -155,17 +157,13 @@ def triangle_counts(
     an edge pair. Input edges may carry duplicates or both directions
     — they are canonicalized and deduped first.
 
-    The canonical undirected list and the oriented list are each
-    consumed by several downstream joins (und: degrees + orientation +
-    the closing-edge lookup; oriented: both wedge sides), so both are
-    pinned with ``localCheckpoint`` — un-pinned, every consumer
-    re-derives the whole upstream edge derivation (for the co-purchase
-    query that is the lineitem self-join: 24 scans / 42 Exchange nodes
-    in the r13 profile; ReuseExchange deduped part of the runtime but
-    the solo A/B still reads x1.23 — 2.87s -> 2.33s steady at sf0.1,
-    mostly planning + AQE re-optimization over the duplicated
-    subtrees). Both are |E|-row key tables — the linear-size artifact
-    a 100 TB run would stage anyway, never the payload.
+    The canonical undirected list and the oriented list each feed
+    several joins (und: degrees, orientation, the closing-edge lookup;
+    oriented: both wedge sides), so both are pinned with
+    ``localCheckpoint``: un-pinned, every consumer re-derives the edge
+    derivation (for the co-purchase query, the lineitem self-join:
+    2.87 s against 2.33 s pinned at sf0.1). Both are |E|-row key
+    tables, the linear-size artifact a 100 TB run would stage anyway.
     """
     lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     und = (

@@ -1,6 +1,7 @@
 """Physical-plan inspection utilities (scale discipline tooling)."""
 
 from flink_examples_spark.plans.inspect import (  # noqa: F401
+    broadcast_count,
     exchange_count,
     formatted_plan,
     has_broadcast_join,

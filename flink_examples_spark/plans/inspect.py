@@ -52,6 +52,7 @@ def has_broadcast_join(df: DataFrame) -> bool:
 
 
 _EXCHANGE_NODE = re.compile(r"^[\s:+\-*]*Exchange \(\d+\)")
+_BROADCAST_NODE = re.compile(r"^[\s:+\-*]*BroadcastExchange \(\d+\)")
 _JOIN_NODE = re.compile(r"^[\s:+\-*]*\w+Join ")
 
 
@@ -73,6 +74,12 @@ def exchange_count(df: DataFrame) -> int:
     """Shuffle exchanges in the plan that runs (excluding broadcast
     exchanges) — the number every operator fights to minimize."""
     return sum(bool(_EXCHANGE_NODE.match(ln)) for ln in _ran_plan_tree(df))
+
+
+def broadcast_count(df: DataFrame) -> int:
+    """Broadcast exchanges built by the plan that runs; one reused
+    through ``ReusedExchange`` is built once and counted once."""
+    return sum(bool(_BROADCAST_NODE.match(ln)) for ln in _ran_plan_tree(df))
 
 
 def join_count(df: DataFrame) -> int:

@@ -7045,9 +7045,12 @@ def _walk_mass_sql(iters: int = 3) -> str:
         "EXACT integer arithmetic — floor-division sends, remainder "
         "kept, total mass conserved to the unit — so the iterative "
         "fixpoint hash-matches the unrolled SQL recurrence exactly, "
-        "which float PageRank never can. Each iteration is one "
-        "mass-x-edges join (each node's self row carries its kept "
-        "mass) plus one map-side-combinable groupBy.",
+        "which float PageRank never can. The edge table (each node's "
+        "self row carries its kept mass) is built by one exchange and "
+        "broadcast once; iteration 1 reads the initial mass off it, "
+        "each later iteration is one mass-x-edges join against that "
+        "broadcast, and every iteration ends in one map-side-combinable "
+        "groupBy.",
 )
 def event_graph_walk_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_examples_spark.functions.scalar import json_field

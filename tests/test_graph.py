@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from flink_examples_spark.operators.graph import transition_edges, walk_mass
 
 
@@ -75,31 +77,75 @@ def test_deep_iteration_wall_time_is_linear(spark):
 
 def test_walk_mass_query_builds_lazily(spark, sf_dir):
     """Building the walk-mass query submits no job and pins nothing:
-    the rounds are one lazy plan, not a loop of eager pins."""
+    the rounds are one lazy plan, not a loop of eager pins. Running it
+    takes at most 8 jobs: two for the edge build, one node exchange and
+    one broadcast for the edge table, one per round and the result."""
     from flink_examples_spark.queries import registry
 
     sc = spark.sparkContext
     pinned = set(sc._jsc.getPersistentRDDs().keys())
     before = sc._jsc.sc().dagScheduler().nextJobId()
-    registry()["event_graph_walk_mass"].spark_fn(spark, sf_dir)
-    assert sc._jsc.sc().dagScheduler().nextJobId() == before
+    df = registry()["event_graph_walk_mass"].spark_fn(spark, sf_dir)
+    built = sc._jsc.sc().dagScheduler().nextJobId()
+    assert built == before
     assert set(sc._jsc.getPersistentRDDs().keys()) == pinned
+    df.collect()
+    assert sc._jsc.sc().dagScheduler().nextJobId() - built <= 8
 
 
 def test_walk_mass_plan_adds_one_join_per_round(spark):
     """Each round reads mass once, so three more rounds add exactly
-    three joins to the plan that ran; a round that read mass twice
-    would double the plan every round instead."""
-    from flink_examples_spark.plans import join_count
+    three joins and three jobs to the plan that ran; a round that read
+    mass twice would double the plan every round instead. Every round
+    probes the same edge table, so its broadcast is built once."""
+    from flink_examples_spark.plans import broadcast_count, join_count
 
+    sc = spark.sparkContext
     pairs = [(a, (a * 3 + 1) % 6, a % 3 + 1) for a in range(6)]
     edges = spark.createDataFrame(pairs, "src long, dst long, w long")
-    joins = {}
+    joins, jobs = {}, {}
     for k in (3, 6):
         df = walk_mass(edges, iterations=k)
+        before = sc._jsc.sc().dagScheduler().nextJobId()
         df.collect()
+        jobs[k] = sc._jsc.sc().dagScheduler().nextJobId() - before
         joins[k] = join_count(df)
+        assert broadcast_count(df) == 1
     assert joins[6] - joins[3] == 3
+    assert jobs[6] - jobs[3] == 3
+
+
+def test_walk_mass_parallel_edges_collapse_by_weight_sum(spark):
+    """Parallel (src, dst) rows are one edge of their summed weight:
+    the floored send is taken once on the sum, not per row."""
+    schema = "src long, dst long, w long"
+    split = spark.createDataFrame([(1, 2, 1), (1, 2, 2)], schema)
+    whole = spark.createDataFrame([(1, 2, 3)], schema)
+    for k in (1, 2):
+        assert _masses(walk_mass(split, k)) == _masses(walk_mass(whole, k))
+
+
+def test_walk_mass_rejects_negative_iterations(spark):
+    edges = spark.createDataFrame([(1, 2, 1)], "src long, dst long, w long")
+    with pytest.raises(ValueError, match="iterations"):
+        walk_mass(edges, iterations=-1)
+
+
+@pytest.mark.parametrize("bad", [
+    (None, 2, 1), (1, None, 1), (1, 2, 0), (1, 2, -3), (1, 2, None),
+])
+def test_walk_mass_bad_edge_fails_the_job(spark, bad):
+    """A null endpoint or a non-positive weight fails the job that
+    runs the walk, instead of silently dropping mass; building the
+    plan still submits no job."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(2, 3, 1), bad], "src long, dst long, w long")
+    before = sc._jsc.sc().dagScheduler().nextJobId()
+    df = walk_mass(edges, iterations=2)
+    assert sc._jsc.sc().dagScheduler().nextJobId() == before
+    with pytest.raises(Exception, match="walk_mass: null src/dst"):
+        df.collect()
 
 
 def test_transition_edges_golden(spark):

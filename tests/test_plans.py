@@ -493,8 +493,9 @@ def test_rollup_is_single_expand_single_exchange(spark, sf_dir):
 
 
 def test_walk_mass_no_cartesian_no_python(spark, sf_dir):
-    """3 iterations = 3 hash joins + combinable aggs; nothing
-    quadratic, nothing Python-side."""
+    """3 iterations = 2 hash joins (round 1 reads the constant initial
+    mass off the edge table) + combinable aggs; nothing quadratic,
+    nothing Python-side."""
     from flink_examples_spark.queries import registry
 
     df = registry()["event_graph_walk_mass"].spark_fn(spark, sf_dir)

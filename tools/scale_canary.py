@@ -423,8 +423,8 @@ def main() -> None:
             lambda d: _containment(d),
         ),
         # r5: iterative walk — per-user transition window (linear) +
-        # 3 mass×edges joins over a bounded node set; curve must stay
-        # linear in |events| with no iteration-driven blowup
+        # 3 rounds (2 mass×edges joins) over a bounded node set; curve
+        # must stay linear in |events| with no iteration-driven blowup
         "event_walk_mass": (
             events1, "event_id",
             lambda d: _walk(d),
