@@ -961,7 +961,11 @@ def countmin_ingest_foreach_batch(
     (operators/sketches.py): each micro-batch writes ITS OWN sketch
     table under ``sketch_path/batch=<id>`` — at most depth × width rows
     per batch, the mergeable-sketch property doing exactly what it
-    exists for. Readers fold subdirs by cell-wise sum
+    exists for. One task writes it as one file: the shuffle of a batch
+    that comes out of a stateful operator (a dedup, say) is not
+    coalesced, so the final stage would otherwise write one tiny file
+    per shuffle partition, and every reader and compaction would open
+    them all. Readers fold subdirs by cell-wise sum
     (:func:`read_countmin_sketch`); estimates never touch raw events.
 
     Replay safety: the per-batch write is ``mode("overwrite")`` into
@@ -978,7 +982,7 @@ def countmin_ingest_foreach_batch(
 
     return _staged_ingest(
         sketch_path, None, None,
-        lambda df: countmin_table(df, key_col, depth, width),
+        lambda df: countmin_table(df, key_col, depth, width).coalesce(1),
     )
 
 

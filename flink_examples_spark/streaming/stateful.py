@@ -18,8 +18,9 @@ state and timeouts:
                                   epoch-us slot per step per user, emits a
                                   row the moment a step first completes
                                   (twin of journey.funnel_first_times)
-  streaming_dedup_ttl           — keyed first-occurrence dedup with state
-                                  TTL (ST6, StateTtl.java:15-22)
+  streaming_dedup_ttl           — keyed first-occurrence dedup: Spark's
+                                  native streaming dedup without a TTL,
+                                  GroupState with one (ST6, D8)
   streaming_dfa_alerts          — StateMachineExample.java:133-166 (ST7)
   streaming_cep                 — the batch NFA (operators/cep.py) with its
                                   pending buffer in GroupState (C1-C5)
@@ -377,12 +378,19 @@ def streaming_dedup_ttl(
     key_cols: Sequence[str],
     ttl_ms: int | None = None,
 ) -> DataFrame:
-    """First-occurrence dedup per key with optional state TTL (ST6).
+    """First-occurrence dedup per key with optional state TTL (ST6):
+    emits the key columns, with their input types, on first sight.
 
-    Emits the key columns on first sight; later duplicates only bump a
-    drop counter held in state. With ``ttl_ms``, the seen-marker expires
-    two ways, reproducing StateTtl.java:15-22 OnCreateAndWrite +
-    NeverReturnExpired:
+    Without ``ttl_ms`` this is Spark's own streaming dedup
+    (``dropDuplicates``, the native ``Deduplicate`` state operator: the
+    state holds only the key, no Python runs). Checkpoints written
+    before it replaced the GroupState path here hold a different state
+    schema and cannot be resumed; start a fresh checkpoint.
+
+    With ``ttl_ms`` the GroupState path keeps a drop counter and a
+    last-write stamp per key, and the seen-marker expires two ways,
+    reproducing StateTtl.java:15-22 OnCreateAndWrite +
+    NeverReturnExpired (D8):
 
     - timer path: the processing-time timeout fires with no data → the
       state is removed outright — NOT re-created — so the key's next
@@ -393,51 +401,36 @@ def streaming_dedup_ttl(
       ignored, exactly NeverReturnExpired's read-time check, and the
       key re-emits.
 
-    This is the streaming twin of exact_dedup_groups.
-
-    Operational note: an ARMED processing-time timer keeps an
-    ``availableNow`` run alive indefinitely (Spark waits to fire it);
-    bounded replay runs should stop the query once input is drained
-    instead of relying on self-termination. Continuous-trigger
-    deployments are unaffected.
+    The armed processing-time timer keeps an ``availableNow`` run alive
+    indefinitely (Spark waits to fire it); bounded TTL replays should
+    stop the query once input is drained. This is the streaming twin
+    of exact_dedup_groups.
     """
     keys = list(key_cols)
+    if ttl_ms is None:
+        return df.dropDuplicates(keys).select(*keys)
 
     def step(key_t, rows, state):
-        n = len(rows)
-        now_ms = int(time.time() * 1000)
         if state.hasTimedOut:
-            # TTL expired. No data this trigger: drop the state and do
-            # NOT re-arm (re-creating here would leak state + churn the
-            # timer forever and suppress the key's re-emission, D8).
+            # TTL expired: drop the state and do NOT re-arm (re-creating
+            # it here would leak state, churn the timer forever and
+            # suppress the key's re-emission, D8)
             state.remove()
-            if n == 0:
-                return []
-            first = True  # expired key re-occurring: brand new
-            dropped = n - 1
-        elif state.exists:
-            dropped, last_ms = state.get
-            if ttl_ms is not None and now_ms - last_ms > ttl_ms:
-                # read-time expiry: NeverReturnExpired — stale marker
-                # counts as absent even before its timer fires
-                first = n > 0
-                dropped = n - 1 if n else 0
-            else:
-                first = False
-                dropped += n
-        else:
-            first = n > 0
-            dropped = n - 1 if n else 0
-        if n:
-            state.update((dropped, now_ms))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-        return [tuple(key_t)] if first and n else []
+        n = len(rows)
+        if n == 0:
+            return []
+        now_ms = int(time.time() * 1000)
+        # read-time expiry: NeverReturnExpired — a stale marker counts
+        # as absent even before its timer fires
+        first = not state.exists or now_ms - state.get[1] > ttl_ms
+        dropped = n - 1 if first else state.get[0] + n
+        state.update((dropped, now_ms))
+        state.setTimeoutDuration(ttl_ms)
+        return [tuple(key_t)] if first else []
 
     return _keyed_state(
         df, keys, [], step, _ddl(df, keys), "dropped long, last_ms long",
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout,
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 

@@ -227,6 +227,104 @@ def test_streaming_dedup_ttl_first_occurrence(spark, tmp_path):
     assert sorted(r.fp for r in out.collect()) == ["a", "b", "c"]
 
 
+# duplicates within a chunk (rows 0-1, 7-8, 10-11 share a chunk at 1,
+# 2 and 4 chunks) and across chunks (rows 3/6 and 4/9 straddle the 2-
+# and 4-chunk cuts), a null in the string key column
+_DEDUP_TAPE = pd.DataFrame({
+    "uid": [1, 1, 2, 2, 3, 1, 2, 4, 4, 3, 5, 5],
+    "kind": ["a", "a", "b", None, "a", "a", None, "c", "c", "a", "b", "b"],
+    "n": list(range(12)),
+})
+
+
+@pytest.mark.parametrize("n_chunks", [1, 2, 4])
+def test_streaming_dedup_native_matches_batch_distinct(
+    spark, tmp_path, n_chunks
+):
+    """Without a TTL the dedup is Spark's native streaming dedup: each
+    (long, string) key is emitted exactly once whatever the chunking,
+    the rows equal the batch distinct of the whole tape, and the key
+    columns keep their input types."""
+    from flink_examples_spark.streaming.stateful import streaming_dedup_ttl
+
+    keys = ["uid", "kind"]
+    d = write_chunks(_DEDUP_TAPE, str(tmp_path / "in"), n_chunks)
+    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
+    out = streaming_dedup_ttl(src, keys)
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        (f.name, f.dataType) for f in src.select(*keys).schema.fields
+    ]
+    got = [tuple(r) for r in run_to_memory(
+        out, spark, f"dedup_native_{n_chunks}", "append", str(tmp_path / "ck")
+    ).collect()]
+    assert len(got) == len(set(got))
+
+    def order(r):
+        return (r[0], r[1] is None, r[1] or "")
+
+    want = spark.read.parquet(d).select(*keys).distinct().collect()
+    assert sorted(got, key=order) == sorted(map(tuple, want), key=order)
+
+
+def test_streaming_dedup_plans_native_without_ttl_python_with(spark, tmp_path):
+    """The no-TTL dedup plans Spark's Deduplicate state operator and no
+    Python; the TTL emulation (D8) still plans the GroupState node."""
+    from flink_examples_spark.plans.inspect import formatted_plan
+    from flink_examples_spark.streaming.stateful import streaming_dedup_ttl
+
+    d = write_chunks(_DEDUP_TAPE, str(tmp_path / "in"), 1)
+    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
+    native = formatted_plan(streaming_dedup_ttl(src, ["uid", "kind"]))
+    assert "Deduplicate" in native
+    assert "FlatMapGroupsInPandasWithState" not in native
+    ttl = formatted_plan(streaming_dedup_ttl(src, ["uid", "kind"], ttl_ms=100))
+    assert "FlatMapGroupsInPandasWithState" in ttl
+    assert "Deduplicate" not in ttl
+
+
+def test_countmin_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
+    """Each micro-batch's Count-Min partial (at most depth x width rows)
+    is one parquet file, not one per shuffle partition, and the staged
+    sketch still folds to the sketch of the whole input. The batches
+    come out of a stateful operator, as in a dedup-then-sketch stream:
+    there the sketch's shuffle is not coalesced."""
+    from flink_examples_spark.operators.sketches import countmin_table
+    from flink_examples_spark.streaming.sinks import (
+        countmin_ingest_foreach_batch,
+        read_countmin_sketch,
+    )
+    from flink_examples_spark.streaming.stateful import streaming_dedup_ttl
+
+    keys = ["uid", "kind"]
+    d = write_chunks(_DEDUP_TAPE, str(tmp_path / "in"), 2)
+    root = str(tmp_path / "cms")
+    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
+    q = (
+        streaming_dedup_ttl(src, keys)
+        .writeStream.foreachBatch(countmin_ingest_foreach_batch(root, "uid"))
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.awaitTermination(180)
+    subs = sorted(f for f in os.listdir(root) if f.startswith("batch="))
+    assert subs == ["batch=0", "batch=1"]
+    for sub in subs:
+        parts = [
+            f for f in os.listdir(os.path.join(root, sub))
+            if f.startswith("part-")
+        ]
+        assert len(parts) == 1, (sub, parts)
+
+    def cells(df):
+        return {(r.j, r.bucket): r.cnt for r in df.collect()}
+
+    whole = countmin_table(
+        spark.read.parquet(d).select(*keys).distinct(), "uid"
+    )
+    assert cells(read_countmin_sketch(spark, root)) == cells(whole)
+
+
 def test_streaming_dfa_matches_batch_alert_counts(spark, tmp_path, events_pdf):
     from flink_examples_spark.operators.stateful import dfa_alerts
     from flink_examples_spark.queries import _DFA_TRANSITIONS
