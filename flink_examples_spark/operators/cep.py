@@ -11,7 +11,7 @@ The reference exposes two pattern surfaces with identical semantics:
 Spark has no Catalyst stage for either, so this module supplies the
 missing operator: a small pattern AST compiled to a backtracking NFA,
 executed per key through ``util.grouped_map_in_pandas``. Each key's rows
-are sorted by the ORDER BY columns and scanned once per start candidate;
+arrive in ORDER BY order and are scanned once per start candidate;
 state never leaves the executor, and keys are processed independently —
 the operator scales with the keyed shuffle, exactly like any groupBy. The
 streaming variant (NFA state in GroupState, event-time timeouts) lives in
@@ -20,6 +20,7 @@ streaming/stateful.py.
 Predicates receive ``(row, ctx)`` where ``ctx`` gives MATCH_RECOGNIZE
 navigation: ``ctx.last()`` (previous row consumed by the match — i.e.
 ``LAST(x, 1)``), ``ctx.first(var)`` / ``ctx.rows(var)`` per variable.
+Measures receive the same dict rows, grouped per variable.
 """
 
 from __future__ import annotations
@@ -59,7 +60,7 @@ class Pat:
     """
 
     name: str
-    where: Callable[[pd.Series, "MatchCtx"], bool] | None = None
+    where: Callable[[dict, "MatchCtx"], bool] | None = None
     quantifier: str = "one"
     contiguity: str = "strict"
     min_times: int | None = None
@@ -84,8 +85,8 @@ class MatchCtx:
     """Navigation over rows already consumed by the in-progress match.
 
     Rows are plain dicts (column -> value) — converted once per key from
-    Arrow, so predicate evaluation never pays pandas ``.iloc`` row
-    materialization in the NFA inner loop.
+    Arrow, so neither predicates nor measures (:func:`_match_vars`) pay
+    pandas ``.iloc`` row materialization on the per-match path.
     """
 
     _rows: list[tuple[str, int]] = field(default_factory=list)
@@ -105,6 +106,16 @@ class MatchCtx:
 
     def rows(self, var: str) -> list[dict]:
         return [self._data[i] for name, i in self._rows if name == var]
+
+
+def _match_vars(
+    records: list[dict], consumed: list[tuple[str, int]]
+) -> dict[str, list[dict]]:
+    """MEASURES input: each variable's consumed rows, in match order."""
+    out: dict[str, list[dict]] = {}
+    for var, idx in consumed:
+        out.setdefault(var, []).append(records[idx])
+    return out
 
 
 def _find_matches(
@@ -352,23 +363,21 @@ def match_recognize(
     partition_by: Sequence[str],
     order_by: Sequence[str],
     pattern: Sequence[Pat],
-    measures: Callable[[dict[str, pd.DataFrame], pd.DataFrame], dict],
+    measures: Callable[[dict[str, list[dict]]], dict],
     output_schema: str,
     after_match: str = "skip_to_next_row",
     within: str | None = None,
     ts_col: str | None = None,
     all_matches: bool = False,
-    max_matches_per_key: int = 100_000,
-    timeout_measures: Callable[[dict[str, pd.DataFrame], pd.DataFrame], dict] | None = None,
-    max_concurrent_partials: int = 64,
+    timeout_measures: Callable[[dict[str, list[dict]]], dict] | None = None,
     row_number_col: str | None = None,
 ) -> DataFrame:
     """Run a MATCH_RECOGNIZE-style pattern per key.
 
-    measures(vars, full_pdf) -> dict: one output row per match, where
-    ``vars`` maps each pattern variable to the DataFrame of rows it
-    consumed (CEP.md MEASURES clause; flatSelect's Map<String,List<Event>>
-    at FlinkCEP.java:83-97).
+    measures(vars) -> dict: one output row per match, where ``vars``
+    maps each pattern variable to the list of rows (the same dicts the
+    predicates see) it consumed, in match order (CEP.md MEASURES clause;
+    flatSelect's Map<String,List<Event>> at FlinkCEP.java:83-97).
 
     after_match: 'skip_to_next_row' | 'skip_past_last' |
     'skip_to_first:<var>' | 'skip_to_last:<var>' — restart position
@@ -392,15 +401,18 @@ def match_recognize(
     NFA computation emits individually, exactly as Flink calls
     processTimedOutMatch once per partial (a row satisfying both a
     looping element and its successor forks two computations; both time
-    out) — see :func:`_live_partials`. ``max_concurrent_partials``
-    bounds the per-anchor branch enumeration (greedy-first, so the cap
-    sheds the shortest branches). Include a discriminator column (e.g.
+    out) — see :func:`_live_partials`, whose ``cap`` bounds the
+    per-anchor branch enumeration (greedy-first, so the cap sheds the
+    shortest branches). ``timeout_measures`` takes the same ``vars`` as
+    ``measures``. Include a discriminator column (e.g.
     ``timed_out boolean``) in the schema and filter to split the side
     output (P7).
 
     row_number_col (r14): when set, each key's rows gain a 1-based
     position column over the ORDER BY order before matching — exactly
-    ``ROW_NUMBER() OVER (PARTITION BY keys ORDER BY order_by)``, but
+    ``ROW_NUMBER() OVER (PARTITION BY keys ORDER BY order_by NULLS
+    LAST)`` (the NFA's row order; Spark SQL's plain ASC puts nulls
+    first), but
     computed inside the NFA's existing per-key sorted pass, so a
     consumer that needs match positions (e.g. rows-between counts)
     reads them from MEASURES instead of re-shuffling the input through
@@ -420,7 +432,6 @@ def match_recognize(
     out_cols = schema_col_names(output_schema)
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ocols, kind="mergesort").reset_index(drop=True)
         if row_number_col is not None:
             pdf[row_number_col] = range(1, len(pdf) + 1)
         # One Arrow->dict conversion per key; the NFA inner loop then
@@ -436,23 +447,19 @@ def match_recognize(
         results: list[dict] = []
         start = 0
         n = len(records)
-        while start < n and len(results) < max_matches_per_key:
+        while start < n:
             found: list[list[tuple[str, int]]] = []
             _find_matches(records, pattern, start, within_check, all_matches, found)
             if not found:
                 if timeout_measures is not None:
                     partials = _live_partials(
-                        records, pattern, start, within_check,
-                        cap=max_concurrent_partials,
+                        records, pattern, start, within_check
                     )
                     if partials:
                         for partial in partials:
-                            pvars: dict[str, list[int]] = {}
-                            for var, idx in partial:
-                                pvars.setdefault(var, []).append(idx)
-                            results.append(timeout_measures(
-                                {v: pdf.iloc[idxs] for v, idxs in pvars.items()}, pdf
-                            ))
+                            results.append(
+                                timeout_measures(_match_vars(records, partial))
+                            )
                         # all partials share one anchor row; resume past
                         # it — later-anchored computations are found at
                         # their own scan position (no duplicates)
@@ -461,11 +468,7 @@ def match_recognize(
                 start += 1
                 continue
             for consumed in found:
-                vars_map: dict[str, list[int]] = {}
-                for var, idx in consumed:
-                    vars_map.setdefault(var, []).append(idx)
-                vars_df = {v: pdf.iloc[idxs] for v, idxs in vars_map.items()}
-                results.append(measures(vars_df, pdf))
+                results.append(measures(_match_vars(records, consumed)))
             if all_matches:
                 start += 1  # every start index is a fresh branch point
             elif after_match == "skip_past_last":
@@ -502,8 +505,9 @@ def match_recognize(
     # group carving instead of groupBy().applyInPandas — the per-group
     # Arrow/pandas machinery dominated the NFA itself at high key
     # cardinality (operators/util.py grouped_map_in_pandas; solo A/B on
-    # cep_reluctant_first_purchase x1.14, 1.56s -> 1.37s steady). `run`
-    # still sorts each group itself, so its contract is unchanged.
+    # cep_reluctant_first_purchase x1.14, 1.56s -> 1.37s steady). Each
+    # group reaches `run` in ORDER BY order (nulls last), so `run` does
+    # not sort.
     return grouped_map_in_pandas(df, pcols, ocols, run, output_schema)
 
 
@@ -511,10 +515,7 @@ def match_recognize(
 # SQL-ish MATCH_RECOGNIZE front-end (C6, flink-sql/sql/dml/CEP.md:70-90)
 # ---------------------------------------------------------------------------
 
-_LAST_RE = None  # compiled lazily
-
-
-def _compile_expr(expr: str, measure_mode: bool):
+def _compile_expr(expr: str):
     """Compile the MATCH_RECOGNIZE expression subset the reference uses
     (CEP.md:83-90) into a Python callable.
 
@@ -631,13 +632,11 @@ def _parse_pattern(pattern_str: str, define: dict) -> list[Pat]:
             raise ValueError(f"degenerate quantifier bounds in {tok!r}")
         where = None
         if name in define:
-            compiled = _compile_expr(define[name], measure_mode=False)
+            compiled = _compile_expr(define[name])
             where = _make_define_predicate(name, compiled)
         pats.append(
-            Pat(name, where=where,
-                quantifier="plus" if (lo, hi) == (1, None) else "one",
-                contiguity="strict", min_times=lo, max_times=hi,
-                reluctant=reluctant)
+            Pat(name, where=where, contiguity="strict", min_times=lo,
+                max_times=hi, reluctant=reluctant)
         )
     if pats and pats[-1].reluctant:
         # Flink rejects patterns ENDING in a reluctant quantifier
@@ -746,23 +745,19 @@ def match_recognize_sql(
         raise NotImplementedError(f"AFTER MATCH {after_match!r}")
 
     compiled_measures = {
-        name: _compile_expr(expr, measure_mode=True)
-        for name, expr in measures.items()
+        name: _compile_expr(expr) for name, expr in measures.items()
     }
 
-    def measure_fn(vars_map: dict[str, pd.DataFrame], pdf) -> dict:
+    def measure_fn(vars_map: dict[str, list[dict]]) -> dict:
         def _last(v, field, n):
-            rows = vars_map.get(v)
+            rows = vars_map.get(v, ())
             n = int(n)
-            if rows is None or len(rows) == 0:
-                return None
-            idx = len(rows) - 1 - n
-            return rows.iloc[idx][field] if idx >= 0 else None
+            return rows[-1 - n][field] if len(rows) > n else None
 
         def _first(v, field, n):
-            rows = vars_map.get(v)
+            rows = vars_map.get(v, ())
             n = int(n)
-            return rows.iloc[n][field] if rows is not None and len(rows) > n else None
+            return rows[n][field] if len(rows) > n else None
 
         def _ref(v, field):
             return _last(v, field, 0)

@@ -95,7 +95,6 @@ def dfa_alerts(
     ocols = list(order_cols)
 
     def run(pkey, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ocols, kind="mergesort")
         state: str | None = None
         alerts = 0
         for sym in pdf[symbol_col]:
@@ -112,8 +111,9 @@ def dfa_alerts(
     key_t = {f.name: f.dataType.simpleString() for f in df.schema.fields}[key]
     # one mapInPandas pass over key-sorted partitions (the r13
     # grouped_map_in_pandas migration): ~|keys| tiny groups paid a
-    # per-group Arrow batch each way under applyInPandas; run() keeps
-    # its own in-group sort so the scan semantics are unchanged
+    # per-group Arrow batch each way under applyInPandas; each group
+    # reaches run() sorted by order_cols (nulls last), so run() scans
+    # it as it comes
     return grouped_map_in_pandas(
         df, [key], ocols, run, f"key {key_t}, n_events long, n_alerts long"
     ).withColumnRenamed("key", key)
@@ -140,7 +140,6 @@ def delta_trigger(
     ocols = list(order_cols)
 
     def run(pkey, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ocols, kind="mergesort")
         # NULL deltas advance nothing (SQL SUM-skips-NULL semantics);
         # without fillna a single NULL poisons the cumsum into NaN and
         # astype('int64') raises on non-finite values

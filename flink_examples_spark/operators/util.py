@@ -6,6 +6,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 
@@ -54,8 +55,11 @@ def grouped_map_in_pandas(
     cluster's default parallelism), sorted WITHIN partitions by
     ``keys + order`` in the JVM, and groups are carved out of the
     streamed batches with a vectorized key-change scan. ``fn(key_tuple,
-    group_pdf)`` keeps the exact applyInPandas contract (it may sort,
-    filter, or return any number of rows); a group whose rows span
+    group_pdf)`` keeps the applyInPandas contract (it may filter or
+    return any number of rows), and each group reaches it already
+    sorted by ``order`` with nulls last — the order a stable pandas
+    ``sort_values(order)`` gives — so ``fn`` need not sort; rows that
+    tie on ``order`` come in no fixed order. A group whose rows span
     batch boundaries is carried forward as a LIST of batch slices and
     concatenated exactly once when the group closes, so a hot key
     spanning k batches copies its bytes once, not O(k^2) times
@@ -167,6 +171,6 @@ def grouped_map_in_pandas(
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.repartition(num_partitions, *pcols)
-        .sortWithinPartitions(*pcols, *ocols)
+        .sortWithinPartitions(*pcols, *(F.asc_nulls_last(c) for c in ocols))
         .mapInPandas(run_part, output_schema)
     )

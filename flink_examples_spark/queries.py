@@ -663,11 +663,11 @@ def cep_ascending_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         Pat("C", where=c_where, contiguity="strict"),
     ]
 
-    def measures(vars_map, pdf):
+    def measures(vars_map):
         return {
-            "a_id": int(vars_map["A"].iloc[0]["event_id"]),
-            "b_id": int(vars_map["B"].iloc[0]["event_id"]),
-            "c_id": int(vars_map["C"].iloc[0]["event_id"]),
+            "a_id": int(vars_map["A"][0]["event_id"]),
+            "b_id": int(vars_map["B"][0]["event_id"]),
+            "c_id": int(vars_map["C"][0]["event_id"]),
         }
 
     return match_recognize(

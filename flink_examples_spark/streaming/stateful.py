@@ -76,6 +76,7 @@ from flink_examples_spark.operators.cep import (
     _find_matches,
     _live_partials,
     _match_could_extend,
+    _match_vars,
 )
 from flink_examples_spark.operators.util import schema_col_names
 from flink_examples_spark.streaming.finalize import FINALIZE_TS_MS, drop_finalize
@@ -475,7 +476,6 @@ def streaming_cep(
     within_ms: int,
     order_cols: Sequence[str] | None = None,
     timeout_measures=None,
-    max_concurrent_partials: int = 64,
 ) -> DataFrame:
     """Streaming CEP: the batch NFA (operators/cep.py) with its pending
     buffer in GroupState (C1-C5 streaming; SURVEY.md §3.3).
@@ -486,7 +486,9 @@ def streaming_cep(
     (AFTER MATCH SKIP TO NEXT ROW), and evicts starts whose ``within``
     horizon has passed — with per-key ordered arrival (the module
     contract above) eviction is exact: a start older than
-    ``max_seen_ts - within`` can never complete.
+    ``max_seen_ts - within`` can never complete. ``measures(vars)``
+    gets the batch contract: ``vars`` maps each variable to the list of
+    row dicts it consumed, in match order, with ``ts_col`` as epoch ms.
 
     timeout_measures (C4 streaming, cep/CEPTimeout.java:59-103): when
     set, a start whose horizon passes does NOT evict silently — EVERY
@@ -495,13 +497,13 @@ def streaming_cep(
     processTimedOutMatch once per partial (same contract and the same
     branch enumeration as the batch
     ``match_recognize(timeout_measures=...)``, see
-    ``operators.cep._live_partials``; ``max_concurrent_partials``
-    bounds it). Include a discriminator column such as ``timed_out
-    boolean`` in ``output_schema`` and filter to split the side
-    output. A partial can only emit once the watermark-like horizon
-    ``max_seen_ts - within`` passes its first row, which may be a
-    later trigger than the one that buffered it — the timer latency
-    the reference's TimedOutPartialMatchHandler has too.
+    ``operators.cep._live_partials``, whose ``cap`` bounds it).
+    Include a discriminator column such as ``timed_out boolean`` in
+    ``output_schema`` and filter to split the side output. A partial
+    can only emit once the watermark-like horizon ``max_seen_ts -
+    within`` passes its first row, which may be a later trigger than
+    the one that buffered it — the timer latency the reference's
+    TimedOutPartialMatchHandler has too.
 
     Match emission (D10, narrowed r6): a completed match emits in the
     trigger that completes it UNLESS its greedy tail sits at the
@@ -550,12 +552,6 @@ def streaming_cep(
         def within_check(first_idx: int, idx: int) -> bool:
             return records[idx][ts_col] - records[first_idx][ts_col] <= within_ms
 
-        def vars_of(match) -> dict[str, pd.DataFrame]:
-            vars_map: dict[str, list[dict]] = {}
-            for var, idx in match:
-                vars_map.setdefault(var, []).append(records[idx])
-            return {v: pd.DataFrame(r) for v, r in vars_map.items()}
-
         results = []
         start = 0
         n = len(records)
@@ -579,7 +575,7 @@ def streaming_cep(
                     and _match_could_extend(pattern, m)
                 ):
                     break  # keep buffered; re-scan next trigger
-                results.append(measures(vars_of(m), None))
+                results.append(measures(_match_vars(records, m)))
                 start = m[0][1] + 1
             elif records[start][ts_col] + within_ms < max_ts:
                 # Horizon passed for the row at ``start``: nothing can
@@ -594,8 +590,7 @@ def streaming_cep(
                 # is dropped and the anchor stays buffered.
                 if timeout_measures is not None:
                     partials = _live_partials(
-                        records, pattern, start, within_check,
-                        cap=max_concurrent_partials,
+                        records, pattern, start, within_check
                     )
                     # all partials share one anchor row (see
                     # _live_partials); one horizon check covers them
@@ -605,7 +600,7 @@ def streaming_cep(
                     ):
                         for partial in partials:
                             results.append(
-                                timeout_measures(vars_of(partial), None)
+                                timeout_measures(_match_vars(records, partial))
                             )
                         start = partials[0][0][1] + 1
                         continue

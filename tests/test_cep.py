@@ -44,11 +44,11 @@ def test_match_recognize_v_pattern_golden(spark):
         Pat("PRICE_UP", where=up),
     ]
 
-    def measures(vars_map, pdf):
+    def measures(vars_map):
         return {
-            "start_tstamp": vars_map["START_ROW"].iloc[0]["rowtime"],
-            "bottom_tstamp": vars_map["PRICE_DOWN"].iloc[-1]["rowtime"],
-            "end_tstamp": vars_map["PRICE_UP"].iloc[-1]["rowtime"],
+            "start_tstamp": vars_map["START_ROW"][0]["rowtime"],
+            "bottom_tstamp": vars_map["PRICE_DOWN"][-1]["rowtime"],
+            "end_tstamp": vars_map["PRICE_UP"][-1]["rowtime"],
         }
 
     out = match_recognize(
@@ -104,11 +104,11 @@ def test_pattern_api_followed_by_any_golden(spark):
         Pat("end", where=lambda r, c: r["name"] == "end", contiguity="relaxedAll"),
     ]
 
-    def measures(vars_map, pdf):
+    def measures(vars_map):
         return {
-            "start_id": int(vars_map["start"].iloc[0]["id"]),
-            "middle_id": int(vars_map["middle"].iloc[0]["id"]),
-            "end_id": int(vars_map["end"].iloc[0]["id"]),
+            "start_id": int(vars_map["start"][0]["id"]),
+            "middle_id": int(vars_map["middle"][0]["id"]),
+            "end_id": int(vars_map["end"][0]["id"]),
         }
 
     out = match_recognize(
@@ -150,12 +150,12 @@ def test_within_timeout_partial_match_side_output(spark):
             contiguity="relaxed"),
     ]
 
-    def measures(vars_map, pdf):
-        return {"order_id": vars_map["create"].iloc[0]["order_id"],
+    def measures(vars_map):
+        return {"order_id": vars_map["create"][0]["order_id"],
                 "timed_out": False}
 
-    def timeout_measures(vars_map, pdf):
-        return {"order_id": vars_map["create"].iloc[0]["order_id"],
+    def timeout_measures(vars_map):
+        return {"order_id": vars_map["create"][0]["order_id"],
                 "timed_out": True}
 
     out = match_recognize(
@@ -314,6 +314,50 @@ def test_row_number_col_clash_with_input_column_raises(spark):
     for taken in ("ts", "kind"):
         with _pytest.raises(ValueError, match="already an input column"):
             run(taken)
+
+
+def test_row_number_col_counts_null_order_values_last(spark):
+    """Rows whose ORDER BY value is NULL sort after every non-null row
+    of their key (ties on ``ts`` broken by ``id``), so they take the
+    highest ``row_number_col`` positions and can match among
+    themselves."""
+    from flink_examples_spark.operators.cep import match_recognize_sql
+
+    rows = [
+        ("k", None, 0, "a"), ("k", 0, 1, "x"), ("k", None, 2, "b"),
+        ("k", 1, 3, "a"), ("k", 2, 4, "b"), ("k", None, 5, "a"),
+        ("k", 3, 6, "a"), ("j", None, 7, "a"), ("j", 5, 8, "b"),
+        ("j", None, 9, "b"),
+    ]
+    out = match_recognize_sql(
+        spark.createDataFrame(rows, "pk string, ts long, id long, kind string"),
+        partition_by=["pk"],
+        order_by=["ts", "id"],
+        measures={"a_id": "A.id", "b_id": "B.id",
+                  "a_rn": "A.rn", "b_rn": "B.rn"},
+        pattern="(A B)",
+        define={"A": "A.kind = 'a'", "B": "B.kind = 'b'"},
+        output_schema="pk string, a_id long, b_id long, a_rn long, b_rn long",
+        row_number_col="rn",
+    ).collect()
+    assert sorted(tuple(r) for r in out) == [
+        ("j", 7, 9, 2, 3), ("k", 0, 2, 5, 6), ("k", 3, 4, 2, 3),
+    ]
+
+
+def test_every_row_of_a_large_key_matches(spark):
+    """A key is scanned to its end: 100,001 rows under ``PATTERN (A)``
+    give 100,001 matches, with no per-key cap dropping the tail."""
+    df = spark.range(100_001).selectExpr("'k' AS k", "id AS ts")
+    out = match_recognize(
+        df,
+        partition_by=["k"],
+        order_by=["ts"],
+        pattern=[Pat("A")],
+        measures=lambda v: {"ts": v["A"][0]["ts"]},
+        output_schema="k string, ts long",
+    )
+    assert out.count() == 100_001
 
 
 def test_match_recognize_sql_float_and_string_literals(spark):
@@ -605,12 +649,12 @@ def test_cep_timeout_java_golden_matches_and_single_timeout(spark):
             contiguity="strict"),
     ]
 
-    def measures(v, pdf):
-        return {"start_id": v["start"].iloc[0]["id"],
-                "end_id": v["end"].iloc[0]["id"], "timed_out": False}
+    def measures(v):
+        return {"start_id": v["start"][0]["id"],
+                "end_id": v["end"][0]["id"], "timed_out": False}
 
-    def timeout_measures(v, pdf):
-        return {"start_id": v["start"].iloc[0]["id"],
+    def timeout_measures(v):
+        return {"start_id": v["start"][0]["id"],
                 "end_id": None, "timed_out": True}
 
     out = match_recognize(
@@ -651,14 +695,14 @@ def test_two_concurrent_partials_each_time_out_individually(spark):
         Pat("D", lambda r, c: r["action"] == "d", contiguity="strict"),
     ]
 
-    def timeout_measures(v, pdf):
+    def timeout_measures(v):
         return {"n_b": len(v.get("B", [])),
-                "c_action": (v["C"].iloc[0]["action"]
+                "c_action": (v["C"][0]["action"]
                              if "C" in v else None)}
 
     out = match_recognize(
         df, partition_by=["k"], order_by=["ts"], pattern=pattern,
-        measures=lambda v, p: {"n_b": -1, "c_action": "MATCH"},
+        measures=lambda v: {"n_b": -1, "c_action": "MATCH"},
         output_schema="k string, n_b int, c_action string",
         within="10 minutes", ts_col="ts",
         timeout_measures=timeout_measures,

@@ -6,7 +6,11 @@ O(k^2) bytes for a group spanning k Arrow batches — with a list of
 batch slices concatenated once when the group closes (VERDICT r13 #2).
 These tests force tiny Arrow batches so one hot key spans MANY batches
 and pin exact equality against ``groupBy().applyInPandas``, the
-contract the helper replaces.
+contract the helper replaces. The helper hands each group over already
+sorted by ``order`` with nulls last, so the per-group function here
+does not sort, while the reference sorts each group with pandas'
+``sort_values`` (which puts nulls last too); null ``o`` values check
+that the two orders agree.
 
 All per-group functions are defined INSIDE the tests so cloudpickle
 ships them by value (the tests/ dir is not importable on workers).
@@ -92,6 +96,19 @@ def test_many_small_groups_tiny_batches(spark):
     # groups smaller than, equal to, and straddling the batch size
     rows = [(f"g{i % 17}", i, i * 3 + 1) for i in range(100)]
     with _with_small_batches(spark, 4):
+        got = _run(spark, rows)
+    assert got == _expected(spark, rows)
+
+
+def test_null_order_values_arrive_last(spark):
+    # null ``o`` rows (all with the same ``v``, so their order among
+    # themselves does not change the signature) sit inside a hot key
+    # spanning many batches and inside small keys
+    rows = [
+        ("hot", None if i % 4 == 0 else i, 5 if i % 4 == 0 else i)
+        for i in range(60)
+    ] + [(f"k{i % 3}", None if i % 5 == 0 else i, i % 5) for i in range(20)]
+    with _with_small_batches(spark, 3):
         got = _run(spark, rows)
     assert got == _expected(spark, rows)
 

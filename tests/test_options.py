@@ -8,7 +8,9 @@ inverted-index operators tokenize their own input (only the Jaccard
 verify stage reads a shared shingle index), and the delta / eval sides
 of the incremental LSH, merge and decontamination joins are always
 broadcast. Compact-every-N hooks ride only the staged faces a caller
-schedules compaction on.
+schedules compaction on. The CEP NFA scans every key to its end (no
+per-key match cap), and its timed-out partial enumeration keeps
+``_live_partials``' own cap.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ ALLOWED = {
     "shingles_df": {"verify_jaccard_on_candidates"},
     "broadcast_delta": set(),
     "broadcast_eval": set(),
+    "max_concurrent_partials": set(),
+    "max_matches_per_key": set(),
     "compact_every_n_batches": {
         "cdc_merge_foreach_batch",
         "paragraph_dedup_ingest_foreach_batch",

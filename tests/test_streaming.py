@@ -498,10 +498,10 @@ def test_streaming_cep_matches_batch_exactly(spark, tmp_path, events_pdf):
     ]
     within_ms = 6 * 3600 * 1000
 
-    def s_measures(vars_map, pdf):
-        return {"a_id": int(vars_map["A"].iloc[0]["event_id"]),
-                "a_ts": int(vars_map["A"].iloc[0]["ts"]),
-                "c_id": int(vars_map["C"].iloc[0]["event_id"])}
+    def s_measures(vars_map):
+        return {"a_id": int(vars_map["A"][0]["event_id"]),
+                "a_ts": int(vars_map["A"][0]["ts"]),
+                "c_id": int(vars_map["C"][0]["event_id"])}
 
     d = write_chunks(events_pdf, str(tmp_path / "in"), 4)
     # streaming_cep tracks its horizon per key, not via the query
@@ -524,10 +524,10 @@ def test_streaming_cep_matches_batch_exactly(spark, tmp_path, events_pdf):
     )
     stream_matches = {(r.user_id, r.a_id, r.c_id) for r in out.collect()}
 
-    def b_measures(vars_map, pdf):
-        return {"a_id": int(vars_map["A"].iloc[0]["event_id"]),
-                "a_ts": int(vars_map["A"].iloc[0]["ts"].value // 1_000_000),
-                "c_id": int(vars_map["C"].iloc[0]["event_id"])}
+    def b_measures(vars_map):
+        return {"a_id": int(vars_map["A"][0]["event_id"]),
+                "a_ts": int(vars_map["A"][0]["ts"].value // 1_000_000),
+                "c_id": int(vars_map["C"][0]["event_id"])}
 
     ev = load_table(spark, "events", SF).select(
         "user_id", "event_id", "ts", "value", "event_type"
@@ -850,10 +850,10 @@ def test_streaming_cep_timed_out_partial_across_trigger_boundary(
             contiguity="relaxed"),
     ]
 
-    def measures(vars_map, pdf):
+    def measures(vars_map):
         return {"timed_out": False}
 
-    def timeout_measures(vars_map, pdf):
+    def timeout_measures(vars_map):
         return {"timed_out": True}
 
     batches: list = []
@@ -1095,10 +1095,10 @@ def test_streaming_cep_relaxed_anchor_not_falsely_timed_out(
         streaming_cep(
             file_stream(spark, d, os.path.join(d, "000.parquet")),
             key="k", ts_col="ts", pattern=pattern,
-            measures=lambda v, p: {"timed_out": False},
+            measures=lambda v: {"timed_out": False},
             output_schema="k string, timed_out boolean",
             within_ms=10_000, order_cols=["ts"],
-            timeout_measures=lambda v, p: {"timed_out": True},
+            timeout_measures=lambda v: {"timed_out": True},
         )
         .writeStream.foreachBatch(
             lambda bdf, bid: out_rows.extend(bdf.collect())
@@ -2244,11 +2244,11 @@ def test_streaming_cep_quantified_matches_batch(spark, tmp_path, events_pdf):
     ]
     within_ms = 12 * 3600 * 1000
 
-    def s_measures(vars_map, pdf):
-        return {"v_id": int(vars_map["V"].iloc[0]["event_id"]),
-                "v_ts": int(vars_map["V"].iloc[0]["ts"]),
+    def s_measures(vars_map):
+        return {"v_id": int(vars_map["V"][0]["event_id"]),
+                "v_ts": int(vars_map["V"][0]["ts"]),
                 "n_clicks": int(len(vars_map["C"])),
-                "p_id": int(vars_map["P"].iloc[-1]["event_id"])}
+                "p_id": int(vars_map["P"][-1]["event_id"])}
 
     d = write_chunks(events_pdf, str(tmp_path / "in"), 4)
     src = file_stream(spark, d, os.path.join(d, "000.parquet")).select(
@@ -2267,11 +2267,11 @@ def test_streaming_cep_quantified_matches_batch(spark, tmp_path, events_pdf):
     stream_matches = {(r.user_id, r.v_id, r.n_clicks, r.p_id)
                       for r in out.collect()}
 
-    def b_measures(vars_map, pdf):
-        return {"v_id": int(vars_map["V"].iloc[0]["event_id"]),
-                "v_ts": int(vars_map["V"].iloc[0]["ts"].value // 1_000_000),
+    def b_measures(vars_map):
+        return {"v_id": int(vars_map["V"][0]["event_id"]),
+                "v_ts": int(vars_map["V"][0]["ts"].value // 1_000_000),
                 "n_clicks": int(len(vars_map["C"])),
-                "p_id": int(vars_map["P"].iloc[-1]["event_id"])}
+                "p_id": int(vars_map["P"][-1]["event_id"])}
 
     ev = load_table(spark, "events", SF).select(
         "user_id", "event_id", "ts", "event_type"
@@ -2753,9 +2753,9 @@ def test_streaming_cep_concurrent_partials_agree_with_batch(
         Pat("D", lambda r, c: r["action"] == "d", contiguity="strict"),
     ]
 
-    def timeout_measures(v, pdf):
+    def timeout_measures(v):
         return {"n_b": len(v.get("B", [])),
-                "c_action": (v["C"].iloc[0]["action"]
+                "c_action": (v["C"][0]["action"]
                              if "C" in v else None)}
 
     batches: list = []
@@ -2763,7 +2763,7 @@ def test_streaming_cep_concurrent_partials_agree_with_batch(
     q = (
         streaming_cep(
             src, key="k", ts_col="ts", pattern=pattern,
-            measures=lambda v, p: {"n_b": -1, "c_action": "MATCH"},
+            measures=lambda v: {"n_b": -1, "c_action": "MATCH"},
             output_schema="k string, n_b int, c_action string",
             within_ms=10 * 60 * 1000,
             order_cols=["ts"],
@@ -2836,7 +2836,7 @@ def test_streaming_cep_trailing_greedy_plus_spans_trigger_boundary(
     q = (
         streaming_cep(
             src, key="k", ts_col="ts", pattern=pattern,
-            measures=lambda v, p: {"n_b": len(v["B"])},
+            measures=lambda v: {"n_b": len(v["B"])},
             output_schema="k string, n_b int",
             within_ms=60_000,
             order_cols=["ts"],
@@ -2896,7 +2896,7 @@ def test_streaming_cep_held_match_emits_when_horizon_closes(
     q = (
         streaming_cep(
             src, key="k", ts_col="ts", pattern=pattern,
-            measures=lambda v, p: {"n_b": len(v["B"])},
+            measures=lambda v: {"n_b": len(v["B"])},
             output_schema="k string, n_b int",
             within_ms=60_000,
             order_cols=["ts"],
@@ -3040,16 +3040,16 @@ def test_streaming_cep_sentinel_drains_timeout_partials(spark, tmp_path):
         Pat("D", lambda r, c: r["action"] == "d", contiguity="strict"),
     ]
 
-    def timeout_measures(v, pdf):
+    def timeout_measures(v):
         return {"n_b": len(v.get("B", [])),
-                "c_action": (v["C"].iloc[0]["action"]
+                "c_action": (v["C"][0]["action"]
                              if "C" in v else None)}
 
     src = file_stream(spark, d, os.path.join(d, "000.parquet"))
     out = run_to_memory(
         streaming_cep(
             src, key="k", ts_col="ts", pattern=pattern,
-            measures=lambda v, p: {"n_b": -1, "c_action": "MATCH"},
+            measures=lambda v: {"n_b": -1, "c_action": "MATCH"},
             output_schema="k string, n_b int, c_action string",
             within_ms=10 * 60 * 1000,
             order_cols=["ts"],
@@ -3099,7 +3099,7 @@ def test_streaming_cep_sentinel_drains_held_greedy_match(spark, tmp_path):
     out = run_to_memory(
         streaming_cep(
             src, key="k", ts_col="ts", pattern=pattern,
-            measures=lambda v, p: {"n_b": len(v["B"])},
+            measures=lambda v: {"n_b": len(v["B"])},
             output_schema="k string, n_b int",
             within_ms=10 * 60 * 1000,
             order_cols=["ts"],
@@ -3269,14 +3269,14 @@ def test_streaming_cep_with_sentinel_fuzz_equals_batch(spark, tmp_path):
         ]
         within_ms = rng.choice([4, 7]) * 60 * 1000
 
-        def measures(v, pdf_):
-            return {"a_id": int(v["A"].iloc[0]["event_id"]),
+        def measures(v):
+            return {"a_id": int(v["A"][0]["event_id"]),
                     "n_b": len(v["B"]),
-                    "c_id": int(v["C"].iloc[0]["event_id"]),
+                    "c_id": int(v["C"][0]["event_id"]),
                     "timed_out": False}
 
-        def timeout_measures(v, pdf_):
-            return {"a_id": int(v["A"].iloc[0]["event_id"]),
+        def timeout_measures(v):
+            return {"a_id": int(v["A"][0]["event_id"]),
                     "n_b": len(v.get("B", [])),
                     "c_id": -1, "timed_out": True}
 
@@ -3934,9 +3934,9 @@ def _cep_face(S, src):
     return S.streaming_cep(
         src, key="user_id", ts_col="ts",
         pattern=[Pat("A"), Pat("B", where=rises, contiguity="strict")],
-        measures=lambda vm, _: {
-            "a_id": int(vm["A"].iloc[0]["event_id"]),
-            "b_id": int(vm["B"].iloc[0]["event_id"]),
+        measures=lambda vm: {
+            "a_id": int(vm["A"][0]["event_id"]),
+            "b_id": int(vm["B"][0]["event_id"]),
         },
         output_schema="user_id long, a_id long, b_id long",
         within_ms=3_600_000, order_cols=["ts", "event_id"],
