@@ -22,13 +22,12 @@ registry.
 
 Scale shape: one exchange by node builds the edge table (edge rows and
 one self row per node, each with its node's out-weight); round 1 reads
-the initial mass off it, each later round joins the mass vector to its
-one broadcast, and every round ends in one map-side-combinable groupBy.
+the initial mass off it, each later round joins it co-partitioned, in
+place, and every round ends in one map-side-combinable groupBy by node.
 Nothing is ever all-pairs: the mass vector is |V| rows, a round |E| +
 |V|. For billion-edge graphs the edge table is the stageable artifact.
-Iteration-in-driver-loop precedent: operators/iteration.py
-(fib_iterate, D6) and the pointer-doubling connected components
-(operators/dedup.py).
+Loop-built iteration precedent: operators/iteration.py (fib_iterate,
+D6) and the pointer-doubling connected components (operators/dedup.py).
 
 Reference parity: flink-examples has no graph operator (its iteration
 example is the fibonacci stream, IterateExample.java) — this extends
@@ -71,7 +70,7 @@ def walk_mass(
     # e: each edge row and one self row (node, node, w=0) per node, all
     # with the node's out-weight, from one exchange by node; keep marks
     # self rows (every edge has w > 0). The explicit not-null filter is
-    # the rounds' inferred one, so all rounds share one broadcast of e.
+    # the rounds' inferred one, so all rounds reuse e's node exchange.
     e = (
         edges.select(F.inline(F.array(
             F.struct(src.alias("node"), dst.alias("dst"), w.alias("w")),
@@ -93,9 +92,10 @@ def walk_mass(
     # new mass = old mass - Σ sent + Σ received, reading mass once per
     # round (twice would double the plan each round): each row emits -c
     # at its source (0 on a self row) and +c at its destination, summed
-    # by one map-side-combinable groupBy. Round 1 needs no join.
+    # by one map-side-combinable groupBy. Round 1 needs no join; later
+    # ones build on the |V|-row mass, never on a broadcast of e.
     for i in range(iterations):
-        rows = mass.join(e, "node") if i else e.select("*", init)
+        rows = mass.hint("shuffle_hash").join(e, "node") if i else e.select("*", init)
         mass = (
             rows.select(F.inline(F.array(
                 F.struct("node", F.when(keep, 0).otherwise(-c).alias("mass")),

@@ -7046,11 +7046,11 @@ def _walk_mass_sql(iters: int = 3) -> str:
         "kept, total mass conserved to the unit — so the iterative "
         "fixpoint hash-matches the unrolled SQL recurrence exactly, "
         "which float PageRank never can. The edge table (each node's "
-        "self row carries its kept mass) is built by one exchange and "
-        "broadcast once; iteration 1 reads the initial mass off it, "
-        "each later iteration is one mass-x-edges join against that "
-        "broadcast, and every iteration ends in one map-side-combinable "
-        "groupBy.",
+        "self row carries its kept mass) is built by one exchange by "
+        "node; iteration 1 reads the initial mass off it, each later "
+        "iteration joins the mass vector to it in place on that reused "
+        "exchange (both sides partitioned by node, no broadcast), and "
+        "every iteration ends in one map-side-combinable groupBy.",
 )
 def event_graph_walk_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_examples_spark.functions.scalar import json_field

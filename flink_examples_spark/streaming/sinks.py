@@ -786,7 +786,15 @@ def _staged_ingest(
     into the batch's own ``root/batch=<id>`` — a replayed batch
     REPLACES its partial rather than adding to it. The partial is built
     before the hook, so a face that checks its inputs (the IVF
-    centroids) raises before anything is written."""
+    centroids) raises before anything is written.
+
+    A face whose partial ends in an aggregate ends it in
+    ``.coalesce(1)``: one task writes it as one file. The shuffle of a
+    batch that comes out of a stateful operator (a dedup, say) is not
+    coalesced, so the final stage would otherwise write one tiny file
+    per shuffle partition, and every reader and compaction would open
+    them all. Row-level partials (the vector indexes) are not
+    coalesced: that would run their whole upstream stage as one task."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         _recover_swap(root)
@@ -961,11 +969,8 @@ def countmin_ingest_foreach_batch(
     (operators/sketches.py): each micro-batch writes ITS OWN sketch
     table under ``sketch_path/batch=<id>`` — at most depth × width rows
     per batch, the mergeable-sketch property doing exactly what it
-    exists for. One task writes it as one file: the shuffle of a batch
-    that comes out of a stateful operator (a dedup, say) is not
-    coalesced, so the final stage would otherwise write one tiny file
-    per shuffle partition, and every reader and compaction would open
-    them all. Readers fold subdirs by cell-wise sum
+    exists for, written as one file (see :func:`_staged_ingest`).
+    Readers fold subdirs by cell-wise sum
     (:func:`read_countmin_sketch`); estimates never touch raw events.
 
     Replay safety: the per-batch write is ``mode("overwrite")`` into
@@ -1028,7 +1033,7 @@ def column_profile_ingest_foreach_batch(
 
     return _staged_ingest(
         profile_path, None, None,
-        lambda df: column_profile_partial(df, cols, k),
+        lambda df: column_profile_partial(df, cols, k).coalesce(1),
     )
 
 
@@ -1121,10 +1126,10 @@ def transition_edges_ingest_foreach_batch(
             combined = combined.localCheckpoint(eager=True)
         transition_edges(
             combined, part_col, order_cols, node_col
-        ).write.mode("overwrite").parquet(
+        ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(edges_path, f"batch={batch_id}")
         )
-        if carry_tails:
+        if carry_tails:  # cumulative, one row per key: not coalesced
             _last_events(
                 combined, part_col, order_cols, node_col
             ).write.mode("overwrite").parquet(
@@ -1170,7 +1175,7 @@ def hll_ingest_foreach_batch(
 
     return _staged_ingest(
         sketch_path, None, None,
-        lambda df: hll_registers(df, key_col, group_cols, p),
+        lambda df: hll_registers(df, key_col, group_cols, p).coalesce(1),
     )
 
 
@@ -1236,7 +1241,7 @@ def bitmap_ingest_foreach_batch(
     return _staged_ingest(
         bitmap_path, compact_every_n_batches,
         lambda spark: compact_presence_bitmaps(spark, bitmap_path, group_cols),
-        lambda df: presence_bitmaps(df, group_cols, key_col),
+        lambda df: presence_bitmaps(df, group_cols, key_col).coalesce(1),
     )
 
 
@@ -1298,7 +1303,7 @@ def token_counts_ingest_foreach_batch(
 
     return _staged_ingest(
         counts_path, None, None,
-        lambda df: token_count_partials(df, source_col, text_col),
+        lambda df: token_count_partials(df, source_col, text_col).coalesce(1),
     )
 
 
@@ -1366,7 +1371,7 @@ def url_partials_ingest_foreach_batch(
 
     return _staged_ingest(
         partials_path, None, None,
-        lambda df: url_partials(df, id_col, source_col, chars_col),
+        lambda df: url_partials(df, id_col, source_col, chars_col).coalesce(1),
     )
 
 
@@ -1462,7 +1467,8 @@ def host_line_partials_ingest_foreach_batch(
 def _host_line_partial(
     docs: DataFrame, id_col: str, host_col: str, text_col: str
 ) -> DataFrame:
-    """A batch's ``(host, lfp, n_occ, line_chars)`` host-line partial."""
+    """A batch's ``(host, lfp, n_occ, line_chars)`` host-line partial,
+    as one partition (see :func:`_staged_ingest`)."""
     from flink_examples_spark.operators.dedup import _split_units
 
     return (
@@ -1474,6 +1480,7 @@ def _host_line_partial(
             # min() folds batch partials to the same constant
             F.min(F.length("line").cast("long")).alias("line_chars"),
         )
+        .coalesce(1)
     )
 
 
@@ -1814,7 +1821,8 @@ def hygiene_delta_ingest_foreach_batch(
         url_partials(
             delta.withColumn("n_chars", F.length("text")),
             "doc_id", "doc_id", "n_chars", url=F.col("url_norm"),
-        ).write.mode("overwrite").parquet(os.path.join(url_root, sub))
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(url_root, sub))
         shipped = out.select(
             "doc_id", "host", F.col("kept_text").alias("text")
         )

@@ -78,8 +78,8 @@ def test_deep_iteration_wall_time_is_linear(spark):
 def test_walk_mass_query_builds_lazily(spark, sf_dir):
     """Building the walk-mass query submits no job and pins nothing:
     the rounds are one lazy plan, not a loop of eager pins. Running it
-    takes at most 8 jobs: two for the edge build, one node exchange and
-    one broadcast for the edge table, one per round and the result."""
+    takes at most 7 jobs: two for the edge build, one node exchange for
+    the edge table, one per round and the result; no broadcast."""
     from flink_examples_spark.queries import registry
 
     sc = spark.sparkContext
@@ -90,29 +90,68 @@ def test_walk_mass_query_builds_lazily(spark, sf_dir):
     assert built == before
     assert set(sc._jsc.getPersistentRDDs().keys()) == pinned
     df.collect()
-    assert sc._jsc.sc().dagScheduler().nextJobId() - built <= 8
+    assert sc._jsc.sc().dagScheduler().nextJobId() - built <= 7
 
 
 def test_walk_mass_plan_adds_one_join_per_round(spark):
     """Each round reads mass once, so three more rounds add exactly
-    three joins and three jobs to the plan that ran; a round that read
-    mass twice would double the plan every round instead. Every round
-    probes the same edge table, so its broadcast is built once."""
-    from flink_examples_spark.plans import broadcast_count, join_count
+    three joins, three exchanges (their groupBys) and three jobs to the
+    plan that ran; a round that read mass twice would double the plan
+    every round instead. Every round joins the edge table in place on
+    its node exchange, so nothing is broadcast."""
+    from flink_examples_spark.plans import (
+        broadcast_count,
+        exchange_count,
+        join_count,
+    )
 
     sc = spark.sparkContext
     pairs = [(a, (a * 3 + 1) % 6, a % 3 + 1) for a in range(6)]
     edges = spark.createDataFrame(pairs, "src long, dst long, w long")
-    joins, jobs = {}, {}
+    joins, exchanges, jobs = {}, {}, {}
     for k in (3, 6):
         df = walk_mass(edges, iterations=k)
         before = sc._jsc.sc().dagScheduler().nextJobId()
         df.collect()
         jobs[k] = sc._jsc.sc().dagScheduler().nextJobId() - before
         joins[k] = join_count(df)
-        assert broadcast_count(df) == 1
+        exchanges[k] = exchange_count(df)
+        assert broadcast_count(df) == 0
     assert joins[6] - joins[3] == 3
+    assert exchanges[6] - exchanges[3] == 3
     assert jobs[6] - jobs[3] == 3
+
+
+@pytest.mark.parametrize("conf", [
+    {"spark.sql.shuffle.partitions": "1"},
+    {"spark.sql.shuffle.partitions": "7"},
+    {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+])
+def test_walk_mass_masses_do_not_depend_on_partitioning(spark, conf):
+    """The co-partitioned round join gives the same masses whatever the
+    shuffle partition count or AQE coalescing, on a graph with pure
+    sinks (4, 6) and parallel edges (1 -> 2, 3 -> 4), and never plans
+    a broadcast."""
+    from flink_examples_spark.plans import broadcast_count
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (1, 2, 2), (1, 3, 1), (1, 6, 3), (2, 3, 4),
+         (2, 5, 1), (3, 1, 1), (3, 4, 2), (3, 4, 1), (5, 4, 1)],
+        "src long, dst long, w long",
+    )
+    want = _masses(walk_mass(edges, iterations=4))
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = walk_mass(edges, iterations=4)
+        got = _masses(df)
+        assert broadcast_count(df) == 0
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert got == want
+    assert sum(got.values()) == 6 * 1_000_000
 
 
 def test_walk_mass_parallel_edges_collapse_by_weight_sum(spark):

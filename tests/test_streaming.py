@@ -282,6 +282,43 @@ def test_streaming_dedup_plans_native_without_ttl_python_with(spark, tmp_path):
     assert "Deduplicate" not in ttl
 
 
+def _dedup_into_staged_face(spark, tmp_path, face):
+    """Stream the dedup tape, in two chunks, through the native
+    streaming dedup into the staged ingest ``face(root)``. Returns the
+    staged root and the tasks each stage of the stream's jobs ran."""
+    from flink_examples_spark.streaming.stateful import streaming_dedup_ttl
+
+    d = write_chunks(_DEDUP_TAPE, str(tmp_path / "in"), 2)
+    root = str(tmp_path / "staged")
+    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
+    sc = spark.sparkContext
+    first = sc._jsc.sc().dagScheduler().nextJobId()
+    q = (
+        streaming_dedup_ttl(src, ["uid", "kind"])
+        .writeStream.foreachBatch(face(root))
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.awaitTermination(180)
+    st = sc.statusTracker()
+    tasks = [
+        si.numCompletedTasks
+        for j in range(first, sc._jsc.sc().dagScheduler().nextJobId())
+        for sid in (st.getJobInfo(j).stageIds if st.getJobInfo(j) else [])
+        if (si := st.getStageInfo(sid)) is not None
+    ]
+    subs = sorted(f for f in os.listdir(root) if f.startswith("batch="))
+    assert subs == ["batch=0", "batch=1"]
+    for sub in subs:
+        parts = [
+            f for f in os.listdir(os.path.join(root, sub))
+            if f.startswith("part-")
+        ]
+        assert len(parts) == 1, (sub, parts)
+    return root, tasks
+
+
 def test_countmin_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
     """Each micro-batch's Count-Min partial (at most depth x width rows)
     is one parquet file, not one per shuffle partition, and the staged
@@ -293,36 +330,45 @@ def test_countmin_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
         countmin_ingest_foreach_batch,
         read_countmin_sketch,
     )
-    from flink_examples_spark.streaming.stateful import streaming_dedup_ttl
 
-    keys = ["uid", "kind"]
-    d = write_chunks(_DEDUP_TAPE, str(tmp_path / "in"), 2)
-    root = str(tmp_path / "cms")
-    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
-    q = (
-        streaming_dedup_ttl(src, keys)
-        .writeStream.foreachBatch(countmin_ingest_foreach_batch(root, "uid"))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(180)
-    subs = sorted(f for f in os.listdir(root) if f.startswith("batch="))
-    assert subs == ["batch=0", "batch=1"]
-    for sub in subs:
-        parts = [
-            f for f in os.listdir(os.path.join(root, sub))
-            if f.startswith("part-")
-        ]
-        assert len(parts) == 1, (sub, parts)
+    root, _ = _dedup_into_staged_face(
+        spark, tmp_path, lambda r: countmin_ingest_foreach_batch(r, "uid"))
 
     def cells(df):
         return {(r.j, r.bucket): r.cnt for r in df.collect()}
 
+    d = str(tmp_path / "in")
     whole = countmin_table(
-        spark.read.parquet(d).select(*keys).distinct(), "uid"
+        spark.read.parquet(d).select("uid", "kind").distinct(), "uid"
     )
     assert cells(read_countmin_sketch(spark, root)) == cells(whole)
+
+
+def test_hll_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
+    """An aggregate partial behind a stateful operator is written by one
+    task as one file per batch, while the stateful dedup stage before
+    it still runs one task per shuffle partition; the staged registers
+    fold to the registers of the whole deduplicated input."""
+    from flink_examples_spark.operators.sketches import hll_registers
+    from flink_examples_spark.streaming.sinks import (
+        hll_ingest_foreach_batch,
+        read_hll_registers,
+    )
+
+    root, tasks = _dedup_into_staged_face(
+        spark, tmp_path,
+        lambda r: hll_ingest_foreach_batch(r, "uid", ["kind"]))
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) in tasks
+
+    def regs(df):
+        return {(r.kind, r.bucket): r.reg for r in df.collect()}
+
+    whole = hll_registers(
+        spark.read.parquet(str(tmp_path / "in")).select("uid", "kind")
+        .distinct(), "uid", ["kind"],
+    )
+    got = read_hll_registers(spark, root, ["kind"], "kind string")
+    assert regs(got) == regs(whole)
 
 
 def test_streaming_dfa_matches_batch_alert_counts(spark, tmp_path, events_pdf):
