@@ -26,8 +26,8 @@ the initial mass off it, each later round joins it co-partitioned, in
 place, and every round ends in one map-side-combinable groupBy by node.
 Nothing is ever all-pairs: the mass vector is |V| rows, a round |E| +
 |V|. For billion-edge graphs the edge table is the stageable artifact.
-Loop-built iteration precedent: operators/iteration.py (fib_iterate,
-D6) and the pointer-doubling connected components (operators/dedup.py).
+Loop-built iteration precedent: the pointer-doubling connected
+components (operators/dedup.py, D6).
 
 Reference parity: flink-examples has no graph operator (its iteration
 example is the fibonacci stream, IterateExample.java) — this extends

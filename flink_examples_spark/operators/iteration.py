@@ -2,102 +2,51 @@
 
 The reference's IterateExample.java:56-108 builds a streaming feedback
 edge (Fibonacci steps until value >= 100, emitting iteration counts).
-Spark has no streaming feedback loop. Two batch formulations:
+Spark has no streaming feedback loop. The iteration is independent
+across rows, so it runs *inside* the row pipeline: ``fib_steps`` folds
+each row's fixed point with one ``aggregate`` higher-order function —
+no shuffle, no driver round trips, no Python. Iterations that need
+cross-row operators each round run as driver loops
+(``graph.walk_mass``, ``dedup.connected_components``).
 
-- ``fib_steps`` (default): the per-row iteration is independent across
-  rows, so it belongs *inside* the row pipeline — one ``mapInPandas``
-  pass runs the whole fixed-point per Arrow batch with vectorized numpy
-  column ops (no shuffle, no driver round-trips, scales linearly with
-  partitions — the 100 TB-safe formulation).
-- ``fib_steps_driver_loop``: the faithful feedback-edge emulation — a
-  driver-controlled loop where every step is a distributed transform and
-  finished rows retire from the working set. Use when the step function
-  genuinely needs cross-row operations (joins/aggregations per
-  iteration); ``localCheckpoint`` truncates lineage each round.
-
-Documented divergence: both are batch-only (SURVEY.md §7.4.6).
+Documented divergence: batch-only (SURVEY.md §7.4.6, DIVERGENCES D6).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def fib_steps(pairs: DataFrame, x_col: str, y_col: str, limit: int = 100,
               max_iter: int = 64) -> DataFrame:
     """For each (x, y) row: apply (x, y) -> (y, x+y) until y >= limit;
-    return the original columns plus ``n_steps`` (IterateExample.java:
-    114-187 semantics).
+    return ``x0, y0`` (the original columns as longs) plus ``n_steps``
+    (IterateExample.java:114-187 semantics). A row still below
+    ``limit`` after ``max_iter`` steps retires with ``n_steps ==
+    max_iter``.
 
-    Vectorized: each Arrow batch iterates all its rows together on numpy
-    arrays; rows that reached ``limit`` freeze. Fibonacci growth bounds
-    the loop at ~O(log_phi(limit)) passes per batch.
+    One ``aggregate(sequence(1, max_iter), struct(x, y, n), step)`` per
+    row; the step advances only while ``y < limit``. A NULL ``x`` or
+    ``y`` fails the job, and so does a step whose ``x + y`` overflows a
+    long (the session's ANSI arithmetic).
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = pdf[x_col].to_numpy(dtype=np.int64).copy()
-            y = pdf[y_col].to_numpy(dtype=np.int64).copy()
-            steps = np.zeros(len(pdf), dtype=np.int64)
-            for _ in range(max_iter):
-                active = y < limit
-                if not active.any():
-                    break
-                nx = y[active]
-                y[active] = x[active] + y[active]
-                x[active] = nx
-                steps[active] += 1
-            yield pd.DataFrame({
-                "x0": pdf[x_col].to_numpy(dtype=np.int64),
-                "y0": pdf[y_col].to_numpy(dtype=np.int64),
-                "n_steps": steps,
-            })
-
-    return pairs.select(x_col, y_col).mapInPandas(
-        run, "x0 long, y0 long, n_steps long"
-    )
-
-
-def fib_steps_driver_loop(pairs: DataFrame, x_col: str, y_col: str,
-                          limit: int = 100, max_iter: int = 64) -> DataFrame:
-    """Feedback-edge emulation: driver-side fixed-point loop over
-    DataFrames (each step a distributed transform; finished rows retire).
-    Prefer ``fib_steps`` unless each step needs cross-row operators.
-    """
-    work = pairs.select(
-        F.col(x_col).alias("x0"),
-        F.col(y_col).alias("y0"),
-        F.col(x_col).alias("x"),
-        F.col(y_col).alias("y"),
-        F.lit(0).alias("n_steps"),
-    )
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    done_parts: list[DataFrame] = []
-    for _ in range(max_iter):
-        work = work.localCheckpoint(eager=True)  # truncate lineage per round
-        done_parts.append(work.filter(F.col("y") >= limit))
-        work = work.filter(F.col("y") < limit)
-        if work.limit(1).count() == 0:
-            break
-        work = work.select(
-            "x0",
-            "y0",
-            F.col("y").alias("x"),
-            (F.col("x") + F.col("y")).alias("y"),
-            (F.col("n_steps") + 1).alias("n_steps"),
-        )
-    # rows still below limit after max_iter rounds retire with the
-    # iteration cap as their step count — fib_steps' contract; dropping
-    # them would silently shrink the output
-    done_parts.append(work)
-    result = done_parts[0]
-    for part in done_parts[1:]:
-        result = result.unionByName(part)
-    return result.select("x0", "y0", "n_steps")
+    x, y = F.col(x_col).cast("long"), F.col(y_col).cast("long")
+    x0 = F.when(x.isNotNull() & y.isNotNull(), x).otherwise(
+        F.raise_error(F.lit(f"fib_steps: NULL {x_col} or {y_col}")))
+
+    def step(acc: Column, _: Column) -> Column:
+        return F.when(acc["y"] < limit, F.struct(
+            acc["y"].alias("x"), (acc["x"] + acc["y"]).alias("y"),
+            (acc["n"] + 1).alias("n"),
+        )).otherwise(acc)
+
+    start = F.struct(F.col("x0").alias("x"), F.col("y0").alias("y"),
+                     F.lit(0).cast("long").alias("n"))
+    return pairs.select(x0.alias("x0"), y.alias("y0")).select(
+        "x0", "y0",
+        F.aggregate(F.sequence(F.lit(1), F.lit(max_iter)), start, step)["n"]
+        .alias("n_steps"),
+    )

@@ -2,9 +2,8 @@
 
 Each mirrors a keyed ProcessFunction from the reference; the streaming
 variants with real GroupState/timeouts live in ``streaming/stateful.py``.
-Batch semantics are expressed either as window functions (pure JVM,
-preferred) or as per-key pandas scans (``util.grouped_map_in_pandas``)
-where the logic is genuinely iterative (DFA, custom triggers).
+On an ordered batch each one is a window scan over the key's rows
+(``lag`` or a running frame) — one shuffle on the key, no Python.
 
   fraud_pairs    — TimerService.java:68-139: flag small amount, alert if
                    the NEXT event is large and within the timeout.
@@ -18,12 +17,8 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from flink_examples_spark.operators.util import grouped_map_in_pandas
 
 
 def fraud_pairs(
@@ -87,36 +82,28 @@ def dfa_alerts(
     symbol's state (the reference emits Alert and keeps going,
     StateMachineExample.java:143-165).
 
-    Output: ``key, n_events, n_alerts``. Executed as a per-key
-    ``grouped_map_in_pandas`` scan — one shuffle on the key; state stays
-    in the executor.
+    Output: ``key, n_events, n_alerts``. The previous symbol is a
+    ``lag`` over the key's rows ordered by ``order_cols`` (nulls last);
+    the first row, like any row after a NULL symbol, checks only
+    ``initial_ok``, and a NULL symbol after a non-NULL one is an alert.
+    One shuffle on the key feeds both the window and the ``groupBy``.
     """
-    trans = {k: frozenset(v) for k, v in transitions.items()}
-    ocols = list(order_cols)
-
-    def run(pkey, pdf: pd.DataFrame) -> pd.DataFrame:
-        state: str | None = None
-        alerts = 0
-        for sym in pdf[symbol_col]:
-            if state is None:
-                if initial_ok is not None and sym not in initial_ok:
-                    alerts += 1
-            elif sym not in trans.get(state, frozenset()):
-                alerts += 1
-            state = sym
-        return pd.DataFrame(
-            {"key": [pkey[0]], "n_events": [len(pdf)], "n_alerts": [alerts]}
-        )
-
-    key_t = {f.name: f.dataType.simpleString() for f in df.schema.fields}[key]
-    # one mapInPandas pass over key-sorted partitions (the r13
-    # grouped_map_in_pandas migration): ~|keys| tiny groups paid a
-    # per-group Arrow batch each way under applyInPandas; each group
-    # reaches run() sorted by order_cols (nulls last), so run() scans
-    # it as it comes
-    return grouped_map_in_pandas(
-        df, [key], ocols, run, f"key {key_t}, n_events long, n_alerts long"
-    ).withColumnRenamed("key", key)
+    w = Window.partitionBy(key).orderBy(
+        *[F.col(c).asc_nulls_last() for c in order_cols])
+    legal = F.create_map(*[
+        x for state, syms in transitions.items()
+        for x in (F.lit(state), F.array(*[F.lit(s) for s in sorted(syms)]))
+    ]).cast("map<string, array<string>>")
+    prev, sym = F.lag(symbol_col).over(w), F.col(symbol_col)
+    ok_initial = (F.lit(True) if initial_ok is None
+                  else sym.isin(*sorted(initial_ok)))
+    ok = F.when(prev.isNull(), ok_initial).otherwise(
+        F.array_contains(legal[prev], sym))
+    flags = df.select(key, F.coalesce(ok, F.lit(False)).alias("ok"))
+    return flags.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.count_if(~F.col("ok")).alias("n_alerts"),
+    )
 
 
 def delta_trigger(
@@ -133,27 +120,22 @@ def delta_trigger(
     The reference's DeltaTrigger fires a GlobalWindow when the distance
     since the last fire exceeds 50 m (CustomizeEvictorAndTrigger.java:
     43-55). On a monotone accumulation that is equivalent to "the integer
-    bucket floor(cumsum/threshold) increased" — which keeps the batch
-    formulation a per-key ordered scan emitting
-    ``(key, fire_id, bucket)``.
+    bucket floor(cumsum/threshold) increased" — a running ``sum`` over
+    the key's rows ordered by ``order_cols`` (nulls last), emitting
+    ``(key, id_col, bucket)`` where ``bucket > lag(bucket, 1, 0)``. A
+    NULL delta advances nothing. ``threshold`` must be > 0.
     """
-    ocols = list(order_cols)
-
-    def run(pkey, pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL deltas advance nothing (SQL SUM-skips-NULL semantics);
-        # without fillna a single NULL poisons the cumsum into NaN and
-        # astype('int64') raises on non-finite values
-        cum = pdf[delta_col].fillna(0).cumsum()
-        bucket = (cum // threshold).astype("int64")
-        fired = bucket > bucket.shift(1, fill_value=0)
-        out = pdf.loc[fired, [id_col]].copy()
-        out["bucket"] = bucket[fired]
-        out["key"] = pkey[0]
-        return out[["key", id_col, "bucket"]]
-
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    # same grouped_map_in_pandas migration as dfa_alerts above
-    return grouped_map_in_pandas(
-        df, [key], ocols, run,
-        f"key {types[key]}, {id_col} {types[id_col]}, bucket long"
-    ).withColumnRenamed("key", key)
+    if not threshold > 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
+    w = Window.partitionBy(key).orderBy(
+        *[F.col(c).asc_nulls_last() for c in order_cols])
+    # a running SUM over only NULLs is NULL, hence the coalesce
+    cum = F.sum(F.coalesce(delta_col, F.lit(0))).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    bucket = F.col("bucket")
+    return (
+        df.withColumn("bucket", F.floor(cum / F.lit(threshold)))
+        .select(key, id_col, bucket,
+                (bucket > F.lag(bucket, 1, 0).over(w)).alias("fired"))
+        .filter("fired").drop("fired")
+    )

@@ -887,8 +887,9 @@ def delta_trigger_fires(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT x0, y0, n_steps FROM it WHERE y >= 100
     """,
-    doc="M2: iteration — Fibonacci steps until >= 100, driver-side loop "
-        "vs recursive-CTE oracle. Ref: iterate/IterateExample.java:56-187.",
+    doc="M2: iteration — Fibonacci steps until >= 100, one aggregate() "
+        "fold per row vs recursive-CTE oracle. Ref: "
+        "iterate/IterateExample.java:56-187.",
 )
 def fib_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_examples_spark.operators.iteration import fib_steps

@@ -122,8 +122,8 @@ def parquet_upsert_foreach_batch(
     ``df.write.jdbc`` or a Delta ``MERGE``.
 
     TEST-HARNESS SINK: it rewrites the whole target per micro-batch
-    (fine for fixtures, a scale-killer on a real table — use
-    ``jdbc_upsert_foreach_batch`` or Delta MERGE in production). The
+    (fine for fixtures, a scale-killer on a real table — use a JDBC
+    upsert statement or Delta MERGE in production). The
     final overwrite is non-atomic, so each merge is staged to
     ``<target>.tmp-<batch>`` first and crash recovery is REAL: if a
     crash between the target delete and rewrite leaves the target
@@ -184,35 +184,6 @@ def parquet_upsert_foreach_batch(
         batch.unpersist()
         for d in glob.glob(target_dir.rstrip("/") + ".tmp-*"):
             shutil.rmtree(d, ignore_errors=True)
-
-    return write
-
-
-def jdbc_upsert_foreach_batch(
-    url: str,
-    table: str,
-    upsert_sql: str,
-    properties: dict[str, str] | None = None,
-    batch_size: int = 5000,
-) -> Callable[[DataFrame, int], None]:
-    """JDBC upsert via foreachBatch (K6, JDBCSink.java:57-76).
-
-    ``upsert_sql`` is the dialect's upsert statement; executed per
-    partition with ``batch_size`` statements per round-trip (the
-    reference's JdbcExecutionOptions.batchSize). Requires the JDBC
-    driver jar on the cluster — config-builder only in this environment.
-    """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("append")
-            .format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("batchsize", str(batch_size))
-            .options(**(properties or {}))
-            .save()
-        )
 
     return write
 

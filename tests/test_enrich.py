@@ -97,19 +97,3 @@ def test_async_enrich_parametrized_type_schema(spark):
     assert str(rows[1]["price"]) == "1.50"
     assert rows[2]["tags"] == {"k": 2}
 
-
-def test_fib_driver_loop_emits_unfinished_rows_at_cap(spark):
-    """Review regression: rows not reaching the limit within max_iter
-    must retire with n_steps == max_iter (fib_steps' contract), not
-    vanish from the output."""
-    from flink_examples_spark.operators.iteration import (
-        fib_steps,
-        fib_steps_driver_loop,
-    )
-
-    pairs = spark.createDataFrame([(1, 1)], "x long, y long")
-    loop = fib_steps_driver_loop(pairs, "x", "y", limit=10**15, max_iter=5)
-    rows = loop.collect()
-    assert len(rows) == 1 and rows[0]["n_steps"] == 5
-    udf = fib_steps(pairs, "x", "y", limit=10**15, max_iter=5).collect()
-    assert rows[0]["n_steps"] == udf[0]["n_steps"]

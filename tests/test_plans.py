@@ -504,6 +504,20 @@ def test_walk_mass_no_cartesian_no_python(spark, sf_dir):
     assert not python_eval_nodes(df)
 
 
+def test_ordered_scans_are_jvm_side(spark, sf_dir):
+    """The DFA and delta-trigger scans are window expressions over one
+    exchange by key (the DFA's groupBy reuses its partitioning); the
+    Fibonacci fixed point is one aggregate() per row."""
+    from flink_examples_spark.queries import registry
+
+    reg = registry()
+    for name in ("dfa_event_alerts", "delta_trigger_fires"):
+        df = reg[name].spark_fn(spark, sf_dir)
+        assert python_eval_nodes(df) == [], name
+        assert exchange_count(df) == 1, name
+    assert python_eval_nodes(reg["fib_iterate"].spark_fn(spark, sf_dir)) == []
+
+
 def test_countmin_build_is_partial_aggregated(spark, sf_dir):
     """The sketch build's groupBy(j,bucket) must carry a partial
     aggregate before its exchange — that partial is what makes the
