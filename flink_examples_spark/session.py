@@ -7,7 +7,8 @@ are centralized: AQE for runtime re-planning (skew joins, partition
 coalescing), UTC session time so event-time windows are epoch-aligned and
 reproducible, Arrow for every pandas-UDF boundary, and a shuffle
 partition count sized to the local core count (on a real cluster this is
-overridden to ~2-3x total cores; AQE coalesces down).
+overridden to ~2-3x total cores; AQE coalesces down). Streaming state is
+sized apart from batch shuffles: one state partition per core.
 """
 
 from __future__ import annotations
@@ -43,7 +44,13 @@ def get_spark(
     scale-up: AQE handles skew + partition sizing at runtime, and the
     broadcast threshold lets small dimension tables avoid shuffles.
     Streaming state uses Spark's default state store provider; no
-    state-backend config is set here.
+    state-backend config is set here. A new streaming checkpoint gets
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)`` state
+    partitions, not the shuffle partition count: a stateful stage then
+    runs in one wave on the session's cores, and each partition's
+    state-store commit has a fixed cost whatever its size. Spark records
+    the count in the checkpoint's ``offsets/0`` and a resumed checkpoint
+    keeps it; batch shuffles keep ``shuffle_partitions``.
     """
     cpus = int(local_cpus())
     if master is None:
@@ -74,4 +81,14 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # A Spark-internal conf (no public one splits state from shuffle
+    # partitions); tests/test_streaming.py fails if Spark stops honouring it.
+    state_partitions = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    spark.conf.set(
+        "spark.sql.streaming.internal.stateStore.partitions", str(state_partitions)
+    )
+    return spark

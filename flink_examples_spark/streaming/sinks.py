@@ -74,39 +74,15 @@ def kafka_payload(
     """Shape a frame into the Kafka producer record contract (K5):
     string ``value``, optional string ``key`` (partitioner input),
     optional ``timestamp`` (setWriteTimestampToKafka,
-    Kafka2Kafka.java:150). Pure projection — testable without a broker
-    and reused by ``kafka_sink``."""
+    Kafka2Kafka.java:150). Pure projection, testable without a broker:
+    write the result with ``writeStream.format("kafka")`` (at-least-once
+    per micro-batch; DIVERGENCES.md D5)."""
     cols = [F.col("value").cast("string").alias("value")]
     if "key" in df.columns:
         cols.insert(0, F.col("key").cast("string").alias("key"))
     if include_event_timestamp:
         cols.append(F.col(ts_col).alias("timestamp"))
     return df.select(*cols)
-
-
-def kafka_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint: str,
-    include_event_timestamp: bool = False,
-    ts_col: str = "ts",
-) -> DataStreamWriter:
-    """Kafka producer sink (K5, Kafka2Kafka.java:118-164).
-
-    Spark's Kafka sink is at-least-once per micro-batch; the reference's
-    EXACTLY_ONCE two-phase transaction has no engine equivalent — match
-    the observable guarantee with idempotent consumers or an upsert
-    landing table (SURVEY.md §7.4.5). ``setWriteTimestampToKafka`` maps
-    to an explicit ``timestamp`` column.
-    """
-    return (
-        kafka_payload(df, include_event_timestamp, ts_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
 
 
 def parquet_upsert_foreach_batch(

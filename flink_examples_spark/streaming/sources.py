@@ -10,9 +10,12 @@
                    built-in ``rate`` source provides the tick stream and
                    deterministic column expressions synthesize the fields
                    — backpressure and checkpointing come from the engine.
-  kafka_stream   — S8/S9: Kafka consumer with the reference's offset
-                   start strategies (Kafka2Kafka.java:50-82). Config
-                   builder only — no broker in the test environment.
+  kafka_source_options
+                 — S8/S9: the Kafka consumer's option map, with the
+                   reference's offset start strategies (Kafka2Kafka.java:
+                   50-82), for ``spark.readStream.format("kafka")``. No
+                   stream is built here: the environment has no broker
+                   and no Kafka connector jar (DIVERGENCES.md D16).
 """
 
 from __future__ import annotations
@@ -101,7 +104,9 @@ def kafka_source_options(
     ``startingOffsets``. setStartFromGroupOffsets has no equivalent:
     Spark owns offsets in the checkpoint WAL, not the broker group —
     offset commit on checkpoint (Kafka2Kafka.java:74) is therefore
-    automatic.
+    automatic. Per-partition watermarking (S9, Kafka2Kafka.java:94-113)
+    is ``withWatermark`` downstream: Spark's watermark is the global min
+    across partitions, the same merged semantics.
     """
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
@@ -116,33 +121,6 @@ def kafka_source_options(
     if group_id_prefix is not None:
         opts["groupIdPrefix"] = group_id_prefix
     return opts
-
-
-def kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-    starting_offsets_by_timestamp: str | None = None,
-    max_offsets_per_trigger: int | None = None,
-    group_id_prefix: str | None = None,
-) -> DataFrame:
-    """Kafka consumer stream (S8) — ``kafka_source_options`` applied to
-    the kafka data source. Per-partition watermarking (S9,
-    Kafka2Kafka.java:94-113): apply ``withWatermark`` downstream;
-    Spark's watermark is the global min across partitions, the same
-    merged semantics."""
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_source_options(
-        bootstrap_servers,
-        topic,
-        starting_offsets,
-        starting_offsets_by_timestamp,
-        max_offsets_per_trigger,
-        group_id_prefix,
-    ).items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def decode_int_pair_binary(df: DataFrame, col: str = "value") -> DataFrame:

@@ -7,6 +7,7 @@ reference's embedded-fixture strategy (SessionWindow.java:63-77 etc.)
 adapted to micro-batch replay.
 """
 
+import json
 import os
 import time
 
@@ -282,6 +283,106 @@ def test_streaming_dedup_plans_native_without_ttl_python_with(spark, tmp_path):
     assert "Deduplicate" not in ttl
 
 
+def _recorded_state_partitions(ck: str) -> int:
+    """The state partition count a checkpoint was begun with: Spark
+    records it in ``offsets/0`` under the shuffle-partition key."""
+    with open(os.path.join(ck, "offsets", "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+def _state_shards(ck: str) -> list[int]:
+    """The state-store shard dirs of a checkpoint's first operator."""
+    root = os.path.join(ck, "state", "0")
+    return sorted(int(n) for n in os.listdir(root) if n.isdigit())
+
+
+def _dedup_rows(spark, d, ck):
+    """Run the native dedup of ``d`` on checkpoint ``ck`` (a foreachBatch
+    sink, so it can resume); returns the rows it emitted."""
+    from flink_examples_spark.streaming.stateful import streaming_dedup_ttl
+
+    rows: list = []
+    src = file_stream(spark, d, os.path.join(d, "000.parquet"))
+    q = (
+        streaming_dedup_ttl(src, ["uid", "kind"])
+        .writeStream.foreachBatch(
+            lambda bdf, bid: rows.extend(tuple(r) for r in bdf.collect()))
+        .trigger(availableNow=True)
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.awaitTermination(180)
+    return rows
+
+
+def test_new_checkpoint_gets_one_state_partition_per_core(spark, tmp_path):
+    """``get_spark`` sizes a new checkpoint's state to the session's
+    cores: on ``local[4]`` with 8 shuffle partitions the native dedup
+    keeps 4 state shards and ``offsets/0`` records 4. Fails if Spark
+    stops honouring the state partition conf."""
+    assert spark.sparkContext.defaultParallelism == 4
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    d = write_chunks(_DEDUP_TAPE, str(tmp_path / "in"), 2)
+    ck = str(tmp_path / "ck")
+    _dedup_rows(spark, d, ck)
+    assert _state_shards(ck) == [0, 1, 2, 3]
+    assert _recorded_state_partitions(ck) == 4
+
+
+def test_resumed_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A checkpoint begun with 8 state shards (the state conf unset, so
+    the shuffle partition count) keeps 8 when resumed under the
+    per-core rule, and the dedup across the restart stays exact."""
+    conf = "spark.sql.streaming.internal.stateStore.partitions"
+    staged = write_chunks(_DEDUP_TAPE, str(tmp_path / "staged"), 2)
+    d, ck = str(tmp_path / "in"), str(tmp_path / "ck")
+    os.makedirs(d)
+    os.rename(os.path.join(staged, "000.parquet"), os.path.join(d, "000.parquet"))
+    rule = spark.conf.get(conf)
+    spark.conf.unset(conf)
+    try:
+        first = _dedup_rows(spark, d, ck)
+    finally:
+        spark.conf.set(conf, rule)
+    assert _state_shards(ck) == list(range(8))
+
+    os.rename(os.path.join(staged, "001.parquet"), os.path.join(d, "001.parquet"))
+    second = _dedup_rows(spark, d, ck)
+    assert _state_shards(ck) == list(range(8))
+    assert _recorded_state_partitions(ck) == 8
+
+    def order(r):
+        return (r[0], r[1] is None, r[1] or "")
+
+    got = first + second
+    assert len(got) == len(set(got))
+    want = spark.read.parquet(d).select("uid", "kind").distinct().collect()
+    assert sorted(got, key=order) == sorted(map(tuple, want), key=order)
+
+
+def test_batch_shuffles_keep_the_shuffle_partition_count(spark):
+    """The per-core state rule leaves batch shuffles alone: with AQE
+    off a ``groupBy`` runs one reduce task per shuffle partition."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        first = dag.nextJobId()
+        spark.range(100).groupBy((F.col("id") % 7).alias("k")).count().collect()
+        last = dag.nextJobId()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    st = sc.statusTracker()
+    tasks = sorted(
+        st.getStageInfo(sid).numCompletedTasks
+        for j in range(first, last)
+        for sid in st.getJobInfo(j).stageIds
+    )
+    assert tasks == [sc.defaultParallelism, 8]
+
+
 def _dedup_into_staged_face(spark, tmp_path, face):
     """Stream the dedup tape, in two chunks, through the native
     streaming dedup into the staged ingest ``face(root)``. Returns the
@@ -347,7 +448,7 @@ def test_countmin_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
 def test_hll_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
     """An aggregate partial behind a stateful operator is written by one
     task as one file per batch, while the stateful dedup stage before
-    it still runs one task per shuffle partition; the staged registers
+    it still runs one task per state partition; the staged registers
     fold to the registers of the whole deduplicated input."""
     from flink_examples_spark.operators.sketches import hll_registers
     from flink_examples_spark.streaming.sinks import (
@@ -358,7 +459,7 @@ def test_hll_streaming_ingest_writes_one_file_per_batch(spark, tmp_path):
     root, tasks = _dedup_into_staged_face(
         spark, tmp_path,
         lambda r: hll_ingest_foreach_batch(r, "uid", ["kind"]))
-    assert int(spark.conf.get("spark.sql.shuffle.partitions")) in tasks
+    assert _recorded_state_partitions(str(tmp_path / "ck")) in tasks
 
     def regs(df):
         return {(r.kind, r.bucket): r.reg for r in df.collect()}
@@ -609,6 +710,37 @@ def test_stream_static_broadcast_dim_join(spark, tmp_path, events_pdf):
         for r in events_pdf.head(200).itertuples(index=False)
     }
     assert got == expected
+
+
+def test_rate_events_columns_are_functions_of_event_id(spark, tmp_path):
+    """S6: a short run of ``rate_events`` into a memory sink. Every
+    column but the tick's own ``ts`` is a pure function of ``event_id``,
+    so a replayed tick yields the same row; ``ts`` rises with the tick."""
+    from flink_examples_spark.streaming.sources import rate_events
+
+    kinds = ["view", "click", "purchase", "signup", "error"]
+    q = (
+        rate_events(spark, rows_per_second=200, n_users=7)
+        .writeStream.format("memory").queryName("rate_events")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        drain_and_stop(q, 100)
+    finally:
+        q.stop()
+    rows = sorted(spark.sql("SELECT * FROM rate_events").collect(),
+                  key=lambda r: r.event_id)
+    assert len(rows) >= 100
+    assert [r.event_id for r in rows] == list(range(len(rows)))
+    for r in rows:
+        e = r.event_id
+        assert (r.user_id, r.event_type, r.value) == (
+            e % 7,
+            kinds[e * 2654435761 % 5],
+            (e * 1103515245 + 12345) % 50000 / 100.0,
+        )
+    assert all(a.ts <= b.ts for a, b in zip(rows, rows[1:]))
 
 
 def test_checkpoint_recovery_processes_only_new_files(spark, tmp_path):
