@@ -12,9 +12,10 @@ after the session is live.
 Counts: every rep of a query, stall retries included, runs under one
 job group. After the timed reps, `counts` gets per query `jobs`,
 `stages` and `tasks` per rep (stages that ran and completed tasks, the
-rule of perfbench's `Engine.group_counts`), plus the executed plan's
-shuffle `exchanges` and `python_nodes` (`flink_examples_spark.plans`).
-None of it is read inside a timer. `SPARK_GRAFT_BENCH_ONLY=a,b` runs a
+rule of perfbench's `Engine.group_counts`), `build_jobs` per rep (the
+jobs submitted inside `spark_fn`), plus the executed plan's shuffle
+`exchanges` and `python_nodes` (`flink_examples_spark.plans`). None of
+it is read inside a timer. `SPARK_GRAFT_BENCH_ONLY=a,b` runs a
 named subset and writes no artifact; `plans.formatted_plan(df)` gives
 a query's plan text on demand.
 
@@ -536,7 +537,9 @@ def run_query(
     Each rep's timer covers exactly ``q.spark_fn`` + ``collect()``.
     Every rep, stall retries included, runs under the one job group
     ``bench:<name>``; after the reps the record gains jobs, stages and
-    tasks per rep (from that group), the plan's shuffle exchanges and
+    tasks per rep (from that group), build jobs per rep (the job ids
+    ``spark_fn`` consumed, read off the DAG scheduler between the two
+    halves of the timer), the plan's shuffle exchanges and
     Python nodes (``plans.inspect``, read off the last rep's executed
     plan) and the analyzed-plan fingerprint. Returns
     ``{"runs", "stall_retries", "plan", "counts"}``."""
@@ -544,17 +547,22 @@ def run_query(
 
     sc = spark.sparkContext
     group = f"bench:{name}"
+    sched = sc._jsc.sc().dagScheduler()
     ts: list[float] = []
-    retries = 0
+    retries = build_jobs = 0
     df = None
 
     def one_rep() -> None:
-        nonlocal df
+        nonlocal df, build_jobs
+        first = sched.nextJobId()
         t0 = time.perf_counter()
         df = q.spark_fn(spark, sf_dir)
+        built = time.perf_counter()
+        build_jobs += sched.nextJobId() - first
+        t1 = time.perf_counter()
         # force full materialization (not just count pushdown)
         n = df.collect()
-        ts.append(time.perf_counter() - t0)
+        ts.append(time.perf_counter() - t1 + built - t0)
         del n
 
     sc.setJobGroup(group, name)
@@ -587,6 +595,7 @@ def run_query(
     counts = {
         k: round(v / len(ts), 1) for k, v in _group_counts(sc, group).items()
     }
+    counts["build_jobs"] = round(build_jobs / len(ts), 1)
     counts["exchanges"] = exchange_count(df)
     counts["python_nodes"] = python_eval_nodes(df)
     rec = {

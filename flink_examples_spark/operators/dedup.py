@@ -536,27 +536,32 @@ def connected_components(
     a_col: str,
     b_col: str,
     max_iter: int = 15,
-    driver_threshold: int = 5_000_000,
+    driver_threshold: int = 2_500_000,
 ) -> DataFrame:
     """Cluster duplicate pairs into connected components — the "which
     docs are the same document" step after any pair generator
     (MinHash/SimHash/Jaccard/embedding).
 
-    Two-tier by edge count (the pair graph is orders of magnitude
+    Two-tier by pair count (the pair graph is orders of magnitude
     smaller than the corpus — its size, not the input's, is what
-    matters):
-    - ≤ ``driver_threshold`` edges: union-find on the driver. One
-      collect of the edge set, zero iterative jobs — even a 100 TB
-      corpus with a 0.1% dup rate fits millions of pairs in driver
-      memory, and path-compressed union-find is near-linear.
+    matters). The tier gate is ONE fetch of at most
+    ``driver_threshold + 1`` raw pair rows:
+    - ≤ ``driver_threshold`` pair rows: union-find on the driver over
+      exactly that fetched table. One action, zero iterative jobs —
+      even a 100 TB corpus with a 0.1% dup rate fits millions of pairs
+      in driver memory, and path-compressed union-find is near-linear.
     - larger graphs: distributed min-label propagation with pointer
       doubling — each round relaxes labels one edge hop (join +
-      groupBy over the EDGE set) then shortcuts every label to its
-      label's label, so convergence is O(log diameter) rounds, not
-      O(diameter); lineage truncated per round. A graph that hasn't
-      converged within ``max_iter`` rounds raises RuntimeError —
-      silently returning half-merged clusters to a destructive dedup
-      step is never acceptable.
+      groupBy over the doubled, distinct EDGE set) then shortcuts every
+      label to its label's label, so convergence is O(log diameter)
+      rounds, not O(diameter); lineage truncated per round. A graph
+      that hasn't converged within ``max_iter`` rounds raises
+      RuntimeError — silently returning half-merged clusters to a
+      destructive dedup step is never acceptable. Above the threshold
+      the wasted gate fetch is bounded by the threshold itself.
+
+    A null node id fails the call on either tier: it cannot join a
+    component, and dropping its pair would silently split one.
 
     Both tiers produce identical output (asserted by
     tests/test_dedup_clusters.py parity tests and the
@@ -576,38 +581,31 @@ def connected_components(
                 f"{c!r} is {pairs.schema[c].dataType.simpleString()} — "
                 "map string ids to longs (e.g. hash60) before clustering"
             )
-    # Materialize the pair base once: everything downstream (the doubled
-    # edge set, the driver collect or every propagation round) would
-    # otherwise re-execute the expensive upstream pair pipeline —
-    # MinHash, LSH, embedding scoring — per consumer. The doubled edge
-    # set is pinned BEFORE the tier-gate count so the union+distinct
-    # shuffle runs once, not once for the count and again for the
-    # chosen tier's consumption.
+    # The pair base is pinned lazily: the gate fetch below is its first
+    # action and fills the pin, so the upstream pair pipeline (MinHash,
+    # LSH, embedding scoring) runs once per call on either tier — the
+    # distributed edge set reads the pinned blocks.
     #
-    # Fault-tolerance tradeoff (VERDICT r13 #8, stated once for every
-    # localCheckpoint in this loop): these pins truncate lineage, so an
-    # executor loss at 100 TB fails the JOB instead of recomputing the
-    # lost partitions — the retry re-runs the call from the top. That
-    # is acceptable here because every pinned table is LINEAR-size
-    # (edge list / per-node labels, never a join blowup), the pins are
-    # intra-call (recomputed on every execution, nothing persists
-    # across runs), and the alternative — carrying the full MinHash/
-    # LSH lineage into every propagation round — re-executes the far
-    # more expensive upstream pipeline per round on the happy path to
-    # buy recovery on the rare one. The triangle_counts edge pins
-    # document the same bound.
+    # Fault-tolerance tradeoff (stated once for the base, edge-set and
+    # per-round label pins below): they truncate lineage, so an executor
+    # loss at 100 TB fails the JOB instead of recomputing the lost
+    # partitions, and the retry re-runs the call from the top. Every
+    # pinned table is LINEAR-size (pairs, edges, per-node labels), the
+    # pins are intra-call, and the alternative re-executes the upstream
+    # pair pipeline per round on the happy path to buy recovery on the
+    # rare one.
+    # The null guard is a filter, not a CASE in the projection: plain
+    # aliases keep the pair pipeline's not-null constraints, without
+    # which every distributed round loses an exchange reuse (one job).
     base = pairs.select(
         F.col(a_col).cast("long").alias("src"),
         F.col(b_col).cast("long").alias("dst"),
-    ).localCheckpoint(eager=True)
-    # lazy pin: the tier-gate count right below is the first action, so
-    # it materializes the checkpoint as a side effect — an eager pin
-    # here ran the union+distinct as its own job and then the count as
-    # a second one over the pinned blocks (one job saved per call, r13)
-    edges = base.union(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=False)
-    if edges.count() <= driver_threshold:
+    ).where(
+        (F.col("src").isNotNull() & F.col("dst").isNotNull())
+        | F.raise_error(F.lit("connected_components: null node id"))
+    ).localCheckpoint(eager=False)
+    tbl = base.limit(driver_threshold + 1).toArrow()
+    if tbl.num_rows <= driver_threshold:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -618,15 +616,6 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        # ONE Arrow collect, not toLocalIterator: the per-partition
-        # streaming fetch submits a separate Spark job per partition
-        # (~32 tiny jobs here), and the count gate above already
-        # proved the edge set is driver-sized, so stream-bounding the
-        # fetch buys nothing. Arrow moves the two long columns as
-        # columnar batches (no Row objects), and the union-find walks
-        # plain Python ints zipped from them (one job saved per call
-        # plus a per-partition scheduling round trip, r13).
-        tbl = edges.toArrow()
         for sa, sb in zip(
             tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()
         ):
@@ -638,6 +627,11 @@ def connected_components(
             rows, "node long, cluster_id long"
         )
 
+    # lazy pin: every round joins the edge set, and round 1's count
+    # fills it from the base pin
+    edges = base.union(
+        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct().localCheckpoint(eager=False)
     labels = edges.select("src").distinct().withColumn("cluster_id", F.col("src"))
     for _ in range(max_iter):
         neigh = (

@@ -2403,7 +2403,7 @@ _CLUSTERS_ORACLE = f"""
     "dedup_minhash_clusters",
     oracle=_CLUSTERS_ORACLE,
     doc="Dedup clustering: MinHash-LSH pairs -> connected components "
-        "(driver union-find below the edge threshold) -> (doc, canonical "
+        "(driver union-find below the pair threshold) -> (doc, canonical "
         "cluster id); recursive-CTE closure as the oracle. The 'same "
         "document' resolution step after any pair generator.",
 )
@@ -2426,7 +2426,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The SAME clustering forced onto the distributed "
         "min-label-propagation + pointer-doubling branch "
         "(driver_threshold=0) — the code path that actually runs above "
-        "5M dup edges at 100 TB. Registered separately so the driver's "
+        "2.5M pair rows at 100 TB. Registered separately so the driver's "
         "correctness sweep signs the distributed tier against the "
         "identical recursive-CTE oracle as the union-find tier.",
 )
@@ -2690,9 +2690,10 @@ def dedup_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, cand, "doc_id", "text", n=3, threshold=0.3, shingles_df=sh
     )
     comp = connected_components(verified, "doc_a", "doc_b")
-    # connected_components has already executed the pair pipeline
-    # (eager localCheckpoint), so nothing still reads the cache — free
-    # it here or repeated invocations (bench reps) pin storage forever.
+    # connected_components' tier gate has already run the pair pipeline
+    # (its fetch fills the pairs' pin), so nothing still reads the cache
+    # — free it here or repeated invocations (bench reps) pin storage
+    # forever.
     sh.unpersist()
     return keep_canonical(docs, comp, "doc_id").select("doc_id")
 

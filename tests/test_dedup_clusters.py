@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from flink_examples_spark.operators.dedup import (
     connected_components,
     keep_canonical,
@@ -36,7 +38,7 @@ def _cc(spark, pairs, **kw):
 
 def test_distributed_branch_matches_union_find_on_known_graphs(spark):
     """driver_threshold=0 forces the distributed min-label-propagation
-    branch — the ONLY code path that runs above 5M dup edges at 100 TB
+    branch — the ONLY code path that runs above 2.5M pair rows at 100 TB
     scale. Its output must be identical to the driver union-find on the
     same pair sets (chain, ring, star, disjoint components)."""
     graphs = [
@@ -62,6 +64,42 @@ def test_distributed_branch_converges_on_long_ring_via_pointer_doubling(spark):
     out = _cc(spark, pairs, driver_threshold=0)  # default max_iter=15
     assert out == {i: 0 for i in range(n)}
     assert out == _cc(spark, pairs)
+
+
+def test_tier_gate_is_one_job_at_its_boundary(spark):
+    """The tier gate is one fetch of at most driver_threshold + 1 raw
+    pair rows. The 64-ring has 64 pair rows: at driver_threshold=64 the
+    call submits that one job and runs union-find over the fetched
+    table; at 63 it takes the distributed tier (the gate, then rounds —
+    the 4-action gate it replaces made 63 jobs here). Both return the
+    same rows."""
+    n = 64
+    ring = [(i, (i + 1) % n) for i in range(n)]
+    pairs = spark.createDataFrame(ring, "a long, b long")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs, out = {}, {}
+    for th in (n, n - 1):
+        before = sched.nextJobId()
+        df = connected_components(pairs, "a", "b", driver_threshold=th)
+        jobs[th] = sched.nextJobId() - before
+        out[th] = sorted(map(tuple, df.collect()))
+    assert jobs[n] == 1
+    assert 1 < jobs[n - 1] <= 63
+    assert out[n] == out[n - 1] == [(i, 0) for i in range(n)]
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, {"driver_threshold": 0}], ids=["driver", "distributed"]
+)
+def test_null_endpoints_fail_on_both_tiers(spark, kw):
+    """A null node id cannot join a component: both tiers must raise
+    rather than crash in union-find or drop the pair and split a
+    cluster silently."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (5, 6)], "a long, b long"
+    )
+    with pytest.raises(Exception, match="connected_components: null node id"):
+        connected_components(pairs, "a", "b", **kw).collect()
 
 
 def test_distributed_branch_raises_rather_than_returning_unconverged(spark):

@@ -11,12 +11,17 @@ broadcast. Compact-every-N hooks ride only the staged faces a caller
 schedules compaction on. The CEP NFA scans every key to its end (no
 per-key match cap), and its timed-out partial enumeration keeps
 ``_live_partials``' own cap.
+
+The same ratchet counts hand-written pins: every ``localCheckpoint``
+call per module, and how many of them are eager.
 """
 
 from __future__ import annotations
 
+import ast
 import importlib
 import inspect
+import pathlib
 import pkgutil
 
 import flink_examples_spark
@@ -35,6 +40,21 @@ ALLOWED = {
         "bitmap_ingest_foreach_batch",
         "_staged_fp_ingest_foreach_batch",
     },
+}
+
+# module -> (localCheckpoint calls, eager ones)
+PINS = {
+    "operators/classify.py": (1, 0),
+    "operators/dedup.py": (5, 1),
+    "operators/diff.py": (1, 1),
+    "operators/drift.py": (1, 0),
+    "operators/graph.py": (2, 2),
+    "operators/multimodal.py": (1, 1),
+    "operators/sampling.py": (1, 0),
+    "operators/similarity.py": (1, 0),
+    "operators/skew.py": (2, 2),
+    "queries.py": (10, 0),
+    "streaming/sinks.py": (5, 5),
 }
 
 
@@ -62,3 +82,29 @@ def test_minhash_signatures_is_gone():
     names = {name for _, name, _ in _package_functions()}
     assert "minhash_signatures" not in names
     assert "minhash_band_keys" in names  # the walk sees the dedup module
+
+
+def test_pin_census():
+    """A pin is eager when it passes ``eager=True`` or nothing (Spark's
+    default); an ``eager`` that is not a literal fails the scan."""
+    root = pathlib.Path(flink_examples_spark.__file__).parent
+    census = {}
+    for path in sorted(root.rglob("*.py")):
+        calls = [
+            node for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "localCheckpoint"
+        ]
+        eager = sum(
+            ast.literal_eval(
+                call.args[0] if call.args else next(
+                    (k.value for k in call.keywords if k.arg == "eager"),
+                    ast.Constant(True),
+                )
+            )
+            for call in calls
+        )
+        if calls:
+            census[path.relative_to(root).as_posix()] = (len(calls), eager)
+    assert census == PINS
