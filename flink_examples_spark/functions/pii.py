@@ -31,10 +31,7 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def pii_scrub(
-    col: Column | str,
-    patterns: tuple[tuple[str, str, str], ...] = PII_PATTERNS,
-) -> Column:
+def pii_scrub(col: Column | str) -> Column:
     """Redact every PII pattern, applied in declaration order.
 
     Order matters and is part of the contract: earlier replacements may
@@ -43,15 +40,12 @@ def pii_scrub(
     sequence.
     """
     out = _c(col)
-    for _, regex, token in patterns:
+    for _, regex, token in PII_PATTERNS:
         out = F.regexp_replace(out, regex, token)
     return out
 
 
-def pii_counts(
-    col: Column | str,
-    patterns: tuple[tuple[str, str, str], ...] = PII_PATTERNS,
-) -> list[Column]:
+def pii_counts(col: Column | str) -> list[Column]:
     """One ``n_<name>`` count column per pattern, counted on the raw
     text in the same order-sensitive way the scrub consumes it: each
     pattern is counted AFTER the preceding patterns' redactions, so
@@ -60,7 +54,7 @@ def pii_counts(
     email, not an IP)."""
     cols = []
     seen = _c(col)
-    for name, regex, token in patterns:
+    for name, regex, token in PII_PATTERNS:
         cols.append(F.regexp_count(seen, F.lit(regex)).alias(f"n_{name}"))
         seen = F.regexp_replace(seen, regex, token)
     return cols

@@ -7,8 +7,6 @@ pure Catalyst expressions (JVM, codegen'd — no Python in the hot path):
                   quad via bit shifts.
   json_field    — TwitterJson.java:79-87 / Kafka2Kafka.java:84-93 JSON
                   navigation (get_json_object path access).
-  epoch_seconds_to_ts / ts_display — HotItems.java:62,131 epoch-seconds
-                  event time and java.sql.Timestamp display formatting.
   bucket_mod    — AsyncIOExample.java:269 modulo bucketing.
 """
 
@@ -43,17 +41,6 @@ def json_field(col: Column | str, path: str) -> Column:
 def json_has(col: Column | str, path: str) -> Column:
     """``jsonNode.has("text")`` equivalent: path resolves non-null."""
     return F.get_json_object(_c(col), path).isNotNull()
-
-
-def epoch_seconds_to_ts(col: Column | str) -> Column:
-    """Epoch-seconds long -> TimestampType (HotItems.java:62 does
-    seconds*1000; Spark timestamps take seconds directly)."""
-    return F.timestamp_seconds(_c(col).cast("long"))
-
-
-def ts_display(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
-    """java.sql.Timestamp-style display string (HotItems.java:131)."""
-    return F.date_format(_c(col), fmt)
 
 
 def bucket_mod(col: Column | str, n: int) -> Column:

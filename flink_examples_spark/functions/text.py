@@ -61,9 +61,9 @@ def char_count_no_spaces(text: Column | str) -> Column:
     return F.length(F.replace(col, F.lit(" "), F.lit("")))
 
 
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+def stopword_ratio(text: Column | str) -> Column:
     toks = tokens(text)
-    stops = F.filter(toks, lambda t: t.isin(*stopwords))
+    stops = F.filter(toks, lambda t: t.isin(*EN_STOPWORDS))
     # zero-token docs: ratio 0.0, not NULL — a NULL ratio satisfies
     # NEITHER side of a quality predicate, so empty docs would silently
     # escape both keep- and drop-filters built on this
@@ -87,7 +87,7 @@ def quality_score(text: Column | str) -> Column:
     return F.least(F.lit(1.0), n / F.lit(50.0)) * (1.0 - stopword_ratio(text))
 
 
-def lang_id_en(text: Column | str, threshold: float = 0.03) -> Column:
+def lang_id_en(text: Column | str) -> Column:
     """N-gram-free language ID: English iff stopword density clears the bar.
 
     A real pipeline would use char-n-gram profiles per language; the
@@ -95,9 +95,7 @@ def lang_id_en(text: Column | str, threshold: float = 0.03) -> Column:
     the same, so the heuristic is intentionally minimal and
     deterministic.
     """
-    return F.when(stopword_ratio(text) > threshold, F.lit("en")).otherwise(
-        F.lit("other")
-    )
+    return F.when(stopword_ratio(text) > 0.03, F.lit("en")).otherwise("other")
 
 
 def fingerprint_md5(text: Column | str) -> Column:

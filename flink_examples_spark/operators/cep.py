@@ -692,8 +692,6 @@ def match_recognize_sql(
     define: dict[str, str],
     output_schema: str,
     after_match: str = "SKIP TO NEXT ROW",
-    within: str | None = None,
-    ts_col: str | None = None,
     row_number_col: str | None = None,
 ) -> DataFrame:
     """SQL-surface MATCH_RECOGNIZE (CEP.md:70-90) on top of the NFA.
@@ -773,7 +771,5 @@ def match_recognize_sql(
         measures=measure_fn,
         output_schema=output_schema,
         after_match=mode,
-        within=within,
-        ts_col=ts_col,
         row_number_col=row_number_col,
     )

@@ -253,15 +253,14 @@ def dsir_train_weights(
     id_col: str,
     text_col: str,
     target_filter,
-    n_buckets: int = 10007,
 ) -> DataFrame:
     """Train the DSIR bucket table ``(ft, ct, cr)`` — target and raw
-    occurrence counts per hashed-bigram bucket. At most ``n_buckets``
+    occurrence counts per hashed-bigram bucket. At most 10007
     rows at ANY corpus size: the stageable, always-broadcastable model
     artifact. One map-side-combined exchange; the target flag rides
     inside the scan, never joined back."""
     feats = _hashed_bigram_features(
-        df, id_col, text_col, n_buckets,
+        df, id_col, text_col, 10007,
         extra=(target_filter.alias("_tgt"),),
     )
     return feats.groupBy("ft").agg(
@@ -275,13 +274,12 @@ def dsir_score(
     weights: DataFrame,
     id_col: str,
     text_col: str,
-    n_buckets: int = 10007,
 ) -> DataFrame:
     """Score documents against a trained DSIR bucket table (see
     [[dsir_hashed_importance]] for the decision rule). Buckets absent
     from the table contribute zero evidence (left join + coalesce), so
     unseen data — the streaming micro-batch case — scores safely."""
-    feats = _hashed_bigram_features(df, id_col, text_col, n_buckets)
+    feats = _hashed_bigram_features(df, id_col, text_col, 10007)
     return _dsir_score_feats(feats, weights, id_col)
 
 

@@ -84,12 +84,7 @@ def url_keep_verdicts(u: DataFrame) -> DataFrame:
     )
 
 
-def url_dedup_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    url: Column | str | None = None,
-) -> DataFrame:
+def url_dedup_index(docs: DataFrame) -> DataFrame:
     """Canonical-URL index ``(url_norm, n_docs, keep_doc_id)`` over a
     corpus, singletons INCLUDED — the staged artifact
     [[incremental_url_dedup]] probes (a delta URL matching ONE corpus
@@ -101,8 +96,9 @@ def url_dedup_index(
     PERF_NOTES_r8/r9)."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            _url_norm(docs, id_col, source_col, url).alias("url_norm"),
+            F.col("doc_id").alias("doc_id"),
+            normalize_url(synthetic_crawl_url("doc_id", "source"))
+            .alias("url_norm"),
         )
         .groupBy("url_norm")
         .agg(

@@ -350,7 +350,6 @@ def minhash_lsh_pairs(
     text_col: str,
     num_hashes: int = 8,
     band_size: int = 2,
-    n: int = 3,
 ) -> DataFrame:
     """MinHash+LSH candidate near-dup pairs (the 100 TB dedup path).
 
@@ -371,7 +370,7 @@ def minhash_lsh_pairs(
     band_size shifts the S-curve left).
     """
     return _band_pairs(minhash_band_keys(
-        df, id_col, text_col, num_hashes, band_size, n
+        df, id_col, text_col, num_hashes, band_size
     ))
 
 
@@ -398,9 +397,6 @@ def incremental_lsh_pairs(
     delta: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    n: int = 3,
 ) -> DataFrame:
     """Daily-increment dedup: candidate pairs for a NEW batch of
     documents against an existing corpus, without recomputing or
@@ -408,7 +404,8 @@ def incremental_lsh_pairs(
 
     ``corpus_bands`` is the staged ``minhash_band_keys`` output for the
     existing corpus (in production: read back from its bucketed table).
-    Only the delta is signatured here. Two candidate families:
+    Only the delta is signatured here, with ``minhash_band_keys``'
+    defaults (8 hashes, bands of 2, 3-gram shingles). Two candidate families:
 
       - delta × corpus: the delta's band keys (tiny — one day of data)
         are **broadcast** against the corpus band table, so the 100 TB
@@ -420,9 +417,7 @@ def incremental_lsh_pairs(
     Feed the union into ``verify_jaccard_on_candidates`` /
     ``connected_components`` exactly like the batch path.
     """
-    delta_bands = minhash_band_keys(
-        delta, id_col, text_col, num_hashes, band_size, n
-    )
+    delta_bands = minhash_band_keys(delta, id_col, text_col)
     # the delta-is-small contract also means its band index is cheap
     # to MATERIALIZE once: both consumers (the broadcast cross join and
     # the within self-join's two sides) would otherwise re-run the
@@ -581,10 +576,12 @@ def connected_components(
                 f"{c!r} is {pairs.schema[c].dataType.simpleString()} — "
                 "map string ids to longs (e.g. hash60) before clustering"
             )
-    # The pair base is pinned lazily: the gate fetch below is its first
-    # action and fills the pin, so the upstream pair pipeline (MinHash,
-    # LSH, embedding scoring) runs once per call on either tier — the
-    # distributed edge set reads the pinned blocks.
+    # The pair base is pinned lazily. A lazy pin is not free under AQE:
+    # the call runs the pair pipeline's shuffle stages as jobs; the gate
+    # fetch below is the first action over the pin and fills it, so the
+    # upstream pair pipeline (MinHash, LSH, embedding scoring) runs once
+    # per call on either tier — the distributed edge set reads the
+    # pinned blocks.
     #
     # Fault-tolerance tradeoff (stated once for the base, edge-set and
     # per-round label pins below): they truncate lineage, so an executor
@@ -627,8 +624,9 @@ def connected_components(
             rows, "node long, cluster_id long"
         )
 
-    # lazy pin: every round joins the edge set, and round 1's count
-    # fills it from the base pin
+    # lazy pin: every round joins the edge set; the call runs the
+    # distinct's shuffle stage over the base pin as a job, and round 1's
+    # count fills the pin
     edges = base.union(
         base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint(eager=False)
@@ -669,12 +667,14 @@ def connected_components(
         # against the old one — two more |V|-row shuffle stages per
         # round. With ``_old`` carried through the round, the probe is
         # a plain filter+count over the pinned rows: a LAZY checkpoint
-        # is materialized by whatever action runs it first, and a
-        # filter scans EVERY partition (no short-circuit), so this one
-        # count both pins the round's label table and answers
-        # changed==0 — the same predicate the join probe tested. One
-        # job per round and zero probe shuffles (at 100 TB each round
-        # saves one full label-table join pass).
+        # is filled by whatever action runs it first, and a filter
+        # scans EVERY partition (no short-circuit), so this one count
+        # both fills the round's label table and answers changed==0 —
+        # the same predicate the join probe tested. Under AQE the pin
+        # call itself first runs the round's shuffle stages as jobs, so
+        # a round costs those jobs plus this count; the probe adds no
+        # shuffle (at 100 TB each round saves one full label-table join
+        # pass).
         updated = (
             relaxed.join(hop, relaxed["cluster_id"] == hop["_p"])
             .select(
@@ -1318,7 +1318,6 @@ def incremental_paragraph_dedup(
     id_col: str,
     text_col: str,
     sep: str = "\n\n",
-    min_chars: int = 1,
 ) -> DataFrame:
     """Daily-ingest twin of [[paragraph_dedup]]: strip a small delta
     against a STAGED corpus paragraph-fingerprint index. A delta
@@ -1344,7 +1343,7 @@ def incremental_paragraph_dedup(
     marked = _keep_first_drop(
         parts, "pfp", F.struct(F.col("doc_id"), F.col("pos")),
         _index_hits(fp_index, parts, "pfp", "pfp"),
-    ).withColumn("drop", F.col("drop") & (F.length("part") >= min_chars))
+    ).withColumn("drop", F.col("drop") & (F.length("part") >= 1))
     rebuilt = _reassemble(marked, sep, ["doc_id"], "part", "n_paragraphs",
                           "n_removed", "text")
     return _with_spine(delta, rebuilt, id_col, text_col, "n_paragraphs")

@@ -265,7 +265,6 @@ def events_log_as_of(
     id_col: str,
     seq_col: str,
     horizon,
-    op_col: str = "op",
     partition_col: str | None = None,
 ) -> DataFrame:
     """Time-travel read over a retained CDC event log: reconstruct the
@@ -285,14 +284,14 @@ def events_log_as_of(
     Plan: filter to the horizon (pushable to the scan), ONE map-side-
     combinable ``max_by`` aggregation per key — no window over the
     event history, no join; the log is scanned once. Output: the
-    event-row payload of each surviving upsert (minus ``op_col``).
+    event-row payload of each surviving upsert (minus ``op``).
     """
     keys = [id_col] + ([partition_col] if partition_col else [])
-    payload = [c for c in events.columns if c != op_col]
+    payload = [c for c in events.columns if c != "op"]
     # delete outranks an upsert at the SAME seq: order by (seq, is_del)
     rank = F.struct(
         F.col(seq_col),
-        F.when(F.col(op_col) == "delete", 1).otherwise(0).alias("_d"),
+        F.when(F.col("op") == "delete", 1).otherwise(0).alias("_d"),
         *[F.col(c) for c in payload if c not in keys + [seq_col]],
     )
     latest = (
@@ -300,7 +299,7 @@ def events_log_as_of(
         .groupBy(*keys)
         .agg(
             F.max_by(
-                F.struct(F.col(op_col).alias("_op"),
+                F.struct(F.col("op").alias("_op"),
                          *[F.col(c) for c in payload]),
                 rank,
             ).alias("_last")
@@ -317,7 +316,6 @@ def incremental_agg_apply(
     delta: DataFrame,
     key_cols: list[str],
     amount_col: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """Incremental MAINTENANCE of an additive aggregate (sum + count)
     from a change feed — the materialized-view half of the versioning
@@ -341,10 +339,10 @@ def incremental_agg_apply(
     """
     signed = delta.select(
         *key_cols,
-        F.when(F.col(op_col) == "del", -F.col(amount_col))
+        F.when(F.col("op") == "del", -F.col(amount_col))
         .otherwise(F.col(amount_col))
         .alias("_amt"),
-        F.when(F.col(op_col) == "del", F.lit(-1))
+        F.when(F.col("op") == "del", F.lit(-1))
         .otherwise(F.lit(1))
         .cast("long")
         .alias("_n"),

@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 
 def token_count_partials(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Fold a document frame to ``(source, token, c_st)`` unigram
     counts — the mergeable partial: counts are additive, so per-batch
@@ -41,8 +39,8 @@ def token_count_partials(
 
     return (
         docs.select(
-            F.col(source_col).alias("source"),
-            F.explode(tokens(text_col)).alias("token"),
+            F.col("source").alias("source"),
+            F.explode(tokens("text")).alias("token"),
         )
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("c_st"))

@@ -126,10 +126,9 @@ def broadcast_lookup_enrich(
     key_expr: str,
     lookup: dict,
     out_col: str,
-    out_type: str = "string",
 ) -> DataFrame:
     """Map-side dimension enrichment: broadcast ``lookup`` (a plain
-    dict) to every executor once and apply it vectorized per batch.
+    dict) to every executor once and map it per batch into string ``out_col``.
 
     ``key_expr`` is a SQL expression computing the lookup key from the
     row. This is the 100 TB path for small dims — zero shuffle, zero
@@ -142,7 +141,7 @@ def broadcast_lookup_enrich(
     in_cols = df.columns
     schema = ", ".join(f"{c} {t}" for c, t in
                        [(f.name, f.dataType.simpleString()) for f in df.schema.fields])
-    out_schema = f"{schema}, {out_col} {out_type}"
+    out_schema = f"{schema}, {out_col} string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         table = bc.value

@@ -6,7 +6,7 @@ Classic PageRank is float-valued, which makes cross-engine equality
 operator reformulates the damped walk over integers so the fixpoint
 iteration is bit-exact in any engine:
 
-  - every node starts with ``init_mass`` integer units;
+  - every node starts with 1,000,000 integer units;
   - each iteration, a node sends ``floor(mass * damp * w(u,v) /
     W(u))`` units along each out-edge (edge-weight-proportional,
     damping folded into the numerator) and KEEPS the remainder — the
@@ -45,22 +45,19 @@ from pyspark.sql import functions as F
 def walk_mass(
     edges: DataFrame,
     iterations: int = 3,
-    init_mass: int = 1_000_000,
-    damp_num: int = 85,
-    damp_den: int = 100,
 ) -> DataFrame:
     """Run ``iterations`` rounds of integer damped-walk mass over
     ``edges`` (columns ``src, dst, w``; ``w`` a positive integer
     weight; parallel ``(src, dst)`` rows collapse into one edge of
     their summed weight). Returns ``(node, mass)`` with Σ mass =
-    |V| * init_mass exactly, as one lazy plan whose depth grows
-    linearly with ``iterations``; building it submits no job. A null
-    endpoint or weight, or a weight ≤ 0, fails the job that runs it.
+    |V| * 1,000,000 exactly (each node starts with 10⁶; each round a
+    node sends 85% of its mass along its out-edges by weight), as one
+    lazy plan whose depth grows linearly with ``iterations``; building
+    it submits no job. A null endpoint or weight, or a weight ≤ 0,
+    fails the job that runs it.
 
-    Overflow headroom: the per-edge numerator ``mass * damp_num * w``
-    reaches |V|·init_mass·damp_num·w, ~10¹⁷·w with the defaults on a
-    10⁹-node graph; keep ``init_mass`` modest for huge weighted graphs
-    (the ranking depends only on the ratio mass/init_mass).
+    Overflow headroom: the per-edge numerator ``mass * 85 * w``
+    reaches |V|·10⁶·85·w, ~10¹⁷·w on a 10⁹-node graph.
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
@@ -82,12 +79,12 @@ def walk_mass(
         .groupBy("node", "dst", (F.col("w") == 0).alias("keep"), "w_out")
         .agg(F.sum("w").alias("w"))
     )
-    init = F.lit(init_mass).cast("long").alias("mass")
+    init = F.lit(1_000_000).cast("long").alias("mass")
     mass = e.filter("keep").select("node", init)
     # c: all of the mass on a self row, the floored send on an edge row
     keep = F.col("keep")
     c = F.when(keep, F.col("mass")).otherwise(
-        F.expr(f"(mass * {damp_num} * w) div ({damp_den} * w_out)")
+        F.expr("(mass * 85 * w) div (100 * w_out)")
     )
     # new mass = old mass - Σ sent + Σ received, reading mass once per
     # round (twice would double the plan each round): each row emits -c
@@ -130,11 +127,7 @@ def transition_edges(
     )
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Exact triangle counting via degree-ordered edge orientation —
     ``(node, n_triangles)`` for every node in at least one triangle.
 
@@ -165,9 +158,10 @@ def triangle_counts(
     2.87 s against 2.33 s pinned at sf0.1). Both are |E|-row key
     tables, the linear-size artifact a 100 TB run would stage anyway.
     """
-    lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    src, dst = F.col("src"), F.col("dst")
+    lo, hi = F.least(src, dst), F.greatest(src, dst)
     und = (
-        edges.filter(F.col(src) != F.col(dst))
+        edges.filter(src != dst)
         .select(lo.alias("a"), hi.alias("b"))
         .distinct()
         .localCheckpoint(eager=True)

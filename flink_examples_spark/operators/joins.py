@@ -151,8 +151,6 @@ def broadcast_pattern_match(
     key: str,
     order_cols: list[str],
     action_col: str,
-    first_col: str = "first_action",
-    second_col: str = "second_action",
 ) -> DataFrame:
     """Broadcast control-pattern join (J5, BroadcastStreamConnect.java:
     82-159): a tiny pattern table (pairs of consecutive actions) is
@@ -173,10 +171,10 @@ def broadcast_pattern_match(
     return (
         seq.join(
             F.broadcast(pattern),
-            (seq["_prev"] == pattern[first_col])
-            & (seq["_cur"] == pattern[second_col]),
+            (seq["_prev"] == pattern["first_action"])
+            & (seq["_cur"] == pattern["second_action"]),
         )
-        .select(F.col(key), F.col(first_col), F.col(second_col))
+        .select(F.col(key), F.col("first_action"), F.col("second_action"))
     )
 
 

@@ -101,15 +101,15 @@ def _payload_bytes(raw) -> bytes:
     return b"" if raw is None else bytes(raw)
 
 
-def _map_payloads(df: DataFrame, per_row, ddl: str, id_col: str,
-                  payload_col: str) -> DataFrame:
+def _map_payloads(df: DataFrame, per_row, ddl: str) -> DataFrame:
     """A decoder: ``per_row(payload bytes)`` returns 0..n output rows, or
-    None when the payload is undecodable. Output: ``<id_col>`` + ``ddl``."""
-    src = df.select(F.col(id_col).alias("_id"),
-                    F.col(payload_col).alias("_p"))
+    None when the payload is undecodable. Input ``media_id, payload``;
+    output ``media_id`` + ``ddl``."""
+    src = df.select(F.col("media_id").alias("_id"),
+                    F.col("payload").alias("_p"))
     return _map_rows(
         src, lambda _id, raw: per_row(_payload_bytes(raw)), ddl
-    ).withColumnRenamed("_id", id_col)
+    ).withColumnRenamed("_id", "media_id")
 
 
 def _encode(df: DataFrame, id_col: str, exprs: list[str], make) -> DataFrame:
@@ -208,15 +208,14 @@ def encode_fake_images(
     seed_text_col: str,
     width_expr: str,
     height_expr: str,
-    channels: int = 1,
 ) -> DataFrame:
-    """Synthesize an ``FIMG`` binary column: header + pixels cycled from
-    the seed text's utf-8 bytes. ``width_expr``/``height_expr`` are SQL
+    """Synthesize a one-channel ``FIMG`` binary column: header + pixels
+    cycled from the seed text's utf-8 bytes. ``width_expr``/``height_expr`` are SQL
     expressions over the input row (deterministic, oracle-checkable)."""
     return _encode(
         df, id_col, [seed_text_col, _int(width_expr), _int(height_expr)],
         lambda _mid, seed, w, h: _pack(
-            IMAGE_MAGIC, (w, h, channels), _seed_bytes(seed, w * h * channels)
+            IMAGE_MAGIC, (w, h, 1), _seed_bytes(seed, w * h)
         ),
     )
 
@@ -298,8 +297,6 @@ def encode_const_frame_videos(
 def video_scene_cuts(
     df: DataFrame,
     threshold: float = 8.0,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Shot-boundary (scene-cut) detection over the video batch shape:
     decode each video's frames, take per-frame mean brightness, and
@@ -310,7 +307,7 @@ def video_scene_cuts(
     Arrow batches, no shuffle — is identical). Videos with no cuts
     emit nothing.
 
-    Output: ``<id_col>, cut_frame, delta`` (delta rounded 6 dp)."""
+    Output: ``media_id, cut_frame, delta`` (delta rounded 6 dp)."""
 
     def cuts(raw):
         frames = _parse_fvid(raw)
@@ -320,12 +317,10 @@ def video_scene_cuts(
         return [(f + 1, round(float(d), 6))
                 for f, d in enumerate(deltas) if d > threshold]
 
-    return _map_payloads(df, cuts, "cut_frame int, delta double",
-                         id_col, payload_col)
+    return _map_payloads(df, cuts, "cut_frame int, delta double")
 
 
-def media_metadata(df: DataFrame, id_col: str = "media_id",
-                   payload_col: str = "payload") -> DataFrame:
+def media_metadata(df: DataFrame) -> DataFrame:
     """Parse the typed metadata struct off each payload's header —
     no full decode, reads only the header per row."""
 
@@ -344,12 +339,10 @@ def media_metadata(df: DataFrame, id_col: str = "media_id",
         df, meta,
         "kind string, width int, height int, channels int, "
         "sample_rate int, n_frames int, n_bytes int",
-        id_col, payload_col,
     )
 
 
-def image_features(df: DataFrame, id_col: str = "media_id",
-                   payload_col: str = "payload") -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """Decode FIMG payloads and extract per-image pixel statistics
     (mean/min/max byte value) — the feature-extraction batch shape:
     numpy view over Arrow binary, no per-pixel Python."""
@@ -361,12 +354,10 @@ def image_features(df: DataFrame, id_col: str = "media_id",
     return _map_payloads(
         df, feats,
         "width int, height int, mean_px double, min_px int, max_px int",
-        id_col, payload_col,
     )
 
 
-def audio_features(df: DataFrame, id_col: str = "media_id",
-                   payload_col: str = "payload") -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Decode FAUD payloads to per-clip sample statistics (duration,
     mean/max amplitude) — numpy view over Arrow binary, the audio
     feature-extraction batch shape."""
@@ -383,13 +374,10 @@ def audio_features(df: DataFrame, id_col: str = "media_id",
         df, feats,
         "sample_rate int, n_samples int, duration_s double, "
         "mean_amp double, max_amp int",
-        id_col, payload_col,
     )
 
 
-def image_resize(df: DataFrame, out_w: int, out_h: int,
-                 id_col: str = "media_id",
-                 payload_col: str = "payload") -> DataFrame:
+def image_resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize of FIMG payloads to (out_w, out_h) —
     returns new FIMG binaries. Real pixel work in numpy (gather by
     index grid), the canonical media-transform batch shape."""
@@ -406,12 +394,10 @@ def image_resize(df: DataFrame, out_w: int, out_h: int,
             :, (np.arange(out_w) * w) // out_w, :]
         return [(_pack(IMAGE_MAGIC, (out_w, out_h, c), out.tobytes()),)]
 
-    return _map_payloads(df, rs, "payload binary", id_col, payload_col)
+    return _map_payloads(df, rs, "payload binary")
 
 
-def video_frame_sample(df: DataFrame, every: int = 2,
-                       id_col: str = "media_id",
-                       payload_col: str = "payload") -> DataFrame:
+def video_frame_sample(df: DataFrame, every: int = 2) -> DataFrame:
     """Sample every ``every``-th frame from FVID payloads; one output row
     per kept frame with its index and mean byte value (frame-level
     fan-out, the video batch shape)."""
@@ -423,8 +409,7 @@ def video_frame_sample(df: DataFrame, every: int = 2,
         return [(f, round(float(frames[f].mean()), 6))
                 for f in range(0, len(frames), every)]
 
-    return _map_payloads(df, sample, "frame_idx int, mean_px double",
-                         id_col, payload_col)
+    return _map_payloads(df, sample, "frame_idx int, mean_px double")
 
 
 # ---------------------------------------------------------------------------
@@ -695,8 +680,7 @@ def encode_real_audio(
     )
 
 
-def decode_image_real(df: DataFrame, id_col: str = "media_id",
-                      payload_col: str = "payload") -> DataFrame:
+def decode_image_real(df: DataFrame) -> DataFrame:
     """Decode REAL image bytes (BMP / PPM / PGM — pure numpy; plus
     anything pillow can open when installed) to the same per-image
     pixel statistics :func:`image_features` emits for FIMG, with the
@@ -710,12 +694,10 @@ def decode_image_real(df: DataFrame, id_col: str = "media_id",
         df, feats,
         "fmt string, width int, height int, mean_px double, min_px int, "
         "max_px int",
-        id_col, payload_col,
     )
 
 
-def decode_audio_real(df: DataFrame, id_col: str = "media_id",
-                      payload_col: str = "payload") -> DataFrame:
+def decode_audio_real(df: DataFrame) -> DataFrame:
     """Decode REAL audio bytes (RIFF PCM WAV — pure numpy; plus
     anything soundfile can open when installed) to per-clip sample
     statistics mirroring :func:`audio_features`: duration, mean/max of
@@ -751,7 +733,6 @@ def decode_audio_real(df: DataFrame, id_col: str = "media_id",
         df, feats,
         "fmt string, sample_rate int, n_samples int, duration_s double, "
         "mean_amp double, max_amp double",
-        id_col, payload_col,
     )
 
 
@@ -759,8 +740,7 @@ def decode_audio_real(df: DataFrame, id_col: str = "media_id",
 # Perceptual-hash image near-dup (DCT pHash + multi-index Hamming bands)
 # ---------------------------------------------------------------------------
 
-def image_phash(df: DataFrame, id_col: str = "media_id",
-                payload_col: str = "payload") -> DataFrame:
+def image_phash(df: DataFrame) -> DataFrame:
     """64-bit DCT perceptual hash per FIMG payload.
 
     Classic pHash: decode → average-pool to 32x32 grayscale → 2D DCT-II
@@ -769,7 +749,7 @@ def image_phash(df: DataFrame, id_col: str = "media_id",
     duplicate images (re-encodes, small edits) land within a few bits.
     One narrow mapInPandas pass; the hash (8 bytes) is the staged
     artifact — downstream search never touches pixels. Output:
-    ``<id_col>, phash (long)``; an undecodable payload's NULL hash is
+    ``media_id, phash (long)``; an undecodable payload's NULL hash is
     excluded by :func:`hamming_neardup_pairs`.
 
     Swap the FIMG parse for a real decoder (decode_image_real) and
@@ -812,12 +792,10 @@ def image_phash(df: DataFrame, id_col: str = "media_id",
         # two's-complement into int64 range
         return [(out - (1 << 63) if out >= (1 << 63) else out,)]
 
-    return _map_payloads(df, one, "phash long", id_col, payload_col)
+    return _map_payloads(df, one, "phash long")
 
 
-def image_neardup_pairs(df: DataFrame, id_col: str = "media_id",
-                        payload_col: str = "payload",
-                        max_hamming: int = 3) -> DataFrame:
+def image_neardup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate image pairs: Hamming(phash) <= ``max_hamming``.
 
     Multi-index hashing with FOUR 16-bit bands: a pair differing in
@@ -830,7 +808,7 @@ def image_neardup_pairs(df: DataFrame, id_col: str = "media_id",
     Output: ``id_a, id_b, hamming``.
     """
     return hamming_neardup_pairs(
-        image_phash(df, id_col, payload_col), id_col, "phash", max_hamming
+        image_phash(df), "media_id", "phash", max_hamming
     )
 
 
@@ -896,17 +874,15 @@ def hamming_neardup_pairs(hashes: DataFrame, id_col: str,
     )
 
 
-def audio_fingerprint(df: DataFrame, id_col: str = "media_id",
-                      payload_col: str = "payload",
-                      n_frames: int = 64) -> DataFrame:
+def audio_fingerprint(df: DataFrame) -> DataFrame:
     """64-bit audio fingerprint per FAUD clip: frame the signal into
-    ``n_frames`` equal buckets, take per-frame mean energy, and set
+    64 equal buckets, take per-frame mean energy, and set
     bit i to sign(energy[i+1] - energy[i]) — the energy-delta contour,
     gain-invariant and stable under small edits (the shape acoustic
     fingerprints like Chromaprint reduce to, minus the codec-grade
     STFT). One narrow mapInPandas pass; swap in a real decoder and the
     downstream ``hamming_neardup_pairs`` search is unchanged.
-    Output: ``<id_col>, afp (long)`` (bit 63 is always 0 — 63 deltas).
+    Output: ``media_id, afp (long)`` (bit 63 is always 0 — 63 deltas).
     """
 
     def one(raw):
@@ -914,11 +890,11 @@ def audio_fingerprint(df: DataFrame, id_col: str = "media_id",
         if got is None:
             return None
         s = got[1]
-        e = (np.arange(n_frames + 1) * len(s)) // n_frames
+        e = (np.arange(65) * len(s)) // 64
         e_hi = np.maximum(e[1:], e[:-1] + 1)
         energy = np.array([
             float(s[e[i]:e_hi[i]].astype(np.float64).mean())
-            for i in range(n_frames)
+            for i in range(64)
         ])
         bits = energy[1:] > energy[:-1]
         out = 0
@@ -926,15 +902,12 @@ def audio_fingerprint(df: DataFrame, id_col: str = "media_id",
             out = (out << 1) | int(b)
         return [(out,)]  # 63 bits: always within int64 range
 
-    return _map_payloads(df, one, "afp long", id_col, payload_col)
+    return _map_payloads(df, one, "afp long")
 
 
-def audio_neardup_pairs(df: DataFrame, id_col: str = "media_id",
-                        payload_col: str = "payload",
-                        max_hamming: int = 3) -> DataFrame:
+def audio_neardup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate audio pairs: Hamming(fingerprint) <= radius via
     the shared multi-index band engine (complete at radius 3)."""
     return hamming_neardup_pairs(
-        audio_fingerprint(df, id_col, payload_col), id_col, "afp",
-        max_hamming,
+        audio_fingerprint(df), "media_id", "afp", max_hamming
     )

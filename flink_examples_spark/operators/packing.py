@@ -84,7 +84,6 @@ def sequence_pack_sharded(
     target: int,
     partition_col: str,
     n_shards: int = 16,
-    salt: str = "pack",
 ) -> DataFrame:
     """The 100 TB packing shape: pack within (``partition_col`` ×
     deterministic hash shard) instead of one window partition per
@@ -111,7 +110,7 @@ def sequence_pack_sharded(
             F.concat(
                 F.coalesce(F.col(id_col).cast("string"),
                            F.lit("\x00null\x00")),
-                F.lit("#" + salt),
+                F.lit("#pack"),
             )
         ),
         F.lit(n_shards),
@@ -305,7 +304,6 @@ def length_bucket_census(
     df: DataFrame,
     text_col: str,
     group_col: str,
-    caps: Sequence[int] = DEFAULT_LENGTH_CAPS,
 ) -> DataFrame:
     """Padding-waste census for length-bucketed batching (the "sorted
     batching" every inference/training batcher runs): per (group,
@@ -322,7 +320,7 @@ def length_bucket_census(
     return (
         df.select(
             F.col(group_col),
-            length_bucket_cap(t, caps).alias("cap"),
+            length_bucket_cap(t, DEFAULT_LENGTH_CAPS).alias("cap"),
             t.alias("_t"),
         )
         .groupBy(group_col, "cap")

@@ -130,10 +130,6 @@ def gopher_rules(
     id_col: str,
     text_col: str,
     min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
     min_stopword_hits: int = 2,
     stopwords: tuple[str, ...] = (
         "the", "be", "to", "of", "and", "that", "have", "with",
@@ -148,10 +144,10 @@ def gopher_rules(
     Rules implemented (the non-repetition subset — duplicate-fragment
     rules live in [[repetition_signals]]):
 
-      word_count    — token count in [min_tokens, max_tokens]
-      mean_word_len — mean word length in [min, max] chars
+      word_count    — token count in [min_tokens, 100000]
+      mean_word_len — mean word length in [3, 10] chars
       symbol_ratio  — (# of '#' chars + '...' occurrences) / tokens
-                      below max_symbol_ratio
+                      at most 0.1
       stopword_hits — contains >= min_stopword_hits distinct words
                       from ``stopwords`` (default: Gopher's 8 —
                       the/be/to/of/and/that/have/with; corpora whose
@@ -190,11 +186,11 @@ def gopher_rules(
         n.alias("n_tokens"),
         F.round(mean_len, 6).alias("mean_word_len"),
         F.round(sym, 6).alias("symbol_ratio"),
-        ((n >= min_tokens) & (n <= max_tokens))
+        ((n >= min_tokens) & (n <= 100_000))
         .cast("long").alias("word_count_ok"),
-        ((mean_len >= min_mean_word_len) & (mean_len <= max_mean_word_len))
+        ((mean_len >= 3.0) & (mean_len <= 10.0))
         .cast("long").alias("mean_len_ok"),
-        (sym <= max_symbol_ratio).cast("long").alias("symbol_ok"),
+        (sym <= 0.1).cast("long").alias("symbol_ok"),
         (hits >= min_stopword_hits).cast("long").alias("stopword_ok"),
     ).filter(F.col("n_tokens") > 0)
     return out.select(

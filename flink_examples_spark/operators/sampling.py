@@ -120,7 +120,6 @@ def stratified_sample(
     rates: Mapping[str, float],
     id_col: str,
     default_rate: float = 1.0,
-    salt: str = "strata",
 ) -> DataFrame:
     """Per-stratum deterministic downsampling (corpus mixture control).
 
@@ -130,7 +129,7 @@ def stratified_sample(
     This is how a 100 TB mixing job pins "web 10%, books 100%, code
     50%" reproducibly — one codegen'd filter, no shuffle, no rand().
     """
-    b = _strata_bucket(id_col, strata_col, salt)
+    b = _strata_bucket(id_col, strata_col, "strata")
     thresh = None
     for value, rate in rates.items():
         cond = F.col(strata_col) == value
@@ -219,7 +218,6 @@ def temperature_mixture_sample(
     strata_col: str,
     id_col: str,
     alpha: float = 0.7,
-    salt: str = "temp",
 ) -> DataFrame:
     """Temperature-flattened mixture sampling: downsample each stratum
     so kept sizes follow ``n_s^alpha`` (alpha < 1 flattens a skewed
@@ -257,7 +255,7 @@ def temperature_mixture_sample(
         .cast("int")
         .alias("_t"),
     )
-    b = _strata_bucket(id_col, strata_col, salt)
+    b = _strata_bucket(id_col, strata_col, "temp")
     return (
         df.withColumn("_b", b)
         .withColumn("_sv", sv)
@@ -267,20 +265,13 @@ def temperature_mixture_sample(
     )
 
 
-def plan_repeat_factors(
-    per_source: DataFrame,
-    source_col: str = "source",
-    tokens_col: str = "tokens",
-    alpha: float = 0.7,
-    target_mult: float = 2.0,
-    max_epochs: float = 4.0,
-) -> DataFrame:
+def plan_repeat_factors(per_source: DataFrame) -> DataFrame:
     """Epoch planner: per-source repeat factors for a token budget.
 
     Given per-source token counts, compute temperature-flattened mixture
-    weights ``w_s ∝ tokens_s^alpha`` and the repeat factor (epochs) each
-    source needs to fill a ``target_mult × total_tokens`` budget at those
-    weights, capped at ``max_epochs`` (the "don't repeat data more than
+    weights ``w_s ∝ tokens_s^0.7`` and the repeat factor (epochs) each
+    source needs to fill a ``2 × total_tokens`` budget at those
+    weights, capped at 4 epochs (the "don't repeat data more than
     N times" rule of thumb from scaling-law practice). This is the
     planning step a mixture-weighted training run does before writing
     its sampling manifest.
@@ -296,7 +287,7 @@ def plan_repeat_factors(
     so cross-engine float disagreement would need a libm result within
     one ulp of a .5 grid boundary to change any output.
 
-    Output: ``<source_col>, tokens, weight_10k, repeat_10k,
+    Output: ``source, tokens, weight_10k, repeat_10k,
     repeat_factor, effective_tokens``.
     """
     # four consumers read per_source (totals, weights, weight-sum,
@@ -305,14 +296,14 @@ def plan_repeat_factors(
     # per-source table once; the totals broadcast job triggers it
     # before any other consumer runs
     per_source = per_source.localCheckpoint(eager=False)
-    t = F.col(tokens_col).cast("double")
+    t = F.col("tokens").cast("double")
     totals = per_source.agg(
-        F.min(tokens_col).cast("double").alias("_t_min"),
-        F.sum(tokens_col).cast("double").alias("_t_total"),
+        F.min("tokens").cast("double").alias("_t_min"),
+        F.sum("tokens").cast("double").alias("_t_total"),
     )
     w = per_source.crossJoin(F.broadcast(totals)).withColumn(
         "weight_10k",
-        F.round(F.pow(t / F.col("_t_min"), F.lit(alpha)) * 10000, 0).cast("long"),
+        F.round(F.pow(t / F.col("_t_min"), F.lit(0.7)) * 10000, 0).cast("long"),
     )
     w_sum = w.agg(F.sum("weight_10k").alias("_w_sum"))
     planned = (
@@ -321,8 +312,8 @@ def plan_repeat_factors(
             "repeat_10k",
             F.round(
                 F.least(
-                    F.lit(max_epochs),
-                    (F.lit(target_mult) * F.col("_t_total") * F.col("weight_10k"))
+                    F.lit(4.0),
+                    (F.lit(2.0) * F.col("_t_total") * F.col("weight_10k"))
                     / (F.col("_w_sum") * t),
                 )
                 * 10000,
@@ -332,7 +323,7 @@ def plan_repeat_factors(
         .withColumn("repeat_factor", F.col("repeat_10k") / F.lit(10000.0))
         .withColumn(
             "effective_tokens",
-            F.floor(F.col("repeat_10k") * F.col(tokens_col) / F.lit(10000.0)).cast(
+            F.floor(F.col("repeat_10k") * F.col("tokens") / F.lit(10000.0)).cast(
                 "long"
             ),
         )
@@ -344,8 +335,6 @@ def materialize_repeat_plan(
     df: DataFrame,
     plan: DataFrame,
     id_col: str,
-    source_col: str = "source",
-    salt: str = "epoch",
 ) -> DataFrame:
     """Expand a corpus into its planned epoch copies — the manifest
     step after [[plan_repeat_factors]]: each doc appears
@@ -371,15 +360,15 @@ def materialize_repeat_plan(
     # a 0-repeat plan row contributes nothing; filtering it here also
     # keeps last_idx >= 0 (sequence(0, -1) would run DESCENDING and
     # emit phantom negative copies)
-    p = plan.select(source_col, "repeat_10k").filter(
+    p = plan.select("source", "repeat_10k").filter(
         F.col("repeat_10k") > 0
     )
-    joined = df.join(F.broadcast(p), source_col)
+    joined = df.join(F.broadcast(p), "source")
     n_full = F.floor(F.col("repeat_10k") / _BUCKETS).cast("int")
     frac = F.pmod(F.col("repeat_10k"), F.lit(_BUCKETS)).cast("int")
     # exactly ceil(repeat_factor) candidates: the fractional slot only
     # exists when there IS a fraction — an integer factor (e.g. capped
-    # at max_epochs) must not explode a per-doc candidate that the
+    # at 4 epochs) must not explode a per-doc candidate that the
     # filter then unconditionally drops (r5 review: 25% wasted rows +
     # hash evaluations at the cap)
     last_idx = n_full - 1 + (frac > 0).cast("int")
@@ -391,7 +380,7 @@ def materialize_repeat_plan(
         hash60(
             F.concat(
                 _null_safe(F.col(id_col)),
-                F.lit("#" + salt + "#"),
+                F.lit("#epoch#"),
                 F.col("copy_idx").cast("string"),
             )
         ),

@@ -42,11 +42,10 @@ def bm25_topk(
     id_col: str,
     text_col: str,
     terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     topk: int = 20,
 ) -> DataFrame:
-    """Top-``topk`` documents by BM25 for the literal ``terms``.
+    """Top-``topk`` documents by BM25 (k1 = 1.2, b = 0.75) for the
+    literal ``terms``.
 
     Output: ``(id, dl, score)`` ordered by (score DESC, id) — callers
     relying on membership get a total order.
@@ -91,8 +90,8 @@ def bm25_topk(
         tf = F.col(f"tf_{i}").cast("double")
         part = idf * (
             tf
-            * (k1 + 1)
-            / (tf + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
+            * (1.2 + 1)
+            / (tf + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
         )
         score = part if score is None else score + part
     return (

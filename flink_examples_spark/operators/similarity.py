@@ -67,19 +67,27 @@ def _batch_matrix(pdf, id_col="vid", vec_col="v"):
     return pdf[id_col].to_numpy(), _unit_rows(np.stack(pdf[vec_col].to_numpy()))
 
 
-def _query_matrix(queries: DataFrame, id_col: str, vec_col: str):
+def _query_matrix(queries: DataFrame):
     """Collect the (small) query set to the driver — ONE eager job —
     as ``(q_ids, q_norm)``, or ``None`` when there are no queries."""
     rows = queries.select(
-        id_col, F.col(vec_col).cast("array<double>")
+        "vec_id", F.col("embedding").cast("array<double>")
     ).collect()
     return _id_matrix(rows) if rows else None
 
 
-def _corpus(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _corpus(embeddings: DataFrame) -> DataFrame:
     return embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
+    )
+
+
+def _vid_v(embeddings: DataFrame, id_col="vec_id", vec_col="embedding"):
+    """The pair sweeps' ``(vid, v array<double>)`` projection."""
+    return embeddings.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).cast("array<double>").alias("v"),
     )
 
 
@@ -231,8 +239,6 @@ def cosine_similarity_col(a, b):
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query vector, the k nearest
@@ -245,11 +251,11 @@ def cosine_topk(
     shuffle.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     )
     scored = (
-        _corpus(embeddings, id_col, vec_col)
+        _corpus(embeddings)
         .join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), 6))
     )
@@ -259,8 +265,6 @@ def cosine_topk(
 def cosine_topk_gemm(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """GEMM-based brute-force top-k (throughput path).
@@ -270,12 +274,12 @@ def cosine_topk_gemm(
     ``numpy`` matmul — ~100x fewer Python-boundary crossings than
     per-row UDFs. Per-batch local top-k keeps the shuffle tiny.
     """
-    qm = _query_matrix(queries, id_col, vec_col)
+    qm = _query_matrix(queries)
     if qm is None:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids, q_norm = qm
     scored = _topk_scored(
-        _corpus(embeddings, id_col, vec_col), q_ids, k,
+        _corpus(embeddings), q_ids, k,
         lambda c_norm: c_norm @ q_norm.T,
     )
     return _rank_topk(scored, "cosine", k)
@@ -283,8 +287,6 @@ def cosine_topk_gemm(
 
 def embedding_neardup_pairs(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.45,
     strategy: str = "blocked",
     n_blocks: int = 8,
@@ -296,91 +298,43 @@ def embedding_neardup_pairs(
     collect, executor memory bounded by one block pair. The registered
     path; survives arbitrary corpus sizes.
 
-    ``strategy='gemm'``: collect the corpus to the driver and broadcast
-    the normalized matrix — fastest on a corpus that fits driver memory
-    (benchmarks, small reruns), a scale-killer otherwise. Never use from
-    a registered pipeline.
-
     ``strategy='expr'``: pure column-expression pair join — slower but
     all-JVM; the cross-check baseline.
 
-    All three are exact and agree bit-for-bit at 6 dp with the SQL
-    oracle (verified at sf0.01 and sf0.1); all are quadratic in total
-    work. For approximate sub-quadratic search compose with
+    Both are exact and agree bit-for-bit at 6 dp with the SQL oracle
+    (verified at sf0.01 and sf0.1); both are quadratic in total work.
+    For approximate sub-quadratic search compose with
     ``hyperplane_lsh_buckets`` (see ``embedding_neardup_lsh``) so the
     matmul runs per bucket, not per corpus.
     """
-    if strategy not in ("blocked", "gemm", "expr"):
+    if strategy not in ("blocked", "expr"):
         raise ValueError(
             f"embedding_neardup_pairs: unknown strategy {strategy!r} "
-            "(expected 'blocked', 'gemm', or 'expr') — refusing to fall "
-            "through to the driver-collect path on a typo"
+            "(expected 'blocked' or 'expr')"
         )
     if strategy == "blocked":
         return embedding_neardup_blocked(
-            embeddings, id_col, vec_col, threshold, n_blocks=n_blocks
+            embeddings, threshold=threshold, n_blocks=n_blocks
         )
-    e = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
+    e = _vid_v(embeddings)
+    a, b = e.alias("a"), e.alias("b")
+    return (
+        a.join(b, F.col("a.vid") < F.col("b.vid"))
+        .withColumn(
+            "cosine",
+            F.round(cosine_similarity_col(F.col("a.v"), F.col("b.v")), 6),
+        )
+        .filter(F.col("cosine") >= threshold)
+        .select(
+            F.col("a.vid").alias("vec_a"),
+            F.col("b.vid").alias("vec_b"),
+            "cosine",
+        )
     )
-    if strategy == "expr":
-        a, b = e.alias("a"), e.alias("b")
-        return (
-            a.join(b, F.col("a.vid") < F.col("b.vid"))
-            .withColumn(
-                "cosine",
-                F.round(cosine_similarity_col(F.col("a.v"), F.col("b.v")), 6),
-            )
-            .filter(F.col("cosine") >= threshold)
-            .select(
-                F.col("a.vid").alias("vec_a"),
-                F.col("b.vid").alias("vec_b"),
-                "cosine",
-            )
-        )
-
-    import numpy as np
-
-    rows = e.collect()
-    if not rows:
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
-        )
-    all_ids = np.array([r["vid"] for r in rows], dtype=np.int64)
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = embeddings.sparkSession.sparkContext.broadcast((all_ids, mat))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: F811 — executor-side import
-
-        ids_all, m_all = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            b_ids = pdf["vid"].to_numpy()
-            b_mat = np.stack(pdf["v"].to_numpy())
-            b_mat = b_mat / np.linalg.norm(b_mat, axis=1, keepdims=True)
-            sims = np.round(b_mat @ m_all.T, 6)
-            rows_i, cols_j = np.nonzero(
-                (sims >= threshold) & (b_ids[:, None] < ids_all[None, :])
-            )
-            if len(rows_i):
-                yield pd.DataFrame(
-                    {
-                        "vec_a": b_ids[rows_i],
-                        "vec_b": ids_all[cols_j],
-                        "cosine": sims[rows_i, cols_j],
-                    }
-                )
-
-    return e.mapInPandas(score, "vec_a long, vec_b long, cosine double")
 
 
 def embedding_neardup_blocked(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.45,
     n_blocks: int = 8,
 ) -> DataFrame:
@@ -396,10 +350,7 @@ def embedding_neardup_blocked(
     join; choose ``n_blocks`` ~ sqrt(parallelism); executor memory is bounded
     by two blocks, never the corpus, and the driver holds nothing.
     """
-    e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn(
+    e = _vid_v(embeddings).withColumn(
         "blk", F.pmod(F.crc32(F.col("vid").cast("string")), F.lit(n_blocks)).cast("int")
     )
     # Row in block b: left side of pairs (b, j>=b), right side of (i<=b, b).
@@ -435,15 +386,12 @@ def embedding_neardup_blocked(
 def incremental_embedding_neardup(
     corpus: DataFrame,
     delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
     chunk_size: int | None = None,
 ) -> DataFrame:
     """Daily-dump twin of the exact ``embedding_neardup`` sweep
     (VERDICT r10 next-round #2 — the embedding family's missing
     incremental face): all near-dup pairs the DELTA touches, i.e.
-    every (a, b) with cosine >= threshold and at least one side in the
+    every (a, b) with cosine >= 0.45 and at least one side in the
     delta — exactly what a batch ``embedding_neardup_pairs`` over the
     union reports for those pairs (the pinned parity), so a staged
     pair ledger stays maintainable by append without ever re-GEMMing
@@ -498,14 +446,7 @@ def incremental_embedding_neardup(
     registered query's pinned fingerprint) and the one-pass corpus
     cost.
     """
-    c = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    d = delta.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
+    c, d = _vid_v(corpus), _vid_v(delta)
     spark = corpus.sparkSession
 
     def _prober(bc):
@@ -516,7 +457,7 @@ def incremental_embedding_neardup(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                pairs = _pairs_across(*_batch_matrix(pdf), ids_d, m_d, threshold)
+                pairs = _pairs_across(*_batch_matrix(pdf), ids_d, m_d, 0.45)
                 if len(pairs):
                     yield pairs
 
@@ -529,7 +470,7 @@ def incremental_embedding_neardup(
         # lineage (un-checkpointed sample, files changing between the
         # collect and the scan), could diverge from the broadcast
         # matrix the corpus side probes (round-scope review r11)
-        p = _pairs_within(ids, mat, threshold)
+        p = _pairs_within(ids, mat, 0.45)
         return list(zip(
             p["vec_a"].tolist(), p["vec_b"].tolist(), p["cosine"].tolist()
         ))
@@ -589,15 +530,11 @@ def embedding_neardup_lsh(
     embeddings: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    threshold: float = 0.45,
-    n_planes: int = 4,
     n_tables: int = 16,
-    seed: int = 42,
-    dim: int = 64,
 ) -> DataFrame:
     """Scale path: multi-table hyperplane LSH, then exact cosine within
-    buckets — candidates are an OR over ``n_tables`` independent hash
-    tables of ``n_planes`` planes each, the standard recall fix for
+    buckets (cosine >= 0.45) — candidates are an OR over ``n_tables``
+    independent hash tables of 4 planes each, the standard recall fix for
     sign-LSH (a single table's all-planes-agree probability decays as
     p^planes; OR-ing L tables recovers 1-(1-p^b)^L).
 
@@ -617,55 +554,50 @@ def embedding_neardup_lsh(
     sf0.001 = 500 vectors / 7 pairs; tests/test_similarity.py holds the
     defaults to the ≥0.85 floor):
 
-        n_planes  n_tables   recall sf0.1   recall sf0.001
+          planes  n_tables   recall sf0.1   recall sf0.001
             8        1          0.03            0.00      (old default)
             4        1          0.19            0.29
             4        4          0.54            0.43
             4        8          0.79            1.00
             3        8          0.93            1.00
-            4       16          0.96            1.00      <- default
+            4       16          0.96            1.00      <- used
     """
     # ALL tables' bucket keys in ONE narrow pass — one corpus scan,
     # zero joins (a per-table buckets-then-join-back loop costs
     # n_tables+1 scans of the embedding store). Assignment is a single
-    # Arrow-batched GEMM against the stacked (n_tables*n_planes, dim)
-    # plane matrix: ~100x fewer interpreter dispatches than evaluating
-    # n_tables*n_planes higher-order dot folds per row, and the same
+    # Arrow-batched GEMM against the stacked (n_tables*4, 64) plane
+    # matrix: ~100x fewer interpreter dispatches than evaluating
+    # n_tables*4 higher-order dot folds per row, and the same
     # seeded planes as hyperplane_lsh_buckets, so buckets (and recall)
     # are bit-identical to the expression path.
     all_planes = np.vstack([
-        np.random.default_rng(seed + 7919 * t).standard_normal(
-            (n_planes, dim)
-        )
+        np.random.default_rng(42 + 7919 * t).standard_normal((4, 64))
         for t in range(n_tables)
     ])
-    bit_vals = 2 ** np.arange(n_planes - 1, -1, -1)  # MSB-first, as concat_ws
+    bit_vals = 2 ** np.arange(3, -1, -1)  # MSB-first, as concat_ws
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
             m = np.stack(pdf["v"].to_numpy())
-            signs = (m @ all_planes.T >= 0).reshape(
-                len(pdf), n_tables, n_planes
-            )
+            signs = (m @ all_planes.T >= 0).reshape(len(pdf), n_tables, 4)
             codes = signs @ bit_vals  # (n, n_tables) integer bucket ids
             out = pd.DataFrame({
                 "vid": np.repeat(pdf["vid"].to_numpy(), n_tables),
                 "v": pdf["v"].to_numpy().repeat(n_tables),
                 "bucket": [
-                    f"{t}#{codes[i, t]:0{n_planes}b}"
+                    f"{t}#{codes[i, t]:04b}"
                     for i in range(len(pdf))
                     for t in range(n_tables)
                 ],
             })
             yield out
 
-    e = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).mapInPandas(assign, "vid long, v array<double>, bucket string")
-
-    return _in_group_pairs(e, "bucket", threshold)
+    e = _vid_v(embeddings, id_col, vec_col).mapInPandas(
+        assign, "vid long, v array<double>, bucket string"
+    )
+    return _in_group_pairs(e, "bucket", 0.45)
 
 
 def _hyperplane_bits(
@@ -688,26 +620,18 @@ def _hyperplane_bits(
     return F.concat_ws("", bucket_bits)
 
 
-def hyperplane_lsh_buckets(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
+def hyperplane_lsh_buckets(embeddings: DataFrame) -> DataFrame:
     """Random-hyperplane LSH: sign-pattern bucket id per vector.
 
-    Vectors agreeing on all ``n_planes`` signs land in one bucket;
+    Vectors agreeing on all 8 plane signs land in one bucket;
     near-neighbors (small angle) collide with high probability. The
     planes are seeded-deterministic and shipped in the closure — no
     shuffle to assign buckets, one shuffle to group them.
     """
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     return embeddings.select(
-        F.col(id_col),
-        _hyperplane_bits(v, n_planes=n_planes, seed=seed, dim=dim)
-        .alias("bucket"),
+        F.col("vec_id"),
+        _hyperplane_bits(v).alias("bucket"),
     )
 
 
@@ -716,14 +640,12 @@ def train_ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_clusters: int = 16,
-    n_train: int = 2048,
-    n_iter: int = 10,
     seed: int = 42,
 ):
     """Deterministic mini k-means for the IVF coarse quantizer.
 
-    Trains on a bounded, deterministically-chosen sample (first
-    ``n_train`` ids) pulled to the driver — at 100 TB the sample is
+    Trains 10 iterations on a bounded, deterministically-chosen sample
+    (first 2048 ids) pulled to the driver — at 100 TB the sample is
     still ~thousands of rows; training cost is independent of corpus
     size. Returns an (n_clusters, dim) numpy array of L2-normalized
     centroids.
@@ -731,7 +653,7 @@ def train_ivf_centroids(
     rows = (
         embeddings.select(id_col, F.col(vec_col).cast("array<double>"))
         .orderBy(id_col)
-        .limit(n_train)
+        .limit(2048)
         .collect()
     )
     if not rows:
@@ -739,7 +661,7 @@ def train_ivf_centroids(
     x = _unit_vectors(rows)
     rng = np.random.default_rng(seed)
     cent = x[rng.choice(len(x), size=min(n_clusters, len(x)), replace=False)]
-    for _ in range(n_iter):
+    for _ in range(10):
         assign = np.argmax(x @ cent.T, axis=1)  # cosine == dot on unit vectors
         for c in range(len(cent)):
             members = x[assign == c]
@@ -752,12 +674,9 @@ def train_ivf_centroids(
 def cosine_topk_ivf(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_clusters: int = 16,
     n_probe: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF approximate top-k — the 100 TB scale path for ANN.
 
@@ -784,15 +703,13 @@ def cosine_topk_ivf(
            8         0.82           0.81      <- default
           16         1.00           1.00      (exact by construction)
     """
-    cent = train_ivf_centroids(
-        embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
-    )
-    qm = _query_matrix(queries, id_col, vec_col)
+    cent = train_ivf_centroids(embeddings, n_clusters=n_clusters)
+    qm = _query_matrix(queries)
     if qm is None or cent.size == 0:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids, q_norm = qm
     scored = _topk_scored(
-        _corpus(embeddings, id_col, vec_col), q_ids, k,
+        _corpus(embeddings), q_ids, k,
         lambda c_norm: c_norm @ q_norm.T,
         probe=_probe_mask(q_norm, cent, n_probe),
         cell_of=_nearest_cell(cent),
@@ -803,8 +720,6 @@ def cosine_topk_ivf(
 def ivf_assign_cells(
     embeddings: DataFrame,
     centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign every vector to its argmax-cosine cell against FIXED,
     already-trained centroids — the build step of the STAGED IVF index
@@ -815,7 +730,7 @@ def ivf_assign_cells(
     against the SAME centroids — assignments never drift between
     batches, which is what makes the per-batch index subdirs unionable
     without a fold. One mapInPandas pass, centroids in the closure,
-    corpus never shuffles. Output ``(<id_col>, cell, <vec_col>)`` —
+    corpus never shuffles. Output ``(vec_id, cell, embedding)`` —
     the vector rides along because the probe's exact scoring needs it.
     """
     cent = np.asarray(centroids, dtype=np.float64)
@@ -842,11 +757,11 @@ def ivf_assign_cells(
             )
 
     out = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     ).mapInPandas(assign, "_id long, cell int, _v array<double>")
     return out.select(
-        F.col("_id").alias(id_col), "cell", F.col("_v").alias(vec_col)
+        F.col("_id").alias("vec_id"), "cell", F.col("_v").alias("embedding")
     )
 
 
@@ -854,8 +769,6 @@ def cosine_topk_ivf_staged(
     index: DataFrame,
     centroids,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 8,
 ) -> DataFrame:
@@ -881,7 +794,7 @@ def cosine_topk_ivf_staged(
     the exact scoring run in one mapInPandas pass with queries in the
     closure (the [[cosine_topk_ivf]] contract)."""
     cent = np.asarray(centroids, dtype=np.float64)
-    qm = _query_matrix(queries, id_col, vec_col)
+    qm = _query_matrix(queries)
     if qm is None or cent.size == 0:
         return index.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids, q_norm = qm
@@ -889,9 +802,9 @@ def cosine_topk_ivf_staged(
     all_cells = np.flatnonzero(probe.any(axis=0)).tolist()
 
     corp = index.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         "cell",
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ).filter(F.col("cell").isin(all_cells))
     scored = _topk_scored(
         corp, q_ids, k,
@@ -904,8 +817,6 @@ def cosine_topk_ivf_staged(
 
 def train_pq_codebooks(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     n_codes: int = 16,
     n_train: int = 2048,
@@ -921,8 +832,8 @@ def train_pq_codebooks(
     an (m, n_codes, dim/m) float64 array.
     """
     rows = (
-        embeddings.select(id_col, F.col(vec_col).cast("array<double>"))
-        .orderBy(id_col)
+        embeddings.select("vec_id", F.col("embedding").cast("array<double>"))
+        .orderBy("vec_id")
         .limit(n_train)
         .collect()
     )
@@ -996,8 +907,6 @@ def _pq_encode_mat(x, books):
 def pq_encode(
     embeddings: DataFrame,
     codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization encode: each vector → ``m`` small code ids
     (``m`` bytes/vector at n_codes<=256 — a 32x storage cut for 64-d
@@ -1005,7 +914,7 @@ def pq_encode(
     the closure: no shuffle, no driver traffic. At 100 TB the codes
     table is the staged scan artifact for ADC search (`cosine_topk_pq`).
 
-    Output: ``<id_col>, codes (array<int>)``.
+    Output: ``vec_id, codes (array<int>)``.
     """
     books = codebooks
 
@@ -1017,22 +926,19 @@ def pq_encode(
             yield pd.DataFrame({"_id": ids, "codes": list(_pq_encode_mat(x, books))})
 
     out = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     ).mapInPandas(enc, "_id long, codes array<int>")
-    return out.select(F.col("_id").alias(id_col), "codes")
+    return out.select(F.col("_id").alias("vec_id"), "codes")
 
 
 def cosine_topk_pq(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     m: int = 16,
     n_codes: int = 64,
     shortlist_mult: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric-distance scan + exact
     re-rank — the compressed-domain scale path for ANN over a corpus
@@ -1067,24 +973,20 @@ def cosine_topk_pq(
 
     tests/test_similarity.py holds the default to a >=0.85 floor.
     """
-    qm = _query_matrix(queries, id_col, vec_col)
+    qm = _query_matrix(queries)
     if qm is None:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
-    books = train_pq_codebooks(
-        embeddings, id_col, vec_col, m=m, n_codes=n_codes, seed=seed
-    )
+    books = train_pq_codebooks(embeddings, m=m, n_codes=n_codes)
     if books.size == 0:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     return _pq_topk(
-        embeddings, queries, id_col, vec_col, k, shortlist_mult * k, qm, books
+        embeddings, queries, k, shortlist_mult * k, qm, books
     )
 
 
 def _pq_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str,
-    vec_col: str,
     k: int,
     shortlist: int,
     qm,
@@ -1115,7 +1017,7 @@ def _pq_topk(
         g = np.take_along_axis(lut, codes.T[None, :, :], axis=2)
         return g.sum(axis=1).T  # (n_rows, n_queries)
 
-    corp = _corpus(embeddings, id_col, vec_col)
+    corp = _corpus(embeddings)
     scored = _topk_scored(
         corp, q_ids, shortlist, adc, probe, cell_of, score_col="pq_score"
     )
@@ -1124,8 +1026,8 @@ def _pq_topk(
     )
     fetched = corp.join(F.broadcast(short), "neighbor_id")
     qdf = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     )
     exact = fetched.join(F.broadcast(qdf), "query_id").withColumn(
         "cosine", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), 6)
@@ -1133,9 +1035,7 @@ def _pq_topk(
     return _rank_topk(exact, "cosine", k)
 
 
-def quantize_embeddings_int8(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings_int8(emb: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization of an embedding column —
     the 4x storage/bandwidth cut for a 100 TB embedding store (and the
     input format GPU ANN services expect).
@@ -1148,7 +1048,7 @@ def quantize_embeddings_int8(
     higher-order transform itself is interpreted, not codegen'd, but
     each element is visited exactly once).
 
-    Output: ``<id_col>, scale (double), q (array<int>)``; dequantize as
+    Output: ``vec_id, scale (double), q (array<int>)``; dequantize as
     ``q_i * scale`` with max abs error ``scale/2`` per component.
     """
     # two-step select: materialize the scale as a column FIRST, then
@@ -1156,10 +1056,10 @@ def quantize_embeddings_int8(
     # array_max subtree inside the lambda would re-scan the whole
     # array per element (higher-order functions get no common-
     # subexpression elimination: O(d^2) per vector)
-    v = F.col(vec_col)
+    v = F.col("embedding")
     mx = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scaled = emb.select(
-        F.col(id_col), v.alias("_v"), (mx / F.lit(127.0)).alias("scale")
+        F.col("vec_id"), v.alias("_v"), (mx / F.lit(127.0)).alias("scale")
     )
     s = F.col("scale")
     q = F.when(
@@ -1171,13 +1071,11 @@ def quantize_embeddings_int8(
             lambda x: F.floor(x / s + F.lit(0.5)).cast("int"),
         )
     )
-    return scaled.select(F.col(id_col), "scale", q.alias("q"))
+    return scaled.select(F.col("vec_id"), "scale", q.alias("q"))
 
 
 def kmeans_assign(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 10,
     seed: int = 42,
 ) -> DataFrame:
@@ -1190,14 +1088,12 @@ def kmeans_assign(
     ONE ``mapInPandas`` pass assigns every vector to its argmax-cosine
     centroid and records that cosine (cohesion) — centroids ship in the
     closure, the corpus never shuffles. Output:
-    ``<id_col>, cluster (int), cos_to_centroid (double)``.
+    ``vec_id, cluster (int), cos_to_centroid (double)``.
     """
-    cent = train_ivf_centroids(
-        embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
-    )
+    cent = train_ivf_centroids(embeddings, n_clusters=n_clusters, seed=seed)
     if cent.size == 0:  # empty corpus: empty assignment, same schema
         return embeddings.sparkSession.createDataFrame(
-            [], f"{id_col} long, cluster int, cos_to_centroid double"
+            [], "vec_id long, cluster int, cos_to_centroid double"
         )
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1218,20 +1114,17 @@ def kmeans_assign(
             )
 
     out = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     ).mapInPandas(assign, "_id long, cluster int, cos_to_centroid double")
-    return out.select(F.col("_id").alias(id_col), "cluster", "cos_to_centroid")
+    return out.select(F.col("_id").alias("vec_id"), "cluster", "cos_to_centroid")
 
 
 def semdedup_pairs(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.45,
     n_clusters: int = 8,
     n_probe: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup candidates: cluster the corpus
     (spherical k-means), then exact pairwise cosine WITHIN clusters
@@ -1258,9 +1151,7 @@ def semdedup_pairs(
            16          3          0.88           0.86
            16          4          0.96           1.00
     """
-    cent = train_ivf_centroids(
-        embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
-    )
+    cent = train_ivf_centroids(embeddings, n_clusters=n_clusters)
     if cent.size == 0:  # empty corpus: no pairs, same schema
         return embeddings.sparkSession.createDataFrame([], _PAIRS_SCHEMA)
     P = min(n_probe, n_clusters)
@@ -1279,10 +1170,7 @@ def semdedup_pairs(
                 }
             )
 
-    e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).mapInPandas(assign, "vid long, v array<double>, cluster int")
+    e = _vid_v(embeddings).mapInPandas(assign, "vid long, v array<double>, cluster int")
 
     return _in_group_pairs(e, "cluster", threshold)
 
@@ -1290,11 +1178,7 @@ def semdedup_pairs(
 def cluster_balanced_sample(
     embeddings: DataFrame,
     target: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 10,
-    salt: str = "cbal",
-    seed: int = 42,
 ) -> DataFrame:
     """Diversity (cluster-balanced) sampling: ~``target`` vectors drawn
     evenly across k-means clusters — ceil(target/k) per cluster, the
@@ -1306,39 +1190,34 @@ def cluster_balanced_sample(
     deterministic-grid idiom as operators/sampling.py: replayable,
     retry-idempotent, no rand()), via a window partitioned on the
     cluster key — parallel across clusters, never a global sort.
-    Output: ``<id_col>, cluster``.
+    Output: ``vec_id, cluster``.
     """
     import math
 
     from flink_examples_spark.functions.text import hash60
 
     quota = math.ceil(target / n_clusters)
-    assign = kmeans_assign(
-        embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
-    )
+    assign = kmeans_assign(embeddings, n_clusters=n_clusters)
     key = hash60(
-        F.concat(F.col(id_col).cast("string"), F.lit("#" + salt))
+        F.concat(F.col("vec_id").cast("string"), F.lit("#cbal"))
     )
-    w = Window.partitionBy("cluster").orderBy(key.asc(), F.col(id_col).asc())
+    w = Window.partitionBy("cluster").orderBy(key.asc(), F.col("vec_id").asc())
     return (
         assign.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= quota)
-        .select(id_col, "cluster")
+        .select("vec_id", "cluster")
     )
 
 
 def cosine_topk_ivfpq(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_clusters: int = 16,
     n_probe: int = 8,
     m: int = 16,
     n_codes: int = 64,
     shortlist_mult: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF-PQ ANN — the composition production vector stores (the FAISS
     ``IVFx,PQy`` family) actually run at billion-vector scale: IVF's
@@ -1371,19 +1250,15 @@ def cosine_topk_ivfpq(
     filter → ADC score), one small rank shuffle over ~|q| * L shortlist
     rows, broadcast exact re-rank. Zero corpus shuffles.
     """
-    qm = _query_matrix(queries, id_col, vec_col)
+    qm = _query_matrix(queries)
     if qm is None:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
-    cent = train_ivf_centroids(
-        embeddings, id_col, vec_col, n_clusters=n_clusters, seed=seed
-    )
-    books = train_pq_codebooks(
-        embeddings, id_col, vec_col, m=m, n_codes=n_codes, seed=seed
-    )
+    cent = train_ivf_centroids(embeddings, n_clusters=n_clusters)
+    books = train_pq_codebooks(embeddings, m=m, n_codes=n_codes)
     if cent.size == 0 or books.size == 0:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     return _pq_topk(
-        embeddings, queries, id_col, vec_col, k, shortlist_mult * k, qm, books,
+        embeddings, queries, k, shortlist_mult * k, qm, books,
         probe=_probe_mask(qm[1], cent, n_probe), cell_of=_nearest_cell(cent),
     )
 

@@ -109,7 +109,6 @@ def range_partitioned_ntile(
     order_cols: Sequence[str],
     n_tiles: int,
     num_ranges: int | None = None,
-    out_col: str = "band",
 ) -> DataFrame:
     """Exact ``NTILE(n_tiles) OVER (PARTITION BY part_col ORDER BY
     order_cols)`` WITHOUT a low-cardinality full-data sort.
@@ -181,7 +180,7 @@ def range_partitioned_ntile(
     ).otherwise(r + F.floor((rr - thr + q - 1) / F.greatest(q, F.lit(1))))
     return (
         ranged.join(F.broadcast(offsets), ["__pid", part_col])
-        .withColumn(out_col, band.cast("int"))
+        .withColumn("band", band.cast("int"))
         .drop("__pid", "__off", "__n")
     )
 

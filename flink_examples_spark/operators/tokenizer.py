@@ -47,21 +47,19 @@ def _merge_word(parts: list[str], pair: tuple[str, str]) -> list[str]:
 
 def train_bpe_merges(
     docs: DataFrame,
-    text_col: str = "text",
     n_merges: int = 50,
-    max_words: int = 10_000,
 ) -> list[tuple[str, str]]:
     """Train an ordered BPE merge list on the corpus word-frequency
-    table (JVM pretokenize → explode → count → top-``max_words`` by
+    table (JVM pretokenize → explode → count → top-10,000 words by
     frequency, tie-broken by word so the sample is deterministic).
-    Driver cost is O(max_words · n_merges), independent of corpus size.
+    Driver cost is O(10,000 · n_merges), independent of corpus size.
     """
     wc = (
-        docs.select(F.explode(bpe_tokens(F.col(text_col))).alias("w"))
+        docs.select(F.explode(bpe_tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("w"))
-        .limit(max_words)
+        .limit(10_000)
         .collect()
     )
     vocab: dict[tuple[str, ...], int] = {
@@ -104,12 +102,10 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 def bpe_encode_stats(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Encode the corpus with a trained merge table and emit per-doc
-    accounting: ``<id_col>, [keep_cols...], n_pretokens, n_bpe_tokens``.
+    accounting: ``doc_id, [keep_cols...], n_pretokens, n_bpe_tokens``.
 
     Pretokens are split in the JVM; the merge table ships in the
     closure; encoding is one narrow ``mapInPandas`` pass with a
@@ -156,15 +152,15 @@ def bpe_encode_stats(
     fields = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
     keep_schema = "".join(f", {c} {fields[c]}" for c in keep_cols)
     out = docs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         *keep_cols,
-        bpe_tokens(F.col(text_col)).alias("_pre"),
+        bpe_tokens(F.col("text")).alias("_pre"),
     ).mapInPandas(
         enc,
-        f"_id {fields[id_col]}{keep_schema}, "
+        f"_id {fields['doc_id']}{keep_schema}, "
         "n_pretokens long, n_bpe_tokens long",
     )
-    return out.withColumnRenamed("_id", id_col)
+    return out.withColumnRenamed("_id", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -211,35 +207,31 @@ def _viterbi_segment(
 
 def train_unigram_vocab(
     docs: DataFrame,
-    text_col: str = "text",
     vocab_size: int = 200,
-    max_words: int = 10_000,
     em_iters: int = 3,
-    seed_max_len: int = 6,
-    prune_frac: float = 0.25,
 ) -> dict[str, float]:
     """Train a unigram-LM piece vocabulary (piece -> log-prob).
 
     Simplified Kudo (2018) loop on the SAME bounded word-frequency
     sample the BPE trainer uses (driver cost independent of corpus
-    size): seed with all substrings ≤ ``seed_max_len`` of the sampled
+    size): seed with all substrings of length ≤ 6 of the sampled
     words scored by count×length (top 4×vocab_size) plus every single
     character (so segmentation is total); then EM — E-step
     Viterbi-segments each sampled word under current log-probs
     (frequency-weighted hard counts, the Viterbi-EM variant), M-step
     re-normalizes piece probabilities; between iterations the
-    lowest-probability multi-char pieces are pruned by ``prune_frac``
+    lowest-probability quarter of multi-char pieces is pruned
     until the vocabulary fits ``vocab_size``. Deterministic
     throughout: sample tie-broken by word, seed scoring tie-broken
     lexicographically, Viterbi ties documented in
     :func:`_viterbi_segment`.
     """
     wc = (
-        docs.select(F.explode(bpe_tokens(F.col(text_col))).alias("w"))
+        docs.select(F.explode(bpe_tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("w"))
-        .limit(max_words)
+        .limit(10_000)
         .collect()
     )
     words = [(r["w"], int(r["n"])) for r in wc if len(r["w"]) > 0]
@@ -251,7 +243,7 @@ def train_unigram_vocab(
     chars: set[str] = set()
     for w, n in words:
         chars.update(w)
-        for length in range(2, seed_max_len + 1):
+        for length in range(2, 7):
             for i in range(len(w) - length + 1):
                 sub_scores[w[i:i + length]] += n * length
     seed = sorted(
@@ -267,7 +259,7 @@ def train_unigram_vocab(
         # E-step: frequency-weighted Viterbi counts
         counts: Counter = Counter()
         for w, n in words:
-            for piece in _viterbi_segment(w, logp, seed_max_len):
+            for piece in _viterbi_segment(w, logp, 6):
                 counts[piece] += n
         # M-step: renormalize over OBSERVED pieces; unused multi-char
         # pieces drop out, unused single chars keep a floor
@@ -286,7 +278,7 @@ def train_unigram_vocab(
         n_over = len(multi) + len(chars) - vocab_size
         if n_over > 0:
             drop = {p for p, _ in
-                    multi[: max(n_over, int(len(multi) * prune_frac))]}
+                    multi[: max(n_over, int(len(multi) * 0.25))]}
             logp = {p: lp for p, lp in logp.items() if p not in drop}
     return logp
 
@@ -294,9 +286,7 @@ def train_unigram_vocab(
 def unigram_encode_stats(
     docs: DataFrame,
     vocab: dict[str, float],
-    text_col: str = "text",
     group_col: str = "source",
-    max_len: int = 6,
 ) -> DataFrame:
     """Segment the WHOLE corpus under a trained unigram vocab and
     report per-group totals: docs, words, pieces, and integer-ppm
@@ -315,7 +305,7 @@ def unigram_encode_stats(
                 for w in pre:
                     c = memo.get(w)
                     if c is None:
-                        c = len(_viterbi_segment(w, vocab, max_len))
+                        c = len(_viterbi_segment(w, vocab, 6))
                         memo[w] = c
                     n_pieces += c
                 rows.append((g, 1, len(pre), n_pieces))
@@ -330,7 +320,7 @@ def unigram_encode_stats(
     return (
         docs.select(
             F.col(group_col).alias("_g"),
-            bpe_tokens(F.col(text_col)).alias("_pre"),
+            bpe_tokens(F.col("text")).alias("_pre"),
         )
         .mapInPandas(enc, f"g {gtype}, d long, w long, p long")
         .groupBy(F.col("g").alias(group_col))

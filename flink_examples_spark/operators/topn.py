@@ -40,16 +40,11 @@ def top_n_per_group(
 
 def hot_items(
     events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    filter_expr: str = "event_type = 'view'",
     duration: str = "1 hour",
-    slide: str = "5 minutes",
-    n: int = 3,
 ) -> DataFrame:
     """The reference's flagship HotItems query (HotItems.java:55-81),
-    re-expressed: filter → sliding-window count per key → top-N per
-    window end.
+    re-expressed: filter views → ``duration`` windows sliding by 5
+    minutes, counted per ``user_id`` → top-3 per window end.
 
     Plan shape: parquet scan (filter + column pruning pushed down) →
     window expansion → partial/final hash agg (one shuffle) → rank window
@@ -58,21 +53,23 @@ def hot_items(
     combine and AQE-coalesced partitions for free.
     """
     counts = (
-        events.filter(filter_expr)
-        .groupBy(F.window(F.col(ts_col), duration, slide).alias("w"), key_col)
+        events.filter("event_type = 'view'")
+        .groupBy(
+            F.window(F.col("ts"), duration, "5 minutes").alias("w"), "user_id"
+        )
         .agg(F.count(F.lit(1)).alias("view_count"))
         .select(
             F.col("w.end").alias("window_end"),
-            F.col(key_col),
+            F.col("user_id"),
             F.col("view_count"),
         )
     )
     return top_n_per_group(
         counts,
         ["window_end"],
-        [F.desc("view_count"), F.asc(key_col)],
-        n,
-    ).select("window_end", key_col, "view_count", "rank")
+        [F.desc("view_count"), F.asc("user_id")],
+        3,
+    ).select("window_end", "user_id", "view_count", "rank")
 
 
 def skyline_2d(

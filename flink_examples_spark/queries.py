@@ -1135,7 +1135,7 @@ def vocab_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
                   # in tests/test_tokenizer.py
     doc="Tokenizer training + corpus encoding, the full loop: BPE "
         "merge table trained on the bounded corpus word-frequency "
-        "table (driver cost O(max_words x n_merges), corpus-size-"
+        "table (driver cost O(10,000 words x n_merges), corpus-size-"
         "independent), then one broadcast-merges mapInPandas encode "
         "pass with a per-batch distinct-word memo. Per-source "
         "accounting: pretokens, BPE tokens, chars/token compression — "
@@ -1208,9 +1208,10 @@ def vocab_oov_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the token-level aggregate feeds BOTH the vocab top-k and the
     # per-source rollup; column pruning makes the two subtrees differ,
     # so ReuseExchange can't dedupe them — a lazy localCheckpoint
-    # shares one materialization instead (computed on first use inside
-    # the single action, blocks freed by the ContextCleaner rather than
-    # pinned like persist(); at 100 TB you'd stage tc to parquet)
+    # shares one materialization instead (under AQE the pin call runs
+    # the aggregate's shuffle stage as one build job, and the first
+    # action fills the pin; blocks freed by the ContextCleaner rather
+    # than pinned like persist(); at 100 TB you'd stage tc to parquet)
     tc = (
         docs.select("source", F.explode(tokens("text")).alias("token"))
         .groupBy("source", "token")
@@ -4937,17 +4938,11 @@ def corpus_hygiene_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hygiene_v2_stages(spark: SparkSession, sf_dir: str,
-                       checkpoint: bool = True):
+def _hygiene_v2_stages(spark: SparkSession, sf_dir: str):
     """Shared stage chain of the hygiene-v2 pipeline: returns
     ``(docs, gk, kept, surv)`` — raw corpus, Gopher-kept, NB-kept, and
     the stripped+deduped survivors (with ``kept_text``). Both the
-    flagship pack query and the funnel census read these.
-
-    ``checkpoint=False`` skips the stage pins and returns the fully
-    fused lineage — ONLY for plan inspection (tests/test_plans.py
-    audits the broadcast/JVM properties that the checkpoint boundary
-    makes opaque in the registered queries' plans)."""
+    flagship pack query and the funnel census read these."""
     from flink_examples_spark.functions.text import tokens
     from flink_examples_spark.operators.classify import nb_token_evidence
     from flink_examples_spark.operators.dedup import substring_dedup_strip
@@ -4962,18 +4957,14 @@ def _hygiene_v2_stages(spark: SparkSession, sf_dir: str,
     # train+score chain (two corpus passes) runs twice per action
     gk = docs.join(
         g.filter(F.col("keep") == 1).select("doc_id"), "doc_id"
-    ).select("doc_id", "source", "text")
-    if checkpoint:
-        gk = gk.localCheckpoint(eager=False)
+    ).select("doc_id", "source", "text").localCheckpoint(eager=False)
     nb_good = (
         nb_token_evidence(gk, "doc_id", "text",
                           dup_pct_threshold=55)
         .filter(F.col("verdict") == "good")
         .select("doc_id")
     )
-    kept = gk.join(nb_good, "doc_id")
-    if checkpoint:
-        kept = kept.localCheckpoint(eager=False)
+    kept = gk.join(nb_good, "doc_id").localCheckpoint(eager=False)
     # no _fan_out on either stage input: the pipeline A/B'd x0.69-0.70
     # without them for both downstream queries (r9 s5)
     stripped = substring_dedup_strip(
@@ -4986,14 +4977,13 @@ def _hygiene_v2_stages(spark: SparkSession, sf_dir: str,
         F.md5(F.trim("kept_text")).alias("fp"),
         F.size(tokens("kept_text")).alias("n"),
     )
-    if checkpoint:
-        # one substring-strip pass per action (r14): dd feeds BOTH the
-        # dup-verdict aggregate and the keep join below — unpinned, the
-        # strip's chunk window over the kept corpus ran twice. Same
-        # lazy-pin convention and localCheckpoint fault-tolerance
-        # tradeoff as gk/kept above; interleaved A/B x1.13 (min) on
-        # corpus_hygiene_funnel at sf0.1, identical 20 rows.
-        dd = dd.localCheckpoint(eager=False)
+    # one substring-strip pass per action (r14): dd feeds BOTH the
+    # dup-verdict aggregate and the keep join below — unpinned, the
+    # strip's chunk window over the kept corpus ran twice. Same
+    # lazy-pin convention and localCheckpoint fault-tolerance
+    # tradeoff as gk/kept above; interleaved A/B x1.13 (min) on
+    # corpus_hygiene_funnel at sf0.1, identical 20 rows.
+    dd = dd.localCheckpoint(eager=False)
     # exact-dup keep-min without a content-keyed window (the r5 de-skew
     # shape): dup-only verdict aggregate + left join — a mass-duplicated
     # body combines map-side instead of piling into one fp partition
@@ -5392,10 +5382,11 @@ def corpus_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both the avg-broadcast and the final projection consume the tiny
     # 8-row census; a lazy localCheckpoint keeps the corpus token
-    # aggregate single-run. Measured at sf0.1 the two variants tie
-    # (~0.5 s, scan cost negligible); at 100 TB the un-checkpointed
-    # plan is two full corpus passes — scale-honest side taken
-    # (dedup_pipeline cache precedent).
+    # aggregate single-run (under AQE the pin call runs the aggregate's
+    # shuffle stage as one build job; the first action fills it).
+    # Measured at sf0.1 the two variants tie (~0.5 s, scan cost
+    # negligible); at 100 TB the un-checkpointed plan is two full corpus
+    # passes — scale-honest side taken (dedup_pipeline cache precedent).
     census = (
         docs.select(shard.alias("shard"), token_count("text").alias("toks"))
         .groupBy("shard")
@@ -10779,7 +10770,8 @@ def pack_contamination_census_over(docs: DataFrame) -> DataFrame:
         "doc_id", "text", target=256, partition_col="source",
     )
     # spans feeds the incidence explode AND the per-doc span fold —
-    # one execution via the lazy-localCheckpoint convention
+    # one execution via the lazy-localCheckpoint convention (the pin
+    # call runs the span window's shuffle stage as a build job)
     spans = spans.localCheckpoint(eager=False)
     wins = (
         spans.select(
@@ -11392,8 +11384,7 @@ def host_line_dedup_strip_incremental(
     )
 
 
-def _hygiene_delta_frames(spark: SparkSession, sf_dir: str,
-                          checkpoint: bool = True):
+def _hygiene_delta_frames(spark: SparkSession, sf_dir: str):
     """Shared (corpus, delta) synthesis for the composed daily-delta
     hygiene pipeline, each ``(doc_id, source, text, url_norm, host)``:
     every doc's text is its base content + a per-host footer line
@@ -11405,9 +11396,7 @@ def _hygiene_delta_frames(spark: SparkSession, sf_dir: str,
     difference from the original is strippable boilerplate — the case
     stage-3's strip-then-exact-dedup canonicalization exists for). The
     90/10 split (salt 'hyg') is the corpus/delta partition; URL and
-    host come from the synthetic crawl chain. ``checkpoint=False``
-    returns the fully fused lineage for plan inspection only (the
-    _hygiene_v2_stages convention)."""
+    host come from the synthetic crawl chain."""
     from pyspark.sql import Window
 
     from flink_examples_spark.operators.sampling import hash_split
@@ -11446,11 +11435,10 @@ def _hygiene_delta_frames(spark: SparkSession, sf_dir: str,
             synthetic_crawl_url("doc_id", "source")
         ).alias("url_norm"),
     ).withColumn("host", url_host(F.col("url_norm")))
-    if checkpoint:
-        # one materialization of the synth window + url chain: corpus
-        # and delta subtrees, and the corpus's three index builds, all
-        # read the pin instead of re-running the window per occurrence
-        u = u.localCheckpoint(eager=False)
+    # one materialization of the synth window + url chain: corpus and
+    # delta subtrees, and the corpus's three index builds, all read the
+    # pin instead of re-running the window per occurrence
+    u = u.localCheckpoint(eager=False)
     corpus = u.filter(F.col("split") == "corpus").drop("split")
     delta = u.filter(F.col("split") == "delta").drop("split")
     return corpus, delta
@@ -11482,8 +11470,7 @@ def _hygiene_corpus_survivors(corpus: DataFrame,
     )
 
 
-def _hygiene_corpus_indexes(corpus: DataFrame, checkpoint: bool = True,
-                            min_count: int = 3):
+def _hygiene_corpus_indexes(corpus: DataFrame, min_count: int = 3):
     """The three staged artifacts the composed incremental pipeline
     probes — ``(url_index, line_index, corpus_fps)`` — computed INLINE
     from the corpus snapshot (the url_dedup_incremental concession:
@@ -11507,19 +11494,17 @@ def _hygiene_corpus_indexes(corpus: DataFrame, checkpoint: bool = True,
         F.min("doc_id").alias("keep_doc_id"),
         F.count(F.lit(1)).alias("n_docs"),
     )
-    c1 = _hygiene_corpus_survivors(corpus, uidx)
-    if checkpoint:
-        c1 = c1.localCheckpoint(eager=False)
-    lidx = host_line_fp_index(c1, "doc_id", "host", "text")
-    if checkpoint:
-        # one corpus-wide (host, line) aggregate per plan (r14): lidx
-        # feeds BOTH the delta strip probe and — via line_index below —
-        # the corpus_fps strip verdicts, which previously re-aggregated
-        # every corpus line a second time (guide §2.4). Lazy pin, the
-        # c1/gk convention; linear-size (one row per distinct
-        # (host, line)), recompute-on-executor-loss unavailable — the
-        # documented localCheckpoint tradeoff (see connected_components)
-        lidx = lidx.localCheckpoint(eager=False)
+    c1 = _hygiene_corpus_survivors(corpus, uidx).localCheckpoint(eager=False)
+    # one corpus-wide (host, line) aggregate per plan (r14): lidx feeds
+    # BOTH the delta strip probe and — via line_index below — the
+    # corpus_fps strip verdicts, which previously re-aggregated every
+    # corpus line a second time (guide §2.4). Lazy pin, the c1/gk
+    # convention; linear-size (one row per distinct (host, line)),
+    # recompute-on-executor-loss unavailable — the documented
+    # localCheckpoint tradeoff (see connected_components)
+    lidx = host_line_fp_index(c1, "doc_id", "host", "text").localCheckpoint(
+        eager=False
+    )
     cfps = (
         host_line_dedup_strip(c1, "doc_id", "host", "text",
                               min_count=min_count, line_index=lidx)

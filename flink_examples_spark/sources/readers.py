@@ -27,11 +27,10 @@ def read_csv_records(
     spark: SparkSession,
     path: str,
     schema_ddl: str,
-    header: bool = False,
 ) -> DataFrame:
     """S5: schema-ful CSV scan (PojoCsvInputFormat with explicit field
     order, HotItems.java:47-55). The DDL string IS the field order."""
-    return spark.read.schema(schema_ddl).option("header", header).csv(path)
+    return spark.read.schema(schema_ddl).option("header", False).csv(path)
 
 
 def read_json_records(
@@ -55,24 +54,23 @@ def from_elements(
     return spark.createDataFrame(list(rows), schema_ddl)
 
 
-def write_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_text(df: DataFrame, path: str) -> None:
     """K4: writeAsText (IterateExample.java:102). Single string column
     required; callers concat beforehand (HotItems.java:129-140 style)."""
-    df.write.mode(mode).text(path)
+    df.write.mode("overwrite").text(path)
 
 
-def write_orc_lz4(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc_lz4(df: DataFrame, path: str) -> None:
     """K3 batch: columnar ORC with LZ4 (FsBulkFormatSink.java:44-58).
     The reference hand-vectorizes POJOs into VectorizedRowBatch
     (StudentVectorizer.java:26-38); Spark's ORC writer vectorizes
     natively."""
-    df.write.mode(mode).option("compression", "lz4").orc(path)
+    df.write.mode("overwrite").option("compression", "lz4").orc(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
-              header: bool = False) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """K2 batch row-format: CSV part files."""
-    df.write.mode(mode).option("header", header).csv(path)
+    df.write.mode("overwrite").option("header", False).csv(path)
 
 
 def write_bucketed_table(
@@ -109,7 +107,6 @@ def write_partitioned_table(
     path: str,
     partition_cols: Sequence[str],
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
     options: dict[str, str] | None = None,
 ) -> None:
     """Persist a table hive-partitioned by low-cardinality columns
@@ -138,7 +135,7 @@ def write_partitioned_table(
         # required ordering and survives into the files
         df = df.repartition(*[F.col(c) for c in partition_cols]) \
                .sortWithinPartitions(*partition_cols, *sort_cols)
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if options:
         # writer-level format options (e.g. parquet.block.size to size
         # row groups); conf-level Hadoop keys don't reach the writer

@@ -56,7 +56,6 @@ def with_event_time(
     df: DataFrame,
     epoch_col: str,
     unit: str = "seconds",
-    ts_col: str = "event_time",
 ) -> DataFrame:
     """Attach a TimestampType event-time column derived from a raw epoch
     long (kept alongside, §1.2): HotItems.java:62 seconds×1000 and
@@ -68,4 +67,4 @@ def with_event_time(
         ts = F.timestamp_millis(src)
     else:
         raise ValueError(f"unit must be seconds|millis, got {unit!r}")
-    return df.withColumn(ts_col, ts)
+    return df.withColumn("event_time", ts)

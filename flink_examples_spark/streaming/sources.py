@@ -123,15 +123,14 @@ def kafka_source_options(
     return opts
 
 
-def decode_int_pair_binary(df: DataFrame, col: str = "value") -> DataFrame:
-    """Decode the reference's custom binary Kafka payload: two
+def decode_int_pair_binary(df: DataFrame) -> DataFrame:
+    """Decode the reference's custom binary Kafka ``value``: two
     little-endian int32s (address, event-type ordinal) —
     schema/EventDeSerializer.java:21-39 — using built-in expressions
-    over BinaryType (no UDF).
-    """
+    over BinaryType (no UDF)."""
     def le_int(offset: int):
         bytes_ = [
-            F.conv(F.hex(F.substring(F.col(col), offset + i, 1)), 16, 10).cast("long")
+            F.conv(F.hex(F.substring("value", offset + i, 1)), 16, 10).cast("long")
             for i in range(4)
         ]
         return (

@@ -97,7 +97,6 @@ def lateness_classifier(
     delay_ms: int,
     allowed_lateness_ms: int,
     inner: Callable[[DataFrame, int], None],
-    label_col: str = "lateness",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch wrapper adding Flink's three-way lateness verdict
     (E7/D2): ``on_time`` (ts >= watermark), ``late`` (within the
@@ -117,14 +116,14 @@ def lateness_classifier(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         max_ms = holder["max_ts_ms"]
         if max_ms is None:
-            labeled = batch_df.withColumn(label_col, F.lit("on_time"))
+            labeled = batch_df.withColumn("lateness", F.lit("on_time"))
         else:
             wm = F.timestamp_millis(F.lit(max_ms - delay_ms))
             grace = F.timestamp_millis(
                 F.lit(max_ms - delay_ms - allowed_lateness_ms)
             )
             labeled = batch_df.withColumn(
-                label_col,
+                "lateness",
                 F.when(F.col(ts_col) >= wm, "on_time")
                 .when(F.col(ts_col) >= grace, "late")
                 .otherwise("expired"),
@@ -143,7 +142,6 @@ def run_with_restarts(
     build_and_start: Callable[[], "object"],
     max_restarts: int = 3,
     delay_s: float = 1.0,
-    await_timeout_s: float = 180.0,
 ) -> tuple["object", int]:
     """Fixed-delay restart supervision for a streaming query (ST10,
     Checkpointing.java:72-90 ``fixedDelayRestart(3, 10s)``).
@@ -157,7 +155,7 @@ def run_with_restarts(
     Returns ``(query, n_restarts)`` once a run terminates cleanly;
     re-raises the last failure when the budget is exhausted — Flink's
     NoRestart fallback after the attempt count. A query still running
-    when ``await_timeout_s`` elapses is NOT clean termination: it is
+    after 180 s is NOT clean termination: it is
     stopped and ``TimeoutError`` raised (not retried — a live query
     that outruns the supervision window is a sizing problem, not a
     failure; use this helper for bounded availableNow runs and leave
@@ -169,7 +167,7 @@ def run_with_restarts(
     while True:
         q = build_and_start()
         try:
-            finished = q.awaitTermination(await_timeout_s)
+            finished = q.awaitTermination(180.0)
             if q.exception() is not None:
                 raise q.exception()
         except Exception:
@@ -181,7 +179,7 @@ def run_with_restarts(
         if not finished:
             q.stop()
             raise TimeoutError(
-                f"streaming query still running after {await_timeout_s}s; "
+                "streaming query still running after 180.0s; "
                 "stopped without restart"
             )
         return q, attempts

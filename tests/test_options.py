@@ -3,7 +3,7 @@ a code path nothing runs.
 
 The staged store, the table writers and the file stream are parquet
 only; the rolling file sink (K2/K3) is the one place a file format is
-chosen, and ``ts_display``'s ``fmt`` is a date pattern. The minhash and
+chosen. The minhash and
 inverted-index operators tokenize their own input (only the Jaccard
 verify stage reads a shared shingle index), and the delta / eval sides
 of the incremental LSH, merge and decontamination joins are always
@@ -13,7 +13,9 @@ per-key match cap), and its timed-out partial enumeration keeps
 ``_live_partials``' own cap.
 
 The same ratchet counts hand-written pins: every ``localCheckpoint``
-call per module, and how many of them are eager.
+call per module, and how many of them are eager; and every defaulted
+parameter of a public function per module — an option only enters the
+package through an edit to ``DEFAULTED``, in review.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import pkgutil
 import flink_examples_spark
 
 ALLOWED = {
-    "fmt": {"rolling_file_sink", "ts_display"},
+    "fmt": {"rolling_file_sink"},
     "shingles_df": {"verify_jaccard_on_candidates"},
     "broadcast_delta": set(),
     "broadcast_eval": set(),
@@ -55,6 +57,47 @@ PINS = {
     "operators/skew.py": (2, 2),
     "queries.py": (10, 0),
     "streaming/sinks.py": (5, 5),
+}
+
+
+# module -> defaulted parameters of its public functions
+DEFAULTED = {
+    "catalog.py": 2,
+    "functions/scalar.py": 1,
+    "functions/text.py": 2,
+    "operators/cep.py": 8,
+    "operators/classify.py": 4,
+    "operators/crawl.py": 10,
+    "operators/decontam.py": 5,
+    "operators/dedup.py": 42,
+    "operators/diff.py": 1,
+    "operators/enrich.py": 3,
+    "operators/graph.py": 1,
+    "operators/integrity.py": 2,
+    "operators/iteration.py": 2,
+    "operators/joins.py": 2,
+    "operators/journey.py": 1,
+    "operators/multimodal.py": 7,
+    "operators/packing.py": 2,
+    "operators/quality.py": 7,
+    "operators/sampling.py": 7,
+    "operators/search.py": 1,
+    "operators/similarity.py": 42,
+    "operators/sketches.py": 8,
+    "operators/skew.py": 7,
+    "operators/stateful.py": 1,
+    "operators/tokenizer.py": 5,
+    "operators/topn.py": 3,
+    "operators/util.py": 1,
+    "queries.py": 1,
+    "session.py": 4,
+    "sources/readers.py": 5,
+    "sources/schemas.py": 1,
+    "streaming/finalize.py": 7,
+    "streaming/sinks.py": 25,
+    "streaming/sources.py": 7,
+    "streaming/stateful.py": 11,
+    "streaming/watermarks.py": 3,
 }
 
 
@@ -108,3 +151,23 @@ def test_pin_census():
         if calls:
             census[path.relative_to(root).as_posix()] = (len(calls), eager)
     assert census == PINS
+
+
+def test_defaulted_census():
+    """Every defaulted parameter of a public package function, counted
+    with ``inspect.signature`` per module: a new option fails here until
+    ``DEFAULTED`` records it."""
+    root = pathlib.Path(flink_examples_spark.__file__).parent
+    census = {}
+    for mod, name, fn in _package_functions():
+        if name.startswith("_"):
+            continue
+        n = sum(
+            p.default is not inspect.Parameter.empty
+            for p in inspect.signature(fn).parameters.values()
+        )
+        if n:
+            path = pathlib.Path(importlib.import_module(mod).__file__)
+            key = path.relative_to(root).as_posix()
+            census[key] = census.get(key, 0) + n
+    assert census == DEFAULTED

@@ -10,6 +10,9 @@ sneaking into a filter, a dim join falling back to sort-merge) is a
 
 from __future__ import annotations
 
+import contextlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from flink_examples_spark.catalog import load_table
@@ -21,6 +24,38 @@ from flink_examples_spark.plans import (
     python_eval_nodes,
     read_schema_columns,
 )
+
+
+@pytest.fixture
+def unpinned(monkeypatch):
+    """A context manager: plans built inside it skip every hand-written
+    pin (``localCheckpoint`` returns its input), so their plans show the
+    fused lineage a pin's ExistingRDD boundary hides."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    @contextlib.contextmanager
+    def ctx():
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "localCheckpoint", lambda self, *a, **k: self)
+            yield
+
+    return ctx
+
+
+def test_lazy_pin_runs_its_shuffle_stages_at_the_call(spark):
+    """A lazy pin is not free under AQE: ``localCheckpoint(eager=False)``
+    runs the pinned plan's shuffle stages as jobs at the call, before
+    any action. A pin over a narrow plan submits none."""
+    sc = spark.sparkContext
+
+    def jobs_at_pin(df):
+        before = sc._jsc.sc().dagScheduler().nextJobId()
+        df.localCheckpoint(eager=False)
+        return sc._jsc.sc().dagScheduler().nextJobId() - before
+
+    base = spark.range(1000)
+    assert jobs_at_pin(base.groupBy((F.col("id") % 7).alias("k")).count()) >= 1
+    assert jobs_at_pin(base.filter(F.col("id") % 7 == 0)) == 0
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -287,11 +322,11 @@ def test_classifier_scoring_joins_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_hygiene_v2_pipeline_stays_jvm_side(spark, sf_dir):
+def test_hygiene_v2_pipeline_stays_jvm_side(spark, sf_dir, unpinned):
     """The full FineWeb-shape pipeline (gate -> classifier -> strip ->
     dedup -> pack) compiles to an all-JVM plan: no Python boundary,
     model joins broadcast. Inspected on the UN-checkpointed fused
-    lineage (checkpoint=False) — the registered queries pin shared
+    lineage (built ``unpinned``) — the registered queries pin shared
     stages with localCheckpoint, whose ExistingRDD boundary hides the
     upstream operators from the final plan; the registered query is
     separately asserted Python-free."""
@@ -299,7 +334,8 @@ def test_hygiene_v2_pipeline_stays_jvm_side(spark, sf_dir):
 
     from flink_examples_spark.operators.packing import sequence_pack
 
-    _, _, _, surv = _hygiene_v2_stages(spark, sf_dir, checkpoint=False)
+    with unpinned():
+        _, _, _, surv = _hygiene_v2_stages(spark, sf_dir)
     fused = sequence_pack(surv, "doc_id", "kept_text", target=256,
                           partition_col="source")
     assert python_eval_nodes(fused) == []
@@ -405,7 +441,7 @@ def test_fan_out_skips_wide_scans(spark, sf_dir, tmp_path):
     assert fanned.rdd.getNumPartitions() == par
 
 
-def test_frequency_signals_have_no_content_keyed_window(spark, sf_dir):
+def test_frequency_signals_have_no_content_keyed_window(spark, sf_dir, unpinned):
     """r5 de-skew sweep beyond the dedup family: the corpus-frequency
     signals (bigram familiarity, substring overlap, TF-IDF document
     frequency) and the hygiene pipeline's exact-dup stage must compute
@@ -432,7 +468,8 @@ def test_frequency_signals_have_no_content_keyed_window(spark, sf_dir):
 
     from flink_examples_spark.queries import _hygiene_v2_stages
 
-    *_, surv = _hygiene_v2_stages(spark, sf_dir, checkpoint=False)
+    with unpinned():
+        *_, surv = _hygiene_v2_stages(spark, sf_dir)
     assert "windowspecdefinition" not in formatted_plan(surv)
 
 
@@ -995,7 +1032,7 @@ def test_subexpression_elimination_is_on(spark):
     )
 
 
-def test_round12_incremental_hygiene_pipeline_plan_shape(spark, sf_dir):
+def test_round12_incremental_hygiene_pipeline_plan_shape(spark, sf_dir, unpinned):
     """The composed daily-delta hygiene flagship (VERDICT r11 #1) keeps
     every stage's incremental discipline in ONE plan: no cartesian
     products, no Python nodes, no SortMergeJoin anywhere (every staged-
@@ -1003,8 +1040,8 @@ def test_round12_incremental_hygiene_pipeline_plan_shape(spark, sf_dir):
     every hashpartitioning exchange keys on a stage's contract key —
     the synth source window, a url_norm fold, a (host,lfp)/(host,line)
     or grouping-key line fold, a doc_id reassembly, or a fingerprint
-    fold. Checked on the fused (checkpoint=False) lineage so the pin
-    sees through the shared-stage pins the registered query adds."""
+    fold. Checked on the fused (``unpinned``) lineage so the pin sees
+    through the shared-stage pins the registered query adds."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from flink_examples_spark.operators.crawl import (
@@ -1016,8 +1053,9 @@ def test_round12_incremental_hygiene_pipeline_plan_shape(spark, sf_dir):
         _pii_raw_col,
     )
 
-    corpus, delta = _hygiene_delta_frames(spark, sf_dir, checkpoint=False)
-    uidx, lidx, cfps = _hygiene_corpus_indexes(corpus, checkpoint=False)
+    with unpinned():
+        corpus, delta = _hygiene_delta_frames(spark, sf_dir)
+        uidx, lidx, cfps = _hygiene_corpus_indexes(corpus)
     pipe = op(
         uidx, lidx, cfps,
         delta.select("doc_id", "url_norm", "host", "text"),

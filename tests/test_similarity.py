@@ -24,21 +24,6 @@ def test_gemm_matches_expression_topk(spark, sf_dir):
     assert expr_rows == gemm_rows
 
 
-def test_neardup_gemm_matches_expr(spark, sf_dir):
-    from flink_examples_spark.operators.similarity import embedding_neardup_pairs
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    gemm = {
-        (r.vec_a, r.vec_b, r.cosine)
-        for r in embedding_neardup_pairs(emb, strategy="gemm").collect()
-    }
-    expr = {
-        (r.vec_a, r.vec_b, r.cosine)
-        for r in embedding_neardup_pairs(emb, strategy="expr").collect()
-    }
-    assert gemm == expr
-
-
 def test_neardup_lsh_subset_and_recall_floor(spark, sf_dir):
     """Multi-table LSH candidates must be (a) a SUBSET of the exact pair
     set (precision 1.0 — every pair is exact-cosine-verified in its
@@ -53,7 +38,7 @@ def test_neardup_lsh_subset_and_recall_floor(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
     exact = {
         (r.vec_a, r.vec_b)
-        for r in embedding_neardup_pairs(emb, strategy="gemm").collect()
+        for r in embedding_neardup_pairs(emb).collect()
     }
     lsh = {(r.vec_a, r.vec_b) for r in embedding_neardup_lsh(emb).collect()}
     assert lsh <= exact
@@ -74,7 +59,7 @@ def test_neardup_lsh_recall_floor_sf01(spark):
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.1").localCheckpoint()
     exact = {
         (r.vec_a, r.vec_b)
-        for r in embedding_neardup_pairs(emb, strategy="gemm").collect()
+        for r in embedding_neardup_pairs(emb).collect()
     }
     lsh = {(r.vec_a, r.vec_b) for r in embedding_neardup_lsh(emb).collect()}
     assert len(exact) > 100  # the fixture actually exercises the floor
@@ -488,7 +473,7 @@ def test_ann_empty_queries_and_strategy_typo_guards(spark, sf_dir):
     assert cosine_topk_ivf(emb, none, k=3).count() == 0
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert cosine_topk_ivf(empty, empty, k=3).count() == 0
-    assert embedding_neardup_pairs(empty, strategy="gemm").count() == 0
+    assert embedding_neardup_pairs(empty).count() == 0
     with pytest.raises(ValueError, match="unknown strategy"):
         embedding_neardup_pairs(emb, strategy="lsh")
 
@@ -555,7 +540,7 @@ def test_incremental_neardup_equals_batch_over_union(spark, sf_dir):
     delta_ids = {r.vec_id for r in delta.select("vec_id").collect()}
     batch = {
         (r.vec_a, r.vec_b): r.cosine
-        for r in embedding_neardup_pairs(emb, strategy="gemm").collect()
+        for r in embedding_neardup_pairs(emb).collect()
         if r.vec_a in delta_ids or r.vec_b in delta_ids
     }
     got = {
@@ -682,7 +667,7 @@ def test_embedding_index_ingest_replay_compaction_e2e(spark, sf_dir, tmp_path):
     delta_ids = set(r.vec_id for r in delta.select("vec_id").collect())
     batch = {
         (r.vec_a, r.vec_b): r.cosine
-        for r in embedding_neardup_pairs(emb, strategy="gemm").collect()
+        for r in embedding_neardup_pairs(emb).collect()
         if r.vec_a in delta_ids or r.vec_b in delta_ids
     }
     staged = {
